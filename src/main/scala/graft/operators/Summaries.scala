@@ -598,6 +598,12 @@ object Summaries {
     * narrowing stall degrading to exact distributed sort-selection
     * (slower, never a failure). Absent/empty/all-NULL columns yield
     * all-None.
+    *
+    * Cost: one stats pass + two jobs per narrowing round (none while every
+    * column holds at most `collectThreshold` finite values) + ONE collect
+    * job per `collectThreshold`-sized batch of resolved intervals,
+    * whatever the column and interval count; only oversize stalled
+    * intervals (dense tie clusters) add their own distinct-value job.
     */
   def exactQuantilesPerColumn(df: DataFrame, colQs: Seq[(String, Seq[Double])],
                               collectThreshold: Int = 1 << 20): Map[String, Seq[Option[Double]]] = {
@@ -763,41 +769,57 @@ object Summaries {
     groups = groups.map(g =>
       if (g.in > collectThreshold && !g.stalled) g.copy(stalled = true) else g)
 
-    // Finalize each group: small intervals collect-and-sort once for ALL
-    // their ranks; oversize stalled intervals resolve by distinct values
-    // (tie clusters denser than the threshold — groupBy normalizes −0.0
-    // to 0.0, matching percentile_cont on signed-zero mixes) or, on an
-    // adversarially dense MANY-distinct-value interval the histogram
-    // rounds can't split, by per-rank exact distributed sort-selection
-    // (orderBy range-partitions the interval's rows and zipWithIndex adds
-    // one count pass — memory-bounded, just slower; data shape alone
-    // can't abort a long pipeline).
+    // Finalize. Small intervals are packed into batches of at most
+    // collectThreshold values in total, and each batch is ONE collect job:
+    // every value is tagged with each batch group whose (column, interval)
+    // holds it — an explode, not a single tag, because sibling groups can
+    // share their boundary values — then each group's values are sorted
+    // on the driver and ALL its ranks are read off by index. Oversize
+    // stalled intervals resolve by distinct values (tie clusters denser
+    // than the threshold — groupBy normalizes −0.0 to 0.0, matching
+    // percentile_cont on signed-zero mixes) or, on an adversarially dense
+    // MANY-distinct-value interval the histogram rounds can't split, by
+    // per-rank exact distributed sort-selection (orderBy range-partitions
+    // the interval's rows and zipWithIndex adds one count pass —
+    // memory-bounded, just slower; data shape alone can't abort a long
+    // pipeline).
     val jToV = scala.collection.mutable.Map.empty[(String, Long), Double]
-    groups.foreach { g =>
+    val (small, oversize) = groups.toIndexedSeq.partition(_.in <= collectThreshold)
+    packBatches(small.map(_.in), collectThreshold).foreach { batch =>
+      val members = batch.map(small)
+      val tags = members.zipWithIndex.map { case (g, i) =>
+        when(col("c") === g.c && col("v") >= g.lo && col("v") <= g.hi, lit(i))
+      }
+      val values = Array.fill(members.size)(Array.newBuilder[Double])
+      finite.select(explode(array(tags: _*)).as("g"), col("v"))
+        .filter(col("g").isNotNull).collect()
+        .foreach(r => values(r.getInt(0)) += r.getDouble(1))
+      members.zip(values).foreach { case (g, b) =>
+        val arr = b.result()
+        java.util.Arrays.sort(arr)
+        g.ranks.foreach(j => jToV((g.c, j)) = arr((j - g.below).toInt))
+      }
+    }
+    oversize.foreach { g =>
       val interval = finite
         .filter(col("c") === g.c && col("v") >= g.lo && col("v") <= g.hi)
         .select(col("v"))
-      if (g.in <= collectThreshold) {
-        val arr = interval.orderBy(col("v")).collect().map(_.getDouble(0))
-        g.ranks.foreach(j => jToV((g.c, j)) = arr((j - g.below).toInt))
+      val dv = interval.groupBy(col("v")).agg(count(lit(1)).as("cnt"))
+        .orderBy(col("v")).limit(collectThreshold + 1).collect()
+        .map(row => (row.getDouble(0), row.getLong(1)))
+      if (dv.length <= collectThreshold) {
+        g.ranks.foreach { j =>
+          var acc = g.below
+          jToV((g.c, j)) = dv.collectFirst {
+            case (value, cnt) if { acc += cnt; acc > j } => value
+          }.getOrElse(dv.last._1)
+        }
       } else {
-        val dv = interval.groupBy(col("v")).agg(count(lit(1)).as("cnt"))
-          .orderBy(col("v")).limit(collectThreshold + 1).collect()
-          .map(row => (row.getDouble(0), row.getLong(1)))
-        if (dv.length <= collectThreshold) {
-          g.ranks.foreach { j =>
-            var acc = g.below
-            jToV((g.c, j)) = dv.collectFirst {
-              case (value, cnt) if { acc += cnt; acc > j } => value
-            }.getOrElse(dv.last._1)
-          }
-        } else {
-          g.ranks.foreach { j =>
-            val idx = j - g.below
-            jToV((g.c, j)) = interval.orderBy(col("v"))
-              .rdd.zipWithIndex()
-              .filter(_._2 == idx).map(_._1.getDouble(0)).first()
-          }
+        g.ranks.foreach { j =>
+          val idx = j - g.below
+          jToV((g.c, j)) = interval.orderBy(col("v"))
+            .rdd.zipWithIndex()
+            .filter(_._2 == idx).map(_._1.getDouble(0)).first()
         }
       }
     }
@@ -828,6 +850,20 @@ object Summaries {
         case _ => qs.map(_ => None)
       })
     }.toMap
+  }
+
+  /** Greedy in-order packing of interval sizes (each ≤ `cap`) into
+    * batches whose summed size stays within `cap`: the finalize of
+    * [[exactQuantilesPerColumn]] collects one batch per job, so no single
+    * collect returns more than `cap` values. Returns the batches as
+    * indices into `sizes`.
+    */
+  private[graft] def packBatches(sizes: Seq[Long], cap: Long): Seq[Seq[Int]] = {
+    require(sizes.forall(_ <= cap), s"an interval exceeds the batch cap $cap")
+    sizes.indices.foldLeft(List.empty[(Long, List[Int])]) {
+      case ((sum, b) :: done, i) if sum + sizes(i) <= cap => (sum + sizes(i), i :: b) :: done
+      case (acc, i) => (sizes(i), List(i)) :: acc
+    }.reverse.map(_._2.reverse)
   }
 
   /** Weekly cohort-retention matrix: entities are grouped into cohorts by
@@ -870,36 +906,15 @@ object Summaries {
     df.agg(aggs.head, aggs.tail.toIndexedSeq: _*)
   }
 
-  /** Robust (median/MAD) outlier census per numeric column: median, MAD
-    * (median absolute deviation), the k·1.4826·MAD cutoffs, and how many
-    * values fall outside them. The 1.4826 factor scales MAD to σ for
-    * normal data, so `k = 3.0` is the robust analogue of a 3σ rule —
-    * unlike mean/stddev cutoffs, the fences themselves can't be dragged
-    * by the outliers they're meant to catch.
-    *
-    * Engine-portability discipline: the median and MAD are rounded to
-    * 5 dp BEFORE deriving the cutoffs, so `lo`/`hi` are pure IEEE
-    * arithmetic over rounded inputs — any SQL engine computing
-    * `round(quantile, 5)` the same way lands on bit-identical fences,
-    * making the outlier COUNTS (strict `< lo` / `> hi`) portable too.
-    * NaN ≡ missing, like the whole card family ([[numericEntries]]).
-    * ±Inf is an OUTLIER, not an order statistic: the median/MAD come
-    * from the finite core only (an Inf-contaminated MAD would be Inf
-    * and the fences would swallow everything — the exact masking this
-    * operator exists to prevent), while the fence comparison counts
-    * every ±Inf value outside any finite fence, as it must.
-    *
-    * Scale shape: exactly TWO fused narrowing batches over the data
-    * regardless of column count ([[exactQuantilesPerColumn]] — medians of
-    * all columns share pass one; MAD medians of all |x − med| columns
-    * share pass two; MAD needs the medians first, so two is the floor),
-    * plus one counting aggregation for the fences. No shuffle anywhere —
-    * every pass is a scan + partial agg.
-    */
   /** 5-dp-rounded (median, MAD) per column over the FINITE core — the
     * shared robust-stats base of [[madOutliers]] and [[robustZscore]]:
-    * exactly TWO fused narrowing batches for any column count (MAD needs
-    * the median first, so two is the floor).
+    * exactly TWO fused [[exactQuantilesPerColumn]] batches for any column
+    * count (medians of all columns share batch one, MAD medians of all
+    * |x − med| columns share batch two; MAD needs the median first, so
+    * two is the floor). Each batch costs one stats pass + its narrowing
+    * rounds + one collect job per `collectThreshold`-sized batch of
+    * resolved intervals — at sf0.1 (no column above the threshold) two
+    * stats passes and two collects in all. No shuffle anywhere.
     */
   private def medMadStats(df: DataFrame, cols: Seq[String])
       : Map[String, (Option[Double], Option[Double])] = {
@@ -959,6 +974,29 @@ object Summaries {
     }
   }
 
+  /** Robust (median/MAD) outlier census per numeric column: median, MAD
+    * (median absolute deviation), the k·1.4826·MAD cutoffs, and how many
+    * values fall outside them. The 1.4826 factor scales MAD to σ for
+    * normal data, so `k = 3.0` is the robust analogue of a 3σ rule —
+    * unlike mean/stddev cutoffs, the fences themselves can't be dragged
+    * by the outliers they're meant to catch.
+    *
+    * Engine-portability discipline: the median and MAD are rounded to
+    * 5 dp BEFORE deriving the cutoffs, so `lo`/`hi` are pure IEEE
+    * arithmetic over rounded inputs — any SQL engine computing
+    * `round(quantile, 5)` the same way lands on bit-identical fences,
+    * making the outlier COUNTS (strict `< lo` / `> hi`) portable too.
+    * NaN ≡ missing, like the whole card family ([[numericEntries]]).
+    * ±Inf is an OUTLIER, not an order statistic: the median/MAD come
+    * from the finite core only (an Inf-contaminated MAD would be Inf
+    * and the fences would swallow everything — the exact masking this
+    * operator exists to prevent), while the fence comparison counts
+    * every ±Inf value outside any finite fence, as it must.
+    *
+    * Scale shape: exactly TWO fused [[exactQuantilesPerColumn]] batches
+    * regardless of column count ([[medMadStats]]), plus one counting
+    * aggregation for the fences.
+    */
   def madOutliers(df: DataFrame, cols: Seq[String], k: Double = 3.0): DataFrame = {
     require(cols.nonEmpty, "madOutliers needs at least one column")
     require(k > 0, s"k must be positive, got $k")
@@ -1303,7 +1341,10 @@ object Summaries {
     * column per group (`when(group = g, value)`) and routes ALL groups ×
     * quantiles through ONE fused [[exactQuantilesPerColumn]] narrowing
     * batch — passes shared across groups, memory bounded by the
-    * narrowing, exactness preserved. The group count is the synthesized
+    * narrowing, exactness preserved. Cost: the domain collect + one stats
+    * pass + the narrowing rounds + one collect job per
+    * `collectThreshold`-sized batch of resolved intervals, independent of
+    * the group count. The group count is the synthesized
     * column count, so it must be BOUNDED (languages, sources, splits —
     * the use case); `maxGroups` raises loudly rather than explode the
     * batch. One row per (group, quantile); a NULL group is a group;

@@ -44,13 +44,19 @@ object StatsSafeCheckpoint {
     * convergence probe ("did anything change this round?") without its
     * own follow-up job. The count is result-based (summed per-partition
     * tuples, not an accumulator), so task retries cannot inflate it.
+    * `flagCol` resolves with the session's resolver (so it honours
+    * `spark.sql.caseSensitive`) and must match exactly one column: a
+    * missing or ambiguous name fails rather than counting a wrong one.
     */
   def counting(df: DataFrame, flagCol: String): (DataFrame, Long) = {
-    val ord = df.asInstanceOf[Dataset[Row]].queryExecution.analyzed.output
-      .indexWhere(_.name == flagCol)
-    require(ord >= 0, s"StatsSafeCheckpoint.counting: no column '$flagCol'")
-    val (out, flagged) = apply(df, Some(ord))
-    (out, flagged)
+    val ds = df.asInstanceOf[Dataset[Row]]
+    val resolver = ds.sparkSession.sessionState.conf.resolver
+    val matches = ds.queryExecution.analyzed.output.zipWithIndex
+      .filter { case (a, _) => resolver(a.name, flagCol) }
+    require(matches.nonEmpty, s"StatsSafeCheckpoint.counting: no column '$flagCol'")
+    require(matches.size == 1, s"StatsSafeCheckpoint.counting: '$flagCol' is ambiguous, " +
+      s"it matches ${matches.map(_._1.name).mkString(", ")}")
+    apply(df, Some(matches.head._2))
   }
 
   private def apply(df: DataFrame, flagOrdinal: Option[Int]): (DataFrame, Long) = {

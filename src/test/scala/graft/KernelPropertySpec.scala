@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import graft.functions.GraftFunctions
 import graft.operators.{KeyRepair, NearDup}
 
@@ -128,6 +130,91 @@ class KernelPropertySpec extends SparkSpec {
       val expected = inf.agg(expr(s"percentile($c, $q)")).head().getDouble(0)
       assert(gotInf(c)(i) === Some(expected), s"col=$c q=$q")
     }
+  }
+
+  test("exactQuantilesPerColumn fuzz: packed finalize batches equal per-column percentile") {
+    import graft.operators.Summaries
+    // many columns of mixed size under a low threshold: the big columns
+    // narrow into several small intervals, the small ones resolve
+    // directly, and the finalize packs them all into several batches
+    val rnd = new scala.util.Random(53)
+    for (trial <- 1 to 4) {
+      val nCols = 6 + rnd.nextInt(5)
+      val sizes = Seq.fill(nCols)(Seq(5, 20, 300)(rnd.nextInt(3)))
+      val n = sizes.max
+      val names = (0 until nCols).map(i => s"c$i")
+      val df = spark.createDataFrame(spark.sparkContext.parallelize((0 until n).map { i =>
+        Row.fromSeq(sizes.zipWithIndex.map { case (sz, ci) =>
+          if (i >= sz) null
+          else if (ci % 3 == 0) (rnd.nextInt(7) * 3).toDouble     // ties
+          else rnd.nextGaussian() * math.pow(10, ci % 5)          // spread
+        })
+      }, 3), StructType(names.map(StructField(_, DoubleType))))
+      val qs = Seq(0.0, 0.1, 0.5, 0.77, 1.0)
+      val threshold = Seq(16, 32, 48)(rnd.nextInt(3))
+      val got = Summaries.exactQuantilesPerColumn(df, names.map(_ -> qs), threshold)
+      for (c <- names; (q, i) <- qs.zipWithIndex) {
+        val expected = df.agg(expr(s"percentile($c, $q)")).head().getDouble(0)
+        assert(got(c)(i) === Some(expected), s"trial $trial col=$c q=$q thr=$threshold")
+      }
+    }
+  }
+
+  test("exactQuantilesPerColumn: a value shared by two resolved intervals counts in both") {
+    import graft.operators.Summaries
+    // 0..1024 narrows with bucket width 8: rank 511 (value 511) picks
+    // bucket 63, rank 512 (value 512) bucket 64, and both tightened
+    // intervals, [504, 512] and [512, 520], hold the boundary value 512.
+    // At threshold 24 the two 9-value intervals share one finalize batch,
+    // so 512 must be tagged with BOTH groups: a single tag per value
+    // would shift the second interval's ranks by one (513 for the median)
+    val df = (0 to 1024).map(i => Tuple1(i.toDouble)).toDF("x")
+    assert(Summaries.exactQuantilesPerColumn(
+      df, Seq("x" -> Seq(511.0 / 1024, 0.5)), collectThreshold = 24)("x") ===
+      Seq(Some(511.0), Some(512.0)))
+    // the same overlap next to an oversize tie cluster, which resolves on
+    // the distinct-value path over values the batch also collects
+    val tied = ((0 to 1024).map(_.toDouble) ++ Seq.fill(40)(512.0)).map(Tuple1(_)).toDF("x")
+    val qs = Seq(0.3, 511.0 / 1064, 0.5, 552.0 / 1064, 0.9)
+    val got = Summaries.exactQuantilesPerColumn(tied, Seq("x" -> qs), collectThreshold = 24)
+    for ((q, i) <- qs.zipWithIndex) {
+      val expected = tied.agg(expr(s"percentile(x, $q)")).head().getDouble(0)
+      assert(got("x")(i) === Some(expected), s"q=$q")
+    }
+  }
+
+  test("exactQuantilesPerColumn finalize: job count independent of column count") {
+    import graft.operators.Summaries
+    import org.apache.spark.grafttest.JobCounter
+    val rnd = new scala.util.Random(61)
+    val df = (1 to 400).map(_ => Tuple6(rnd.nextDouble(), rnd.nextGaussian(),
+      rnd.nextInt(9).toDouble, rnd.nextDouble() * 1e6, -rnd.nextDouble(),
+      rnd.nextInt(3).toDouble)).toDF("a", "b", "c", "d", "e", "f")
+    val qs = Seq(0.25, 0.5, 0.9)
+    val (one, jobsOne) = JobCounter(spark.sparkContext)(
+      Summaries.exactQuantilesPerColumn(df, Seq("a" -> qs)))
+    val (six, jobsSix) = JobCounter(spark.sparkContext)(
+      Summaries.exactQuantilesPerColumn(df, df.columns.toSeq.map(_ -> qs)))
+    assert(one("a") === six("a"))
+    assert(jobsOne > 0 && jobsSix === jobsOne, s"1 column: $jobsOne jobs, 6 columns: $jobsSix")
+  }
+
+  test("packBatches keeps every batch within the cap, in order, each interval once") {
+    import graft.operators.Summaries.packBatches
+    val rnd = new scala.util.Random(67)
+    for (_ <- 1 to 200) {
+      val cap = 1L + rnd.nextInt(64)
+      val sizes = Seq.fill(rnd.nextInt(30))((rnd.nextDouble() * (cap + 1)).toLong.min(cap))
+      val batches = packBatches(sizes, cap)
+      assert(batches.flatten === sizes.indices)
+      assert(batches.forall(b => b.nonEmpty && b.map(sizes).sum <= cap))
+      // greedy: a batch closes only when the next interval would overflow it
+      batches.sliding(2).filter(_.size == 2).foreach { case Seq(a, b) =>
+        assert(a.map(sizes).sum + sizes(b.head) > cap)
+      }
+    }
+    assert(packBatches(Seq(3L, 3L, 2L, 5L), 6L) === Seq(Seq(0, 1), Seq(2), Seq(3)))
+    intercept[IllegalArgumentException](packBatches(Seq(7L), 6L))
   }
 
   test("top-k agg equals window rank across random k / groups / heavy ties") {

@@ -48,4 +48,33 @@ class StatsSafeSpec extends SparkSpec {
     assert(cut.collect().map(r => (r.getLong(0), r.getString(1))).toSet ==
       Set((1L, "a"), (2L, null), (3L, "c")))
   }
+
+  test("cutCounting binds the flag column by the session resolver, exactly once") {
+    def flags(s: org.apache.spark.sql.SparkSession, names: String*): DataFrame =
+      s.createDataFrame(Seq((true, false), (true, false), (false, false)))
+        .toDF(names: _*)
+    for (cs <- Seq("true", "false")) Sessions.withConfIsolated(spark,
+        "spark.sql.caseSensitive" -> cs) { s =>
+      // the first flag column holds two trues, the second none: a wrong
+      // binding shows up as a wrong count
+      assert(Iterative.cutCounting(flags(s, "flag", "other"), "flag")._2 == 2)
+      assert(Iterative.cutCounting(flags(s, "other", "flag"), "flag")._2 == 0)
+      // a duplicated name is ambiguous under either setting
+      val dup = intercept[IllegalArgumentException](
+        Iterative.cutCounting(flags(s, "flag", "flag"), "flag"))
+      assert(dup.getMessage.contains("ambiguous"), s"caseSensitive=$cs")
+      if (cs == "true") {
+        // exact case only: the variant is another column
+        assert(Iterative.cutCounting(flags(s, "FLAG", "flag"), "flag")._2 == 0)
+        intercept[IllegalArgumentException](
+          Iterative.cutCounting(flags(s, "FLAG", "other"), "flag"))
+      } else {
+        // the variant resolves; two case variants are ambiguous
+        assert(Iterative.cutCounting(flags(s, "FLAG", "other"), "flag")._2 == 2)
+        val ci = intercept[IllegalArgumentException](
+          Iterative.cutCounting(flags(s, "FLAG", "flag"), "flag"))
+        assert(ci.getMessage.contains("ambiguous"))
+      }
+    }
+  }
 }
