@@ -2,19 +2,27 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** SparkSession factory with the settings we want everywhere.
-  *
-  * Tuned for the driver's local[32] harness but the same knobs are what
-  * you'd set on a 1000-executor cluster: AQE on (runtime re-plan, skew-join
-  * splitting, partition coalescing), shuffle partitions sized to the
-  * parallelism at hand, UTC session time.
+/** SparkSession factory with the settings we want everywhere: AQE on
+  * (runtime re-plan, skew-join splitting, partition coalescing), shuffle
+  * partitions sized to the parallelism at hand, UTC session time. The
+  * same knobs apply on a cluster via [[tune]].
   */
 object Sessions {
-  def local(cpus: Int = 32): SparkSession = tune(
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-  ).getOrCreate()
+  /** Local-mode session on `cpus` cores — the one factory behind Bench,
+    * Verify, PlanDump and the specs. Logs at WARN.
+    */
+  def local(cpus: Int): SparkSession = {
+    val s = tune(
+      SparkSession.builder()
+        .master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus)
+    ).getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** Core count for the mains: `SPARK_GRAFT_CPUS`, default 4. */
+  def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
   /** Apply graft's standard conf to any builder (cluster or local). */
   def tune(b: SparkSession.Builder): SparkSession.Builder = b

@@ -71,13 +71,6 @@ object TextAnalysis {
     round(greatest(least((lenScore * 0.5 + stopScore * 0.5) - punctPen, lit(1.0)), lit(0.0)), 4)
   }
 
-  /** Mean token length in characters (4 dp). */
-  def meanTokenLen(text: Column): Column = {
-    val toks = split(trim(text), "\\s+")
-    round(aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") /
-      greatest(size(toks), lit(1)), 4)
-  }
-
   /** Composite quality score in [0,1]: rewards mid-length docs, penalizes
     * punctuation soup and stopword-free keyword stuffing. Deterministic,
     * expressible in ANSI SQL for oracle checks.
@@ -131,15 +124,6 @@ object TextAnalysis {
     */
   def fingerprint(text: Column): Column =
     md5(regexp_replace(lower(trim(text)), "\\s+", " "))
-
-  /** Rolling 64-bit polynomial fingerprint over whitespace tokens
-    * (Karp-Rabin style): acc = acc*31 + crc32(token), wrapped to signed 64.
-    * Order-sensitive unlike [[fingerprint]].
-    */
-  def rollingFingerprint(text: Column): Column = {
-    val toks = split(trim(text), "\\s+")
-    aggregate(toks, lit(0L), (acc, t) => acc * 31L + crc32(t))
-  }
 
   // ── cleaning (CCNet/Dolma-style pre-tokenization scrubs) ──────────────
   // Patterns stay in the Java-regex ∩ RE2 common subset so the DuckDB

@@ -153,18 +153,28 @@ object Dedup {
     * each round; on a cluster prefer `spark.sparkContext.setCheckpointDir`
     * + `checkpoint()` for fault tolerance. For graphs with long chains at
     * extreme scale [[connectedComponentsStar]] (large-star/small-star
-    * contraction) converges in O(log² n) rounds regardless of diameter;
-    * `algorithm = "auto"` (the default) starts on label propagation —
-    * cheaper on the near-clique graphs near-dup emits — and switches to
-    * star-contraction if propagation exceeds `maxIter`.
+    * contraction) converges in O(log² n) rounds regardless of diameter,
+    * so it is the automatic fallback: label propagation runs first —
+    * cheaper on the near-clique graphs near-dup emits — and a graph it
+    * cannot settle in `maxIter` rounds restarts on star contraction.
     */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
-                          idB: String = "id_b", maxIter: Int = 15,
-                          algorithm: String = "auto"): DataFrame = {
-    require(Set("auto", "label", "star").contains(algorithm),
-      s"algorithm must be auto|label|star, got '$algorithm'")
-    if (algorithm == "star")
-      return connectedComponentsStar(pairs, idA, idB)
+                          idB: String = "id_b", maxIter: Int = 15): DataFrame =
+    labelPropagation(pairs, idA, idB, maxIter).getOrElse {
+      System.err.println(
+        s"[graft] connectedComponents: min-label propagation did not " +
+          s"converge in $maxIter rounds (long-chain graph) — switching " +
+          "to star-contraction")
+      connectedComponentsStar(pairs, idA, idB)
+    }
+
+  /** The min-label propagation rounds of [[connectedComponents]]: the
+    * labels if they reach a fixpoint within `maxIter` rounds, else None.
+    * An unconverged exit never escapes as an answer — it would be SPLIT
+    * components (several labels for one true component).
+    */
+  private[graft] def labelPropagation(pairs: DataFrame, idA: String,
+                                      idB: String, maxIter: Int): Option[DataFrame] = {
     // No distinct(): duplicate edges only repeat rows under an idempotent
     // min — deduping them would cost a full extra shuffle of the edge
     // list. No pre-partitioning either: the label set is orders of
@@ -198,25 +208,7 @@ object Dedup {
       labels = nextAll.drop("__chg")
       i += 1
     }
-    // an unconverged exit would silently return SPLIT components (several
-    // labels for one true component). Near-dup graphs (near-cliques)
-    // converge in 2-3 rounds, so exceeding maxIter means a long-chain
-    // graph: under "auto" restart on the O(log² n)-round star-contraction
-    // form; under "label" fail loudly.
-    if (!converged) {
-      if (algorithm == "auto") {
-        System.err.println(
-          s"[graft] connectedComponents: min-label propagation did not " +
-            s"converge in $maxIter rounds (long-chain graph) — switching " +
-            "to star-contraction")
-        return connectedComponentsStar(pairs, idA, idB)
-      }
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds — " +
-          "raise maxIter or use algorithm=star (star-contraction) for " +
-          "long-chain graphs")
-    }
-    labels
+    if (converged) Some(labels) else None
   }
 
   /** Connected components by alternating large-star/small-star contraction
@@ -310,6 +302,13 @@ object Dedup {
       .select(col("id"), coalesce(col("root"), col("id")).as("comp"))
   }
 
+  /** Increment edge count up to which [[updateComponents]] hard-broadcasts
+    * its increment-sized frames. Those frames (incIds, lblA/lblB, remap)
+    * hold up to TWO endpoints per edge, so 2 M edges is half the intended
+    * ~4 M-row / tens-of-MB hash-relation budget.
+    */
+  private val MaxBroadcastIncrementRows = 2000000L
+
   /** INCREMENTAL connected-components maintenance — attach an increment's
     * edges to STANDING component labels without re-running CC over the
     * history pair graph (the continuous-ingest chain's last batch-only
@@ -356,10 +355,7 @@ object Dedup {
     */
   def updateComponents(standing: DataFrame, newPairs: DataFrame,
                        idA: String = "id_a", idB: String = "id_b",
-                       maxIter: Int = 15,
-                       algorithm: String = "auto",
-                       maxBroadcastIncrementRows: Long = 2000000L,
-                       knownIncrementRows: Long = -1L): DataFrame = {
+                       maxIter: Int = 15): DataFrame = {
     require(standing.columns.contains("id") && standing.columns.contains("comp"),
       s"updateComponents needs standing labels with (id, comp) columns " +
         s"(connectedComponents output), got ${standing.columns.mkString(",")}")
@@ -371,17 +367,11 @@ object Dedup {
     // UNEXPECTEDLY large increment would OOM instead of degrading the
     // way an AQE-decided plan would — so gate it on the increment's
     // edge count (raw is already checkpointed; the count is a cheap
-    // second read, and a caller that already knows its increment size
-    // can pass `knownIncrementRows` to skip that job entirely — the
-    // per-increment cost matters when increments are tiny and frequent).
-    // The broadcast frames (incIds, lblA/lblB, remap) hold up to TWO
-    // endpoints per edge, so the default edge ceiling is 2 M — half the
-    // intended ~4 M-row / tens-of-MB hash-relation budget. Past the
-    // threshold the same joins run un-hinted and AQE picks shuffle
-    // plans: correctness identical, history pays one shuffle — the
-    // right trade once the "increment" is itself data-scale.
-    val incRows = if (knownIncrementRows >= 0L) knownIncrementRows else raw.count()
-    val incrementBroadcastable = incRows <= maxBroadcastIncrementRows
+    // second read). Past `MaxBroadcastIncrementRows` the same joins
+    // run un-hinted and AQE picks shuffle plans: correctness identical,
+    // history pays one shuffle — the right trade once the "increment" is
+    // itself data-scale.
+    val incrementBroadcastable = raw.count() <= MaxBroadcastIncrementRows
     def bcInc(df: DataFrame): DataFrame =
       if (incrementBroadcastable) broadcast(df) else df
     // 1. contract: endpoints adopt their standing label; fresh stay
@@ -417,8 +407,8 @@ object Dedup {
     // 2. delta CC over contracted edges (self-loops contribute nothing)
     val deltaEdges = contracted.where(col("id_a") =!= col("id_b"))
       .select("id_a", "id_b")
-    val delta = connectedComponents(deltaEdges, "id_a", "id_b", maxIter,
-      algorithm).transform(graft.plans.Iterative.cut)
+    val delta = connectedComponents(deltaEdges, "id_a", "id_b", maxIter)
+      .transform(graft.plans.Iterative.cut)
     // 3a. remap standing by component label — broadcast(delta) keeps the
     // history-scale frame shuffle-free
     val remap = bcInc(delta
@@ -465,8 +455,7 @@ object Dedup {
     */
   def keepBestPerComponent(rows: DataFrame, idCol: String, pairs: DataFrame,
                            score: Column, idA: String = "id_a",
-                           idB: String = "id_b", maxIter: Int = 15,
-                           algorithm: String = "auto"): DataFrame = {
+                           idB: String = "id_b", maxIter: Int = 15): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(rows.sparkSession)
     require(!rows.columns.exists(_.equalsIgnoreCase("comp")),
       "keepBestPerComponent adds a 'comp' column — rename the existing one")
@@ -477,7 +466,7 @@ object Dedup {
       require(!rows.columns.exists(_.equalsIgnoreCase(reserved)),
         s"keepBestPerComponent uses '$reserved' internally — rename the existing column")
     }
-    val comps = connectedComponents(pairs, idA, idB, maxIter, algorithm)
+    val comps = connectedComponents(pairs, idA, idB, maxIter)
       .withColumnRenamed("id", "__cc_id")
     val labeled = rows.filter(col(idCol).isNotNull)
       .join(comps, rows(idCol) === col("__cc_id"), "left")

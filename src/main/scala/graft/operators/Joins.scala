@@ -19,10 +19,6 @@ import org.apache.spark.sql.functions.broadcast
   */
 object Joins {
 
-  /** Left join a fact to a (small) dimension, broadcasting the dimension. */
-  def enrich(fact: DataFrame, dim: DataFrame, joinExpr: Column, how: String = "left"): DataFrame =
-    fact.join(broadcast(dim), joinExpr, how)
-
   /** Rows of `left` with no match in `right` (reference:
     * admissions_without_discharges). Broadcast the right side when small —
     * anti-join only needs its keys.

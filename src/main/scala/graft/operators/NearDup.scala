@@ -33,10 +33,6 @@ object NearDup {
             i => concat_ws(" ", slice(toks, i, lit(n))))))
     }).getItem(0)
 
-  /** Exploded (id, shingle) pairs — one shuffle-side of the similarity join. */
-  def shingleTable(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    docs.select(col(idCol).as("id"), explode(shingles(col(textCol), n)).as("shingle"))
-
   /** Pairs (id_a < id_b) with n-gram Jaccard ≥ threshold.
     * Exact: |A∩B| from a self-join on shared shingles, |A∪B| = |A|+|B|−∩.
     * Only docs sharing ≥1 shingle ever pair up.

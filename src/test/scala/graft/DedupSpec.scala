@@ -166,14 +166,12 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.keepFirst(allNull, Seq(col("uid")), col("ts"), col("id")).count() === 1)
   }
 
-  test("connectedComponents algorithm=label FAILS LOUDLY instead of returning split components") {
-    // a 10-node path needs 9 rounds; maxIter 3 must throw, not silently
-    // hand back a partially-merged labeling
+  test("labelPropagation: non-convergence returns None, never split components") {
+    // a 10-node path needs 9 rounds; maxIter 3 must report non-convergence,
+    // not silently hand back a partially-merged labeling
     val pairs = (0L until 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val e = intercept[IllegalStateException] {
-      Dedup.connectedComponents(pairs, maxIter = 3, algorithm = "label").collect()
-    }
-    assert(e.getMessage.contains("did not converge"))
+    assert(Dedup.labelPropagation(pairs, "id_a", "id_b", maxIter = 3).isEmpty)
+    assert(Dedup.labelPropagation(pairs, "id_a", "id_b", maxIter = 15).isDefined)
   }
 
   test("connectedComponents auto: long-chain graph falls back to star-contraction and converges") {
@@ -193,6 +191,14 @@ class DedupSpec extends SparkSpec {
     assert(out.length === 1000 && out.forall(_._2 === 0L))
   }
 
+  test("connectedComponentsStar: exceeding maxIter throws, never split components") {
+    val pairs = (0L until 999L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponentsStar(pairs, maxIter = 2).collect()
+    }
+    assert(e.getMessage.contains("did not converge"))
+  }
+
   test("connectedComponentsStar equals label propagation on random graphs (property)") {
     val rnd = new scala.util.Random(42)
     for (trial <- 0 until 5) {
@@ -204,8 +210,9 @@ class DedupSpec extends SparkSpec {
         val pairs = edges.toDF("id_a", "id_b")
         val star = Dedup.connectedComponentsStar(pairs)
           .as[(Long, Long)].collect().toMap
-        val label = Dedup.connectedComponents(pairs, maxIter = 50,
-          algorithm = "label").as[(Long, Long)].collect().toMap
+        val label = Dedup.labelPropagation(pairs, "id_a", "id_b", maxIter = 50)
+          .getOrElse(fail(s"trial $trial: label propagation did not converge"))
+          .as[(Long, Long)].collect().toMap
         assert(star === label, s"trial $trial: star/label disagree")
       }
     }
@@ -297,6 +304,34 @@ class DedupSpec extends SparkSpec {
       out.collect() // finalize AQE
       val p = out.queryExecution.executedPlan.toString
       assert(!p.contains("BroadcastExchange"), p.take(2000))
+    }
+  }
+
+  test("bloomGate and bloomGateWith broadcast the confirm joins into the history scan") {
+    // the gate's scale contract: history rows never reshuffle. With
+    // auto-broadcast off only the gate's own hints can broadcast, so the
+    // plan must join by broadcast, never sort-merge, and its only hash
+    // exchanges are the two (dup-sized) maybe/confirm key sets
+    val dir = java.nio.file.Files.createTempDirectory("bloom_gate_plan").toString
+    Sessions.withConfIsolated(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"
+    ) { s =>
+      import s.implicits._
+      (0 until 200).map(i => (i.toLong, s"hist_$i")).toDF("doc_id", "text")
+        .write.parquet(s"$dir/history")
+      val h = s.read.parquet(s"$dir/history")
+      val inc = ((0 until 20).map(i => (1000L + i, s"hist_$i")) ++
+        (0 until 80).map(i => (2000L + i, s"new_$i"))).toDF("doc_id", "text")
+      val bloom = Dedup.historyBloom(h, "text", expectedItems = 1000L)
+      for (gated <- Seq(Dedup.bloomGate(inc, h, "text", expectedItems = 1000L),
+                        Dedup.bloomGateWith(inc, h, bloom, "text"))) {
+        assert(gated.collect().count(r => !r.getAs[Boolean]("is_new")) === 20)
+        val p = gated.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==").head // AQE echoes the pre-run plan below
+        assert(p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"), p.take(3000))
+        assert("Exchange hashpartitioning".r.findAllIn(p).size <= 2, p.take(3000))
+      }
     }
   }
 
