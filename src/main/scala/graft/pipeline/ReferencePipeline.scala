@@ -13,9 +13,11 @@ import graft.operators._
   *
   * Every stage is a DataFrame transform, so the flow inherits Spark's
   * partitioning/pushdown and runs identically over 10 rows or 100 TB of
-  * exports. The single construction-time job is the MCL key discovery
-  * (a plan-time KEY LIST, like `extractAllKeys`); pass `knownMclKeys`
-  * to make construction fully lazy.
+  * exports. Construction runs jobs in two places: the MCL key discovery
+  * (a plan-time KEY LIST, like `extractAllKeys`; pass `knownMclKeys` to
+  * skip it) and, when a dataset card is configured, `DatasetCard.build`'s
+  * equi-width bounds and `percentile` collects over the joined table.
+  * Without either, construction is fully lazy.
   */
 object ReferencePipeline {
 
@@ -53,7 +55,7 @@ object ReferencePipeline {
       summaryNeolab: DataFrame = null,
       summaryBaseline: DataFrame = null,
       datasetCard: DataFrame = null,
-      shared: Option[DataFrame] = None)
+      shared: Seq[DataFrame] = Nil)
 
   /** Run the full flow from a DataFrame bearing one raw session JSON
     * string per row (column `jsonCol`).
@@ -74,6 +76,17 @@ object ReferencePipeline {
     *   validation rules feeding `Outputs.ruleExceptions`
     *   (validate_dataframe_with_ge) — one metadata frame, two derived
     *   behaviors, like the reference's script-config JSON
+    * @param persistShared persist (MEMORY_AND_DISK) the plan's two fan-out
+    *   points: the deduped sessions, which every table derives from, and
+    *   the joined table, which `summary_counts`, `completeness`,
+    *   `summary_baseline` and `dataset_card` derive from. Publishing then
+    *   scans the raw JSON and runs `Joins.bestMatch` once, not once per
+    *   table. Both frames are returned in `Outputs.shared` (dependents
+    *   first); `publish` and `publishWithUnions` release them, and a
+    *   caller materializing the tables itself must `unpersist` them.
+    *   AQE does not coalesce the partitions of a cached plan, so `joined`
+    *   and `summary_baseline` publish one part file per shuffle partition
+    *   where the uncached plan writes a single file on small inputs.
     */
   def run(raw: DataFrame, jsonCol: String, keys: Seq[String],
           repeatableKeys: Seq[String] = Nil,
@@ -122,11 +135,11 @@ object ReferencePipeline {
     //    Every output table fans out from here — persistShared caches it
     //    so materializing all outputs (publish) scans the raw JSON once,
     //    not once per table.
-    val deduped0 = Dedup.keepLatest(wellFormed, Seq("uid", "scriptid"),
-      col("started_at"), col("completed_at"))
-    val deduped = if (persistShared)
-      deduped0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else deduped0
+    def shared(df: DataFrame): DataFrame =
+      if (persistShared) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else df
+    val deduped = shared(Dedup.keepLatest(wellFormed, Seq("uid", "scriptid"),
+      col("started_at"), col("completed_at")))
 
     // 3. tidy: wide key-value extraction per script route
     def route(script: String): DataFrame = {
@@ -316,9 +329,13 @@ object ReferencePipeline {
     //     HypothermiaCount …, 1-or-NULL so SUM and COUNT both count hits).
     //     Callers compose DeriveColumns.referenceOutcomeFlags over their
     //     joined-table column names; one withColumns projection, no scan.
-    val joined =
+    //     `joined` is the second fan-out point (summary counts,
+    //     completeness, the baseline and the dataset card derive from it),
+    //     so persistShared caches it before any of them is built: the
+    //     card's construction-time jobs fill the cache, bestMatch runs once.
+    val joined = shared(
       if (outcomeFlags.isEmpty) derived
-      else derived.withColumns(outcomeFlags.toMap)
+      else derived.withColumns(outcomeFlags.toMap))
 
     // 6. summary counts: facility × month of flag sums
     val summaryCounts = Summaries.flagCounts(joined,
@@ -387,24 +404,9 @@ object ReferencePipeline {
     Outputs(admissions, discharges, repeatables, joined, summaryCounts,
       completeness, exceptions, mclKeys, mclTables, combinedDiagnoses,
       ruleExceptions, dayVitals, summaryNeolab, summaryBaseline,
-      datasetCard, shared = if (persistShared) Some(deduped) else None)
+      datasetCard, shared = if (persistShared) Seq(joined, deduped) else Nil)
   }
 
-  /** Materialize every output table under `baseDir/<name>` — the
-    * reference's final publish into the `derived` schema
-    * (create table → swap), as parquet directories. Each table writes to
-    * a sibling `.tmp` dir first and swaps in only when fully written
-    * (graft.sources.AtomicSwap), so no data version is ever lost and a
-    * HALF-written table is never visible; the swap itself is
-    * delete-then-rename on plain filesystems, so a reader racing the
-    * swap instant (or a crash inside it) can see the table briefly
-    * MISSING — its data intact under `.tmp`. ACID table formats replace
-    * this class when that window matters. Tables publish independently;
-    * a failure leaves earlier tables at their NEW version and later ones
-    * at their OLD — the reference's sequential CREATE TABLE semantics.
-    * Pair with `run(..., persistShared = true)` so the fan-out doesn't
-    * rescan the raw JSON once per table.
-    */
   /** The named output tables of one run, publish order. Null frames
     * (features not configured) are filtered out.
     */
@@ -461,17 +463,31 @@ object ReferencePipeline {
   def hygiene(df: DataFrame): DataFrame =
     Cleanup.dropSingleLetterColumns(Cleanup.dropConfidential(df))
 
-  /** Publishes every table, then releases the shared persist (if `run`
-    * was called with `persistShared = true`). The unpersist matters in a
+  /** Materialize every output table under `baseDir/<name>` — the
+    * reference's final publish into the `derived` schema
+    * (create table → swap), as parquet directories. Each table writes to
+    * a sibling `.tmp` dir first and swaps in only when fully written
+    * (graft.sources.AtomicSwap), so no data version is ever lost and a
+    * HALF-written table is never visible; the swap itself is
+    * delete-then-rename on plain filesystems, so a reader racing the
+    * swap instant (or a crash inside it) can see the table briefly
+    * MISSING — its data intact under `.tmp`. ACID table formats replace
+    * this class when that window matters. Tables publish independently;
+    * a failure leaves earlier tables at their NEW version and later ones
+    * at their OLD — the reference's sequential CREATE TABLE semantics.
+    * Pair with `run(..., persistShared = true)` so the fan-out doesn't
+    * rescan the raw JSON (or re-run bestMatch) once per table.
+    *
+    * The shared persists (`Outputs.shared`) are released in a `finally`,
+    * after the last table or the first failed write. That matters in a
     * LONG-LIVED session re-running the cron loop: Spark's cache is keyed
     * by logical plan, so a second `run` over the SAME source path would
     * silently reuse the previous increment's cached rows — stale derived
     * tables with no error anywhere (caught by IncrementalPipelineSpec).
     */
-  def publish(out: Outputs, baseDir: String): Unit = {
-    publishTables(tableList(out), baseDir)
-    out.shared.foreach(_.unpersist())
-  }
+  def publish(out: Outputs, baseDir: String): Unit =
+    try publishTables(tableList(out), baseDir)
+    finally out.shared.foreach(_.unpersist())
 
   private def publishTables(tables: Seq[(String, DataFrame)], baseDir: String): Unit = {
     val dupNames = tables.groupBy(_._1).collect { case (n, g) if g.size > 1 => n }
@@ -546,9 +562,9 @@ object ReferencePipeline {
   def publishWithUnions(runs: Seq[(String, Outputs)], baseDir: String): Unit = {
     require(runs.map(_._1).distinct.size == runs.size,
       "duplicate facility names in publishWithUnions")
-    runs.foreach { case (facility, out) =>
+    try runs.foreach { case (facility, out) =>
       publishTables(tableList(out), s"$baseDir/$facility") }
-    runs.foreach(_._2.shared.foreach(_.unpersist()))
+    finally runs.foreach(_._2.shared.foreach(_.unpersist()))
     // union views read the tables JUST PUBLISHED instead of re-deriving
     // them from raw (the original plans would re-execute every stage per
     // facility — roughly doubling publish cost); reading the materialized

@@ -129,7 +129,7 @@ class GoldenPipelineSpec extends SparkSpec {
                     {"key":"OtherOrg1","values":[{"value":"","label":""}]}]}""")
   ).toDF("json")
 
-  private def fullRun() = ReferencePipeline.run(goldenRaw, "json",
+  private def fullRun(persistShared: Boolean = true) = ReferencePipeline.run(goldenRaw, "json",
     keys = Seq("Temp", "NeoTreeOutcome", "BirthWeight", "Gestation", "OFC",
       "Org1", "OtherOrg1"),
     repeatableKeys = Seq("Temp", "Diag"),
@@ -146,7 +146,7 @@ class GoldenPipelineSpec extends SparkSpec {
     vitalsTables = Seq("vitals"),
     neolabScript = Some("lab"), neolabAsOf = lit("2026-01-14"),
     cardNumericCols = Seq("los_days"), cardCategoricalCols = Seq("facility"),
-    persistShared = true)
+    persistShared = persistShared)
 
   /** Order-independent stable digest: columns sorted by name, every value
     * stringified (NULL → ␀ sentinel distinct from ""), rows sorted, md5
@@ -193,5 +193,27 @@ class GoldenPipelineSpec extends SparkSpec {
       }
       assert(diffs.isEmpty, "composition drift:\n" + diffs.mkString("\n"))
     }
+  }
+
+  /** Every published table of `dir` as name → (rows, md5). */
+  private def publishedDigests(dir: String): Map[String, (Long, String)] =
+    new java.io.File(dir).listFiles().map(_.getName)
+      .map(name => name -> tableDigest(spark.read.parquet(s"$dir/$name"))).toMap
+
+  test("persistShared changes no published table and leaves nothing cached") {
+    // suites share one session; start from an empty cache so the check
+    // below sees only this run's entries
+    spark.catalog.clearCache()
+    val cached = java.nio.file.Files.createTempDirectory("graft_golden_cached").toString
+    val lazyDir = java.nio.file.Files.createTempDirectory("graft_golden_lazy").toString
+    ReferencePipeline.publish(fullRun(persistShared = true), cached)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "publish left a shared persist in the cache")
+    ReferencePipeline.publish(fullRun(persistShared = false), lazyDir)
+    val (c, l) = (publishedDigests(cached), publishedDigests(lazyDir))
+    assert(c.keySet == l.keySet)
+    val diffs = c.keySet.toSeq.sorted.filter(t => c(t) != l(t))
+      .map(t => s"$t: persisted ${c(t)}, unpersisted ${l(t)}")
+    assert(diffs.isEmpty, "persistShared changed published tables:\n" + diffs.mkString("\n"))
   }
 }

@@ -468,4 +468,64 @@ class ReferencePipelineSpec extends SparkSpec {
     assert(vitals.count() == 2)
     assert(vitals.select("Temp_value").as[String].collect().toSet == Set("36.5", "37.5"))
   }
+
+  private def cacheManager = spark.sharedState.cacheManager
+
+  private def runWithCard(persistShared: Boolean) =
+    ReferencePipeline.run(raw, "json", Seq("Temp"),
+      cardNumericCols = Seq("los_days"), cardCategoricalCols = Seq("facility"),
+      persistShared = persistShared)
+
+  test("persistShared: the tables derived from joined read its cache, not a second bestMatch") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val plans = new AdaptiveSparkPlanHelper {}
+    // the bestMatch join is the one keyed on the base uid; an
+    // InMemoryTableScanExec is a leaf, so a join inside a cached plan is
+    // only visited through its relation's cachedPlan
+    def bestMatchJoins(p: SparkPlan) = plans.collect(p) {
+      case j: BaseJoinExec if j.expressions.flatMap(_.references).exists(_.name == "base_uid") => j
+    }
+    def cachedPlans(p: SparkPlan) =
+      plans.collect(p) { case s: InMemoryTableScanExec => s.relation.cacheBuilder.cachedPlan }
+    def derivedTables(out: ReferencePipeline.Outputs) = Seq(
+      "summary_counts" -> out.summaryCounts, "completeness" -> out.completeness,
+      "summary_baseline" -> out.summaryBaseline, "dataset_card" -> out.datasetCard)
+      .map { case (name, df) => name -> df.queryExecution.executedPlan }
+
+    // control: without the persist, every one of them re-runs bestMatch
+    derivedTables(runWithCard(persistShared = false)).foreach { case (name, plan) =>
+      assert(bestMatchJoins(plan).nonEmpty, s"$name: expected the bestMatch join in\n$plan")
+    }
+
+    val out2 = runWithCard(persistShared = true)
+    try derivedTables(out2).foreach { case (name, plan) =>
+      assert(bestMatchJoins(plan).isEmpty, s"$name re-runs bestMatch:\n$plan")
+      val cached = cachedPlans(plan)
+      // every cache it reads is the persisted joined table (the dedup
+      // cache alone would mean bestMatch runs again above it)
+      assert(cached.nonEmpty && cached.forall(c => bestMatchJoins(c).nonEmpty),
+        s"$name does not read the persisted joined table:\n$plan")
+    } finally out2.shared.foreach(_.unpersist())
+  }
+
+  test("a failed publish still releases the shared persists") {
+    // suites share one session; start from an empty cache so the check
+    // below sees only this run's entries
+    spark.catalog.clearCache()
+    // a regular file where the publish directory should be fails the
+    // first table's write
+    val notADir = java.nio.file.Files.createTempFile("graft_publish", ".file").toString
+    val out2 = runWithCard(persistShared = true)
+    assert(out2.shared.size == 2 && !cacheManager.isEmpty)
+    intercept[Exception](ReferencePipeline.publish(out2, notADir))
+    assert(cacheManager.isEmpty, "publish leaked the shared persists after a failed write")
+
+    val outA = runWithCard(persistShared = true)
+    assert(!cacheManager.isEmpty)
+    intercept[Exception](ReferencePipeline.publishWithUnions(Seq("fa" -> outA), notADir))
+    assert(cacheManager.isEmpty, "publishWithUnions leaked the shared persists after a failed write")
+  }
 }
