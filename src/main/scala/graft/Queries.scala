@@ -1079,7 +1079,7 @@ object Queries {
     "q143_token_budget_bpe" -> ((s, d) => {
       graft.functions.GraftFunctions.ensureRegistered(s)
       val docs = Tables.documents(s, d)
-      val merges = Quality.bpeTrainBatched(docs, "text", numMerges = 8)
+      val merges = Quality.bpeTrain(docs, "text", numMerges = 8)
         .collect().sortBy(_.getLong(0))
         .map(r => (r.getString(1), r.getString(2))).toSeq
       val enc = Quality.bpeEncode(docs, "doc_id", "text", merges,
@@ -1099,7 +1099,7 @@ object Queries {
     "q144_seq_pack_bpe" -> ((s, d) => {
       graft.functions.GraftFunctions.ensureRegistered(s)
       val docs = Tables.documents(s, d)
-      val merges = Quality.bpeTrainBatched(docs, "text", numMerges = 8)
+      val merges = Quality.bpeTrain(docs, "text", numMerges = 8)
         .collect().sortBy(_.getLong(0))
         .map(r => (r.getString(1), r.getString(2))).toSeq
       val enc = Quality.bpeEncode(docs, "doc_id", "text", merges,
@@ -1114,8 +1114,10 @@ object Queries {
     // over an md5-shaped corpus (500 distinct 32-char hex words — the
     // synthetic documents' natural 31-word vocabulary exhausts at 107
     // merges, so the variant reshapes text to hash words). Runs the
-    // BATCHED trainer; the oracle replays 128 strictly sequential
-    // unrolled iterations, re-certifying batched == sequential at depth.
+    // batched distributed rounds whatever the dictionary size (the one
+    // query that does: bpeTrain trains a dictionary this small on the
+    // driver); the oracle replays 128 strictly sequential unrolled
+    // iterations, re-certifying batched == sequential at depth.
     // 128 (was 256): measured 21 s vs 39 s per run with IDENTICAL
     // acceptance structure (avg batch ~2.0, 65 stop-rounds — every
     // branch of the batch rule fires), so the shallower replay buys the
@@ -1124,7 +1126,7 @@ object Queries {
       graft.functions.GraftFunctions.ensureRegistered(s)
       val shaped = Tables.documents(s, d)
         .select(col("doc_id"), md5(col("doc_id").cast("string")).as("text"))
-      Quality.bpeTrainBatched(shaped, "text", numMerges = 128)
+      Quality.batchedTrain(shaped, "text", numMerges = 128)
     }),
 
     // DEEP BPE ENCODE (q138 at >= 1k merges): a deterministic
@@ -1176,13 +1178,13 @@ object Queries {
 
     // BPE encode under the q137-learned merges: per-doc token counts
     // under the REAL tokenizer (the number token budgets should use, not
-    // the whitespace proxy) — training collects 8 merges via the batched
-    // trainer, encoding is a pure zero-shuffle codegen projection whose
+    // the whitespace proxy) — training collects 8 merges via bpeTrain,
+    // encoding is a pure zero-shuffle codegen projection whose
     // merge table ships as ONE kernel constant (plan O(1) in merges)
     "q138_bpe_encode" -> ((s, d) => {
       graft.functions.GraftFunctions.ensureRegistered(s)
       val docs = Tables.documents(s, d)
-      val merges = Quality.bpeTrainBatched(docs, "text", numMerges = 8)
+      val merges = Quality.bpeTrain(docs, "text", numMerges = 8)
         .collect().sortBy(_.getLong(0))
         .map(r => (r.getString(1), r.getString(2))).toSeq
       Quality.bpeEncode(docs, "doc_id", "text", merges)
@@ -1477,7 +1479,7 @@ object Queries {
     "q168_tokenizer_fertility" -> ((s, d) => {
       graft.functions.GraftFunctions.ensureRegistered(s)
       val docs = Tables.documents(s, d)
-      val merges = Quality.bpeTrainBatched(docs, "text", numMerges = 8)
+      val merges = Quality.bpeTrain(docs, "text", numMerges = 8)
         .collect().sortBy(_.getLong(0))
         .map(r => (r.getString(1), r.getString(2))).toSeq
       Quality.tokenizerFertility(docs, "text", "lang", merges, "n_chars")
@@ -1628,24 +1630,17 @@ object Queries {
       Summaries.heavyHitters(ev, "key", k = 8, capacity = 64)
     }),
 
-    // distributed BPE tokenizer TRAINING via the BATCHED trainer (one
-    // pair-count job per batch of provably-independent merges, not one
-    // per merge — the production-merge-count path); the DuckDB oracle
-    // replays the strictly SEQUENTIAL unrolled-CTE trainer, so every
-    // correctness run re-certifies batched == sequential on real data
-    "q137_bpe_train" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
-      Quality.bpeTrainBatched(Tables.documents(s, d), "text", numMerges = 8)
-    }),
+    // BPE tokenizer TRAINING: one corpus-sized word-count job lands the
+    // dictionary, which fits under the driver cap, so the 8 merges run
+    // on the driver (jobs do not grow with the merge count); the DuckDB
+    // oracle replays the strictly SEQUENTIAL unrolled-CTE trainer
+    "q137_bpe_train" -> ((s, d) =>
+      Quality.bpeTrain(Tables.documents(s, d), "text", numMerges = 8)),
 
-    // Driver-local BPE training: collapse-first word count (the only
-    // corpus-sized job), then the whole merge loop on the driver — the
-    // production-depth default after the r15 probe measured the batched
-    // path at 16.9k count rounds for 30k merges (bpe_scale_r15.json).
-    // Bit-identical to q137's trainer; the oracle replays the strictly
-    // sequential reference at a deeper 12-merge unroll.
+    // q137's trainer at a deeper 12-merge unroll of the oracle's
+    // sequential reference (same bpeTrain, same driver-side branch)
     "q145_bpe_train_local" -> ((s, d) =>
-      Quality.bpeTrainLocal(Tables.documents(s, d), "text", numMerges = 12)),
+      Quality.bpeTrain(Tables.documents(s, d), "text", numMerges = 12)),
 
     // BPE merge-selection seed: top-50 adjacent-codepoint pairs with
     // corpus occurrence counts, counted over the distinct-word frequency

@@ -556,7 +556,7 @@ case class BpeCountExpr(child: Expression, merges: Seq[(String, String)],
   * word — see [[TextKernels.bpePairs]] for the exact split semantics it
   * replays. The separator is a plan-time constant; one codegen'd kernel
   * call per row replaces the interpreted zip_with/slice/split chain that
-  * dominated bpeTrainBatched's per-round pair-count stage.
+  * dominated the batched BPE rounds' per-round pair-count stage.
   */
 case class BpePairsExpr(child: Expression, sep: String)
     extends UnaryExpression {

@@ -253,7 +253,7 @@ object TextKernels {
   }
 
   /** Adjacent (l, r) symbol pairs of ONE separator-wrapped BPE dictionary
-    * word — the per-merge-round hot kernel of `Quality.bpeTrainBatched`.
+    * word — the per-round hot kernel of `Quality`'s batched BPE rounds.
     * Replays EXACTLY the combinator formulation it replaced (fuzz-pinned
     * in QualitySpec):
     *

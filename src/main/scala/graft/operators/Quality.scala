@@ -608,65 +608,101 @@ object Quality {
         col("col.pair").as("pair"), col("col.n").as("n_occurrences"))
   }
 
-  /** Distributed BPE tokenizer TRAINING (Sennrich et al. 2016): run
-    * `numMerges` greedy merge iterations over the corpus and return the
-    * learned merge table — one row per merge:
+  /** BPE tokenizer TRAINING (Sennrich et al. 2016): run `numMerges`
+    * greedy merge iterations over the corpus and return the learned
+    * merge table — one row per merge:
     * (merge_rank, left, right, n_occurrences), the artifact a tokenizer
     * ships. Each iteration picks the most frequent adjacent symbol pair
-    * (ties by (left, right) so engines agree) and fuses it everywhere.
+    * (ties by (left, right) in UTF-8 byte order, so engines agree) and
+    * fuses it everywhere as one greedy left-to-right non-overlapping
+    * pass per word ("aaa" under merge (a,a) → "aa"+"a"). Stops early
+    * (fewer rows) if the corpus runs out of pairs.
+    *
+    * Scale shape: ONE corpus-sized word-count job collapses the corpus
+    * to the distinct-word frequency dictionary ([[wordDict]]), and the
+    * landed dictionary's statistics carry its exact row count, so
+    * routing costs no job. A dictionary of at most [[DictCap]] words
+    * crosses to the driver and the whole merge loop runs in
+    * [[trainDict]]: the job count does not grow with `numMerges`. The
+    * r15 probe (bpe_scale_r15.json) is why: 30 000 merges over a 60 k-
+    * word Zipf vocabulary took 15.1 s on the driver against 3,626 s of
+    * batched distributed rounds (16,876 count rounds, avg batch 1.78 —
+    * Zipf count plateaus tie with the truncation floor, where the
+    * exactness rule must stop). Budget ~1 KB of driver heap per
+    * dictionary word (symbol buffers + the inverted pair→words index),
+    * so the 4 M cap needs a ~4-6 GB driver. A larger dictionary stays
+    * distributed and runs [[batchedRounds]] on the same landed frame,
+    * so either branch counts the corpus once. Both branches emit the
+    * same table (spec-pinned against an independent reference trainer;
+    * q145's DuckDB oracle replays the sequential trainer, q142's
+    * certifies the batched rounds at 128 merges).
+    */
+  def bpeTrain(docs: DataFrame, textCol: String, numMerges: Int): DataFrame =
+    trainRouted(docs, textCol, numMerges, DictCap)
+
+  /** [[bpeTrain]] with the driver cap as an argument, so a spec can
+    * force the over-cap branch on a small corpus.
+    */
+  private[graft] def trainRouted(docs: DataFrame, textCol: String,
+      numMerges: Int, maxDictWords: Long): DataFrame = {
+    require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
+    val (dict, words) = wordDict(docs, textCol)
+    val merges =
+      if (words <= maxDictWords) trainDict(dictRows(dict), numMerges)
+      else batchedRounds(dict, numMerges, BatchTopK)
+    mergeTableFrame(docs.sparkSession, merges)
+  }
+
+  /** [[batchedRounds]] straight from the corpus, whatever the
+    * dictionary size. q142 runs it so that its DuckDB oracle, which
+    * replays the strictly sequential trainer, certifies the batched
+    * rounds at depth; specs run it with `topK = 1` as the sequential
+    * reference (one merge per round).
+    */
+  private[graft] def batchedTrain(docs: DataFrame, textCol: String,
+      numMerges: Int, topK: Int = BatchTopK): DataFrame = {
+    require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
+    require(topK >= 1, s"topK must be >= 1, got $topK")
+    mergeTableFrame(docs.sparkSession,
+      batchedRounds(wordDict(docs, textCol)._1, numMerges, topK))
+  }
+
+  /** Driver cap, in rows, on a collected word dictionary: BPE trains on
+    * the driver at or below it, the unigram trainer fails fast above it.
+    */
+  private[operators] val DictCap = 4000000L
+
+  /** Symbol separator of the batched rounds' sequence strings. */
+  private val Sep = "\u001f"
+
+  /** Pair-table rows each batched round fetches. */
+  private val BatchTopK = 512
+
+  /** The distributed merge loop over a landed (w, f) dictionary, with
+    * BATCHED merge selection: each round runs ONE pair-count job,
+    * fetches the top-`topK` pairs, and accepts the longest prefix of
+    * candidates that is PROVABLY what the sequential trainer would pick
+    * — so the merge table is bit-identical to [[trainDict]]'s while the
+    * driver round-trip count drops from one job per merge to one job
+    * per BATCH.
     *
     * Representation: each distinct word is a SEPARATOR-WRAPPED symbol
-    * sequence string `␟s1␟␟s2␟␟s3␟` (every symbol enclosed in `sep`, so
-    * boundaries between symbols are `sep·sep` and the edges carry one
+    * sequence string `␟s1␟␟s2␟␟s3␟` (every symbol enclosed in [[Sep]],
+    * so boundaries between symbols are `sep·sep` and the edges carry one
     * `sep` each); a merge is one
     * `replace(seq, sep+l+sep+sep+r+sep, sep+l+r+sep)` — a left-to-right
     * non-overlapping string replace, which IS BPE's greedy within-word
-    * merge order ("aaa" under merge (a,a) → "aa"+"a"), and is
-    * bit-identical in any SQL engine (the whole trainer is
-    * DuckDB-replayed by unrolled CTEs). Because the key anchors BOTH
-    * symbols at `sep` boundaries, a merge can never fuse across a symbol
-    * boundary even when one symbol's string is a suffix/prefix of
-    * another's (word "aba" under merges (a,b),(b,a) stays ["ab","a"] —
-    * a bare `l+sep+r` key would match the "b␟a" inside "ab␟a" and fuse
-    * the whole word). Fuzzed 200k cases against the symbol-list
-    * reference fold; equality with [[graft.functions.TextKernels.BpeKernel]]
-    * is spec-pinned.
-    *
-    * Scale shape: ONE corpus-sized word-count shuffle builds the
-    * distinct-word frequency dictionary (collapse-first — the reference
-    * BPE trainer structure); every round after that is
+    * merge order, and is bit-identical in any SQL engine (the whole
+    * trainer is DuckDB-replayed by unrolled CTEs). Because the key
+    * anchors BOTH symbols at `sep` boundaries, a merge can never fuse
+    * across a symbol boundary even when one symbol's string is a
+    * suffix/prefix of another's (word "aba" under merges (a,b),(b,a)
+    * stays ["ab","a"] — a bare `l+sep+r` key would match the "b␟a"
+    * inside "ab␟a" and fuse the whole word). Every round is
     * VOCABULARY-bounded: a pair-count aggregation over the dictionary
-    * and a codegen replace projection per accepted merge. The driver
-    * holds only the round's top-K pair table (a plan constant, the
-    * centroid-matrix class); `localCheckpoint` every 8 merges cuts the
-    * replace-chain lineage. Stops early (fewer rows) if the corpus runs
-    * out of pairs. This entry point runs one merge per round (one Spark
-    * job per merge); [[bpeTrainBatched]] accepts provably-independent
-    * merges in batches from a single count job per round — the path for
-    * production merge counts.
-    */
-  def bpeTrain(docs: DataFrame, textCol: String, numMerges: Int,
-               sep: String = "\u001f"): DataFrame =
-    bpeTrainBatched(docs, textCol, numMerges, sep, topK = 1)
-
-  /** Pair-count rounds (Spark job round-trips) of the LAST
-    * bpeTrain/bpeTrainBatched call on this thread — spec instrumentation
-    * for the batching claim (one count job per BATCH, not per merge).
-    */
-  private[graft] val lastTrainRounds = new ThreadLocal[Int] {
-    override def initialValue(): Int = 0
-  }
-
-  /** [[bpeTrain]] with BATCHED merge selection: each round runs ONE
-    * pair-count job, fetches the top-`topK` pairs, and accepts the
-    * longest prefix of candidates that is PROVABLY what the sequential
-    * trainer would pick — so the output merge table is bit-identical to
-    * `bpeTrain`'s (spec-pinned, and re-certified on every run of the
-    * q137 oracle, which replays the strictly sequential unrolled-CTE
-    * trainer), while the driver round-trip count drops from one job per
-    * merge to one job per BATCH. At a production tokenizer's 30k-50k
-    * merges on a Zipf-ish corpus this is the difference between ~50k
-    * Spark jobs and a few thousand.
+    * and a codegen replace projection per accepted merge; the driver
+    * holds only the round's top-K pair table, and `localCheckpoint`
+    * every 8 merges cuts the replace-chain lineage.
     *
     * Exactness argument (why a batch prefix is safe). Candidates are
     * scanned in the engine-portable order (n DESC, l, r). Candidate `c`
@@ -700,44 +736,37 @@ object Quality {
     * after applying A. Decreased pairs need no check — any pair ranked
     * above c is in A by construction, and pairs below c only decrease.
     */
-  def bpeTrainBatched(docs: DataFrame, textCol: String, numMerges: Int,
-                      sep: String = "\u001f",
-                      topK: Int = 512): DataFrame = {
-    require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
-    require(sep.length == 1, s"sep must be one char, got ${sep.length}")
-    require(topK >= 1, s"topK must be >= 1, got $topK")
-    val spark = docs.sparkSession
+  private def batchedRounds(words: DataFrame, numMerges: Int,
+      topK: Int): Seq[(Long, String, String, Long)] = {
+    val spark = words.sparkSession
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    var dict = graft.plans.Iterative.cut(wordFreq(docs, textCol).select(
-      concat(lit(sep),
-        array_join(regexp_extract_all(col("w"), lit("(?s)."), lit(0)), sep + sep),
-        lit(sep)).as("seq"), col("f")))
     // Right-size the landed dictionary the way phashDedup sizes its
     // signature leaf: the vocabulary-bounded frame materializes with the
     // word-count aggregation's shuffle-partition count, and EVERY merge
     // round's pair-count job (plus each periodic re-checkpoint) then
     // schedules that many tasks over what is usually a few-hundred-KB
     // dictionary — measured q142 at sf0.1: ~65 rounds × 32 tasks over 500
-    // rows, ~16 s of pure task overhead. The cut just produced EXACT
+    // rows, ~16 s of pure task overhead. The cut carries EXACT
     // statistics, so the coalesce target derives from real size vs the
     // session's advisory partition size (scale-adaptive: a 1e9-word dict
     // keeps hundreds of partitions); the narrowed count propagates through
     // the re-checkpoints because replace is a narrow projection.
-    locally {
+    val sized = {
       val advisory = math.max(1L, spark.sessionState.conf.getConf(
         org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-      val stats = dict.queryExecution.analyzed.stats
+      val stats = words.queryExecution.analyzed.stats
       val target = ((stats.sizeInBytes + advisory - 1) / advisory)
         .max(1).min(10000).toInt
-      if (target < dict.rdd.getNumPartitions) dict = dict.coalesce(target)
+      if (target < words.rdd.getNumPartitions) words.coalesce(target) else words
     }
+    var dict = sized.select(concat(lit(Sep),
+        array_join(regexp_extract_all(col("w"), lit("(?s)."), lit(0)), Sep + Sep),
+        lit(Sep)).as("seq"), col("f"))
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Long, String, String, Long)]
     var sinceCheckpoint = 0
     var exhausted = false
-    lastTrainRounds.set(0)
     while (merges.size < numMerges && !exhausted) {
-      lastTrainRounds.set(lastTrainRounds.get + 1)
       // adjacent symbol pairs in ONE codegen'd kernel call per word —
       // replaces the substr/split/zip_with/slice combinator chain, which
       // ran INTERPRETED per row (zip_with/slice are CodegenFallback
@@ -745,7 +774,7 @@ object Quality {
       // row: measured r21 ~150 ms task CPU per merge round over the
       // 500-word q142 dict (~10 s of its 16 s). Semantics fuzz-pinned
       // equal to the old formulation in QualitySpec.
-      val pairs = call_function("graft_bpe_pairs", col("seq"), lit(sep))
+      val pairs = call_function("graft_bpe_pairs", col("seq"), lit(Sep))
       // global top-(K+1) over the VOCAB-bounded pair table: orderBy+limit
       // is a TakeOrderedAndProject (no full sort materialization), and
       // the (n desc, l, r) tuple order is the engine-portable tie rule;
@@ -814,8 +843,8 @@ object Quality {
           merges += ((merges.size + 1L, l, r, n))
           dict = dict.select(
             org.apache.spark.sql.functions.replace(col("seq"),
-              lit(sep + l + sep + sep + r + sep),
-              lit(sep + l + r + sep)).as("seq"), col("f"))
+              lit(Sep + l + Sep + Sep + r + Sep),
+              lit(Sep + l + r + Sep)).as("seq"), col("f"))
         }
         sinceCheckpoint += accepted.size
         if (sinceCheckpoint >= 8) {
@@ -824,7 +853,7 @@ object Quality {
         }
       }
     }
-    mergeTableFrame(spark, merges.toSeq)
+    merges.toSeq
   }
 
   /** The (merge_rank, left, right, n_occurrences) result frame every
@@ -985,95 +1014,25 @@ object Quality {
     out.toSeq
   }
 
-  /** [[bpeTrain]] run COLLAPSE-FIRST-then-DRIVER: one corpus-sized
-    * word-count job narrows to the vocabulary-bounded (word, freq)
-    * dictionary — the same plan-constant class as centroid matrices and
-    * quantile cuts — and the whole merge loop runs in [[trainDict]] on
-    * the driver. Output is bit-identical to [[bpeTrain]] /
-    * [[bpeTrainBatched]] (spec-pinned, and q145's DuckDB oracle replays
-    * the sequential trainer).
-    *
-    * WHY this is the production default: the r15 probe
-    * (bpe_scale_r15.json) measured `bpeTrainBatched` at a production
-    * depth — 30 000 merges over a 60 k-word Zipf vocabulary — at
-    * 16,876 count-job round trips (avg batch 1.78: Zipf count plateaus
-    * tie with the truncation floor and the exactness rule must stop
-    * there), i.e. ~3 600 s of driver↔cluster ping-pong for state that
-    * fits in a few MB. The corpus-sized work (tokenize + count) stays
-    * distributed; the vocabulary-sized work belongs on the driver.
-    * Guard: fails fast (before fetching rows) if the dictionary exceeds
-    * `maxDictWords` — use [[bpeTrainBatched]] there, or raise the cap
-    * on a driver sized for it. Budget ~1 KB of driver heap per
-    * dictionary word (symbol buffers + the inverted pair→words index),
-    * so the 4 M default needs a ~4-6 GB driver — deliberately the same
-    * order as the catalog's other driver-narrowed state, and far below
-    * what any corpus-sized structure would cost.
+  /** The trainers' shared corpus collapse: ONE corpus-sized job lands
+    * the distinct-word frequency dictionary (w, f) as a cut, returned
+    * with its exact row count — which the cut's statistics carry, so
+    * sizing the dictionary costs no second job.
     */
-  def bpeTrainLocal(docs: DataFrame, textCol: String, numMerges: Int,
-                    maxDictWords: Int = 4000000): DataFrame = {
-    require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
-    require(maxDictWords >= 1, s"maxDictWords must be >= 1, got $maxDictWords")
-    val freq = collectDict(docs, textCol, maxDictWords).getOrElse(
-      throw new IllegalArgumentException(
-        s"requirement failed: dictionary exceeds maxDictWords=$maxDictWords " +
-          "distinct words; use bpeTrainBatched or raise the cap"))
-    lastTrainRounds.set(1)
-    mergeTableFrame(docs.sparkSession, trainDict(freq, numMerges))
-  }
-
-  /** Dictionary-size-routed trainer paying ONE corpus-sized job on the
-    * fits-on-driver path: it attempts the `limit(maxDictWords + 1)`
-    * dictionary collect directly (the bounded fetch IS the size probe —
-    * at most maxDictWords + 1 rows cross to the driver) and trains
-    * locally on success, falling back to [[bpeTrainBatched]] only when
-    * the capped collect overflows. The r15 shape — a full
-    * `wordFreq().count()` probe before the local path's own collect —
-    * paid the corpus-sized tokenize+count shuffle TWICE; spec-pinned via
-    * [[lastDictScans]] (the lastTrainRounds pattern).
-    */
-  def bpeTrainAuto(docs: DataFrame, textCol: String, numMerges: Int,
-                   sep: String = "\u001f", topK: Int = 512,
-                   maxDictWords: Int = 4000000): DataFrame = {
-    require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
-    require(maxDictWords >= 1, s"maxDictWords must be >= 1, got $maxDictWords")
-    collectDict(docs, textCol, maxDictWords) match {
-      case Some(freq) =>
-        lastTrainRounds.set(1)
-        mergeTableFrame(docs.sparkSession, trainDict(freq, numMerges))
-      case None => bpeTrainBatched(docs, textCol, numMerges, sep, topK)
-    }
-  }
-
-  /** Corpus-collapse scan counter for bpeTrainLocal/bpeTrainAuto on this
-    * thread (incremented once per [[collectDict]]; specs reset it before
-    * the call) — instrumentation pinning that the router pays the
-    * corpus-sized [[wordFreq]] job ONCE on the local path (the
-    * [[lastTrainRounds]] pattern).
-    */
-  private[graft] val lastDictScans = new ThreadLocal[Int] {
-    override def initialValue(): Int = 0
-  }
-
-  /** The trainers' shared bounded dictionary fetch: runs [[wordFreq]]
-    * capped at `maxDictWords + 1` rows and returns None on overflow —
-    * the fetch doubles as the fits-on-driver probe, so no separate
-    * corpus-sized count() job exists anywhere on this path.
-    */
-  private def collectDict(docs: DataFrame, textCol: String,
-                          maxDictWords: Int): Option[IndexedSeq[(String, Long)]] = {
-    lastDictScans.set(lastDictScans.get + 1)
-    val rows = wordFreq(docs, textCol).limit(maxDictWords + 1).collect()
-    if (rows.length > maxDictWords) None
-    else Some(rows.map(r => (r.getString(0), r.getLong(1))).toIndexedSeq)
-  }
-
-  /** The trainers' shared corpus collapse: ONE corpus-sized shuffle to
-    * the distinct-word frequency dictionary.
-    */
-  private def wordFreq(docs: DataFrame, textCol: String): DataFrame =
-    docs.filter(col(textCol).isNotNull && length(trim(col(textCol))) > 0)
+  private[operators] def wordDict(docs: DataFrame,
+      textCol: String): (DataFrame, Long) = {
+    val dict = graft.plans.Iterative.cut(docs
+      .filter(col(textCol).isNotNull && length(trim(col(textCol))) > 0)
       .select(explode(tokens(col(textCol))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("f"))
+      .groupBy("w").agg(count(lit(1)).as("f")))
+    (dict, dict.queryExecution.analyzed.stats.rowCount.get.toLong)
+  }
+
+  /** A landed [[wordDict]] on the driver; check its row count against
+    * [[DictCap]] first.
+    */
+  private[operators] def dictRows(dict: DataFrame): IndexedSeq[(String, Long)] =
+    dict.collect().map(r => (r.getString(0), r.getLong(1))).toIndexedSeq
 
   /** BPE ENCODE under a learned merge table ([[bpeTrain]]'s output):
     * per-document token counts under the REAL tokenizer — the number a
@@ -1094,7 +1053,7 @@ object Quality {
     *
     * MERGE-TABLE CONTRACT: by default `merges` must be a TRAINING-ORDER
     * table with fold semantics — each merge is applied corpus-wide in
-    * rank order, exactly what [[bpeTrain]]/[[bpeTrainBatched]] emit. The
+    * rank order, exactly what [[bpeTrain]] emits. The
     * kernel's fuse loop exploits the monotone rank floor that
     * training-order tables guarantee (a merge never becomes newly
     * applicable at a rank below one already passed). For an ARBITRARY

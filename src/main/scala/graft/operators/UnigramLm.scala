@@ -22,15 +22,16 @@ import org.apache.spark.sql.functions._
   * shrinking, which are FP-iterative and not engine-replayable; the
   * segmentation semantics and model shape are the SentencePiece ones.
   *
-  * Scale shape (the [[Quality.bpeTrainLocal]] pattern): ONE corpus-sized
+  * Scale shape (the [[Quality.bpeTrain]] pattern): ONE corpus-sized
   * shuffle collapses the corpus to the distinct-word frequency
   * dictionary; seeding, EM rounds, and pruning run driver-local over
-  * that bounded dictionary (capped by `maxDictWords`, fail-fast) — at
-  * 100 TB the dictionary, not the corpus, is the working set, and it is
-  * Zipf-bounded. Encode is a PURE codegen projection: the trained table
-  * ships once per plan as a single `graft_unigram_count` kernel constant
-  * and every word runs the integer Viterbi in-place — zero shuffles,
-  * streaming-safe (the [[Quality.bpeEncode]] contract).
+  * that bounded dictionary (capped at [[Quality.DictCap]] words,
+  * fail-fast) — at 100 TB the dictionary, not the corpus, is the
+  * working set, and it is Zipf-bounded. Encode is a PURE codegen
+  * projection: the trained table ships once per plan as a single
+  * `graft_unigram_count` kernel constant and every word runs the
+  * integer Viterbi in-place — zero shuffles, streaming-safe (the
+  * [[Quality.bpeEncode]] contract).
   */
 object UnigramLm {
 
@@ -59,23 +60,6 @@ object UnigramLm {
     out.toIndexedSeq
   }
 
-  /** The corpus word-frequency dictionary, bounded: at most
-    * `maxDictWords` + 1 rows cross to the driver (the capped fetch IS
-    * the fits-on-driver probe — the [[Quality.bpeTrainAuto]] shape).
-    */
-  private def collectDict(docs: DataFrame, textCol: String,
-                          maxDictWords: Int): IndexedSeq[(String, Long)] = {
-    val rows = docs
-      .filter(col(textCol).isNotNull && length(trim(col(textCol))) > 0)
-      .select(explode(Quality.tokens(col(textCol))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("f"))
-      .limit(maxDictWords + 1).collect()
-    require(rows.length <= maxDictWords,
-      s"unigram dictionary exceeds maxDictWords=$maxDictWords distinct " +
-        "words; raise the cap")
-    rows.map(r => (r.getString(0), r.getLong(1))).toIndexedSeq
-  }
-
   /** Train a unigram-LM vocabulary driver-locally over the collapsed
     * word-frequency dictionary.
     *
@@ -97,12 +81,17 @@ object UnigramLm {
     */
   def trainLocal(docs: DataFrame, textCol: String,
                  seedMultis: Int = 120, emIters: Int = 2,
-                 maxPieceLen: Int = 4,
-                 maxDictWords: Int = 4000000): Seq[Piece] = {
+                 maxPieceLen: Int = 4): Seq[Piece] = {
     require(seedMultis >= 0, s"seedMultis must be >= 0, got $seedMultis")
     require(emIters >= 1, s"emIters must be >= 1, got $emIters")
     require(maxPieceLen >= 1, s"maxPieceLen must be >= 1, got $maxPieceLen")
-    val dict = collectDict(docs, textCol, maxDictWords)
+    // the corpus word count (Quality's shared collapse); its exact row
+    // count is known before any row crosses to the driver
+    val (landed, words) = Quality.wordDict(docs, textCol)
+    require(words <= Quality.DictCap,
+      s"unigram dictionary has $words distinct words, over the driver cap " +
+        s"of ${Quality.DictCap}")
+    val dict = Quality.dictRows(landed)
     if (dict.isEmpty) return Seq.empty
     // 1. seed weights: every substring occurrence, frequency-weighted
     val wt = new java.util.HashMap[String, Long]()
@@ -154,11 +143,10 @@ object UnigramLm {
     */
   def trainLocalDf(docs: DataFrame, textCol: String,
                    seedMultis: Int = 120, emIters: Int = 2,
-                   maxPieceLen: Int = 4,
-                   maxDictWords: Int = 4000000): DataFrame = {
+                   maxPieceLen: Int = 4): DataFrame = {
     val spark = docs.sparkSession
-    val rows = trainLocal(docs, textCol, seedMultis, emIters, maxPieceLen,
-      maxDictWords).map(p => org.apache.spark.sql.Row(p.piece, p.cnt, p.cost))
+    val rows = trainLocal(docs, textCol, seedMultis, emIters, maxPieceLen)
+      .map(p => org.apache.spark.sql.Row(p.piece, p.cnt, p.cost))
     spark.createDataFrame(
       java.util.Arrays.asList(rows: _*),
       org.apache.spark.sql.types.StructType(Seq(

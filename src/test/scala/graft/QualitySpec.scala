@@ -627,32 +627,63 @@ class QualitySpec extends SparkSpec {
     }
   }
 
-  test("bpeTrainBatched == sequential bpeTrain, in fewer count jobs") {
-    def tups(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .toSeq
-    // deterministic Zipf-ish corpus over a 7-digit alphabet: word i is
-    // the base-7 rendering of i+7, repeated ~240/i times — rich enough
-    // that rounds genuinely accept multiple independent merges
-    val words = (1 to 120).flatMap { i =>
-      Seq.fill(1 + 240 / i)(java.lang.Long.toString(i.toLong + 7, 7))
+  private def tups(df: org.apache.spark.sql.DataFrame) = df.collect()
+    .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+    .toSeq
+
+  // An INDEPENDENT driver-side BPE trainer (plain Scala maps/lists, no
+  // Spark, no string-replace representation, a full recount each round)
+  private def fuse(syms: List[String], l: String, r: String): List[String] =
+    syms match {
+      case a :: b :: rest if a == l && b == r => (l + r) :: fuse(rest, l, r)
+      case a :: rest => a :: fuse(rest, l, r)
+      case Nil => Nil
     }
-    val docs = Seq((1L, words.mkString(" "))).toDF("doc_id", "text")
-    val seqOut = tups(Quality.bpeTrain(docs, "text", numMerges = 60))
-    val seqRounds = Quality.lastTrainRounds.get
-    val batOut = tups(Quality.bpeTrainBatched(docs, "text", numMerges = 60))
-    val batRounds = Quality.lastTrainRounds.get
-    assert(batOut === seqOut)           // bit-identical merge table
-    assert(seqRounds === seqOut.size)   // sequential: one job per merge
-    assert(batRounds < seqRounds,       // batched: strictly fewer rounds
-      s"batched used $batRounds rounds vs sequential $seqRounds")
-    // the adversarial boundary corpus batches safely too
-    val trap = Seq((1L, "xl xl xl lr lr xlr")).toDF("doc_id", "text")
-    assert(tups(Quality.bpeTrainBatched(trap, "text", numMerges = 5)) ===
-      tups(Quality.bpeTrain(trap, "text", numMerges = 5)))
+  private def refTrain(freq: Seq[(String, Long)],
+                       numMerges: Int): Seq[(Long, String, String, Long)] = {
+    var dict = freq.map { case (w, f) => (w.map(_.toString).toList, f) }
+    val out = scala.collection.mutable.ArrayBuffer
+      .empty[(Long, String, String, Long)]
+    var done = false
+    while (out.size < numMerges && !done) {
+      val counts = scala.collection.mutable.Map.empty[(String, String), Long]
+      for ((syms, f) <- dict; w <- syms.sliding(2) if w.size == 2)
+        counts((w.head, w(1))) = counts.getOrElse((w.head, w(1)), 0L) + f
+      if (counts.isEmpty) done = true
+      else {
+        val ((l, r), n) = counts.toSeq.minBy { case ((a, b), c) => (-c, a, b) }
+        out += ((out.size + 1L, l, r, n))
+        dict = dict.map { case (syms, f) => (fuse(syms, l, r), f) }
+      }
+    }
+    out.toSeq
   }
 
-  test("bpeTrainBatched: alias-prone small-alphabet corpora stay exact") {
+  // deterministic Zipf-ish corpus over a 7-digit alphabet: word i is the
+  // base-7 rendering of i+7, repeated ~240/i times — rich enough that
+  // batched rounds genuinely accept multiple independent merges
+  private def zipfText: String = (1 to 120).flatMap { i =>
+    Seq.fill(1 + 240 / i)(java.lang.Long.toString(i.toLong + 7, 7))
+  }.mkString(" ")
+
+  test("batched rounds == sequential rounds (topK = 1), in fewer jobs") {
+    import org.apache.spark.grafttest.JobCounter
+    val docs = Seq((1L, zipfText)).toDF("doc_id", "text")
+    val (seqOut, seqJobs) = JobCounter(spark.sparkContext)(
+      tups(Quality.batchedTrain(docs, "text", numMerges = 60, topK = 1)))
+    val (batOut, batJobs) = JobCounter(spark.sparkContext)(
+      tups(Quality.batchedTrain(docs, "text", numMerges = 60)))
+    assert(batOut === seqOut)            // bit-identical merge table
+    assert(seqJobs >= seqOut.size)       // sequential: a job per merge
+    assert(batJobs < seqJobs,            // batched: strictly fewer jobs
+      s"batched used $batJobs jobs vs sequential $seqJobs")
+    // the adversarial boundary corpus batches safely too
+    val trap = Seq((1L, "xl xl xl lr lr xlr")).toDF("doc_id", "text")
+    assert(tups(Quality.batchedTrain(trap, "text", numMerges = 5)) ===
+      tups(Quality.batchedTrain(trap, "text", numMerges = 5, topK = 1)))
+  }
+
+  test("batched rounds: alias-prone small-alphabet corpora stay exact") {
     // A candidate pair whose concatenation spells a PRE-EXISTING symbol
     // ('aba' via (a,ba) when (ab,a) already created 'aba') would make
     // post-merge counts SUM pre-existing and created occurrences, which
@@ -662,36 +693,11 @@ class QualitySpec extends SparkSpec {
     // pairs with nonzero count — every occurrence of a symbol is created
     // at its single merge step, so a string-identical pair with a
     // different split never forms), but the acceptance bound no longer
-    // RELIES on that conjecture: bpeTrainBatched tracks prior merge
-    // concatenations and adds the aliased-pair mass into the bound.
+    // RELIES on that conjecture: the batched rounds track prior merge
+    // concatenations and add the aliased-pair mass into the bound.
     // This fuzz pins batched == sequential on the alias-PRONE regime
     // (tiny alphabet, small topK stressing the truncation floor)
-    // against an independent driver-side trainer.
-    def fuse(syms: List[String], l: String, r: String): List[String] =
-      syms match {
-        case a :: b :: rest if a == l && b == r => (l + r) :: fuse(rest, l, r)
-        case a :: rest => a :: fuse(rest, l, r)
-        case Nil => Nil
-      }
-    def refTrain(freq: Seq[(String, Long)],
-                 numMerges: Int): Seq[(Long, String, String, Long)] = {
-      var dict = freq.map { case (w, f) => (w.map(_.toString).toList, f) }
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, String, String, Long)]
-      var done = false
-      while (out.size < numMerges && !done) {
-        val counts = scala.collection.mutable.Map.empty[(String, String), Long]
-        for ((syms, f) <- dict; w <- syms.sliding(2) if w.size == 2)
-          counts((w.head, w(1))) = counts.getOrElse((w.head, w(1)), 0L) + f
-        if (counts.isEmpty) done = true
-        else {
-          val ((l, r), n) = counts.toSeq.minBy { case ((a, b), c) => (-c, a, b) }
-          out += ((out.size + 1L, l, r, n))
-          dict = dict.map { case (syms, f) => (fuse(syms, l, r), f) }
-        }
-      }
-      out.toSeq
-    }
+    // against the independent reference trainer.
     for (seed <- 0 until 4) {
       val rnd = new scala.util.Random(97L + seed)
       val freq = (0 until 40).map { i =>
@@ -702,52 +708,20 @@ class QualitySpec extends SparkSpec {
       val docs = freq.zipWithIndex.map { case ((w, f), i) =>
         (i.toLong, (w + " ") * f.toInt)
       }.toDF("doc_id", "text")
-      val got = Quality.bpeTrainBatched(docs, "text", numMerges = 40,
-          topK = 6).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-        .toSeq
-      assert(got === refTrain(freq, 40), s"seed=$seed")
-      // the driver-local trainer must land on the same table from the
+      val want = refTrain(freq, 40)
+      assert(tups(Quality.batchedTrain(docs, "text", numMerges = 40,
+        topK = 6)) === want, s"seed=$seed")
+      // the driver-side trainer must land on the same table from the
       // same alias-prone regime (heap + incremental updates vs the
       // reference's full recount each round)
-      val gotLocal = Quality.bpeTrainLocal(docs, "text", numMerges = 40)
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-        .toSeq
-      assert(gotLocal === refTrain(freq, 40), s"local seed=$seed")
+      assert(tups(Quality.bpeTrain(docs, "text", numMerges = 40)) === want,
+        s"driver seed=$seed")
     }
   }
 
-  test("bpeTrainBatched at 1024 merges == independent reference trainer") {
-    // an INDEPENDENT driver-side BPE trainer (plain Scala maps/lists, no
-    // Spark, no string-replace representation) — the >= 1k-merge
-    // certification the unrolled DuckDB oracle can't reach (binder depth
-    // caps it ~300 iterations; see bpeTrainDeepOracle)
-    def fuse(syms: List[String], l: String, r: String): List[String] =
-      syms match {
-        case a :: b :: rest if a == l && b == r => (l + r) :: fuse(rest, l, r)
-        case a :: rest => a :: fuse(rest, l, r)
-        case Nil => Nil
-      }
-    def refTrain(freq: Seq[(String, Long)],
-                 numMerges: Int): Seq[(Long, String, String, Long)] = {
-      var dict = freq.map { case (w, f) => (w.map(_.toString).toList, f) }
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, String, String, Long)]
-      var done = false
-      while (out.size < numMerges && !done) {
-        val counts = scala.collection.mutable.Map.empty[(String, String), Long]
-        for ((syms, f) <- dict; w <- syms.sliding(2) if w.size == 2)
-          counts((w.head, w(1))) = counts.getOrElse((w.head, w(1)), 0L) + f
-        if (counts.isEmpty) done = true
-        else {
-          val ((l, r), n) = counts.toSeq.minBy { case ((l, r), c) => (-c, l, r) }
-          out += ((out.size + 1L, l, r, n))
-          dict = dict.map { case (syms, f) => (fuse(syms, l, r), f) }
-        }
-      }
-      out.toSeq
-    }
+  test("bpeTrain at 1024 merges == independent reference, both branches") {
+    // the >= 1k-merge certification the unrolled DuckDB oracle can't
+    // reach (binder depth caps it ~300 iterations; see bpeTrainDeepOracle)
     // Zipf-weighted md5-hex vocabulary: 60 distinct 32-char words over a
     // 16-symbol alphabet (1860 possible merges), word i repeated
     // 1 + 600/(i+1) times — skew makes batch rounds genuinely multi-merge
@@ -759,73 +733,64 @@ class QualitySpec extends SparkSpec {
       (i.toLong, (w + " ") * f.toInt)
     }.toDF("doc_id", "text")
     val want = refTrain(freq, 1024)
-    val got = Quality.bpeTrainBatched(docs, "text", numMerges = 1024)
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .toSeq
+    // over the cap: the batched distributed rounds
+    val got = tups(Quality.trainRouted(docs, "text", numMerges = 1024,
+      maxDictWords = 1))
     assert(got.size === want.size)
     assert(got === want)
-    // same certification for the driver-local trainer, in ONE round
-    val gotLocal = Quality.bpeTrainLocal(docs, "text", numMerges = 1024)
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .toSeq
-    assert(Quality.lastTrainRounds.get === 1)
-    assert(gotLocal === want)
+    // under the cap: the driver-side trainer
+    assert(tups(Quality.bpeTrain(docs, "text", numMerges = 1024)) === want)
   }
 
-  test("bpeTrainLocal == sequential bpeTrain; auto routes by dict size") {
-    def tups(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .toSeq
-    val words = (1 to 120).flatMap { i =>
-      Seq.fill(1 + 240 / i)(java.lang.Long.toString(i.toLong + 7, 7))
-    }
-    val docs = Seq((1L, words.mkString(" "))).toDF("doc_id", "text")
-    val seqOut = tups(Quality.bpeTrain(docs, "text", numMerges = 60))
-    assert(tups(Quality.bpeTrainLocal(docs, "text", numMerges = 60)) ===
-      seqOut)
-    // the r13 boundary trap (xl+r vs x+lr spellings) holds locally too
+  test("bpeTrain: jobs flat in numMerges; over the cap, one word count") {
+    import org.apache.spark.grafttest.JobCounter
+    val sc = spark.sparkContext
+    // the corpus comes from a NAMED RDD, so a stage that scans it (the
+    // corpus-sized word count) is recognisable in its StageInfo
+    val docs = sc.parallelize(Seq((1L, zipfText)), 2).setName("bpe-corpus")
+      .toDF("doc_id", "text")
+    def corpusScans(stages: Seq[org.apache.spark.scheduler.StageInfo]) =
+      stages.count(_.rddInfos.exists(_.name == "bpe-corpus"))
+    val seqOut = tups(Quality.batchedTrain(docs, "text", numMerges = 60,
+      topK = 1))
+    // (a) under the cap the merge loop runs on the driver: the job count
+    // does not grow with numMerges
+    val (out8, jobs8, stages8) = JobCounter.withStages(sc)(
+      tups(Quality.bpeTrain(docs, "text", numMerges = 8)))
+    val (out60, jobs60, _) = JobCounter.withStages(sc)(
+      tups(Quality.bpeTrain(docs, "text", numMerges = 60)))
+    assert(out60 === seqOut && out8 === seqOut.take(8))
+    assert(jobs8 > 0 && jobs60 === jobs8, s"8 merges: $jobs8 jobs, 60: $jobs60")
+    assert(corpusScans(stages8) === 1)
+    // (b) over the cap (forced low) the batched rounds give the same table
+    val (over, overJobs, overStages) = JobCounter.withStages(sc)(
+      tups(Quality.trainRouted(docs, "text", numMerges = 60,
+        maxDictWords = 3)))
+    assert(over === seqOut)
+    assert(overJobs > jobs60, s"over the cap: $overJobs jobs, under: $jobs60")
+    // (c) ... and the corpus-sized word count still runs once
+    assert(corpusScans(overStages) === 1)
+    // the boundary trap (xl+r vs x+lr spellings) holds on both branches
     val trap = Seq((1L, "xl xl xl lr lr xlr")).toDF("doc_id", "text")
-    assert(tups(Quality.bpeTrainLocal(trap, "text", numMerges = 5)) ===
-      tups(Quality.bpeTrain(trap, "text", numMerges = 5)))
-    // auto: routed local under the default cap (1 round), batched when
-    // the dictionary exceeds it — same table either way
-    Quality.lastDictScans.set(0)
-    assert(tups(Quality.bpeTrainAuto(docs, "text", numMerges = 60)) ===
-      seqOut)
-    assert(Quality.lastTrainRounds.get === 1)
-    // the r15 router paid the corpus collapse TWICE (a count() probe,
-    // then the local collect); the capped collect must now BE the probe
-    assert(Quality.lastDictScans.get === 1)
-    Quality.lastDictScans.set(0)
-    assert(tups(Quality.bpeTrainAuto(docs, "text", numMerges = 60,
-      maxDictWords = 3)) === seqOut)
-    assert(Quality.lastTrainRounds.get > 1)
-    // overflow fallback pays the bounded probe once; batched rebuilds its
-    // own aggregate (no second collectDict)
-    assert(Quality.lastDictScans.get === 1)
-    // over-cap local fails fast instead of collecting the dictionary
-    assertThrows[IllegalArgumentException] {
-      Quality.bpeTrainLocal(docs, "text", numMerges = 2, maxDictWords = 3)
-    }
+    val trapSeq = tups(Quality.batchedTrain(trap, "text", numMerges = 5,
+      topK = 1))
+    assert(tups(Quality.bpeTrain(trap, "text", numMerges = 5)) === trapSeq)
+    assert(tups(Quality.trainRouted(trap, "text", numMerges = 5,
+      maxDictWords = 1)) === trapSeq)
   }
 
-  test("bpeTrainLocal: count ties break in UTF-8 byte order, not UTF-16") {
+  test("bpeTrain: count ties break in UTF-8 byte order, not UTF-16") {
     // U+FFFD (UTF-8 EF BF BD) vs U+1F600 (UTF-8 F0 9F 98 80): Spark's
     // UTF8String order puts U+FFFD FIRST; Java String.compareTo puts the
     // emoji's surrogates first. Two pairs tied at count 2 expose which
-    // rule a trainer uses — the local trainer must match the engine.
+    // rule a trainer uses — the driver-side trainer must match the engine.
     val docs = Seq(
       (1L, "�z 😀z �z 😀z"))
       .toDF("doc_id", "text")
-    def tups(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .toSeq
-    val seqOut = tups(Quality.bpeTrain(docs, "text", numMerges = 2))
+    val seqOut = tups(Quality.batchedTrain(docs, "text", numMerges = 2,
+      topK = 1))
     assert(seqOut.head._2 === "�") // pin the engine's direction
-    assert(tups(Quality.bpeTrainLocal(docs, "text", numMerges = 2)) ===
-      seqOut)
+    assert(tups(Quality.bpeTrain(docs, "text", numMerges = 2)) === seqOut)
   }
 
   test("bpe kernel: plan size stays O(1) at production merge counts") {
