@@ -1272,9 +1272,11 @@ object Oracles {
   /** q153: independent replay of the trained langid — verbatim
     * [[Queries.synthMultilingual]] synthesis, the md5-bucket hash in
     * strpos SQL, the TRAINED scaled weight vectors interpolated as
-    * literals (the q90 move: the model rides in the SQL too), list-SQL
-    * sums + argmax/margin. Certifies hash, weights, argmax ties and the
-    * mean-log-prob arithmetic against a second implementation.
+    * literals (the q90 move: the model rides in the SQL too), built once
+    * into a (lang, bucket, weight) table that the unnested gram buckets
+    * join, per-language sums + argmax/margin. Certifies hash, weights,
+    * argmax ties and the mean-log-prob arithmetic against a second
+    * implementation.
     */
   private val langIdVecOracle: String = {
     val m = graft.operators.LangId.default
@@ -1289,9 +1291,12 @@ object Oracles {
     val textExpr = (0 until 12).map { j =>
       s"vv[CAST(${md5int(s"CAST(doc_id AS VARCHAR) || ':$j'")} % 16 + 1 AS INT)]"
     }.mkString(" || ' ' || ")
-    val sums = m.scaled.map { w =>
-      s"coalesce(list_sum([(${w.mkString("[", ",", "]")})[CAST(b AS INT) + 1] FOR b IN bks]), 0)"
-    }.mkString("[", ",\n           ", "]")
+    val weightRows = m.scaled.zipWithIndex.map { case (w, li) =>
+      s"(${li + 1}, ${w.mkString("[", ",", "]")})"
+    }.mkString(",\n           ")
+    val sums = (1 to nLangs).map(li =>
+      s"coalesce(sum(ag.s) FILTER (WHERE ag.li = $li), 0)"
+    ).mkString("[", ",\n           ", "]")
     s"""WITH mv AS (SELECT doc_id,
            ($vocabSql)[CAST(doc_id % $nLangs AS INT) + 1] AS vv,
            ([$langsSql])[CAST(doc_id % $nLangs AS INT) + 1] AS lang_true
@@ -1299,10 +1304,17 @@ object Oracles {
        mt AS (SELECT doc_id, lang_true, lower($textExpr) AS t FROM mv),
        gr AS (SELECT doc_id, lang_true,
            [substr(t, i, 3) FOR i IN range(1, length(t) - 1)] AS grams FROM mt),
-       bk AS (SELECT doc_id, lang_true,
-           [${md5int("g")} % ${m.nBuckets} FOR g IN grams] AS bks FROM gr),
-       sm AS (SELECT doc_id, lang_true,
-           CAST(len(bks) AS BIGINT) AS n_grams, $sums AS sums FROM bk)
+       bk AS MATERIALIZED (SELECT doc_id, lang_true,
+           [${md5int("g")} % ${m.nBuckets} FOR g IN grams] AS bks,
+           CAST(len(grams) AS BIGINT) AS n_grams FROM gr),
+       wt AS (SELECT li, CAST(r.bucket AS BIGINT) AS bucket, ws[r.bucket + 1] AS w
+         FROM (VALUES $weightRows) AS mw(li, ws), range(0, ${m.nBuckets}) AS r(bucket)),
+       ag AS (SELECT bu.doc_id, wt.li, sum(wt.w) AS s
+         FROM (SELECT doc_id, unnest(bks) AS b FROM bk) bu
+         JOIN wt ON wt.bucket = bu.b GROUP BY bu.doc_id, wt.li),
+       sm AS (SELECT bk.doc_id, bk.lang_true, bk.n_grams, $sums AS sums
+         FROM bk LEFT JOIN ag ON ag.doc_id = bk.doc_id
+         GROUP BY bk.doc_id, bk.lang_true, bk.n_grams)
        SELECT doc_id, lang_true,
          CASE WHEN n_grams = 0 THEN 'und'
               ELSE ([$langsSql])[list_position(sums, list_max(sums))] END AS lang_pred,

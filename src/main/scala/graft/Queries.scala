@@ -1037,7 +1037,8 @@ object Queries {
 
     // dataset-card numeric profile of lineitem's measure columns: count /
     // nulls / min / max / exact-decimal mean / median per column (exact
-    // percentile = the declared oracle yardstick; approx is the scale path)
+    // medians from the fused exactQuantilesPerColumn core; approx is the
+    // sketch path)
     "q62_numeric_profile" -> ((s, d) =>
       Summaries.numericProfile(Tables.lineitem(s, d),
         Seq("l_quantity", "l_extendedprice", "l_discount"), exact = true)),
@@ -2248,15 +2249,15 @@ object Queries {
 
     // Two-sample Kolmogorov-Smirnov drift between the even/odd orderkey
     // halves — the binning-free twin of q104's PSI (same cohorts, same
-    // columns). Catalog runs the SCALABLE path: distinct-value counts →
-    // range-partitioned distributed prefix-sum → running-max fold; no
-    // single-task ECDF sort at any cardinality
+    // columns): distinct-value counts → range-partitioned distributed
+    // prefix-sum → running-max fold; no single-task ECDF sort at any
+    // cardinality
     "q110_ks_drift" -> ((s, d) => {
       val li = Tables.lineitem(s, d)
       Summaries.ksDrift(
         li.filter(pmod(col("l_orderkey"), lit(2)) === 0),
         li.filter(pmod(col("l_orderkey"), lit(2)) === 1),
-        Seq("l_quantity", "l_extendedprice", "l_discount"), scalable = true)
+        Seq("l_quantity", "l_extendedprice", "l_discount"))
     }),
 
     // Per-language vocabulary census: token totals, type counts, hapax
@@ -2332,7 +2333,8 @@ object Queries {
     // top-k + equi-width/equi-depth histograms + PSI drift (vs the
     // even-doc_id half as reference) in ONE long-format summary table —
     // the published-baselines analogue; each section is its operator's
-    // plan, the union adds no shuffle
+    // plan, the union adds no shuffle. exactMedians: the quantile vector
+    // and the equi-depth cuts both come from the exact narrowing core
     "q107_dataset_card" -> ((s, d) => {
       graft.functions.GraftFunctions.ensureRegistered(s)
       val docs = Tables.documents(s, d)
@@ -2384,13 +2386,12 @@ object Queries {
     }),
 
     // Peak-concurrency sweep over the q33 sessions — how many sessions
-    // are simultaneously active at each boundary instant (end-exclusive).
-    // Catalog runs the SCALABLE path: per-instant net deltas (one
-    // shuffle) + the q110 distributed prefix-sum — no single-task sort
+    // are simultaneously active at each boundary instant (end-exclusive):
+    // per-instant net deltas (one shuffle) + the q110 distributed
+    // prefix-sum — no window, no single-task sort
     "q130_concurrency" -> ((s, d) => {
       val sessions = Queries.all("q33_sessionize")(s, d)
-      Windows.concurrency(sessions, "session_start", "session_end",
-        scalable = true)
+      Windows.concurrency(sessions, "session_start", "session_end")
     }),
 
     // Graded contamination: every non-benchmark doc's 4-gram overlap
@@ -2538,7 +2539,7 @@ object Queries {
     // clip as a plan-constant codegen projection
     "q120_winsorize" -> ((s, d) =>
       Summaries.winsorize(Tables.events(s, d).select("event_id", "value"),
-          Seq("value"), pLo = 0.05, pHi = 0.95, scalable = true)
+          Seq("value"), pLo = 0.05, pHi = 0.95)
         .select("event_id", "value", "value_w")),
 
     "q106_ann_recall" -> ((s, d) => {
@@ -2571,8 +2572,8 @@ object Queries {
     }),
 
     // Equi-depth (quartile) histograms of the q62 profile columns —
-    // cuts from one percentile agg (yardstick form; exactQuantile is the
-    // per-cut scale path), binning a plan-constant projection
+    // every column's cuts from one exactQuantilesPerColumn batch,
+    // binning a plan-constant projection
     "q103_equidepth_bins" -> ((s, d) =>
       Summaries.equidepthBins(Tables.lineitem(s, d),
         Seq("l_quantity", "l_extendedprice", "l_discount"), nBins = 4)),

@@ -40,11 +40,12 @@ import org.apache.spark.sql.functions._
   * operators' plan-time statistic jobs (equi-width bounds, equi-depth
   * cuts, PSI reference bounds — tiny aggs whose results become plan
   * constants), the same class of driver decision as a centroid matrix.
-  * With `scalableMedians = true` the numeric quantile VECTOR routes
+  * With `exactMedians = true` the numeric quantile VECTOR routes
   * through the batched [[Summaries.exactQuantilesPerColumn]] narrowing —
   * the 100 TB-exact card, where five quantiles of ten columns cost the
   * same pass count as one median of one; the default approx sketch is
-  * the cheap production path.
+  * the cheap production path. Equi-depth cuts are exact in both modes,
+  * from the same narrowing.
   */
 object DatasetCard {
 
@@ -57,7 +58,6 @@ object DatasetCard {
             reference: Option[DataFrame] = None,
             psiBins: Int = 10,
             exactMedians: Boolean = false,
-            scalableMedians: Boolean = false,
             quantiles: Seq[Double] = Seq(0.25, 0.5, 0.75, 0.95, 0.99),
             outlierK: Option[Double] = None): DataFrame = {
     require(numericCols.nonEmpty || categoricalCols.nonEmpty,
@@ -77,8 +77,7 @@ object DatasetCard {
 
     val numeric = if (numericCols.isEmpty) Nil else {
       val prof = Summaries.numericProfile(df, numericCols,
-        exact = exactMedians || scalableMedians, scalable = scalableMedians,
-        quantiles = quantiles)
+        exact = exactMedians, quantiles = quantiles)
       // unpivot the one-row-per-column stats into (item, value_d) facts
       // (numericProfile names its key `column_name`; the card speaks
       // `col_name` like the other sections)
@@ -108,11 +107,8 @@ object DatasetCard {
     val bins = if (numericCols.isEmpty) Nil else Seq(
       shape("histogram", col("bin"), sNull, dNull, col("lo"), col("hi"),
         col("n"))(Summaries.histogram(df, numericCols, histBins)),
-      // scalableMedians governs the whole quantile family: equi-depth
-      // cuts route through the same batched narrowing as the p50s
       shape("equidepth", col("bin"), sNull, dNull, col("lo"), col("hi"),
-        col("n"))(Summaries.equidepthBins(df, numericCols, depthBins,
-          scalable = scalableMedians)))
+        col("n"))(Summaries.equidepthBins(df, numericCols, depthBins)))
     val drift = reference.toSeq.flatMap { ref =>
       if (numericCols.isEmpty) Nil
       else Seq(shape("psi", lit("psi"), col("drift"), col("psi"),
@@ -232,7 +228,7 @@ object DatasetCard {
   }
 
   /** The SKETCH-FIRST card — the 100 TB production path. [[build]] with
-    * `exactMedians`/`scalableMedians` spends one aggregation pass on the
+    * `exactMedians` spends one aggregation pass on the
     * numeric stats and then SEPARATE scans on equi-depth cuts, equi-depth
     * counts, histogram bounds, histogram counts, PSI binning and outlier
     * fences (the exact-yardstick discipline: each value is exact, several

@@ -212,23 +212,20 @@ object Summaries {
     * cut all land in the upper bin, so heavy ties can still skew counts
     * — that is the data, not the operator.
     *
-    * Scale notes: by default cuts come from ONE `percentile(col,
-    * array(qs))` agg over all columns together — the declared yardstick
-    * form, whose value→count buffer is the known non-scale path.
-    * `scalable = true` routes each column's cuts through ONE batched
-    * [[exactQuantiles]] narrowing (all nBins−1 ranks share the stats
-    * pass and every per-round job; O(log) passes, bounded memory, no
-    * value→count buffer anywhere) — the 100 TB path, spec-pinned equal
-    * to the yardstick. After that the binning is the histogram pipeline
-    * either way: cuts are plan constants, one explode + codegen CASE +
-    * a single map-side-combined hash agg.
+    * Scale notes: exact cuts for ALL columns come from ONE batched
+    * [[exactQuantilesPerColumn]] call (all nBins−1 ranks of every column
+    * share each pass; a small interval is one collect + sort, a large
+    * one O(log) narrowing passes — bounded memory, no value→count
+    * buffer anywhere). `approx = true` takes them from one mergeable
+    * `approx_percentile` sketch instead. After that the binning is the
+    * histogram pipeline either way: cuts are plan constants, one
+    * explode + codegen CASE + a single map-side-combined hash agg.
     */
   def equidepthBins(df: DataFrame, cols: Seq[String], nBins: Int = 4,
-                    scalable: Boolean = false, approx: Boolean = false,
+                    approx: Boolean = false,
                     accuracy: Int = 10000): DataFrame = {
     require(cols.nonEmpty, "equidepthBins needs at least one column")
     require(nBins >= 2, s"nBins must be >= 2, got $nBins")
-    require(!(scalable && approx), "pick ONE of scalable (exact) / approx")
     val qs = (1 until nBins).map(_.toDouble / nBins)
     def round5(v: Double): Double =
       BigDecimal(v).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -236,7 +233,7 @@ object Summaries {
       if (approx) {
         // sketch-first cuts: ONE mergeable approx_percentile agg instead
         // of the narrowing's O(log) passes — rank error ≤ n/accuracy, the
-        // 100 TB production default (exact modes stay the yardstick)
+        // 100 TB production default (the exact mode stays the yardstick)
         val row = {
           val aggs = cols.map { c =>
             val d = col(c).cast("double")
@@ -250,33 +247,15 @@ object Summaries {
           else Some(c -> row.getSeq[Double](i).map(round5))
         }.toMap
       }
-      else if (scalable) {
-        // ONE narrowing sequence resolves ALL columns' cuts together;
-        // an empty/all-NULL column yields all-None → absent, matching
-        // the yardstick path's isNullAt skip
+      else {
+        // ONE narrowing sequence resolves ALL columns' cuts together; an
+        // empty/all-NULL/all-NaN column yields all-None → absent (no rows
+        // downstream either)
         val res = exactQuantilesPerColumn(df, cols.map(c => c -> qs))
         cols.flatMap { c =>
           val vs = res(c)
           if (vs.head.isEmpty) None
           else Some(c -> vs.map(v => round5(v.get)))
-        }.toMap
-      }
-      else {
-        val statsRow = {
-          // NaN → NULL before the aggregate: `percentile` would sort NaN
-          // greatest and shift every cut, while the scalable narrowing
-          // (and the binning entries stream) excludes NaN — the two
-          // modes must agree on NaN-bearing columns (spec-pinned)
-          val aggs = cols.map { c =>
-            val d = col(c).cast("double")
-            call_function("percentile", when(!isnan(d), d), typedlit(qs))
-              .as(s"__q_$c")
-          }
-          df.agg(aggs.head, aggs.tail.toIndexedSeq: _*).head()
-        }
-        cols.zipWithIndex.flatMap { case (c, i) =>
-          if (statsRow.isNullAt(i)) None // all-NULL column: no rows downstream
-          else Some(c -> statsRow.getSeq[Double](i).map(round5))
         }.toMap
       }
     val entries = numericEntries(df, cols)
@@ -449,27 +428,21 @@ object Summaries {
     * double, then divided — order-independent, engine-portable.
     * Quantiles are `approx_percentile` (t-digest-style sketch,
     * partial-aggregable, bounded memory) by default; `exact = true`
-    * switches to the exact `percentile` aggregate, which BUFFERS every
-    * value of the column per partial — the declared small-data/oracle
-    * yardstick. `exact = true, scalable = true` keeps the quantiles
-    * EXACT while staying memory-bounded: the other stats still run in
-    * the ONE aggregation pass, and the whole quantile VECTOR of every
-    * column routes through [[exactQuantilesPerColumn]] (iterative
-    * histogram narrowing, O(log) passes, every rank of every column
-    * sharing each pass) — no value→count buffered aggregate anywhere in
-    * the plan, spec-proven equal to the `percentile` form. That is the
-    * 100 TB dataset-card profile: five quantiles of ten columns cost
-    * the same pass count as one median of one column.
+    * keeps them EXACT while staying memory-bounded: the other stats
+    * still run in the ONE aggregation pass, and the whole quantile
+    * VECTOR of every column routes through [[exactQuantilesPerColumn]]
+    * (one collect + sort for small columns, iterative histogram
+    * narrowing for large ones, every rank of every column sharing each
+    * pass) — no value→count buffered aggregate anywhere in the plan.
+    * That is the 100 TB dataset-card profile: five quantiles of ten
+    * columns cost the same pass count as one median of one column.
     *
-    * NaN discipline: quantiles exclude NaN in EVERY mode (NaN ≡ missing,
-    * the narrowing core's semantic — a raw `percentile` would sort NaN
-    * greatest and shift each rank, diverging from the scalable path on
-    * NaN-bearing columns). min/max/mean keep the raw aggregate semantics
-    * (NaN propagates), identically in both engines.
+    * NaN discipline: quantiles exclude NaN in BOTH modes (NaN ≡
+    * missing, the narrowing core's semantic). min/max/mean keep the raw
+    * aggregate semantics (NaN propagates), identically in both engines.
     */
   def numericProfile(df: DataFrame, cols: Seq[String],
                      exact: Boolean = false,
-                     scalable: Boolean = false,
                      quantiles: Seq[Double] = Seq(0.5)): DataFrame = {
     require(cols.nonEmpty, "numericProfile needs at least one column")
     require(quantiles.nonEmpty, "numericProfile needs at least one quantile")
@@ -478,7 +451,6 @@ object Summaries {
     val qNames = quantiles.map(quantileColName)
     require(qNames.distinct.size == qNames.size,
       s"duplicate quantiles: $quantiles")
-    val scalableExact = exact && scalable
     // helper aliases go through selectExpr — backtick-quote them (and
     // escape the label literal) so names like `price-usd` or `a.b` don't
     // parse as arithmetic / struct access
@@ -486,14 +458,10 @@ object Summaries {
     def lit_(s: String) = "'" + s.replace("'", "''") + "'"
     val aggs = cols.flatMap { c =>
       val d = col(c).cast("double")
-      val dq = when(!isnan(d), d) // NaN-exclusive quantiles, every mode
       val ps =
-        if (scalableExact) Nil // narrowing passes below, not a buffered agg
-        else if (exact)
-          Seq(call_function("percentile", dq, typedlit(quantiles)).as(s"__qs__$c"))
-        else
-          Seq(call_function("approx_percentile", dq, typedlit(quantiles),
-            lit(10000)).as(s"__qs__$c"))
+        if (exact) Nil // narrowing passes below, not a buffered agg
+        else Seq(call_function("approx_percentile", when(!isnan(d), d),
+          typedlit(quantiles), lit(10000)).as(s"__qs__$c"))
       Seq(
         count(col(c)).as(s"__n__$c"),
         count(when(col(c).isNull, 1)).as(s"__nn__$c"),
@@ -502,11 +470,11 @@ object Summaries {
         sum(col(c).cast("decimal(28,6)")).cast("double").as(s"__sum__$c")) ++ ps
     }
     val one = df.agg(aggs.head, aggs.tail.toIndexedSeq: _*)
-    // the percentile array unpivots by 0-based element access; an
-    // all-NULL column's NULL array propagates NULL elements, matching
-    // the narrowing path's all-None
+    // the sketch array unpivots by 0-based element access; an all-NULL
+    // column's NULL array propagates NULL elements, matching the
+    // narrowing path's all-None
     val qArgs = (c: String) => quantiles.indices.map(i =>
-      if (scalableExact) "CAST(NULL AS DOUBLE)" else s"${q(s"__qs__$c")}[$i]")
+      if (exact) "CAST(NULL AS DOUBLE)" else s"${q(s"__qs__$c")}[$i]")
       .mkString(", ")
     val stackArgs = cols.map(c =>
       s"${lit_(c)}, ${q(s"__n__$c")}, ${q(s"__nn__$c")}, ${q(s"__min__$c")}, " +
@@ -515,7 +483,7 @@ object Summaries {
         s"(column_name, n_non_null, n_null, min, max, __sum, ${qNames.map(q).mkString(", ")})")
       .withColumn("mean", col("__sum") / col("n_non_null"))
     val withQs =
-      if (!scalableExact) unpivoted
+      if (!exact) unpivoted
       else {
         // the narrowing jobs run NOW (plan-time, like the centroid
         // collects) and the tiny per-column results re-enter the plan as
@@ -545,8 +513,7 @@ object Summaries {
     * once few enough candidates remain they are collected and selected
     * exactly. O(log) passes, bounded driver data — the 100 TB path for
     * exact medians, where the `percentile` aggregate (which holds a
-    * value→count map per partial) and [[numericProfile]]'s exact mode
-    * stop scaling.
+    * value→count map per partial) stops scaling.
     *
     * Both ranks of a non-integral target share ONE narrowing (adjacent
     * order statistics land in the same collected interval; the second
@@ -1052,19 +1019,15 @@ object Summaries {
     * Scale shape: raw values collapse to per-(column, distinct value)
     * counts first (shuffle on (col, v) with map-side combine — the only
     * data-sized exchange), so the ECDF walk runs over DISTINCT values.
-    * `scalable = false` walks each column's jump points with a window
-    * partitioned by column (parallelism = column count; each column's
-    * distinct stream sorts in one task — fine while per-column distinct
-    * counts fit a task's spill budget). `scalable = true` is the
-    * distributed prefix-sum: range-repartition the count table by
-    * (column, value), accumulate per-partition subtotals, collect ONLY
-    * the per-partition totals (#partitions rows) to the driver, then a
-    * single mapPartitions pass adds each partition's broadcast prefix
-    * offset and folds the running max — no single-task sort at any
-    * cardinality. Both paths are spec-pinned equal.
+    * The walk is a distributed prefix-sum: range-repartition the count
+    * table by (column, value), accumulate per-partition subtotals,
+    * collect ONLY the per-partition totals (#partitions rows) to the
+    * driver, then a single mapPartitions pass adds each partition's
+    * broadcast prefix offset and folds the running max — no window and
+    * no single-task sort at any cardinality. The per-column totals come
+    * from the same subtotal pass, not a separate aggregation.
     */
-  def ksDrift(ref: DataFrame, cur: DataFrame, cols: Seq[String],
-              scalable: Boolean = false): DataFrame = {
+  def ksDrift(ref: DataFrame, cur: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "ksDrift needs at least one column")
     require(cols.distinct.size == cols.size, "duplicate columns in cols")
     val entries = numericEntries(ref, cols).withColumn("side", lit("r"))
@@ -1079,113 +1042,83 @@ object Summaries {
         sum(when(col("side") === "c", 1L).otherwise(0L)).as("cc"))
     val spark = ref.sparkSession
     import spark.implicits._
-    // (per-column totals, d-stat frame) per path. The scalable path
-    // derives the totals FROM its per-partition subtotal pass instead of
-    // a separate counts aggregation — r21: the standalone totals collect
-    // was a whole extra corpus pass per execution (exchange reuse never
-    // spans jobs); folding it away + the one-RDD two-pass form below
-    // measured q110 4.79 → 2.28 s isolated.
-    val (totals, dStats): (Map[String, (Long, Long)], DataFrame) =
-      if (!scalable) {
-        val t: Map[String, (Long, Long)] = counts.groupBy("col_name")
-          .agg(sum("cr").as("tr"), sum("cc").as("tc"))
-          .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-        val measurable = t.filter { case (_, (tr, tc)) => tr > 0 && tc > 0 }
-        val d: DataFrame =
-          if (measurable.isEmpty) Seq.empty[(String, Double)].toDF("col_name", "d_raw")
-          else {
-            import org.apache.spark.sql.expressions.Window
-            val w = Window.partitionBy("col_name").orderBy("v")
-            val totalMap = typedLit(measurable.map { case (c, (tr, tc)) => c -> Seq(tr, tc) })
-            counts.filter(col("col_name").isInCollection(measurable.keys.toSeq))
-              .withColumn("scr", sum("cr").over(w))
-              .withColumn("scc", sum("cc").over(w))
-              .withColumn("d", abs(
-                col("scr").cast("double") / element_at(element_at(totalMap, col("col_name")), 1) -
-                  col("scc").cast("double") / element_at(element_at(totalMap, col("col_name")), 2)))
-              .groupBy("col_name").agg(max("d").as("d_raw"))
-          }
-        (t, d)
-      } else {
-        // distributed prefix-sum: per-partition subtotals -> tiny collect
-        // -> broadcast offsets -> one pass folding the running max.
-        // ONE toRdd instance serves both passes: the second job reuses the
-        // first's completed range-shuffle map output (RDD-level stage
-        // reuse), so the counts aggregation runs ONCE per execution — the
-        // former sorted.cache() + .rdd form paid a Row conversion per pass
-        // and still recomputed the corpus aggregation for the range
-        // sampler, the totals collect and the cache fill separately.
-        val nPart = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-        val sortedRdd = counts
-          .repartitionByRange(nPart, col("col_name"), col("v"))
-          .sortWithinPartitions("col_name", "v")
-          .select("col_name", "v", "cr", "cc")
-          .queryExecution.toRdd
-        // per-partition (col -> (sum cr, sum cc)) — #partitions × #cols rows
-        val partTotals: Array[(Int, Map[String, (Long, Long)])] =
-          sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-            val m = scala.collection.mutable.Map.empty[String, (Long, Long)]
-            it.foreach { r =>
-              val c = r.getUTF8String(0).toString
-              val (a, b) = m.getOrElse(c, (0L, 0L))
-              m(c) = (a + r.getLong(2), b + r.getLong(3))
-            }
-            Iterator.single((pid, m.toMap))
-          }.collect()
-        val t: Map[String, (Long, Long)] = {
-          val acc = scala.collection.mutable.Map.empty[String, (Long, Long)]
-          partTotals.foreach { case (_, m) =>
-            m.foreach { case (c, (a, b)) =>
-              val (a0, b0) = acc.getOrElse(c, (0L, 0L))
-              acc(c) = (a0 + a, b0 + b)
-            }
-          }
-          acc.toMap
+    // The per-column totals come from the subtotal pass, not a separate
+    // aggregation: exchange reuse never spans jobs, so a standalone
+    // totals collect would be a whole extra corpus pass (r21: folding it
+    // away with the one-RDD form measured q110 4.79 → 2.28 s isolated).
+    // ONE toRdd instance serves both passes: the second job reuses the
+    // first's completed range-shuffle map output (RDD-level stage reuse),
+    // so the counts aggregation runs ONCE per execution — a cache() +
+    // .rdd form would pay a Row conversion per pass and recompute the
+    // aggregation for the range sampler and the cache fill separately.
+    val nPart = math.max(spark.sessionState.conf.numShufflePartitions, 1)
+    val sortedRdd = counts
+      .repartitionByRange(nPart, col("col_name"), col("v"))
+      .sortWithinPartitions("col_name", "v")
+      .select("col_name", "v", "cr", "cc")
+      .queryExecution.toRdd
+    // per-partition (col -> (sum cr, sum cc)) — #partitions × #cols rows
+    val partTotals: Array[(Int, Map[String, (Long, Long)])] =
+      sortedRdd.mapPartitionsWithIndex { (pid, it) =>
+        val m = scala.collection.mutable.Map.empty[String, (Long, Long)]
+        it.foreach { r =>
+          val c = r.getUTF8String(0).toString
+          val (a, b) = m.getOrElse(c, (0L, 0L))
+          m(c) = (a + r.getLong(2), b + r.getLong(3))
         }
-        val measurable = t.filter { case (_, (tr, tc)) => tr > 0 && tc > 0 }
-        val d: DataFrame =
-          if (measurable.isEmpty) Seq.empty[(String, Double)].toDF("col_name", "d_raw")
-          else {
-            // prefix offset per (partition, column): totals of all EARLIER
-            // partitions (range partitioning ⇒ earlier partitions hold
-            // strictly smaller (col, v) keys)
-            val prefixByPid: Map[Int, Map[String, (Long, Long)]] = {
-              val sortedParts = partTotals.sortBy(_._1)
-              var acc = Map.empty[String, (Long, Long)]
-              sortedParts.map { case (pid, m) =>
-                val out = pid -> acc
-                acc = (acc.keySet ++ m.keySet).map { c =>
-                  val (a1, b1) = acc.getOrElse(c, (0L, 0L))
-                  val (a2, b2) = m.getOrElse(c, (0L, 0L))
-                  c -> (a1 + a2, b1 + b2)
-                }.toMap
-                out
-              }.toMap
+        Iterator.single((pid, m.toMap))
+      }.collect()
+    val totals: Map[String, (Long, Long)] = {
+      val acc = scala.collection.mutable.Map.empty[String, (Long, Long)]
+      partTotals.foreach { case (_, m) =>
+        m.foreach { case (c, (a, b)) =>
+          val (a0, b0) = acc.getOrElse(c, (0L, 0L))
+          acc(c) = (a0 + a, b0 + b)
+        }
+      }
+      acc.toMap
+    }
+    val measurable = totals.filter { case (_, (tr, tc)) => tr > 0 && tc > 0 }
+    val dStats: DataFrame =
+      if (measurable.isEmpty) Seq.empty[(String, Double)].toDF("col_name", "d_raw")
+      else {
+        // prefix offset per (partition, column): totals of all EARLIER
+        // partitions (range partitioning ⇒ earlier partitions hold
+        // strictly smaller (col, v) keys)
+        val prefixByPid: Map[Int, Map[String, (Long, Long)]] = {
+          val sortedParts = partTotals.sortBy(_._1)
+          var acc = Map.empty[String, (Long, Long)]
+          sortedParts.map { case (pid, m) =>
+            val out = pid -> acc
+            acc = (acc.keySet ++ m.keySet).map { c =>
+              val (a1, b1) = acc.getOrElse(c, (0L, 0L))
+              val (a2, b2) = m.getOrElse(c, (0L, 0L))
+              c -> (a1 + a2, b1 + b2)
+            }.toMap
+            out
+          }.toMap
+        }
+        val bc = spark.sparkContext.broadcast((prefixByPid, measurable))
+        val maxed = sortedRdd.mapPartitionsWithIndex { (pid, it) =>
+          val (prefixes, tot) = bc.value
+          val run = scala.collection.mutable.Map.empty[String, (Long, Long)]
+          prefixes.getOrElse(pid, Map.empty).foreach { case (c, p) => run(c) = p }
+          val best = scala.collection.mutable.Map.empty[String, Double]
+          it.foreach { r =>
+            val c = r.getUTF8String(0).toString
+            // rows of columns with an empty side flow through — skip them
+            tot.get(c).foreach { case (tr, tc) =>
+              val (a, b) = run.getOrElse(c, (0L, 0L))
+              val (na, nb) = (a + r.getLong(2), b + r.getLong(3))
+              run(c) = (na, nb)
+              val d = math.abs(na.toDouble / tr - nb.toDouble / tc)
+              if (d > best.getOrElse(c, -1.0)) best(c) = d
             }
-            val bc = spark.sparkContext.broadcast((prefixByPid, measurable))
-            val maxed = sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-              val (prefixes, tot) = bc.value
-              val run = scala.collection.mutable.Map.empty[String, (Long, Long)]
-              prefixes.getOrElse(pid, Map.empty).foreach { case (c, p) => run(c) = p }
-              val best = scala.collection.mutable.Map.empty[String, Double]
-              it.foreach { r =>
-                val c = r.getUTF8String(0).toString
-                // rows of columns with an empty side flow through now
-                // (the measurable pre-filter is gone) — skip them here
-                tot.get(c).foreach { case (tr, tc) =>
-                  val (a, b) = run.getOrElse(c, (0L, 0L))
-                  val (na, nb) = (a + r.getLong(2), b + r.getLong(3))
-                  run(c) = (na, nb)
-                  val d = math.abs(na.toDouble / tr - nb.toDouble / tc)
-                  if (d > best.getOrElse(c, -1.0)) best(c) = d
-                }
-              }
-              best.iterator
-            }.collect()
-            maxed.groupBy(_._1).map { case (c, ds) => (c, ds.map(_._2).max) }
-              .toSeq.toDF("col_name", "d_raw")
           }
-        (t, d)
+          best.iterator
+        }.collect()
+        maxed.groupBy(_._1).map { case (c, ds) => (c, ds.map(_._2).max) }
+          .toSeq.toDF("col_name", "d_raw")
       }
     val withTotals = cols.map { c =>
       val (tr, tc) = totals.getOrElse(c, (0L, 0L))
@@ -1513,16 +1446,15 @@ object Summaries {
     * exists to tame), rounded to 5 dp for engine portability. NULL and
     * NaN map to NULL (NaN ≡ missing); ±Inf clip to the cuts.
     *
-    * Scale notes: `scalable = true` (the default) routes ALL columns'
-    * cut pairs through one [[exactQuantilesPerColumn]] narrowing batch —
-    * bounded driver memory at any cardinality, passes shared across
-    * columns; `false` is the single-job `percentile` yardstick (exact
-    * but one sort buffer per column on the agg path). The clip itself
+    * Scale notes: exact cuts route ALL columns' cut pairs through one
+    * [[exactQuantilesPerColumn]] batch — bounded driver memory at any
+    * cardinality, passes shared across columns; `approx = true` reads
+    * them off one `approx_percentile` sketch instead. The clip itself
     * is a pure codegen projection with plan-constant cuts — no second
     * shuffle, no window.
     */
   def winsorize(df: DataFrame, cols: Seq[String], pLo: Double = 0.01,
-                pHi: Double = 0.99, scalable: Boolean = true,
+                pHi: Double = 0.99,
                 approx: Boolean = false, accuracy: Int = 10000): DataFrame = {
     require(cols.nonEmpty, "winsorize needs at least one column")
     require(cols.distinct.size == cols.size, "duplicate columns in cols")
@@ -1539,7 +1471,7 @@ object Summaries {
         // sketch-first fences: ONE approx_percentile agg (rank error ≤
         // n/accuracy — for 1%/99% clipping fences the exact rank of the
         // fence is immaterial, which is why this is the scale default
-        // candidate; exact modes remain the oracle yardstick)
+        // candidate; the exact mode remains the oracle yardstick)
         val row = {
           val aggs = cols.map(c => call_function("approx_percentile",
             col(c), typedlit(Seq(pLo, pHi)), lit(accuracy)).as(s"__q_$c"))
@@ -1553,21 +1485,9 @@ object Summaries {
                 })
         }.toMap
       }
-      else if (scalable)
+      else
         exactQuantilesPerColumn(finite, cols.map(c => c -> Seq(pLo, pHi)))
           .map { case (c, qs) => c -> (qs.head.map(round5), qs(1).map(round5)) }
-      else {
-        val row = finite.agg(
-          percentile(col(cols.head), typedLit(Seq(pLo, pHi))).as("q0"),
-          cols.tail.zipWithIndex.map { case (c, i) =>
-            percentile(col(c), typedLit(Seq(pLo, pHi))).as(s"q${i + 1}")
-          }.toIndexedSeq: _*).head()
-        cols.zipWithIndex.map { case (c, i) =>
-          val arr = row.getSeq[Double](i)
-          c -> (if (arr == null || arr.isEmpty) (None, None)
-                else (Some(round5(arr.head)), Some(round5(arr(1)))))
-        }.toMap
-      }
     cols.foldLeft(df) { (acc, c) =>
       val vc = col(c).cast("double")
       val out = cuts(c) match {

@@ -193,62 +193,53 @@ object Windows {
     * Scale notes: starts/ends collapse to per-instant net deltas in ONE
     * map-side-combined aggregation (the only data-sized shuffle). The
     * running sum over global time order is the scale problem: a plain
-    * window over ORDER BY t is a SINGLE-TASK sort (the yardstick,
-    * `scalable = false`). The catalog path is the q110 distributed
-    * prefix-sum: range-repartition by t, per-partition subtotals
-    * (#partitions rows to the driver), broadcast prefix offsets, one
-    * fold pass — no single-task sort at any cardinality, and the
-    * partitioner is captured once so the offset pass and the fold pass
-    * see identical ranges.
+    * window over ORDER BY t would be a SINGLE-TASK sort. Instead this is
+    * the q110 distributed prefix-sum: range-repartition by t,
+    * per-partition subtotals (#partitions rows to the driver), broadcast
+    * prefix offsets, one fold pass — no window and no single-task sort
+    * at any cardinality, and the partitioner is captured once so the
+    * offset pass and the fold pass see identical ranges.
     */
-  def concurrency(intervals: DataFrame, startCol: String, endCol: String,
-                  scalable: Boolean = true): DataFrame = {
+  def concurrency(intervals: DataFrame, startCol: String, endCol: String): DataFrame = {
     val bounded = intervals
       .filter(col(startCol).isNotNull && col(endCol).isNotNull)
     val deltas = bounded.select(col(startCol).as("t"), lit(1L).as("d"))
       .unionByName(bounded.select(col(endCol).as("t"), lit(-1L).as("d")))
       .groupBy("t").agg(sum("d").as("delta"))
-    if (!scalable) {
-      deltas.withColumn("active",
-        sum("delta").over(Window.orderBy("t")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          .cast("long"))
-    } else {
-      val spark = intervals.sparkSession
-      val nPart = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-      val sorted = deltas.repartitionByRange(nPart, col("t"))
-        .sortWithinPartitions("t")
-      sorted.cache()
-      // ONE rdd instantiation: both passes must see the same range bounds
-      val rdd = sorted.rdd
-      val partTotals = rdd.mapPartitionsWithIndex { (pid, it) =>
-        var s = 0L; it.foreach(r => s += r.getLong(1))
-        Iterator.single((pid, s))
-      }.collect().sortBy(_._1)
-      val prefix: Map[Int, Long] = {
-        var acc = 0L
-        partTotals.map { case (pid, s) =>
-          val out = pid -> acc; acc += s; out
-        }.toMap
-      }
-      val bc = spark.sparkContext.broadcast(prefix)
-      val outRdd = rdd.mapPartitionsWithIndex { (pid, it) =>
-        var run = bc.value.getOrElse(pid, 0L)
-        it.map { r =>
-          run += r.getLong(1)
-          org.apache.spark.sql.Row(r.get(0), r.getLong(1), run)
-        }
-      }
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val out = spark.createDataFrame(outRdd, StructType(Seq(
-        deltas.schema("t"),
-        StructField("delta", LongType, nullable = false),
-        StructField("active", LongType, nullable = false))))
-      // cached blocks are released by the ContextCleaner once `sorted`
-      // goes unreferenced; an eager unpersist here would force the fold
-      // pass to re-shuffle (same partitioner object, so still correct —
-      // just slower) on every downstream action
-      out
+    val spark = intervals.sparkSession
+    val nPart = math.max(spark.sessionState.conf.numShufflePartitions, 1)
+    val sorted = deltas.repartitionByRange(nPart, col("t"))
+      .sortWithinPartitions("t")
+    sorted.cache()
+    // ONE rdd instantiation: both passes must see the same range bounds
+    val rdd = sorted.rdd
+    val partTotals = rdd.mapPartitionsWithIndex { (pid, it) =>
+      var s = 0L; it.foreach(r => s += r.getLong(1))
+      Iterator.single((pid, s))
+    }.collect().sortBy(_._1)
+    val prefix: Map[Int, Long] = {
+      var acc = 0L
+      partTotals.map { case (pid, s) =>
+        val out = pid -> acc; acc += s; out
+      }.toMap
     }
+    val bc = spark.sparkContext.broadcast(prefix)
+    val outRdd = rdd.mapPartitionsWithIndex { (pid, it) =>
+      var run = bc.value.getOrElse(pid, 0L)
+      it.map { r =>
+        run += r.getLong(1)
+        org.apache.spark.sql.Row(r.get(0), r.getLong(1), run)
+      }
+    }
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val out = spark.createDataFrame(outRdd, StructType(Seq(
+      deltas.schema("t"),
+      StructField("delta", LongType, nullable = false),
+      StructField("active", LongType, nullable = false))))
+    // cached blocks are released by the ContextCleaner once `sorted`
+    // goes unreferenced; an eager unpersist here would force the fold
+    // pass to re-shuffle (same partitioner object, so still correct —
+    // just slower) on every downstream action
+    out
   }
 }

@@ -108,8 +108,7 @@ object ReferencePipeline {
           cardNumericCols: Seq[String] = Nil,
           cardCategoricalCols: Seq[String] = Nil,
           cardReference: Option[DataFrame] = None,
-          persistShared: Boolean = false,
-          autoRouteJoins: Boolean = false): Outputs = {
+          persistShared: Boolean = false): Outputs = {
     // 1. import: parse + uid recovery; corrupt rows routed out, not dropped
     val parsed = JsonImport.parseSessions(raw, jsonCol)
 
@@ -147,13 +146,7 @@ object ReferencePipeline {
         JsonImport.routeByScript(deduped, script), keys)
       val base = deduped.filter(col("scriptid") === script)
         .select("uid", "facility", "started_at", "completed_at")
-      // autoRouteJoins: profile-routed strategy (Joins.autoDecide) — a
-      // small batch broadcasts the kv side, a repaired-key hot spot takes
-      // the salted route. OPT-IN because the profile runs jobs at plan
-      // construction (the discoverMclKeyList class of driver decision;
-      // this module otherwise builds plans without running any).
-      if (autoRouteJoins) Joins.auto(base, kv.drop("scriptid"), "uid")
-      else base.join(kv.drop("scriptid"), Seq("uid"))
+      base.join(kv.drop("scriptid"), Seq("uid"))
     }
     val admissions0 = route(AdmissionScript)
     val discharges = route(DischargeScript)

@@ -186,11 +186,14 @@ class AssociationSpec extends SparkSpec {
     val rng = new scala.util.Random(3)
     val df = Seq.fill(400)(rng.nextInt(20).toDouble).toDF("x")
       .withColumn("id", monotonically_increasing_id())
-    val a = Summaries.winsorize(df, Seq("x"), 0.1, 0.9, scalable = true)
+    val got = Summaries.winsorize(df, Seq("x"), 0.1, 0.9)
       .select("id", "x_w").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val b = Summaries.winsorize(df, Seq("x"), 0.1, 0.9, scalable = false)
-      .select("id", "x_w").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(a === b)
+    // reference: the percentile aggregate's cuts, clipped on the driver
+    val Seq(lo, hi) = ExactReference.percentiles(df, "x", Seq(0.1, 0.9)).get
+      .map(ExactReference.round5)
+    val want = df.select("id", "x").collect()
+      .map(r => r.getLong(0) -> math.min(math.max(r.getDouble(1), lo), hi)).toMap
+    assert(got === want)
   }
 
   test("winsorize: an all-NULL column yields NULL outputs, not a crash") {

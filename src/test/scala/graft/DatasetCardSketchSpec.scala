@@ -135,9 +135,6 @@ class DatasetCardSketchSpec extends SparkSpec {
     assert(approxBins.keySet === exactBins.keySet)
     for ((b, en) <- exactBins)
       assert(math.abs(approxBins(b) - en) <= 0.02 * n + 2, s"bin $b")
-    // mutually exclusive mode flags stay loud
-    intercept[IllegalArgumentException](Summaries.equidepthBins(docs,
-      Seq("n_chars"), 4, scalable = true, approx = true))
     // q120 winsorize: approx fences clip to values within a hair of exact
     val ex = Summaries.winsorize(docs.select("doc_id", "n_chars"),
       Seq("n_chars"), 0.05, 0.95)

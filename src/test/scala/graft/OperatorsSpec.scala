@@ -320,9 +320,9 @@ class OperatorsSpec extends SparkSpec {
 
   test("equidepthBins scalable path equals the percentile yardstick") {
     import graft.operators.Summaries
-    // the scalable form's cuts come from ONE batched exactQuantiles
-    // narrowing per column instead of the value-buffering percentile
-    // agg — output must be identical row for row, including tie-heavy
+    // the cuts come from ONE batched exactQuantilesPerColumn narrowing
+    // instead of the value-buffering percentile agg — output must equal
+    // the spec's percentile reference row for row, including tie-heavy
     // and NULL-bearing columns and a multi-column call
     val df = (1 to 500).map { i =>
       (i.toLong,
@@ -330,37 +330,38 @@ class OperatorsSpec extends SparkSpec {
         (i % 7).toDouble,                                   // heavy ties
         if (i % 5 == 0) None else Some((i % 97).toDouble))  // NULLs mixed in
     }.toDF("id", "a", "b", "c")
+    val cols = Seq("a", "b", "c")
     for (nBins <- Seq(2, 4, 10)) {
-      def rows(scalable: Boolean) =
-        Summaries.equidepthBins(df, Seq("a", "b", "c"), nBins, scalable)
-          .collect().map(_.toString).sorted.toSeq
-      assert(rows(scalable = true) === rows(scalable = false), s"nBins=$nBins")
+      val got = Summaries.equidepthBins(df, cols, nBins)
+        .collect().map(_.toString).sorted.toSeq
+      assert(got === ExactReference.equidepthBins(df, cols, nBins), s"nBins=$nBins")
     }
-    // all-NULL column: absent from the result on BOTH paths
+    // all-NULL column: absent from the result, as in the reference
     val an = df.withColumn("d", lit(null).cast("double"))
-    for (scalable <- Seq(true, false))
-      assert(Summaries.equidepthBins(an, Seq("a", "d"), 4, scalable)
-        .filter(col("col_name") === "d").count() === 0L, s"scalable=$scalable")
+    assert(Summaries.equidepthBins(an, Seq("a", "d"), 4)
+      .filter(col("col_name") === "d").count() === 0L)
+    assert(ExactReference.percentiles(an, "d", Seq(0.5)).isEmpty)
   }
 
   test("NaN ≡ missing across the card family: both quantile paths agree with the NaN-filtered frame") {
     import graft.operators.Summaries
-    // a raw `percentile` aggregate sorts NaN greatest, so the yardstick
-    // path used to shift every cut on NaN-bearing columns while the
-    // narrowing (which filters !isnan) did not — the NaN exclusion is
-    // now the DOCUMENTED semantic of every distribution operator, and
-    // both modes must agree with each other AND with hand-filtering
+    // a raw `percentile` aggregate sorts NaN greatest and would shift
+    // every cut on NaN-bearing columns, while the narrowing filters
+    // !isnan — the NaN exclusion is the DOCUMENTED semantic of every
+    // distribution operator: equidepthBins must agree with the
+    // percentile reference over the NaN-filtered column AND with itself
+    // on a hand-filtered frame
     val df = (1 to 400).map { i =>
       (i.toLong,
         if (i % 4 == 0) Double.NaN else (i % 83).toDouble,
         if (i % 7 == 0) None else Some(math.pow(i.toDouble, 2)))
     }.toDF("id", "a", "b")
     val clean = df.withColumn("a", when(!isnan(col("a")), col("a")))
-    def rows(src: org.apache.spark.sql.DataFrame, scalable: Boolean) =
-      Summaries.equidepthBins(src, Seq("a", "b"), 4, scalable)
+    def rows(src: org.apache.spark.sql.DataFrame) =
+      Summaries.equidepthBins(src, Seq("a", "b"), 4)
         .collect().map(_.toString).sorted.toSeq
-    assert(rows(df, scalable = true) === rows(df, scalable = false))
-    assert(rows(df, scalable = true) === rows(clean, scalable = false))
+    assert(rows(df) === ExactReference.equidepthBins(df, Seq("a", "b"), 4))
+    assert(rows(df) === rows(clean))
     // histogram + psiDrift share the entries/bounds plumbing: NaN rows
     // neither bin nor poison the equi-width bounds
     assert(Summaries.histogram(df, Seq("a"), 5).collect().map(_.toString).sorted
@@ -396,32 +397,31 @@ class OperatorsSpec extends SparkSpec {
       (i.toLong, (i % 50).toDouble,
         if (i % 3 == 0) "en" else "de", null: String))
       .toDF("id", "v", "lang", "license")
-    for ((exact, scalable) <- Seq((false, false), (true, false), (true, true))) {
+    for (exact <- Seq(false, true)) {
       val card = DatasetCard.build(df, Seq("v"), Seq("lang", "license"),
-        exactMedians = exact, scalableMedians = scalable)
+        exactMedians = exact)
       val numItems = card.filter(col("section") === "numeric")
         .select("item").as[String].collect().toSet
       // the default card ships the full quantile vector, not just p50
       assert(Set("p25", "p50", "p75", "p95", "p99").subsetOf(numItems),
-        s"exact=$exact scalable=$scalable: $numItems")
+        s"exact=$exact: $numItems")
       // all-NULL license column: no top-k rows, but the census facts ride
       val lic = card.filter(col("section") === "categorical" &&
           col("col_name") === "license")
         .select("item", "value_d").as[(String, Double)].collect().toMap
       assert(lic === Map("n_distinct" -> 0.0, "n_nulls" -> 200.0),
-        s"exact=$exact scalable=$scalable: $lic")
+        s"exact=$exact: $lic")
       assert(card.filter(col("section") === "categorical" &&
         col("col_name") === "license" && col("item").rlike("^[0-9]+$"))
         .count() === 0L)
     }
-    // the exact paths agree on every quantile row (percentile vs narrowing)
-    def numRows(exact: Boolean, scalable: Boolean) =
-      DatasetCard.build(df, Seq("v"), Nil,
-        exactMedians = exact, scalableMedians = scalable)
-        .filter(col("section") === "numeric")
-        .collect().map(_.toString).sorted.toSeq
-    assert(numRows(exact = true, scalable = false)
-      === numRows(exact = true, scalable = true))
+    // the exact card's quantile rows equal the percentile reference
+    val qs = Seq(0.25, 0.5, 0.75, 0.95, 0.99)
+    val exactQs = DatasetCard.build(df, Seq("v"), Nil, exactMedians = true)
+      .filter(col("section") === "numeric" && col("item").startsWith("p"))
+      .select("item", "value_d").as[(String, Double)].collect().toMap
+    assert(exactQs === qs.map(Summaries.quantileColName)
+      .zip(ExactReference.percentiles(df, "v", qs).get).toMap)
   }
 
   test("rollupSummary equals per-level groupBys; grouping_id tells NULLs apart") {

@@ -516,19 +516,12 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("IsNotNull(doc_id)") && p.contains("In(lang"), p.take(2000))
   }
 
-  test("q130 concurrency: the yardstick pays a single-partition window; the catalog path doesn't") {
+  test("q130 concurrency: the catalog plan has no Window node") {
     import graft.operators.Windows
     val iv = spark.range(0, 500).selectExpr("id as s", "id + 40 as e")
-    // yardstick: a global ORDER BY window = Exchange SinglePartition +
-    // Window — the exact single-task sort the scalable path exists to
-    // avoid
-    val yard = Windows.concurrency(iv, "s", "e", scalable = false)
-    val py = yard.queryExecution.executedPlan.toString
-    assert(py.contains("Window"), py.take(2000))
-    assert(py.contains("Exchange SinglePartition"), py.take(2000))
-    // catalog path: an RDD fold over a RANGE exchange — no Window node
-    // anywhere in its physical plan
-    val fast = Windows.concurrency(iv, "s", "e", scalable = true)
+    // an RDD fold over a RANGE exchange — no Window node (a global ORDER
+    // BY window is a single-task sort) anywhere in its physical plan
+    val fast = Windows.concurrency(iv, "s", "e")
     fast.collect()
     assert(!fast.queryExecution.executedPlan.toString.contains("Window"))
   }

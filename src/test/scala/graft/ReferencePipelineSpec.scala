@@ -31,16 +31,6 @@ class ReferencePipelineSpec extends SparkSpec {
 
   private lazy val out = ReferencePipeline.run(raw, "json", Seq("Temp"))
 
-  test("autoRouteJoins: profile-routed route join reproduces the default run") {
-    val auto = ReferencePipeline.run(raw, "json", Seq("Temp"),
-      autoRouteJoins = true)
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.select("uid", "temp_value").collect().map(_.toSeq).toSet
-    assert(key(auto.admissions) === key(out.admissions))
-    assert(key(auto.discharges) === key(out.discharges))
-    assert(auto.joined.count() === out.joined.count())
-  }
-
   test("corrupt and uid-less sessions route to exceptions, not silently away") {
     assert(out.exceptions.count() == 2)
     assert(out.admissions.count() + out.discharges.count() == 5)

@@ -172,11 +172,10 @@ class RobustStatsSpec extends SparkSpec {
       .toDF("g", "u")
     val cur = Seq.fill(300)(rnd.nextGaussian() * 1.3 + 0.2)
       .map(v => (v, rnd.nextInt(40).toDouble)).toDF("g", "u")
-    val w = Summaries.ksDrift(ref, cur, Seq("g", "u"), scalable = false)
-      .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2), r.getLong(3))).sortBy(_._1)
-    val s = Summaries.ksDrift(ref, cur, Seq("g", "u"), scalable = true)
-      .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2), r.getLong(3))).sortBy(_._1)
-    assert(w === s)
+    val got = Summaries.ksDrift(ref, cur, Seq("g", "u")).collect()
+      .map(r => (r.getString(0), Option(r.get(1)).map(_.asInstanceOf[Double]),
+        r.getLong(2), r.getLong(3))).sortBy(_._1).toSeq
+    assert(got === ExactReference.ksDrift(ref, cur, Seq("g", "u")))
   }
 
   test("ksDrift: empty side → NULL d_stat but the column keeps its row") {
@@ -249,7 +248,7 @@ class RobustStatsSpec extends SparkSpec {
   test("concurrency: hand sweep, end-exclusive, zero-length interval flat") {
     import graft.operators.Windows
     val iv = Seq((1L, 5L), (2L, 4L), (3L, 6L), (7L, 7L)).toDF("s", "e")
-    val out = Windows.concurrency(iv, "s", "e", scalable = false)
+    val out = Windows.concurrency(iv, "s", "e")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(out(1L) === ((1L, 1L)))
     assert(out(2L) === ((1L, 2L)))
@@ -269,16 +268,15 @@ class RobustStatsSpec extends SparkSpec {
     }.toDF("s", "e")
     def collectMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val fast = collectMap(Windows.concurrency(iv, "s", "e", scalable = true))
-    val yard = collectMap(Windows.concurrency(iv, "s", "e", scalable = false))
+    val fast = collectMap(Windows.concurrency(iv, "s", "e"))
+    val yard = collectMap(ExactReference.concurrency(iv, "s", "e"))
     assert(fast === yard)
     // a balanced sweep returns to zero at the last boundary
     assert(fast.maxBy(_._1)._2._2 === 0L)
     // NULL-bounded intervals are excluded, not half-counted
     val withNull = iv.unionByName(
       Seq((Option.empty[Long], Some(3L))).toDF("s", "e"))
-    assert(collectMap(Windows.concurrency(withNull, "s", "e",
-      scalable = true)) === fast)
+    assert(collectMap(Windows.concurrency(withNull, "s", "e")) === fast)
   }
 
   // ── snapshotDiff ───────────────────────────────────────────────────────

@@ -175,23 +175,68 @@ class ScaleOpsSpec extends SparkSpec {
         null: java.lang.Double) // an all-null column must profile, not throw
     }.toDF("cont", "tied", "empty")
     val cols = Seq("cont", "tied", "empty")
-    def rows(scalable: Boolean) =
-      Summaries.numericProfile(df, cols, exact = true, scalable = scalable)
-        .orderBy("column_name").collect().map(_.toSeq).toSeq
-    val buffered = rows(scalable = false)
-    val narrowed = rows(scalable = true)
-    assert(narrowed === buffered)
-    // the full card quantile VECTOR agrees too — all five ranks of all
-    // columns share ONE narrowing sequence on the scalable side
-    val qv = Seq(0.25, 0.5, 0.75, 0.95, 0.99)
-    def qrows(scalable: Boolean) =
-      Summaries.numericProfile(df, cols, exact = true, scalable = scalable,
-        quantiles = qv).orderBy("column_name").collect().map(_.toSeq).toSeq
-    assert(qrows(scalable = true) === qrows(scalable = false))
-    // and the scalable plan really dropped the buffered percentile agg
-    val plan = Summaries.numericProfile(df, cols, exact = true, scalable = true)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("percentile("), plan.take(500))
+    // every quantile column equals the spec's percentile reference —
+    // the median alone, and the full card quantile VECTOR, whose five
+    // ranks of all columns share ONE narrowing sequence
+    for (qs <- Seq(Seq(0.5), Seq(0.25, 0.5, 0.75, 0.95, 0.99))) {
+      val got = Summaries.numericProfile(df, cols, exact = true, quantiles = qs)
+        .collect().map(r => r.getString(0) -> r).toMap
+      for (c <- cols) {
+        val want = ExactReference.percentiles(df, c, qs)
+        qs.map(Summaries.quantileColName).zipWithIndex.foreach { case (qn, i) =>
+          val r = got(c)
+          val v = if (r.isNullAt(r.fieldIndex(qn))) None else Some(r.getAs[Double](qn))
+          assert(v === want.map(_(i)), s"$c $qn")
+        }
+      }
+      // the non-quantile stats are the sketch mode's single aggregation
+      def stats(exact: Boolean) = Summaries.numericProfile(df, cols, exact,
+          quantiles = qs).select("column_name", "n_non_null", "n_null", "min",
+          "max", "mean").orderBy("column_name").collect().map(_.toSeq).toSeq
+      assert(stats(exact = true) === stats(exact = false))
+    }
+  }
+
+  test("exact order statistics run no Percentile aggregate; ksDrift and concurrency no Window") {
+    import org.apache.spark.grafttest.PlanCapture
+    import org.apache.spark.sql.catalyst.expressions.aggregate.PercentileBase
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExecBase
+    // every Dataset action of construction + collect, walked through the
+    // adaptive plans and subqueries; class matches, not plan strings
+    // ("approx_percentile" contains "percentile")
+    object Walk extends AdaptiveSparkPlanHelper {
+      def nodes(p: SparkPlan): Seq[SparkPlan] = collectWithSubqueries(p) { case n => n }
+    }
+    val s2 = spark.newSession() // its own listener manager: no other queries
+    val df = s2.range(0, 2000).selectExpr("id",
+      "CAST(id % 97 AS DOUBLE) AS a",
+      "CASE WHEN id % 5 = 0 THEN NULL ELSE CAST(id * id AS DOUBLE) END AS b",
+      "CAST(id % 3 AS STRING) AS g")
+    val iv = s2.range(0, 500).selectExpr("id AS s", "id + 40 AS e")
+    val even = df.filter(col("id") % 2 === 0)
+    val odd = df.filter(col("id") % 2 === 1)
+    val cases: Seq[(String, Boolean, () => org.apache.spark.sql.DataFrame)] = Seq(
+      ("numericProfile", false, () => Summaries.numericProfile(df, Seq("a", "b"), exact = true)),
+      ("equidepthBins", false, () => Summaries.equidepthBins(df, Seq("a", "b"))),
+      ("winsorize", false, () => Summaries.winsorize(df, Seq("a", "b"))),
+      ("DatasetCard", false, () => graft.operators.DatasetCard.build(df,
+        Seq("a", "b"), Seq("g"), exactMedians = true)),
+      ("ksDrift", true, () => Summaries.ksDrift(even, odd, Seq("a", "b"))),
+      ("concurrency", true, () => Windows.concurrency(iv, "s", "e")))
+    for ((name, noWindow, build) <- cases) {
+      val (_, qes) = PlanCapture(s2)(build().collect())
+      assert(qes.nonEmpty, name)
+      for (qe <- qes) {
+        val nodes = Walk.nodes(qe.executedPlan)
+        assert(!nodes.exists(_.expressions.exists(_.exists(_.isInstanceOf[PercentileBase]))),
+          s"$name ran a percentile aggregate:\n${qe.executedPlan}")
+        if (noWindow)
+          assert(!nodes.exists(_.isInstanceOf[WindowExecBase]),
+            s"$name ran a Window:\n${qe.executedPlan}")
+      }
+    }
   }
 
   test("semanticDedup keeps one representative per tight cluster") {
