@@ -487,6 +487,24 @@ object Oracles {
     */
   private def bpeTrainOracle(k: Int): String = {
     val sep = "\u001f"
+    val out = (1 to k).map(i =>
+      s"""SELECT CAST($i AS BIGINT) AS merge_rank, l AS "left", r AS "right",
+          n AS n_occurrences FROM b$i""").mkString("\n       UNION ALL\n       ")
+    s"""WITH ${bpeTrainCtes(k, sep)}
+       $out"""
+  }
+
+  /** Shared q137/q138/q168 training CTE body: word-frequency dictionary
+    * plus the k unrolled (pair-count, top-1, boundary-anchored replace)
+    * iteration triples. The dictionary keeps the word key `w` through
+    * every replace so the final dict d_k doubles as the ENCODE table
+    * (a training-corpus word's encoding IS its final dict segmentation).
+    * Each d_i is read twice (by p_{i+1} through b_{i+1}, and by d_{i+1}'s
+    * replace), so every d_i is MATERIALIZED: inlined, the chain
+    * recomputes d_0 about 2^k times (q145, k = 12, on sf0.1 in DuckDB
+    * 1.0.0: 910 s inlined, 0.5 s materialized, identical rows).
+    */
+  private def bpeTrainCtes(k: Int, sep: String): String = {
     val iters = (1 to k).map { i =>
       s"""p$i AS (
          SELECT p.l AS l, p.r AS r, CAST(sum(f) AS BIGINT) AS n FROM (
@@ -496,24 +514,11 @@ object Oracles {
                  FROM d${i - 1}) x) y
          GROUP BY 1, 2),
        b$i AS (SELECT l, r, n FROM p$i ORDER BY n DESC, l, r LIMIT 1),
-       d$i AS (SELECT w, replace(seq, '$sep' || b.l || '$sep$sep' || b.r || '$sep',
-                                 '$sep' || b.l || b.r || '$sep') AS seq, f
-               FROM d${i - 1} CROSS JOIN b$i b)"""
+       d$i AS MATERIALIZED (
+         SELECT w, replace(seq, '$sep' || b.l || '$sep$sep' || b.r || '$sep',
+                           '$sep' || b.l || b.r || '$sep') AS seq, f
+         FROM d${i - 1} CROSS JOIN b$i b)"""
     }.mkString(",\n       ")
-    val out = (1 to k).map(i =>
-      s"""SELECT CAST($i AS BIGINT) AS merge_rank, l AS "left", r AS "right",
-          n AS n_occurrences FROM b$i""").mkString("\n       UNION ALL\n       ")
-    s"""WITH ${bpeTrainCtes(k, sep, iters)}
-       $out"""
-  }
-
-  /** Shared q137/q138 training CTE body: word-frequency dictionary plus
-    * the k unrolled (pair-count, top-1, boundary-anchored replace)
-    * iteration triples. The dictionary keeps the word key `w` through
-    * every replace so the final dict d_k doubles as the ENCODE table
-    * (a training-corpus word's encoding IS its final dict segmentation).
-    */
-  private def bpeTrainCtes(k: Int, sep: String, iters: String): String =
     s"""w0 AS (
          SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
          FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0),
@@ -523,6 +528,7 @@ object Oracles {
                   || '$sep' AS seq, f
               FROM wf),
        $iters"""
+  }
 
   /** q138: q137's training chain, then ENCODE — a training-corpus word's
     * encoding IS its segmentation in the final dictionary d_k (the dict
@@ -533,20 +539,7 @@ object Oracles {
     */
   private def bpeEncodeOracle(k: Int): String = {
     val sep = "\u001f"
-    val iters = (1 to k).map { i =>
-      s"""p$i AS (
-         SELECT p.l AS l, p.r AS r, CAST(sum(f) AS BIGINT) AS n FROM (
-           SELECT f, unnest([struct_pack(l := cs[j + 1], r := cs[j + 2])
-                             for j in range(0, greatest(len(cs) - 1, 0))]) AS p
-           FROM (SELECT string_split(trim(seq, '$sep'), '$sep$sep') AS cs, f
-                 FROM d${i - 1}) x) y
-         GROUP BY 1, 2),
-       b$i AS (SELECT l, r, n FROM p$i ORDER BY n DESC, l, r LIMIT 1),
-       d$i AS (SELECT w, replace(seq, '$sep' || b.l || '$sep$sep' || b.r || '$sep',
-                                 '$sep' || b.l || b.r || '$sep') AS seq, f
-               FROM d${i - 1} CROSS JOIN b$i b)"""
-    }.mkString(",\n       ")
-    s"""WITH ${bpeTrainCtes(k, sep, iters)},
+    s"""WITH ${bpeTrainCtes(k, sep)},
        dw AS (
          SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
          FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0),
@@ -568,20 +561,7 @@ object Oracles {
     */
   private def bpeFertilityOracle(k: Int): String = {
     val sep = "\u001f"
-    val iters = (1 to k).map { i =>
-      s"""p$i AS (
-         SELECT p.l AS l, p.r AS r, CAST(sum(f) AS BIGINT) AS n FROM (
-           SELECT f, unnest([struct_pack(l := cs[j + 1], r := cs[j + 2])
-                             for j in range(0, greatest(len(cs) - 1, 0))]) AS p
-           FROM (SELECT string_split(trim(seq, '$sep'), '$sep$sep') AS cs, f
-                 FROM d${i - 1}) x) y
-         GROUP BY 1, 2),
-       b$i AS (SELECT l, r, n FROM p$i ORDER BY n DESC, l, r LIMIT 1),
-       d$i AS (SELECT w, replace(seq, '$sep' || b.l || '$sep$sep' || b.r || '$sep',
-                                 '$sep' || b.l || b.r || '$sep') AS seq, f
-               FROM d${i - 1} CROSS JOIN b$i b)"""
-    }.mkString(",\n       ")
-    s"""WITH ${bpeTrainCtes(k, sep, iters)},
+    s"""WITH ${bpeTrainCtes(k, sep)},
        dw AS (
          SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
          FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0),
@@ -741,20 +721,7 @@ object Oracles {
     */
   private def bpeBudgetOracle(k: Int, budget: Long): String = {
     val sep = "\u001f"
-    val iters = (1 to k).map { i =>
-      s"""p$i AS (
-         SELECT p.l AS l, p.r AS r, CAST(sum(f) AS BIGINT) AS n FROM (
-           SELECT f, unnest([struct_pack(l := cs[j + 1], r := cs[j + 2])
-                             for j in range(0, greatest(len(cs) - 1, 0))]) AS p
-           FROM (SELECT string_split(trim(seq, '$sep'), '$sep$sep') AS cs, f
-                 FROM d${i - 1}) x) y
-         GROUP BY 1, 2),
-       b$i AS (SELECT l, r, n FROM p$i ORDER BY n DESC, l, r LIMIT 1),
-       d$i AS (SELECT w, replace(seq, '$sep' || b.l || '$sep$sep' || b.r || '$sep',
-                                 '$sep' || b.l || b.r || '$sep') AS seq, f
-               FROM d${i - 1} CROSS JOIN b$i b)"""
-    }.mkString(",\n       ")
-    s"""WITH ${bpeTrainCtes(k, sep, iters)},
+    s"""WITH ${bpeTrainCtes(k, sep)},
        dw AS (
          SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
          FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0),
@@ -782,20 +749,7 @@ object Oracles {
     */
   private def bpePackOracle(k: Int, seqLen: Long): String = {
     val sep = "\u001f"
-    val iters = (1 to k).map { i =>
-      s"""p$i AS (
-         SELECT p.l AS l, p.r AS r, CAST(sum(f) AS BIGINT) AS n FROM (
-           SELECT f, unnest([struct_pack(l := cs[j + 1], r := cs[j + 2])
-                             for j in range(0, greatest(len(cs) - 1, 0))]) AS p
-           FROM (SELECT string_split(trim(seq, '$sep'), '$sep$sep') AS cs, f
-                 FROM d${i - 1}) x) y
-         GROUP BY 1, 2),
-       b$i AS (SELECT l, r, n FROM p$i ORDER BY n DESC, l, r LIMIT 1),
-       d$i AS (SELECT w, replace(seq, '$sep' || b.l || '$sep$sep' || b.r || '$sep',
-                                 '$sep' || b.l || b.r || '$sep') AS seq, f
-               FROM d${i - 1} CROSS JOIN b$i b)"""
-    }.mkString(",\n       ")
-    s"""WITH ${bpeTrainCtes(k, sep, iters)},
+    s"""WITH ${bpeTrainCtes(k, sep)},
        dw AS (
          SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
          FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0),

@@ -13,11 +13,13 @@ import graft.operators._
   *
   * Every stage is a DataFrame transform, so the flow inherits Spark's
   * partitioning/pushdown and runs identically over 10 rows or 100 TB of
-  * exports. Construction runs jobs in two places: the MCL key discovery
+  * exports. Construction runs jobs in three places: the MCL key discovery
   * (a plan-time KEY LIST, like `extractAllKeys`; pass `knownMclKeys` to
-  * skip it) and, when a dataset card is configured, `DatasetCard.build`'s
-  * equi-width bounds and `percentile` collects over the joined table.
-  * Without either, construction is fully lazy.
+  * skip it); when a dataset card is configured, `DatasetCard.build`'s
+  * equi-width bounds and exact-quantile collects over the joined table;
+  * and, under `persistShared`, the three cut jobs that materialize the
+  * parsed, deduped and joined frames. Without any of them, construction
+  * is fully lazy.
   */
 object ReferencePipeline {
 
@@ -39,6 +41,20 @@ object ReferencePipeline {
   val DefaultMatchScoreFields: Seq[(String, Double, Double)] =
     Seq(("OFC", 10.0, 1.0), ("Gestation", 10.0, 1.0), ("BirthWeight", 5.0, 500.0))
 
+  /** One run's output tables (see [[tableList]] for the published names).
+    *
+    * @param shared under `persistShared`, the run's three cut frames —
+    *   joined, deduped, parsed: dependents first — whose checkpoint blocks
+    *   every table reads; empty otherwise. [[publish]] and
+    *   [[publishWithUnions]] release them. A caller that materializes the
+    *   tables itself must call `graft.plans.Iterative.release` on each
+    *   after its last read: `Dataset.unpersist` does not free checkpoint
+    *   blocks and leaves them to the ContextCleaner (which frees them once
+    *   the frames are garbage-collected; the pipeline benchmark's passes
+    *   measured no heap cost from that). A table read after the release
+    *   fails loudly with Spark's "Checkpoint block … not found"; it never
+    *   silently recomputes.
+    */
   case class Outputs(
       admissions: DataFrame,
       discharges: DataFrame,
@@ -76,17 +92,21 @@ object ReferencePipeline {
     *   validation rules feeding `Outputs.ruleExceptions`
     *   (validate_dataframe_with_ge) — one metadata frame, two derived
     *   behaviors, like the reference's script-config JSON
-    * @param persistShared persist (MEMORY_AND_DISK) the plan's two fan-out
-    *   points: the deduped sessions, which every table derives from, and
-    *   the joined table, which `summary_counts`, `completeness`,
-    *   `summary_baseline` and `dataset_card` derive from. Publishing then
-    *   scans the raw JSON and runs `Joins.bestMatch` once, not once per
-    *   table. Both frames are returned in `Outputs.shared` (dependents
-    *   first); `publish` and `publishWithUnions` release them, and a
-    *   caller materializing the tables itself must `unpersist` them.
-    *   AQE does not coalesce the partitions of a cached plan, so `joined`
-    *   and `summary_baseline` publish one part file per shuffle partition
-    *   where the uncached plan writes a single file on small inputs.
+    * @param persistShared cut lineage (`graft.plans.Iterative.cut`) at the
+    *   plan's three fan-out points: the parsed sessions, which the key
+    *   repair, `exceptions` and `summary_neolab` read; the deduped
+    *   sessions, which every other table derives from; and the joined
+    *   table, which `summary_counts`, `completeness`, `summary_baseline`
+    *   and `dataset_card` derive from. Each is materialized once, during
+    *   `run`, and every table downstream plans from a leaf carrying its
+    *   exact row count: publishing scans the raw JSON and runs
+    *   `Joins.bestMatch` once, and no table re-analyzes the JSON →
+    *   key-repair → dedup → bestMatch tree. Nothing is cached by logical
+    *   plan. The three frames are returned in `Outputs.shared`, which
+    *   states who releases them. A cut's partitions are the AQE-coalesced
+    *   ones of the plan it materialized, so `joined` and
+    *   `summary_baseline` publish a single part file on small inputs, as
+    *   the uncut plan does.
     */
   def run(raw: DataFrame, jsonCol: String, keys: Seq[String],
           repeatableKeys: Seq[String] = Nil,
@@ -109,8 +129,16 @@ object ReferencePipeline {
           cardCategoricalCols: Seq[String] = Nil,
           cardReference: Option[DataFrame] = None,
           persistShared: Boolean = false): Outputs = {
-    // 1. import: parse + uid recovery; corrupt rows routed out, not dropped
-    val parsed = JsonImport.parseSessions(raw, jsonCol)
+    // The plan's fan-out points: under persistShared each is materialized
+    // once and its readers plan from the cut's leaf, so no table re-reads
+    // the raw JSON or re-runs the stages above it.
+    def shared(df: DataFrame): DataFrame =
+      if (persistShared) graft.plans.Iterative.cut(df) else df
+
+    // 1. import: parse + uid recovery; corrupt rows routed out, not
+    //    dropped. Fan-out point: key repair, exceptions and the neolab
+    //    route all read the parsed rows.
+    val parsed = shared(JsonImport.parseSessions(raw, jsonCol))
 
     // 1b. key repair (reference: regenerate_unique_key.py): a session
     //     without a recoverable uid takes its first present date entry as
@@ -131,12 +159,8 @@ object ReferencePipeline {
       .unionByName(keyed.filter(col("uid").isNull))
 
     // 2. dedup: one row per (uid, script), keep latest by started_at.
-    //    Every output table fans out from here — persistShared caches it
-    //    so materializing all outputs (publish) scans the raw JSON once,
-    //    not once per table.
-    def shared(df: DataFrame): DataFrame =
-      if (persistShared) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
+    //    Fan-out point: every table but exceptions and summary_neolab
+    //    derives from here.
     val deduped = shared(Dedup.keepLatest(wellFormed, Seq("uid", "scriptid"),
       col("started_at"), col("completed_at")))
 
@@ -322,10 +346,10 @@ object ReferencePipeline {
     //     HypothermiaCount …, 1-or-NULL so SUM and COUNT both count hits).
     //     Callers compose DeriveColumns.referenceOutcomeFlags over their
     //     joined-table column names; one withColumns projection, no scan.
-    //     `joined` is the second fan-out point (summary counts,
+    //     `joined` is the last fan-out point (summary counts,
     //     completeness, the baseline and the dataset card derive from it),
-    //     so persistShared caches it before any of them is built: the
-    //     card's construction-time jobs fill the cache, bestMatch runs once.
+    //     so persistShared cuts it before any of them is built: the card's
+    //     construction-time jobs read the cut, bestMatch runs once.
     val joined = shared(
       if (outcomeFlags.isEmpty) derived
       else derived.withColumns(outcomeFlags.toMap))
@@ -397,7 +421,7 @@ object ReferencePipeline {
     Outputs(admissions, discharges, repeatables, joined, summaryCounts,
       completeness, exceptions, mclKeys, mclTables, combinedDiagnoses,
       ruleExceptions, dayVitals, summaryNeolab, summaryBaseline,
-      datasetCard, shared = if (persistShared) Seq(joined, deduped) else Nil)
+      datasetCard, shared = if (persistShared) Seq(joined, deduped, parsed) else Nil)
   }
 
   /** The named output tables of one run, publish order. Null frames
@@ -471,16 +495,18 @@ object ReferencePipeline {
     * Pair with `run(..., persistShared = true)` so the fan-out doesn't
     * rescan the raw JSON (or re-run bestMatch) once per table.
     *
-    * The shared persists (`Outputs.shared`) are released in a `finally`,
-    * after the last table or the first failed write. That matters in a
-    * LONG-LIVED session re-running the cron loop: Spark's cache is keyed
-    * by logical plan, so a second `run` over the SAME source path would
-    * silently reuse the previous increment's cached rows — stale derived
-    * tables with no error anywhere (caught by IncrementalPipelineSpec).
+    * The shared cuts (`Outputs.shared`) are released in a `finally`,
+    * after the last table or the first failed write, so a LONG-LIVED
+    * session re-running the cron loop does not pile up checkpoint
+    * blocks. Re-running over the SAME source path cannot publish stale
+    * rows: a cut is no entry in Spark's plan-keyed cache — each `run`
+    * materializes its own — so a second `run` cannot be served the
+    * previous increment's rows, as it was when the shared frames were
+    * `persist`ed (IncrementalPipelineSpec).
     */
   def publish(out: Outputs, baseDir: String): Unit =
     try publishTables(tableList(out), baseDir)
-    finally out.shared.foreach(_.unpersist())
+    finally out.shared.foreach(graft.plans.Iterative.release)
 
   private def publishTables(tables: Seq[(String, DataFrame)], baseDir: String): Unit = {
     val dupNames = tables.groupBy(_._1).collect { case (n, g) if g.size > 1 => n }
@@ -505,6 +531,11 @@ object ReferencePipeline {
     * driver decision) before taking a grid dimension; rows with a NULL
     * facility or admission month cluster together under a NULL key
     * rather than being dropped. Same hygiene as [[publish]].
+    *
+    * This reads `out.joined`, so with `run(..., persistShared = true)`
+    * call it BEFORE [[publish]]: publish releases the shared cuts, and
+    * the joined table read after that fails with "Checkpoint block …
+    * not found".
     */
   def publishJoinedClustered(out: Outputs, path: String, numFiles: Int,
                              bits: Int = 8): Unit = {
@@ -557,7 +588,7 @@ object ReferencePipeline {
       "duplicate facility names in publishWithUnions")
     try runs.foreach { case (facility, out) =>
       publishTables(tableList(out), s"$baseDir/$facility") }
-    finally runs.foreach(_._2.shared.foreach(_.unpersist()))
+    finally runs.foreach(_._2.shared.foreach(graft.plans.Iterative.release))
     // union views read the tables JUST PUBLISHED instead of re-deriving
     // them from raw (the original plans would re-execute every stage per
     // facility — roughly doubling publish cost); reading the materialized

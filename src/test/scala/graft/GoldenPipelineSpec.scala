@@ -206,9 +206,13 @@ class GoldenPipelineSpec extends SparkSpec {
     spark.catalog.clearCache()
     val cached = java.nio.file.Files.createTempDirectory("graft_golden_cached").toString
     val lazyDir = java.nio.file.Files.createTempDirectory("graft_golden_lazy").toString
+    def persistentRdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persistentRdds
     ReferencePipeline.publish(fullRun(persistShared = true), cached)
     assert(spark.sharedState.cacheManager.isEmpty,
       "publish left a shared persist in the cache")
+    assert((persistentRdds -- before).isEmpty,
+      s"the run left persistent RDDs ${persistentRdds -- before}")
     ReferencePipeline.publish(fullRun(persistShared = false), lazyDir)
     val (c, l) = (publishedDigests(cached), publishedDigests(lazyDir))
     assert(c.keySet == l.keySet)

@@ -459,33 +459,35 @@ class ReferencePipelineSpec extends SparkSpec {
     assert(vitals.select("Temp_value").as[String].collect().toSet == Set("36.5", "37.5"))
   }
 
-  private def cacheManager = spark.sharedState.cacheManager
-
-  private def runWithCard(persistShared: Boolean) =
+  private def runWithCard(persistShared: Boolean, raw: org.apache.spark.sql.DataFrame = raw) =
     ReferencePipeline.run(raw, "json", Seq("Temp"),
       cardNumericCols = Seq("los_days"), cardCategoricalCols = Seq("facility"),
-      persistShared = persistShared)
+      neolabScript = Some("lab"), persistShared = persistShared)
 
-  test("persistShared: the tables derived from joined read its cache, not a second bestMatch") {
+  /** The RDD under each shared cut frame's `LogicalRDD` leaf. */
+  private def cutRddIds(out: ReferencePipeline.Outputs): Set[Int] = out.shared.map(
+    _.queryExecution.logical.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id)
+    .toSet
+
+  private def persistentRddIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("persistShared: the tables derived from joined read the cut, not a second bestMatch") {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     val plans = new AdaptiveSparkPlanHelper {}
-    // the bestMatch join is the one keyed on the base uid; an
-    // InMemoryTableScanExec is a leaf, so a join inside a cached plan is
-    // only visited through its relation's cachedPlan
+    // the bestMatch join is the one keyed on the base uid
     def bestMatchJoins(p: SparkPlan) = plans.collect(p) {
       case j: BaseJoinExec if j.expressions.flatMap(_.references).exists(_.name == "base_uid") => j
     }
-    def cachedPlans(p: SparkPlan) =
-      plans.collect(p) { case s: InMemoryTableScanExec => s.relation.cacheBuilder.cachedPlan }
+    def cacheScans(p: SparkPlan) = plans.collect(p) { case s: InMemoryTableScanExec => s }
     def derivedTables(out: ReferencePipeline.Outputs) = Seq(
       "summary_counts" -> out.summaryCounts, "completeness" -> out.completeness,
       "summary_baseline" -> out.summaryBaseline, "dataset_card" -> out.datasetCard)
       .map { case (name, df) => name -> df.queryExecution.executedPlan }
 
-    // control: without the persist, every one of them re-runs bestMatch
+    // control: without the cut, every one of them re-runs bestMatch
     derivedTables(runWithCard(persistShared = false)).foreach { case (name, plan) =>
       assert(bestMatchJoins(plan).nonEmpty, s"$name: expected the bestMatch join in\n$plan")
     }
@@ -493,29 +495,55 @@ class ReferencePipelineSpec extends SparkSpec {
     val out2 = runWithCard(persistShared = true)
     try derivedTables(out2).foreach { case (name, plan) =>
       assert(bestMatchJoins(plan).isEmpty, s"$name re-runs bestMatch:\n$plan")
-      val cached = cachedPlans(plan)
-      // every cache it reads is the persisted joined table (the dedup
-      // cache alone would mean bestMatch runs again above it)
-      assert(cached.nonEmpty && cached.forall(c => bestMatchJoins(c).nonEmpty),
-        s"$name does not read the persisted joined table:\n$plan")
-    } finally out2.shared.foreach(_.unpersist())
+      // a cache scan would mean the table still carries (and re-plans)
+      // the whole tree above the fan-out point
+      assert(cacheScans(plan).isEmpty, s"$name reads a cached plan, not the cut:\n$plan")
+    } finally out2.shared.foreach(graft.plans.Iterative.release)
+  }
+
+  test("persistShared: no published table scans the raw input") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val plans = new AdaptiveSparkPlanHelper {}
+    val rawDir = java.nio.file.Files.createTempDirectory("graft_raw").toString + "/sessions"
+    raw.write.text(rawDir)
+    val rawFiles = spark.read.text(rawDir).withColumnRenamed("value", "json")
+    def rawScans(out: ReferencePipeline.Outputs) = ReferencePipeline.tableList(out).map {
+      case (name, df) => name -> plans.collect(df.queryExecution.executedPlan) {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.toString.contains(rawDir)) => s
+      }
+    }.filter(_._2.nonEmpty).map(_._1)
+
+    // control: without the cut, the tables that branch off the parsed
+    // rows plan their own scan of the raw files
+    val lazyOut = runWithCard(persistShared = false, rawFiles)
+    assert(Set("exceptions", "summary_neolab", "joined").subsetOf(rawScans(lazyOut).toSet))
+
+    val out2 = runWithCard(persistShared = true, rawFiles)
+    try assert(rawScans(out2).isEmpty, "tables scanning the raw JSON")
+    finally out2.shared.foreach(graft.plans.Iterative.release)
   }
 
   test("a failed publish still releases the shared persists") {
-    // suites share one session; start from an empty cache so the check
-    // below sees only this run's entries
-    spark.catalog.clearCache()
     // a regular file where the publish directory should be fails the
     // first table's write
     val notADir = java.nio.file.Files.createTempFile("graft_publish", ".file").toString
     val out2 = runWithCard(persistShared = true)
-    assert(out2.shared.size == 2 && !cacheManager.isEmpty)
+    val ids = cutRddIds(out2)
+    assert(out2.shared.size == 3 && ids.size == 3)
+    assert(ids.subsetOf(persistentRddIds), "the cuts' blocks are not held before publish")
     intercept[Exception](ReferencePipeline.publish(out2, notADir))
-    assert(cacheManager.isEmpty, "publish leaked the shared persists after a failed write")
+    assert((ids & persistentRddIds).isEmpty, "publish leaked the shared cuts after a failed write")
+    // a released frame fails loudly instead of silently recomputing
+    val e = intercept[org.apache.spark.SparkException](out2.joined.count())
+    assert(e.getMessage.contains("Checkpoint block"), e.getMessage)
 
     val outA = runWithCard(persistShared = true)
-    assert(!cacheManager.isEmpty)
+    val idsA = cutRddIds(outA)
+    assert(idsA.size == 3 && idsA.subsetOf(persistentRddIds))
     intercept[Exception](ReferencePipeline.publishWithUnions(Seq("fa" -> outA), notADir))
-    assert(cacheManager.isEmpty, "publishWithUnions leaked the shared persists after a failed write")
+    assert((idsA & persistentRddIds).isEmpty,
+      "publishWithUnions leaked the shared cuts after a failed write")
   }
 }
