@@ -8,7 +8,8 @@ package graft
   * deterministic kernels in DuckDB SQL (generated below): the RHP plane
   * signs are a pure integer formula whose bit 16 is unaffected by 32-bit
   * wrap, so plain BIGINT arithmetic reproduces the Scala Int math; the
-  * portable simhash derives token-hash bits from md5 hex digits; IVF/
+  * simhash derives token-hash bits from md5 hex digits, as do the
+  * uniform draws of every hashed sampler (q64, q77, q93, …); IVF/
   * SemDeDup centroids are a deterministic ordered sample refined by
   * exact-integer k-means (see [[autoCentroidCtes]]). Cosine/L2 run the same
   * left-to-right double loop in both engines, and every emitted float is
@@ -140,11 +141,6 @@ object Oracles {
          FROM scored)
        SELECT query_id, neighbor_id, round(cos, 4) AS cos, rank FROM ranked WHERE rank <= $k"""
 
-  /** q28: the block-pair banding has guaranteed recall at hamming ≤
-    * maxDist (pigeonhole) and an explicit hamming post-filter, so the
-    * output contract is exactly the brute-force pair set — which is what
-    * this oracle computes, over md5-derived (portable) signatures.
-    */
   /** The 7-gram Jaccard component CTE chain (q51's closure) — interpolated
     * into every oracle that needs components so the shingle/threshold/
     * closure SQL exists ONCE and cannot drift between queries.
@@ -185,6 +181,11 @@ object Oracles {
                 / greatest(length($text), 1), 4) * 2.0,
              1.0), 0.0), 4)"""
 
+  /** q28: the block-pair banding has guaranteed recall at hamming ≤
+    * maxDist (pigeonhole) and an explicit hamming post-filter, so the
+    * output contract is exactly the brute-force pair set — which is what
+    * this oracle computes, over md5-derived signatures.
+    */
   private def simhashOracle: String = {
     val digits = (0 until 16).map(p =>
       s"strpos('0123456789abcdef', substr(hx, ${p + 1}, 1)) - 1 AS d$p").mkString(", ")
@@ -954,7 +955,7 @@ object Oracles {
        SELECT a.id AS vec_id, a.cid FROM ass a
        LEFT JOIN drops d ON a.id = d.id WHERE d.id IS NULL"""
 
-  /** q64: replays the portable uniform — first 8 hex digits of
+  /** q64: replays Sampling.uniform01 — first 8 hex digits of
     * md5(id || ':42') as an integer over 2^32 — and the cumulative-weight
     * CASE. 16**(7-i) is exact in double below 2^32, so both engines
     * compute the identical uniform.
@@ -2575,7 +2576,7 @@ object Oracles {
 
     // q108: the collapse-first audit replayed — distinct-text rep pairs
     // (q26's shingle chain over one row per normalized text), per-group
-    // split histograms from the q64 portable-split CASE, one row per
+    // split histograms from the q64 split CASE, one row per
     // (rep pair × straddling split combo) with the per-instance count
     "q108_split_leakage" ->
       """WITH m AS (SELECT doc_id, lower(trim(text)) AS t FROM documents),
@@ -2732,7 +2733,7 @@ object Oracles {
     // q128: the largest-remainder allocation replayed in the SAME IEEE
     // double arithmetic (decimals would allocate differently — ⌊300·0.3⌋
     // is 89 in doubles), availability cap via least(), then the q93
-    // portable-uniform rank per stratum
+    // md5-uniform rank per stratum
     "q128_target_mix" ->
       """WITH tgt AS (SELECT * FROM (VALUES
              ('en', CAST(0.3 AS DOUBLE)), ('de', CAST(0.4 AS DOUBLE)),
@@ -2840,7 +2841,7 @@ object Oracles {
     // term sums — rank ties break by doc_id everywhere
     "q122_hybrid_rrf" -> hybridRrfOracle,
 
-    // q123: the q64 portable-split CASE + per-split label census;
+    // q123: the q64 split CASE + per-split label census;
     // entropy/gini as 9-dp decimal term sums, majority class by
     // (count DESC, label) rank
     "q123_class_balance" ->
@@ -3083,7 +3084,7 @@ object Oracles {
          SELECT doc_id, lang, n_chars, CAST(rnk AS BIGINT) AS rank
          FROM r WHERE rnk <= 15""",
 
-    // q112: both portable uniforms replayed (seed tags ':42' shard,
+    // q112: both md5 uniforms replayed (seed tags ':42' shard,
     // ':43' order), row_number within shard over (order-hash, id)
     "q112_shard_manifest" ->
       """WITH u AS (SELECT doc_id, lang,
@@ -4235,7 +4236,7 @@ object Oracles {
 
     // q77: replays the α = 0.5 fraction computation (6-dp-rounded — the
     // quantization that makes the threshold engine-portable) and the
-    // portable md5 uniform keep filter
+    // md5 uniform keep filter
     "q77_temperature_mix" ->
       """WITH sizes AS (
            SELECT lang, CAST(count(*) AS DOUBLE) AS n

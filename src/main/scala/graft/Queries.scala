@@ -547,15 +547,15 @@ object Queries {
         md5(concat_ws("|", slice(col("sig"), 13, 4))).as("b3"))
     }),
 
-    // portable = md5-derived token hashes, so the DuckDB oracle reproduces
-    // the signatures bit-for-bit (xxhash64 exists only inside Spark).
+    // md5-derived token hashes, so the DuckDB oracle reproduces the
+    // signatures bit-for-bit.
     // Catalog runs the collapse-first default: representative pairs +
     // multiplicities (the per-instance expansion is the opt-in yardstick —
     // its output is quadratic in dup-group size, the last 300×-probe
     // hazard r10 flagged)
     "q28_simhash" -> ((s, d) =>
       NearDup.simhashPairs(Tables.documents(s, d), "doc_id", "text", maxDist = 8,
-        portable = true, collapseExact = true)),
+        collapseExact = true)),
 
     // threshold 0.4: the synthetic embeddings are near-orthogonal (max
     // pairwise cosine ≈ 0.5–0.6), so a "real" near-dup cut of 0.93 matches
@@ -1057,12 +1057,12 @@ object Queries {
     }),
 
     // deterministic corpus split: 80/10/10 train/val/test as a pure
-    // function of doc_id (portable md5 uniform — the oracle replays it)
+    // function of doc_id (md5 uniform — the oracle replays it)
     "q64_split_assign" -> ((s, d) =>
       Sampling.assignSplit(
         Tables.documents(s, d).select(col("doc_id"), col("lang")),
         col("doc_id"),
-        Seq(("train", 0.8), ("val", 0.1), ("test", 0.1)), portable = true)),
+        Seq(("train", 0.8), ("val", 0.1), ("test", 0.1)))),
 
     // unigram-LM quality score: mean ln p(token) under the corpus's own
     // top-24 unigram distribution, OOV at the 1/total smoothing floor
@@ -1242,8 +1242,7 @@ object Queries {
         .select(col("doc_id"), synthUrl(col("doc_id"), col("source")).as("url"))
         .select(col("doc_id"),
           TextAnalysis.registeredDomain(col("url")).as("domain"))
-      Sampling.perDomainCap(parts, col("domain"), col("doc_id"), k = 5,
-          portable = true)
+      Sampling.perDomainCap(parts, col("domain"), col("doc_id"), k = 5)
         .select(col("doc_id"), col("domain"), col("rank"))
     }),
 
@@ -1803,7 +1802,7 @@ object Queries {
       Sampling.upsampleByFactor(
         Tables.documents(s, d).select(col("doc_id"), col("lang")),
         col("lang"), col("doc_id"),
-        Map("de" -> 2.5, "zh" -> 0.0), portable = true)
+        Map("de" -> 2.5, "zh" -> 0.0))
         .select(col("doc_id"), col("lang"), col("repeat").cast("int").as("repeat"))),
 
     // the full dedup decision: near-dup pairs → components → keep the
@@ -1965,13 +1964,13 @@ object Queries {
 
     // temperature-balanced (α = 0.5) multilingual mix: keep fractions
     // computed from observed lang sizes upweight small languages, then
-    // the deterministic hash filter samples — portable uniform so the
+    // the deterministic md5 hash filter samples, so the
     // oracle replays the exact keep set
     "q77_temperature_mix" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val fr = Sampling.temperatureFractions(docs, col("lang"), total = 150, alpha = 0.5)
       Sampling.stratifiedFractions(docs.select(col("doc_id"), col("lang")),
-        col("lang"), col("doc_id"), fr, portable = true)
+        col("lang"), col("doc_id"), fr)
     }),
 
     // exact-substring duplication: maximal shared token spans >= 12 via
@@ -2161,7 +2160,7 @@ object Queries {
     "q93_stratified_sample" -> ((s, d) =>
       Sampling.stratifiedExactK(
           Tables.documents(s, d).select("doc_id", "lang", "text"),
-          col("lang"), col("doc_id"), k = 40, portable = true)
+          col("lang"), col("doc_id"), k = 40)
         .select("doc_id", "lang", "rank")),
 
     // Sliding time-window stats: per-user trailing-1h event count and
@@ -2222,7 +2221,7 @@ object Queries {
       val reps = NearDup.ngramJaccardRepPairs(docs, "doc_id", "text", 7, 0.2)
       val mem = NearDup.exactTextMembership(docs, "doc_id", "text", normalize = true)
       val hist = Sampling.assignSplit(mem, col("id"), sp,
-          outCol = "split", portable = true)
+          outCol = "split")
         .groupBy(col("rid"), col("split")).agg(count(lit(1)).as("cnt"))
       val ha = hist.select(col("rid").as("id_a"), col("split").as("split_a"),
         col("cnt").as("__ca"))
@@ -2269,14 +2268,14 @@ object Queries {
 
     // Deterministic global shuffle + sharding of the publish order:
     // shard and within-shard position are pure functions of doc_id
-    // (portable md5 uniforms, independent seeds), so the tokenizer-feed
+    // (md5 uniforms, independent seeds), so the tokenizer-feed
     // order reproduces across reruns, engines, and cluster sizes — the
     // orderBy(rand()) anti-pattern made restart-safe. One shuffle, keyed
     // by shard
     "q112_shard_manifest" -> ((s, d) =>
       Sampling.shardManifest(
         Tables.documents(s, d).select(col("doc_id"), col("lang")),
-        col("doc_id"), nShards = 8, portable = true)),
+        col("doc_id"), nShards = 8)),
 
     // Snapshot-level CDC: key-level diff of two publishes (added /
     // removed / changed + exactly WHICH columns changed) — how a
@@ -2312,7 +2311,7 @@ object Queries {
     "q114_weighted_sample" -> ((s, d) =>
       Sampling.weightedExactK(
           Tables.documents(s, d).select("doc_id", "lang", "n_chars"),
-          col("lang"), col("doc_id"), col("n_chars"), k = 15, portable = true)
+          col("lang"), col("doc_id"), col("n_chars"), k = 15)
         .select("doc_id", "lang", "n_chars", "rank")),
 
     // IVF-PQ: the coarse index gates WHICH codes score, PQ compresses
@@ -2352,8 +2351,7 @@ object Queries {
     "q131_curriculum" -> ((s, d) =>
       Sampling.curriculumManifest(
         Tables.documents(s, d).select("doc_id", "n_chars"),
-        col("doc_id"), col("n_chars"), nBuckets = 4, nShards = 4,
-        portable = true)),
+        col("doc_id"), col("n_chars"), nBuckets = 4, nShards = 4)),
 
     // PRODUCTION ANN composition (FAISS IVFPQ + refine): learned coarse
     // centroids gate the scan, PQ codebooks TRAINED per-subspace on the
@@ -2413,12 +2411,12 @@ object Queries {
     // composition (largest-remainder allocation of 300 rows; the de
     // target deliberately exceeds its population so the availability
     // cap fires — shortfall NOT redistributed, the asked-for mix is the
-    // contract). One bounded-heap agg, portable id-hash order
+    // contract). One bounded-heap agg, md5 id-hash order
     "q128_target_mix" -> ((s, d) =>
       Sampling.targetMix(Tables.documents(s, d).select("doc_id", "lang"),
         col("lang"), col("doc_id"),
         Seq(("en", 0.3), ("de", 0.4), ("es", 0.1), ("zh", 0.15), ("fr", 0.05)),
-        totalK = 300, portable = true)),
+        totalK = 300)),
 
     // Per-language EXACT length quantiles — all groups × quantiles
     // through ONE fused narrowing batch over synthesized per-group
@@ -2497,14 +2495,13 @@ object Queries {
       Quality.rrfFuse(Seq(bm25, cosR), topK = 15)
     }),
 
-    // Label-distribution balance of `source` across the portable
+    // Label-distribution balance of `source` across the md5-hashed
     // train/val/test splits — the eval-representativeness audit. One
     // (split, label) count shuffle; entropy/gini as decimal term sums
     "q123_class_balance" -> ((s, d) => {
       val docs = Sampling.assignSplit(
         Tables.documents(s, d).select(col("doc_id"), col("source")),
-        col("doc_id"), Seq(("train", 0.8), ("val", 0.1), ("test", 0.1)),
-        portable = true)
+        col("doc_id"), Seq(("train", 0.8), ("val", 0.1), ("test", 0.1)))
       Summaries.classBalance(docs, "split", "source")
     }),
 

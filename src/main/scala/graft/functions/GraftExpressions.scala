@@ -74,22 +74,9 @@ case class RhpBucketExpr(child: Expression, nPlanes: Int, seed: Int)
     copy(child = newChild)
 }
 
-/** 64-bit SimHash of a token array (xxhash64 token hashes, bit-majority). */
-case class SimHash64Expr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftFunctions.checkArrayInputs(prettyName, children.map(_.dataType), Seq(ArrayType(StringType)))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash64"
-  override protected def nullSafeEval(v: Any): Any =
-    VectorOps.simhash64(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => s"${ev.value} = graft.functions.VectorOps.simhash64($v);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Engine-portable SimHash: md5-derived token hashes (see
-  * [[VectorOps.simhashMd5]] for the bit layout and why).
+/** 64-bit SimHash of a token array: md5-derived token hashes,
+  * bit-majority vote (see [[VectorOps.simhashMd5]] for the bit layout and
+  * why).
   */
 case class SimHashMd5Expr(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
@@ -952,7 +939,6 @@ object GraftFunctions {
     "graft_vec_l2sq" -> (es => FloatVecL2Sq(es(0), es(1))),
     "graft_rhp_bucket" -> (es =>
       RhpBucketExpr(es(0), intLit(es(1), "nPlanes"), intLit(es(2), "seed"))),
-    "graft_simhash64" -> (es => SimHash64Expr(es(0))),
     "graft_simhash_md5" -> (es => SimHashMd5Expr(es(0))),
     "graft_ivf_nearest" -> (es =>
       IvfNearestExpr(es(0), decodeCents(stringLit(es(1), "centroids")))),

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.StringType
 
 /** Tight-loop kernels called from generated code — one static call per row.
   *
@@ -131,14 +129,11 @@ object VectorOps {
   }
 
   /** 64-bit SimHash over a token array using the first 8 bytes of each
-    * token's MD5 — the engine-portable twin of [[simhash64]]: any SQL
-    * engine with `md5()` reproduces the signature bit-for-bit (the DuckDB
-    * oracle does), where xxhash64 exists only inside Spark. Bit layout:
-    * token-hash bit b = bit (b mod 4) of hex digit (b div 4) of the md5
-    * hex string (digit 0 = leftmost = high nibble of byte 0). Vote rule is
-    * identical to [[simhash64]]: signature bit set when votes are strictly
-    * positive. Prefer xxhash64 when portability doesn't matter (~3× less
-    * per-token cost, no digest allocation).
+    * token's MD5: any SQL engine with `md5()` reproduces the signature
+    * bit-for-bit (the DuckDB oracle does). Bit layout: token-hash bit b =
+    * bit (b mod 4) of hex digit (b div 4) of the md5 hex string (digit 0
+    * = leftmost = high nibble of byte 0). Each non-NULL token votes ±1 per
+    * bit; a signature bit is set when its votes are strictly positive.
     */
   def simhashMd5(toks: ArrayData): Long = {
     val md = md5Local.get()
@@ -277,31 +272,5 @@ object VectorOps {
       s += 1
     }
     acc / 1e5
-  }
-
-  /** 64-bit SimHash over a token array: per-bit ±1 vote of xxhash64(token)
-    * (seed 42 — identical to the builtin `xxhash64`), bit set when votes
-    * are strictly positive.
-    */
-  def simhash64(toks: ArrayData): Long = {
-    val n = toks.numElements()
-    val votes = new Array[Int](64)
-    var i = 0
-    while (i < n) {
-      val t = toks.getUTF8String(i)
-      if (t != null) {
-        val h = XxHash64Function.hash(t, StringType, 42L)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-          b += 1
-        }
-      }
-      i += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) { if (votes(b) > 0) out |= (1L << b); b += 1 }
-    out
   }
 }

@@ -646,35 +646,16 @@ object NearDup {
       .select("id_a", "id_b", "est_jaccard")
   }
 
-  /** 64-bit SimHash over whitespace tokens: per-bit weighted vote of
-    * xxhash64(token). Near-dups have small hamming distance.
-    */
-  def simhash(text: Column): Column = {
-    val toks = split(lower(trim(text)), "\\s+")
-    val hashes = transform(toks, t => xxhash64(t))
-    val bits = (0 until 64).map { b =>
-      val votes = aggregate(hashes, lit(0L),
-        (acc, h) => acc + when(shiftright(h, b).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
-      when(votes > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
-
   /** Hamming distance between two signed-64 simhashes. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** [[simhash]] via the native codegen expression (one tight loop per row
-    * instead of a 64-aggregate Column tree; same bits — spec-checked).
+  /** 64-bit SimHash over lower/trimmed whitespace tokens: a per-bit vote
+    * over md5-derived token hashes (the native `graft_simhash_md5`
+    * kernel), so an external SQL engine (the DuckDB correctness oracle)
+    * reproduces the exact signature. Near-dups have small hamming
+    * distance. NULL text → NULL signature.
     */
-  def simhashFast(text: Column): Column =
-    call_function("graft_simhash64", split(lower(trim(text)), "\\s+"))
-
-  /** [[simhashFast]]'s engine-portable twin: md5-derived token hashes, so
-    * an external SQL engine (the DuckDB correctness oracle) can reproduce
-    * the exact signature. Same vote semantics and blocking behavior; use
-    * the xxhash64 form when portability doesn't matter (cheaper per token).
-    */
-  def simhashMd5Fast(text: Column): Column =
+  def simhash(text: Column): Column =
     call_function("graft_simhash_md5", split(lower(trim(text)), "\\s+"))
 
   /** SimHash near-dup pairs with hamming ≤ maxDist. Blocking: split the
@@ -712,28 +693,31 @@ object NearDup {
     * (id_a, id_b, hamming), the yardstick form.
     */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String, maxDist: Int,
-                   portable: Boolean = false,
-                   collapseExact: Boolean): DataFrame = {
+                   collapseExact: Boolean): DataFrame =
+    signatureMemberPairs(simhashMembers(docs, idCol, textCol), maxDist, collapseExact)
+
+  /** (id, sh): the [[simhash]] signature of every doc with a non-NULL
+    * text — the member table both [[simhashPairs]] and
+    * [[simhashMembership]] build on, so the two always agree. Each
+    * DISTINCT normalized text is hashed once, not once per copy: on a
+    * dup-heavy corpus the per-token digest work is the dominant cost and
+    * shrinks by the duplication factor; ids rejoin through an 8-byte
+    * text-hash key (lower/trim is idempotent, so simhash over the
+    * normalized text equals simhash over the raw text). A NULL text has
+    * no signature and is dropped — kept, its NULL signature would group
+    * every NULL-text doc into one fake exact-dup group in the collapsed
+    * output (the [[signaturePairs]] rule for NULL signatures).
+    */
+  private def simhashMembers(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
-    // beyond 16 blocks the per-block width drops under 4 bits (and hits 0
-    // at maxDist >= 62): bucket occupancy explodes and the candidate join
-    // degenerates toward all-pairs — use a different blocking scheme
-    // (multi-probe, signature concatenation) for large distances
-    val sigOf = if (portable) simhashMd5Fast(_) else simhashFast(_)
-    // hash each DISTINCT normalized text once, not once per copy: on a
-    // dup-heavy corpus the per-token digest work is the dominant cost and
-    // shrinks by the duplication factor; ids rejoin through an 8-byte
-    // text-hash key (lower/trim is idempotent, so sigOf over the
-    // normalized text equals sigOf over the raw text)
     val norm = docs.select(col(idCol).as("id"), lower(trim(col(textCol))).as("t"))
+      .filter(col("t").isNotNull)
     val textSigs = norm.select(xxhash64(col("t")).as("th"), col("t"))
       .dropDuplicates("th")
-      .select(col("th"), sigOf(col("t")).as("sh"))
-    val members = norm.select(col("id"), xxhash64(col("t")).as("th"))
-      .join(textSigs.select("th", "sh"), "th")
+      .select(col("th"), simhash(col("t")).as("sh"))
+    norm.select(col("id"), xxhash64(col("t")).as("th"))
+      .join(textSigs, "th")
       .select("id", "sh")
-
-    signatureMemberPairs(members, maxDist, collapseExact)
   }
 
   /** Near-dup pairs from an arbitrary 64-bit SIGNATURE column — the
@@ -829,18 +813,10 @@ object NearDup {
     * collapsed [[simhashPairs]] output (groups are keyed by signature,
     * not text: distinct texts that collide to one simhash merge here
     * exactly as their per-instance pairs would have met at hamming 0).
-    * Must be built with the SAME `portable` flag as the pair run.
+    * NULL-text docs have no signature and no membership row.
     */
-  def simhashMembership(docs: DataFrame, idCol: String, textCol: String,
-                        portable: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
-    val sigOf = if (portable) simhashMd5Fast(_) else simhashFast(_)
-    val norm = docs.select(col(idCol).as("id"), lower(trim(col(textCol))).as("t"))
-    val textSigs = norm.select(xxhash64(col("t")).as("th"), col("t"))
-      .dropDuplicates("th")
-      .select(col("th"), sigOf(col("t")).as("sh"))
-    val m = norm.select(col("id"), xxhash64(col("t")).as("th"))
-      .join(textSigs, Seq("th")).select(col("id"), col("sh"))
+  def simhashMembership(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val m = simhashMembers(docs, idCol, textCol)
     m.join(m.groupBy("sh").agg(min("id").as("rid")), Seq("sh"))
       .select(col("id"), col("rid"))
   }
@@ -850,9 +826,8 @@ object NearDup {
     * to every (instance_a, instance_b) combo (hamming is symmetric — no
     * reorientation needed), self rows (`id_a == id_b`) to every unordered
     * intra-group pair at hamming 0. `members` is [[simhashMembership]] of
-    * the SAME frame with the SAME `portable` flag. Join-shaped: quadratic
-    * only in the true duplicate multiplicities the caller asked to
-    * re-materialize.
+    * the SAME frame. Join-shaped: quadratic only in the true duplicate
+    * multiplicities the caller asked to re-materialize.
     */
   def expandSimhashPairs(collapsed: DataFrame, members: DataFrame): DataFrame = {
     val ma = members.select(col("rid").as("id_a"), col("id").as("__ia"))

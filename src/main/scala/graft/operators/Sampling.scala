@@ -171,7 +171,7 @@ object Sampling {
     */
   def upsampleByFactor(df: DataFrame, stratumCol: Column, idCol: Column,
                        factors: Map[String, Double],
-                       seed: Long = 42L, portable: Boolean = false): DataFrame = {
+                       seed: Long = 42L): DataFrame = {
     require(factors.values.forall(f => f >= 0 && f <= 1000),
       "factors must be in [0, 1000]")
     val f = coalesce(element_at(typedLit(factors), stratumCol.cast("string")), lit(1.0))
@@ -180,7 +180,7 @@ object Sampling {
     // coalesce: a NULL id hashes to NULL → NULL extra would null __n and
     // silently DROP the row; a null-id row keeps its whole repeats
     val extra = coalesce(
-      (uniform01(idCol, seed, portable) < frac).cast("int"), lit(0))
+      (uniform01(idCol, seed) < frac).cast("int"), lit(0))
     df.withColumn("__n", whole + extra)
       .filter(col("__n") > 0)
       .withColumn("repeat", explode(sequence(lit(0), col("__n") - 1)))
@@ -190,24 +190,14 @@ object Sampling {
   /** Uniform value in [0, 1) as a pure function of (id, seed) — the
     * deterministic randomness every sampling decision here builds on:
     * stable across retries, repartitions, and engines (unlike seeded-RNG
-    * `sample`, whose draw depends on row order). `portable = true`
-    * derives it from the first 8 hex digits of md5 (reproducible in ANY
-    * SQL engine, the oracle's form); the default xxhash64 is the faster
-    * production path (xxhash64 is fixed by spec, 52 mantissa-safe bits).
+    * `sample`, whose draw depends on row order). The draw is the first
+    * 8 hex digits of md5(id || ':' || seed) over 2^32, so any SQL engine
+    * reproduces it (the oracles replay exactly this expression). A NULL
+    * id makes the md5 input NULL, so its draw is NULL.
     */
-  def uniform01(id: Column, seed: Long = 42L, portable: Boolean = false): Column =
-    if (portable)
-      conv(substring(md5(concat(id.cast("string"), lit(s":$seed"))), 1, 8), 16, 10)
-        .cast("double") / lit(4294967296.0)
-    else
-      // xxhash64 SKIPS null inputs (returns the seed's own hash), so an
-      // unguarded fast path would map every NULL id to one non-NULL
-      // constant — silently routing all failed-id rows into whichever
-      // split/fraction that constant lands in. Both paths must agree:
-      // NULL id → NULL draw.
-      when(id.isNull, lit(null).cast("double")).otherwise(
-        pmod(xxhash64(id, lit(seed)), lit(1L << 52)).cast("double") /
-          lit((1L << 52).toDouble))
+  def uniform01(id: Column, seed: Long = 42L): Column =
+    conv(substring(md5(concat(id.cast("string"), lit(s":$seed"))), 1, 8), 16, 10)
+      .cast("double") / lit(4294967296.0)
 
   /** Deterministic per-stratum fraction sampling WITHOUT a shuffle: keep a
     * row iff a uniform hash of its id lands under the stratum's fraction.
@@ -215,7 +205,7 @@ object Sampling {
     */
   def stratifiedFractions(df: DataFrame, stratumCol: Column, idCol: Column,
                           fractions: Map[String, Double],
-                          seed: Long = 42L, portable: Boolean = false): DataFrame = {
+                          seed: Long = 42L): DataFrame = {
     require(fractions.values.forall(f => f >= 0 && f <= 1),
       "fractions must be in [0, 1]")
     // stratum keys the string-typed fractions map, so non-string strata
@@ -223,7 +213,7 @@ object Sampling {
     // instead of failing the element_at key-type resolution
     val frac = coalesce(
       element_at(typedLit(fractions), stratumCol.cast("string")), lit(0.0))
-    df.filter(uniform01(idCol, seed, portable) < frac)
+    df.filter(uniform01(idCol, seed) < frac)
   }
 
   /** Deterministic EXACT-k sample per stratum — the distributed reservoir:
@@ -246,8 +236,7 @@ object Sampling {
     * k×rowWidth per stratum per task is the only memory bound.
     */
   def stratifiedExactK(df: DataFrame, stratumCol: Column, idCol: Column,
-                       k: Int, seed: Long = 42L,
-                       portable: Boolean = false): DataFrame = {
+                       k: Int, seed: Long = 42L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // posexplode emits (pos, col); an input column with either name would
     // collide in the re-select — reject loudly like the sibling operators
@@ -256,7 +245,7 @@ object Sampling {
         s"stratifiedExactK working/output column '$reserved' already exists on the input")
     }
     graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
-    val u = uniform01(idCol, seed, portable)
+    val u = uniform01(idCol, seed)
     val payload = struct(df.columns.map(col).toIndexedSeq: _*)
     df.filter(idCol.isNotNull)
       .groupBy(stratumCol.as("__stratum"))
@@ -284,15 +273,14 @@ object Sampling {
     * that reducer and silently keep k junk rows.
     */
   def perDomainCap(df: DataFrame, domainCol: Column, idCol: Column, k: Int,
-                   priority: Option[Column] = None, seed: Long = 42L,
-                   portable: Boolean = false): DataFrame = {
+                   priority: Option[Column] = None, seed: Long = 42L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     Seq("pos", "col", "rank").foreach { reserved =>
       require(!df.columns.exists(_.equalsIgnoreCase(reserved)),
         s"perDomainCap working/output column '$reserved' already exists on the input")
     }
     graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
-    val key = priority.getOrElse(-uniform01(idCol, seed, portable))
+    val key = priority.getOrElse(-uniform01(idCol, seed))
     val payload = struct(df.columns.map(col).toIndexedSeq: _*)
     df.filter(idCol.isNotNull && domainCol.isNotNull &&
         (if (priority.isEmpty) lit(true) else key.isNotNull))
@@ -323,8 +311,7 @@ object Sampling {
     * window sort, no shuffle of the losing rows.
     */
   def weightedExactK(df: DataFrame, stratumCol: Column, idCol: Column,
-                     weightCol: Column, k: Int, seed: Long = 42L,
-                     portable: Boolean = false): DataFrame = {
+                     weightCol: Column, k: Int, seed: Long = 42L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     Seq("pos", "col", "rank").foreach { reserved =>
       require(!df.columns.exists(_.equalsIgnoreCase(reserved)),
@@ -332,7 +319,7 @@ object Sampling {
     }
     graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
     val w = weightCol.cast("double")
-    val key = round(pow(uniform01(idCol, seed, portable), lit(1.0) / w), 9)
+    val key = round(pow(uniform01(idCol, seed), lit(1.0) / w), 9)
     val payload = struct(df.columns.map(col).toIndexedSeq: _*)
     df.filter(idCol.isNotNull && w.isNotNull && w > 0)
       .groupBy(stratumCol.as("__stratum"))
@@ -396,11 +383,10 @@ object Sampling {
     */
   def assignSplit(df: DataFrame, id: Column, splits: Seq[(String, Double)],
                   outCol: String = "split", seed: Long = 42L,
-                  portable: Boolean = false,
                   requireNonNullIds: Boolean = false): DataFrame = {
     require(splits.nonEmpty && splits.forall(_._2 >= 0), "weights must be >= 0")
     require(math.abs(splits.map(_._2).sum - 1.0) < 1e-9, "weights must sum to 1")
-    val u = uniform01(id, seed, portable)
+    val u = uniform01(id, seed)
     val cums = splits.map(_._2).scanLeft(0.0)(_ + _).tail
     val label = splits.init.zip(cums.init)
       .foldLeft(Option.empty[Column]) { case (acc, ((name, _), cum)) =>
@@ -432,7 +418,7 @@ object Sampling {
     * output reuses it.
     */
   def shardManifest(df: DataFrame, idCol: Column, nShards: Int,
-                    seed: Long = 42L, portable: Boolean = false,
+                    seed: Long = 42L,
                     requireNonNullIds: Boolean = false): DataFrame = {
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
     import org.apache.spark.sql.expressions.Window
@@ -445,8 +431,8 @@ object Sampling {
         when(idCol.isNotNull, idCol).otherwise(raise_error(
           lit("shardManifest: NULL id (requireNonNullIds = true)")))
       else idCol
-    val shard = floor(uniform01(id, seed, portable) * nShards).cast("int")
-    val orderKey = uniform01(id, seed + 1, portable)
+    val shard = floor(uniform01(id, seed) * nShards).cast("int")
+    val orderKey = uniform01(id, seed + 1)
     val w = Window.partitionBy(col("shard")).orderBy(col("__ord").asc, idCol.asc)
     df.withColumn("shard", shard)
       .withColumn("__ord", orderKey)
@@ -462,7 +448,7 @@ object Sampling {
     * j/nBuckets quantiles, 5-dp-rounded; bucket = #cuts the value
     * EXCEEDS, so ties at a cut land low and every engine agrees);
     * within a bucket, rows get the [[shardManifest]] treatment — shard
-    * + position from two independent portable id-hash uniforms. Global
+    * + position from two independent [[uniform01]] id-hash draws. Global
     * order = (bucket, shard, pos) lexicographic. Rows with NULL id or
     * NULL/NaN/±Inf difficulty are excluded (they cannot be placed).
     *
@@ -474,7 +460,6 @@ object Sampling {
     */
   def curriculumManifest(df: DataFrame, idCol: Column, difficulty: Column,
                          nBuckets: Int, nShards: Int, seed: Long = 42L,
-                         portable: Boolean = false,
                          approx: Boolean = false,
                          accuracy: Int = 10000): DataFrame = {
     require(nBuckets >= 2, s"nBuckets must be >= 2, got $nBuckets")
@@ -510,8 +495,8 @@ object Sampling {
     val bucket = cuts.foldLeft(lit(0)) { (acc, c) =>
       acc + when(d > c, 1).otherwise(0)
     }.cast("int")
-    val shard = floor(uniform01(idCol, seed, portable) * nShards).cast("int")
-    val orderKey = uniform01(idCol, seed + 1, portable)
+    val shard = floor(uniform01(idCol, seed) * nShards).cast("int")
+    val orderKey = uniform01(idCol, seed + 1)
     val w = Window.partitionBy(col("bucket"), col("shard"))
       .orderBy(col("__ord").asc, idCol.asc)
     placed.withColumn("bucket", bucket)
@@ -532,7 +517,7 @@ object Sampling {
     * n_s)); the shortfall is NOT redistributed — a redistribution loop
     * would silently change the mix the caller asked for, the exact thing
     * this operator exists to prevent. Rows in strata absent from
-    * `targets` are excluded. Selection within a stratum is the portable
+    * `targets` are excluded. Selection within a stratum is the [[uniform01]]
     * id-hash order (smallest uniform first, ties by id), so the sample
     * is a pure function of (id, targets, totalK) — reproducible across
     * engines, reruns, and layouts.
@@ -549,7 +534,7 @@ object Sampling {
     */
   def targetMix(df: DataFrame, stratumCol: Column, idCol: Column,
                 targets: Seq[(String, Double)], totalK: Int,
-                seed: Long = 42L, portable: Boolean = false): DataFrame = {
+                seed: Long = 42L): DataFrame = {
     require(targets.nonEmpty, "targetMix needs at least one target stratum")
     require(targets.map(_._1).distinct.size == targets.size, "duplicate strata")
     require(targets.forall(_._2 >= 0), "target proportions must be >= 0")
@@ -582,7 +567,7 @@ object Sampling {
         df.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         df.withColumn("rank", lit(1L)).schema)
     val maxK = live.map(ks).max.toInt
-    val u = uniform01(idCol, seed, portable)
+    val u = uniform01(idCol, seed)
     val payload = struct(df.columns.map(col).toIndexedSeq: _*)
     val ksLit = typedlit(live.map(s => s -> ks(s)).toMap)
     inScope.filter(sCol.isInCollection(live))
@@ -697,10 +682,10 @@ object Sampling {
     val docw = toks.join(broadcast(ratio), Seq("__b"))
       .groupBy((col(idCol) +: carry.map(col)).toIndexedSeq: _*)
       .agg(count(lit(1)).as("n_tok"), sum(col("__lrm")).as("lw_micros"))
-    // Gumbel key: u in (0,1) from the portable id-hash (+0.5 keeps the
-    // double log-log finite at the integer-grid edges)
-    val u = (conv(substring(md5(concat(col(idCol).cast("string"),
-        lit(s":$seed"))), 1, 8), 16, 10).cast("double") + 0.5) / 4294967296.0
+    // Gumbel key: u in (0,1) from the id-hash uniform shifted by half a
+    // grid step (keeps the double log-log finite at the grid edges; both
+    // steps are exact in binary, so this is (hex8 + 0.5) / 2^32)
+    val u = uniform01(col(idCol), seed) + lit(0.5 / 4294967296.0)
     val keyed = docw.withColumn("key_micros",
       col("lw_micros") + round(-log(-log(u)) * micro, 0).cast("long"))
     // rank over exactly k rows: the frame is bounded by limit(k), so

@@ -7,11 +7,13 @@ import graft.operators.Sampling
 
 /** Continuous weighted reservoir — the streaming twin of
   * [[graft.operators.Sampling.weightedExactK]] (q114): each stratum keeps
-  * the k rows with the LARGEST A-ES keys u(id)^(1/w) seen so far, so at
-  * any instant the reservoir is exactly what the batch operator would
-  * select over the stream's prefix (A-ES selection is a max-k over a
-  * pure per-row key — associative and replay-safe, so increments merge
-  * losslessly; spec-pinned parity per increment).
+  * the k rows with the LARGEST A-ES keys u(id)^(1/w) seen so far (u is
+  * [[graft.operators.Sampling.uniform01]], the md5 draw the batch
+  * operator and its oracle use), so at any instant the reservoir is
+  * exactly what the batch operator would select over the stream's
+  * prefix (A-ES selection is a max-k over a pure per-row key —
+  * associative and replay-safe, so increments merge losslessly;
+  * spec-pinned parity per increment).
   *
   * State: k (key, id, weight) entries per stratum — independent of event
   * volume (the [[StreamDrift]] bounded-state discipline). Each
@@ -33,13 +35,12 @@ object StreamReservoir {
                                 weight: Double, key: Double, rank: Long)
 
   def weightedTopK(stream: DataFrame, stratumCol: String, idCol: String,
-                   weightCol: String, k: Int, seed: Long = 42L,
-                   portable: Boolean = true): Dataset[ReservoirRow] = {
+                   weightCol: String, k: Int, seed: Long = 42L): Dataset[ReservoirRow] = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = stream.sparkSession
     import spark.implicits._
     val w = col(weightCol).cast("double")
-    val key = round(pow(Sampling.uniform01(col(idCol), seed, portable),
+    val key = round(pow(Sampling.uniform01(col(idCol), seed),
       lit(1.0) / w), 9)
     val keyed = stream
       .filter(col(idCol).isNotNull && w.isNotNull && w > 0)

@@ -165,7 +165,7 @@ class DatasetCardSketchSpec extends SparkSpec {
     // bucket sizes within tolerance of equi-depth
     val man = Sampling.curriculumManifest(
       docs.select("doc_id", "n_chars"), col("doc_id"), col("n_chars"),
-      nBuckets = 4, nShards = 4, portable = true, approx = true)
+      nBuckets = 4, nShards = 4, approx = true)
     assert(man.count() === docs.count())
     val byBucket = man.groupBy("bucket").agg(count(lit(1)).as("c"),
         min("n_chars").as("mn"), max("n_chars").as("mx"))

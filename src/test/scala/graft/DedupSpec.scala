@@ -62,6 +62,16 @@ class DedupSpec extends SparkSpec {
       .agg(min_by(payload, struct(col("ord"), col("v1"))).as("r"))
       .select("r.*").collect().map(_.toString).sorted
     assert(oursMin.sameElements(builtinMin))
+    // why graft_max_by exists: the builtin's struct-field buffer cannot
+    // hash-aggregate, so it plans a SortAggregate. When a Spark upgrade
+    // fails this assert, the builtin hash-aggregates and HashExtremumBy
+    // can be deleted in its favor.
+    def plan(agg: org.apache.spark.sql.Column): String = df.groupBy("k").agg(agg.as("r"))
+      .queryExecution.executedPlan.toString
+    assert(plan(max_by(payload, struct(col("ord"), col("v1")))).contains("SortAggregate"))
+    val oursPlan = plan(call_function("graft_max_by", payload, struct(col("ord"), col("v1"))))
+    assert(oursPlan.contains("ObjectHashAggregate") && !oursPlan.contains("SortAggregate"),
+      oursPlan)
   }
   import spark.implicits._
 

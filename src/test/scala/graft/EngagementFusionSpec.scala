@@ -112,11 +112,11 @@ class EngagementFusionSpec extends SparkSpec {
     import graft.operators.Sampling
     val df = (0 until 200).map(i => (i.toLong, s"s${i % 4}")).toDF("id", "g")
     val sel = Sampling.targetMix(df, col("g"), col("id"),
-      Seq(("s0", 0.6), ("s1", 0.4)), totalK = 20, portable = true)
+      Seq(("s0", 0.6), ("s1", 0.4)), totalK = 20)
     val a = sel.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(!a.exists(_._2 == "s2") && !a.exists(_._2 == "s3"))
     val b = Sampling.targetMix(df.repartition(7), col("g"), col("id"),
-        Seq(("s0", 0.6), ("s1", 0.4)), totalK = 20, portable = true)
+        Seq(("s0", 0.6), ("s1", 0.4)), totalK = 20)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(a === b)
     val ranks = a.groupBy(_._2).view.mapValues(_.map(_._3).toSeq.sorted).toMap
@@ -129,7 +129,7 @@ class EngagementFusionSpec extends SparkSpec {
     import graft.operators.Sampling
     val df = (1 to 100).map(i => (i.toLong, i.toDouble)).toDF("id", "diff")
     val out = Sampling.curriculumManifest(df, col("id"), col("diff"),
-        nBuckets = 4, nShards = 2, portable = true)
+        nBuckets = 4, nShards = 2)
       .select("id", "diff", "bucket", "shard", "pos")
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2),
         r.getInt(3), r.getInt(4)))
@@ -154,7 +154,7 @@ class EngagementFusionSpec extends SparkSpec {
       .toDF("id", "diff")
     def run(d: org.apache.spark.sql.DataFrame) =
       Sampling.curriculumManifest(d, col("id"), col("diff"),
-          nBuckets = 2, nShards = 2, portable = true)
+          nBuckets = 2, nShards = 2)
         .select("id", "bucket", "shard", "pos")
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSet
     val a = run(df)
@@ -169,7 +169,7 @@ class EngagementFusionSpec extends SparkSpec {
     val withInf = Seq((1L, 1.0), (2L, 2.0), (3L, Double.PositiveInfinity),
       (4L, 4.0), (5L, Double.NegativeInfinity)).toDF("id", "diff")
     val out = Sampling.curriculumManifest(withInf, col("id"), col("diff"),
-      nBuckets = 2, nShards = 1, portable = true)
+      nBuckets = 2, nShards = 1)
     assert(out.select("id").collect().map(_.getLong(0)).toSet === Set(1L, 2L, 4L))
     val clash = Seq((1L, 1.0, 9)).toDF("id", "diff", "bucket")
     val e = intercept[IllegalArgumentException] {

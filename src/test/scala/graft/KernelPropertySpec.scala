@@ -253,10 +253,8 @@ class KernelPropertySpec extends SparkSpec {
       val toks = Seq.fill(3 + rnd.nextInt(20))(words(rnd.nextInt(words.size)))
       (i, toks.mkString(" "), rnd.shuffle(toks).mkString(" "))
     }.toDF("id", "text", "shuffled")
-    val bad = docs.select(
-        (NearDup.simhashFast(col("text")) =!= NearDup.simhashFast(col("shuffled"))).as("x64"),
-        (NearDup.simhashMd5Fast(col("text")) =!= NearDup.simhashMd5Fast(col("shuffled"))).as("md5"))
-      .filter(col("x64") || col("md5")).count()
+    val bad = docs.filter(NearDup.simhash(col("text")) =!= NearDup.simhash(col("shuffled")))
+      .count()
     assert(bad == 0)
   }
 
@@ -437,7 +435,7 @@ class KernelPropertySpec extends SparkSpec {
     }
   }
 
-  test("stratifiedExactK (portable) equals the md5 hash-order model") {
+  test("stratifiedExactK equals the md5 hash-order model") {
     import graft.operators.Sampling
     def u(id: Long, seed: Long): Double = {
       val md = java.security.MessageDigest.getInstance("MD5")
@@ -455,7 +453,7 @@ class KernelPropertySpec extends SparkSpec {
         (i.toLong, stratum)
       }
       val got = Sampling.stratifiedExactK(rows.toDF("id", "s"),
-          col("s"), col("id"), k, seed, portable = true)
+          col("s"), col("id"), k, seed)
         .select("s", "id", "rank").as[(Option[String], Long, Long)].collect()
         .groupBy(_._1).map { case (s, g) => s -> g.sortBy(_._3).map(_._2).toSeq }
       // model: per stratum (NULL strata sample too), the k smallest hash
@@ -465,6 +463,24 @@ class KernelPropertySpec extends SparkSpec {
       }
       assert(got === expected, s"trial $trial k=$k seed=$seed")
     }
+    // the one draw every sampler builds on, called with its defaults, IS
+    // the model's scalar — positive, negative and NULL ids alike — and
+    // assignSplit's defaults route by it (NULL falls to the last split)
+    val ids: Seq[Option[Long]] = Seq(Some(0L), Some(7L), Some(123456789L),
+      Some(-1L), Some(-98765L), Some(Long.MinValue), None) ++
+      (1 to 60).map(_ => Some(rnd.nextLong()))
+    val idDf = ids.toDF("id")
+    val draws = idDf.select(col("id"), Sampling.uniform01(col("id")).as("u"))
+      .as[(Option[Long], Option[Double])].collect().toMap
+    assert(draws === ids.map(id => id -> id.map(u(_, 42L))).toMap)
+    val splits = Seq(("train", 0.8), ("val", 0.1), ("test", 0.1))
+    val cums = splits.map(_._2).scanLeft(0.0)(_ + _).tail
+    def label(id: Option[Long]): String = id.map(u(_, 42L))
+      .flatMap(x => splits.zip(cums).init.collectFirst { case ((n, _), c) if x < c => n })
+      .getOrElse(splits.last._1)
+    val split = Sampling.assignSplit(idDf, col("id"), splits)
+      .as[(Option[Long], String)].collect().toMap
+    assert(split === ids.map(id => id -> label(id)).toMap)
   }
 
   test("funnelSteps equals the ordered min-timestamp model on random event streams") {

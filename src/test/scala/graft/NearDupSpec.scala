@@ -280,9 +280,9 @@ class NearDupSpec extends SparkSpec {
       (4L, "one two three four five six seven eight")
     ).toDF("doc_id", "text")
     val out = NearDup.simhashPairs(docs, "doc_id", "text", maxDist = 10,
-        portable = true, collapseExact = false)
+        collapseExact = false)
       .as[(Long, Long, Int)].collect().toSet
-    val sigs = docs.select(col("doc_id"), NearDup.simhashMd5Fast(col("text")).as("sh"))
+    val sigs = docs.select(col("doc_id"), NearDup.simhash(col("text")).as("sh"))
       .as[(Long, Long)].collect().toMap
     val brute = (for {
       a <- sigs.keys; b <- sigs.keys if a < b
@@ -297,8 +297,11 @@ class NearDupSpec extends SparkSpec {
     // replica-heavy corpus exercising every edge class: a 3-copy group
     // near a 2-copy group (inter rep pair must carry both multiplicities
     // and expand to 6 cross pairs), a 2-copy group with no neighbor
-    // (self row only), an orphan, and a singleton far from everything
-    val docs = Seq(
+    // (self row only), an orphan, a singleton far from everything, and
+    // three NULL texts whose ids undercut every rid (no signature, so no
+    // group: never a fake 3-copy exact-dup self row)
+    val nullIds = Set(0L, 6L, 10L)
+    val docs = (Seq(
       (5L, "alpha beta gamma delta epsilon zeta eta theta"),
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),  // dup of 5 (rid=1)
       (9L, "alpha beta gamma delta epsilon zeta eta theta"),  // dup of 5
@@ -307,19 +310,21 @@ class NearDupSpec extends SparkSpec {
       (3L, "one two three four five six seven eight"),
       (8L, "one two three four five six seven eight"),        // dup of 3, no neighbor
       (4L, "completely unrelated words describing other things entirely")
-    ).toDF("doc_id", "text")
+    ).map { case (id, t) => (id, Option(t)) } ++ nullIds.toSeq.map((_, Option.empty[String])))
+      .toDF("doc_id", "text")
     val collapsed = NearDup.simhashPairs(docs, "doc_id", "text", maxDist = 14,
-      portable = true, collapseExact = true)
+      collapseExact = true)
     val perInstance = NearDup.simhashPairs(docs, "doc_id", "text", maxDist = 14,
-        portable = true, collapseExact = false)
+        collapseExact = false)
       .as[(Long, Long, Int)].collect().toSet
-    val members = NearDup.simhashMembership(docs, "doc_id", "text", portable = true)
+    val members = NearDup.simhashMembership(docs, "doc_id", "text")
     val expanded = NearDup.expandSimhashPairs(collapsed, members)
       .as[(Long, Long, Int)].collect().toSet
     assert(expanded === perInstance)
     // shape: the collapsed stream is LINEAR — 3 self rows (the three
     // dup groups) + inter rep pairs; never the C(d,2)/d·e expansion
     val c = collapsed.as[(Long, Long, Int, Long, Long)].collect().toSet
+    assert(c.forall(p => !nullIds(p._1) && !nullIds(p._2)), c.toString)
     assert(c.contains((1L, 1L, 0, 3L, 3L)))  // 3-copy group self row
     assert(c.contains((2L, 2L, 0, 2L, 2L)))
     assert(c.contains((3L, 3L, 0, 2L, 2L)))
@@ -332,7 +337,7 @@ class NearDupSpec extends SparkSpec {
 
   test("split-leakage over rep pairs equals the per-instance audit (dup-heavy)") {
     import graft.operators.Sampling
-    // ids chosen so the portable split hash scatters group members across
+    // ids chosen so the md5 split hash scatters group members across
     // splits; two near-dup groups + an exact-dup group with no neighbor
     val texts = Map(
       "a" -> "the cat sat on the red mat today and then it slept",
@@ -343,7 +348,7 @@ class NearDupSpec extends SparkSpec {
     }.toDF("doc_id", "text")
     val sp = Seq(("train", 0.6), ("val", 0.2), ("test", 0.2))
     def splitOf(df: org.apache.spark.sql.DataFrame, idc: String, out: String) =
-      Sampling.assignSplit(df, col(idc), sp, outCol = out, portable = true)
+      Sampling.assignSplit(df, col(idc), sp, outCol = out)
     // per-instance audit: the old q108 formulation
     val perInstance = splitOf(splitOf(
         NearDup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.2,

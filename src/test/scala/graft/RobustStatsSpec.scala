@@ -374,7 +374,7 @@ class RobustStatsSpec extends SparkSpec {
 
   test("shardManifest: dense 1..n positions per shard, stable under repartition") {
     val df = (1L to 500L).toDF("id")
-    val m = Sampling.shardManifest(df, col("id"), nShards = 8, portable = true)
+    val m = Sampling.shardManifest(df, col("id"), nShards = 8)
     val byShard = m.groupBy("shard")
       .agg(count(lit(1)).as("n"), min("pos").as("lo"), max("pos").as("hi"))
       .collect()
@@ -386,7 +386,7 @@ class RobustStatsSpec extends SparkSpec {
     }
     // pure function of id: physical layout must not change the manifest
     val a = m.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sortBy(_._1)
-    val b = Sampling.shardManifest(df.repartition(13), col("id"), 8, portable = true)
+    val b = Sampling.shardManifest(df.repartition(13), col("id"), 8)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sortBy(_._1)
     assert(a === b)
   }
@@ -401,7 +401,7 @@ class RobustStatsSpec extends SparkSpec {
     val df = (1L to 2000L).map(i => (i, if (i % 2 == 0) 9.0 else 1.0))
       .toDF("id", "w").withColumn("g", lit("all"))
     val kept = Sampling.weightedExactK(df, col("g"), col("id"), col("w"),
-      k = 500, portable = true).collect()
+      k = 500).collect()
     assert(kept.length === 500)
     val evens = kept.count(_.getLong(0) % 2 == 0)
     assert(evens > 350 && evens < 500, s"even share $evens/500")
@@ -416,7 +416,7 @@ class RobustStatsSpec extends SparkSpec {
       (Some(5L), Some(2.0))
     ).toDF("id", "w").withColumn("g", lit("all"))
     val kept = Sampling.weightedExactK(df, col("g"), col("id"), col("w"),
-      k = 10, portable = true).collect().map(_.getLong(0)).sorted
+      k = 10).collect().map(_.getLong(0)).sorted
     assert(kept.toSeq === Seq(1L, 5L)) // only the drawable rows
   }
 
@@ -424,8 +424,7 @@ class RobustStatsSpec extends SparkSpec {
     val df = (1L to 300L).map(i => (i, 1.0 + (i % 7))).toDF("id", "w")
       .withColumn("g", pmod(col("id"), lit(3)).cast("string"))
     def run(d: org.apache.spark.sql.DataFrame) =
-      Sampling.weightedExactK(d, col("g"), col("id"), col("w"), k = 20,
-        portable = true).collect()
+      Sampling.weightedExactK(d, col("g"), col("id"), col("w"), k = 20).collect()
         .map(r => (r.getString(2), r.getLong(0), r.getAs[Long]("rank")))
         .sortBy(identity)
     assert(run(df).toSeq === run(df.repartition(17)).toSeq)
@@ -436,11 +435,11 @@ class RobustStatsSpec extends SparkSpec {
     // their relative pos is nondeterministic, which a replay-stable
     // manifest must not silently ship
     val df = Seq(Some(1L), Some(2L), None).toDF("id")
-    val ok = Sampling.shardManifest(df, col("id"), 4, portable = true)
+    val ok = Sampling.shardManifest(df, col("id"), 4)
     assert(ok.count() === 3) // default: NULLs pass through (documented)
     assert(ok.filter(col("id").isNull).head().isNullAt(1)) // NULL shard
     val e = intercept[Throwable] {
-      Sampling.shardManifest(df, col("id"), 4, portable = true,
+      Sampling.shardManifest(df, col("id"), 4,
         requireNonNullIds = true).collect()
     }
     def msgs(t: Throwable): String =
@@ -454,7 +453,7 @@ class RobustStatsSpec extends SparkSpec {
     // monotone in id (a correlated hash would feed the tokenizer in
     // near-id order — the bias the shuffle exists to kill)
     val df = (1L to 2000L).toDF("id")
-    val m = Sampling.shardManifest(df, col("id"), nShards = 4, portable = true)
+    val m = Sampling.shardManifest(df, col("id"), nShards = 4)
       .filter(col("shard") === 0).orderBy("pos")
       .collect().map(_.getLong(0))
     val monotonePairs = m.sliding(2).count { case Array(x, y) => y > x; case _ => false }

@@ -240,7 +240,7 @@ class TextAnalysisSpec extends SparkSpec {
     val big = spark.range(0, 5000).toDF("id")
     val splits = Seq(("train", 0.8), ("val", 0.1), ("test", 0.1))
     def labels(df: org.apache.spark.sql.DataFrame) =
-      Sampling.assignSplit(df, col("id"), splits, portable = true)
+      Sampling.assignSplit(df, col("id"), splits)
         .select("id", "split").as[(Long, String)].collect().toMap
     val a = labels(small); val b = labels(big)
     // growing the corpus never reassigns an existing id
@@ -396,38 +396,33 @@ class TextAnalysisSpec extends SparkSpec {
     assert(a === b)
   }
 
-  test("uniform01 portable and fast paths agree on NULL-id routing") {
+  test("uniform01 routes NULL ids to a NULL draw in every sampler") {
     import graft.operators.Sampling
     val splits = Seq(("train", 0.8), ("test", 0.1), ("eval", 0.1))
     val df = spark.range(0, 200).toDF("id")
       .withColumn("id",
         when(col("id") % 7 === 0, lit(null).cast("long")).otherwise(col("id")))
       .withColumn("stratum", when(col("id") % 2 === 0, "a").otherwise("b"))
-    // NULL id → NULL draw on BOTH paths (xxhash64 would otherwise hash the
-    // missing input to the seed's own constant)
-    for (portable <- Seq(true, false)) {
-      val drawn = df.select(col("id"),
-        Sampling.uniform01(col("id"), 42L, portable).as("u")).collect()
-      drawn.foreach { r =>
-        assert(r.isNullAt(0) === r.isNullAt(1),
-          s"portable=$portable: null-id/null-draw must pair, got $r")
-      }
-      // assignSplit: every NULL id lands in the LAST split
-      val sp = Sampling.assignSplit(df, col("id"), splits, portable = portable)
-        .filter(col("id").isNull).select("split").distinct().collect()
-      assert(sp.map(_.getString(0)).toSeq === Seq("eval"), s"portable=$portable")
-      // stratifiedFractions: NULL-id rows are excluded, not block-kept
-      val kept = Sampling.stratifiedFractions(df, col("stratum"), col("id"),
-        Map("a" -> 1.0, "b" -> 1.0), portable = portable)
-        .filter(col("id").isNull).count()
-      assert(kept === 0L, s"portable=$portable")
-      // upsampleByFactor: NULL-id rows keep their whole repeats (factor 1.5
-      // → exactly one copy, never the fractional extra)
-      val ups = Sampling.upsampleByFactor(df, col("stratum"), col("id"),
-        Map("a" -> 1.5, "b" -> 1.5), portable = portable)
-        .filter(col("id").isNull).groupBy().count().collect()
-      assert(ups.head.getLong(0) === df.filter(col("id").isNull).count(),
-        s"portable=$portable")
+    // NULL id → NULL draw (never one shared constant that would route all
+    // failed-id rows into whichever split/fraction it lands in)
+    val drawn = df.select(col("id"), Sampling.uniform01(col("id")).as("u")).collect()
+    drawn.foreach { r =>
+      assert(r.isNullAt(0) === r.isNullAt(1), s"null-id/null-draw must pair, got $r")
     }
+    // assignSplit: every NULL id lands in the LAST split
+    val sp = Sampling.assignSplit(df, col("id"), splits)
+      .filter(col("id").isNull).select("split").distinct().collect()
+    assert(sp.map(_.getString(0)).toSeq === Seq("eval"))
+    // stratifiedFractions: NULL-id rows are excluded, not block-kept
+    val kept = Sampling.stratifiedFractions(df, col("stratum"), col("id"),
+      Map("a" -> 1.0, "b" -> 1.0))
+      .filter(col("id").isNull).count()
+    assert(kept === 0L)
+    // upsampleByFactor: NULL-id rows keep their whole repeats (factor 1.5
+    // → exactly one copy, never the fractional extra)
+    val ups = Sampling.upsampleByFactor(df, col("stratum"), col("id"),
+      Map("a" -> 1.5, "b" -> 1.5))
+      .filter(col("id").isNull).groupBy().count().collect()
+    assert(ups.head.getLong(0) === df.filter(col("id").isNull).count())
   }
 }

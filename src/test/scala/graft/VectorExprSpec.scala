@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.{GraftFunctions, Similarity}
-import graft.operators.NearDup
 
 /** The native codegen expressions must agree bit-for-bit with the
   * Column-combinator reference implementations they replace.
@@ -48,21 +47,6 @@ class VectorExprSpec extends SparkSpec {
       ).filter(col("ref") =!= col("fast")).count()
       assert(bad === 0, s"nPlanes=$nPlanes seed=$seed")
     }
-  }
-
-  test("simhashFast matches combinator simhash, incl. xxhash64 seed") {
-    GraftFunctions.ensureRegistered(spark)
-    val docs = Seq(
-      "the quick brown fox jumps over the lazy dog",
-      "the quick brown fox jumps over the lazy cat",
-      "completely different text with other words",
-      "x", "  ", "a b"
-    ).zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-    val bad = docs.select(
-      NearDup.simhash(col("text")).as("ref"),
-      NearDup.simhashFast(col("text")).as("fast")
-    ).filter(col("ref") =!= col("fast")).count()
-    assert(bad === 0)
   }
 
   test("graft functions resolve via SQL after extension-style registration") {

@@ -14,7 +14,7 @@ class StreamReservoirSpec extends graft.SparkSpec {
 
   private def batchExpect(data: Seq[(String, Long, Double)], k: Int) =
     Sampling.weightedExactK(data.toDF("lang", "doc_id", "wt"),
-        col("lang"), col("doc_id"), col("wt"), k, portable = true)
+        col("lang"), col("doc_id"), col("wt"), k)
       .collect()
       .groupBy(_.getString(0))
       .view.mapValues(_.map(r => (r.getLong(1).toString, r.getLong(3))).toSet)
