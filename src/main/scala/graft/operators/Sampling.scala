@@ -459,39 +459,22 @@ object Sampling {
     * is the exchange a bucket/shard-partitioned publish already pays.
     */
   def curriculumManifest(df: DataFrame, idCol: Column, difficulty: Column,
-                         nBuckets: Int, nShards: Int, seed: Long = 42L,
-                         approx: Boolean = false,
-                         accuracy: Int = 10000): DataFrame = {
+                         nBuckets: Int, nShards: Int, seed: Long = 42L): DataFrame = {
     require(nBuckets >= 2, s"nBuckets must be >= 2, got $nBuckets")
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
     Seq("bucket", "shard", "pos").foreach { reserved =>
       require(!df.columns.exists(_.equalsIgnoreCase(reserved)),
         s"curriculumManifest output column '$reserved' already exists on the input")
     }
-    def round5(v: Double): Double =
-      BigDecimal(v).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
     val d = difficulty.cast("double")
     // ±Inf is excluded like NaN: an infinite difficulty has no place in an
-    // equi-depth ordering (and a quantile cut landing on it would be
-    // unrepresentable in the 5-dp rounding)
+    // equi-depth ordering
     val placed = df.filter(idCol.isNotNull && d.isNotNull && !isnan(d) &&
       d > Double.NegativeInfinity && d < Double.PositiveInfinity)
     val qs = (1 until nBuckets).map(_.toDouble / nBuckets)
-    val cuts: Seq[Double] =
-      if (approx) {
-        // sketch-first difficulty cuts: ONE approx_percentile agg instead
-        // of the narrowing passes — a curriculum bucket boundary off by
-        // rank error n/accuracy moves a sliver of docs one band over,
-        // which the training order tolerates; exact stays the yardstick
-        val row = placed.select(d.as("__d"))
-          .agg(call_function("approx_percentile", col("__d"),
-            typedlit(qs), lit(accuracy))).head()
-        if (row.isNullAt(0)) Nil else row.getSeq[Double](0).map(round5)
-      }
-      else Summaries
-        .exactQuantilesPerColumn(placed.select(d.as("__d")), Seq(("__d", qs)))
-        .apply("__d").flatten.map(round5)
-    import org.apache.spark.sql.expressions.Window
+    val cuts: Seq[Double] = Summaries
+      .exactQuantilesPerColumn(placed.select(d.as("__d")), Seq(("__d", qs)))
+      .apply("__d").flatten.map(Summaries.round5)
     val bucket = cuts.foldLeft(lit(0)) { (acc, c) =>
       acc + when(d > c, 1).otherwise(0)
     }.cast("int")

@@ -123,22 +123,6 @@ object Summaries {
         col("value"), col("cnt"), col("rank"))
   }
 
-  /** Per-column equi-width histograms — the dataset-card distribution
-    * shape companion of [[numericProfile]] (which gives point stats) and
-    * [[categoricalProfile]] (discrete values). One row per non-empty bin:
-    * (col_name, bin, lo, hi, n); bin width = (max−min)/nBins from a
-    * single all-columns stats pass, the max value clamped into the last
-    * bin, a constant column (max == min) collapsing to bin 0. NULLs are
-    * excluded (the profile already counts them); empty bins are not
-    * emitted.
-    *
-    * Scale notes: ONE tiny stats job (min/max for every column together —
-    * bounds become plan constants), then ONE pass over the data: an
-    * all-columns explode + a per-column codegen CASE computes the bin,
-    * and a single map-side-combined hash agg counts — at most
-    * cols×nBins rows shuffle per map task. No per-column scans, no sort,
-    * no percentile buffers. 5-dp-rounded bounds for engine portability.
-    */
   /** (col_name, v) numeric entries for the dataset-card family: every
     * column exploded to rows in the scan projection (one Generate, one
     * data pass, column pruning intact), NULL AND NaN values excluded —
@@ -154,16 +138,20 @@ object Summaries {
       .filter(col("v").isNotNull && !isnan(col("v")))
 
   /** Equi-width (lo, binWidth) per column from ONE all-columns min/max
-    * pass over `df`; all-NULL (or all-NaN — NaN ≡ missing here, like
-    * [[numericEntries]]; a raw max() would return NaN and poison the
-    * grid) columns are absent from the result.
+    * pass over the FINITE values of `df`: NaN ≡ missing here, like
+    * [[numericEntries]] (a raw max() would return NaN and poison the
+    * grid), and ±Inf would make `lo` or the width infinite, so every
+    * value would share one bin. ±Inf rows still count: the binning
+    * clamps them into the edge bins. Columns with no finite value are
+    * absent from the result.
     */
   private def equiWidthBounds(df: DataFrame, cols: Seq[String],
                               nBins: Int): Map[String, (Double, Double)] = {
     val statsRow = {
       val aggs = cols.flatMap { c =>
         val d = col(c).cast("double")
-        val fin = when(!isnan(d), d)
+        val fin = when(!isnan(d) && d > Double.NegativeInfinity &&
+          d < Double.PositiveInfinity, d)
         Seq(min(fin).as(s"__mn_$c"), max(fin).as(s"__mx_$c"))
       }
       df.agg(aggs.head, aggs.tail.toIndexedSeq: _*).head()
@@ -178,6 +166,22 @@ object Summaries {
     }.toMap
   }
 
+  /** Per-column equi-width histograms — the dataset-card distribution
+    * shape companion of [[numericProfile]] (which gives point stats) and
+    * [[categoricalProfile]] (discrete values). One row per non-empty bin:
+    * (col_name, bin, lo, hi, n); bin width = (max−min)/nBins from a
+    * single all-columns stats pass over the finite values, the max value
+    * and ±Inf clamped into the edge bins, a constant column (max == min)
+    * collapsing to bin 0. NULLs and NaN are excluded (the profile
+    * already counts them); empty bins are not emitted.
+    *
+    * Scale notes: ONE tiny stats job (min/max for every column together —
+    * bounds become plan constants), then ONE pass over the data: an
+    * all-columns explode + a per-column codegen CASE computes the bin,
+    * and a single map-side-combined hash agg counts — at most
+    * cols×nBins rows shuffle per map task. No per-column scans, no sort,
+    * no percentile buffers. 5-dp-rounded bounds for engine portability.
+    */
   def histogram(df: DataFrame, cols: Seq[String], nBins: Int = 10): DataFrame = {
     require(cols.nonEmpty, "histogram needs at least one column")
     require(nBins >= 1, s"nBins must be >= 1, got $nBins")
@@ -216,48 +220,25 @@ object Summaries {
     * [[exactQuantilesPerColumn]] call (all nBins−1 ranks of every column
     * share each pass; a small interval is one collect + sort, a large
     * one O(log) narrowing passes — bounded memory, no value→count
-    * buffer anywhere). `approx = true` takes them from one mergeable
-    * `approx_percentile` sketch instead. After that the binning is the
-    * histogram pipeline either way: cuts are plan constants, one
-    * explode + codegen CASE + a single map-side-combined hash agg.
+    * buffer anywhere). After that the binning is the histogram
+    * pipeline: cuts are plan constants, one explode + codegen CASE + a
+    * single map-side-combined hash agg. ±Inf values are counted (an
+    * infinite cut puts the finite values below it and the infinities at
+    * or above it in adjacent bins).
     */
-  def equidepthBins(df: DataFrame, cols: Seq[String], nBins: Int = 4,
-                    approx: Boolean = false,
-                    accuracy: Int = 10000): DataFrame = {
+  def equidepthBins(df: DataFrame, cols: Seq[String], nBins: Int = 4): DataFrame = {
     require(cols.nonEmpty, "equidepthBins needs at least one column")
     require(nBins >= 2, s"nBins must be >= 2, got $nBins")
     val qs = (1 until nBins).map(_.toDouble / nBins)
-    def round5(v: Double): Double =
-      BigDecimal(v).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val cuts: Map[String, Seq[Double]] =
-      if (approx) {
-        // sketch-first cuts: ONE mergeable approx_percentile agg instead
-        // of the narrowing's O(log) passes — rank error ≤ n/accuracy, the
-        // 100 TB production default (the exact mode stays the yardstick)
-        val row = {
-          val aggs = cols.map { c =>
-            val d = col(c).cast("double")
-            call_function("approx_percentile", when(!isnan(d), d),
-              typedlit(qs), lit(accuracy)).as(s"__q_$c")
-          }
-          df.agg(aggs.head, aggs.tail.toIndexedSeq: _*).head()
-        }
-        cols.zipWithIndex.flatMap { case (c, i) =>
-          if (row.isNullAt(i)) None
-          else Some(c -> row.getSeq[Double](i).map(round5))
-        }.toMap
-      }
-      else {
-        // ONE narrowing sequence resolves ALL columns' cuts together; an
-        // empty/all-NULL/all-NaN column yields all-None → absent (no rows
-        // downstream either)
-        val res = exactQuantilesPerColumn(df, cols.map(c => c -> qs))
-        cols.flatMap { c =>
-          val vs = res(c)
-          if (vs.head.isEmpty) None
-          else Some(c -> vs.map(v => round5(v.get)))
-        }.toMap
-      }
+    // ONE narrowing sequence resolves ALL columns' cuts together; an
+    // empty/all-NULL/all-NaN column yields all-None → absent (no rows
+    // downstream either)
+    val res = exactQuantilesPerColumn(df, cols.map(c => c -> qs))
+    val cuts: Map[String, Seq[Double]] = cols.flatMap { c =>
+      val vs = res(c)
+      if (vs.head.isEmpty) None
+      else Some(c -> vs.map(v => round5(v.get)))
+    }.toMap
     val entries = numericEntries(df, cols)
     def perCol(f: Seq[Double] => Column): Column =
       cuts.foldLeft(lit(null).cast("double")) { case (acc, (c, cs)) =>
@@ -425,7 +406,9 @@ object Summaries {
     * requested quantile, in request order.
     *
     * Mean follows the float discipline: exact decimal(28,6) sum cast to
-    * double, then divided — order-independent, engine-portable.
+    * double, then divided — order-independent, engine-portable. The
+    * decimal cast drops NaN and ±Inf, so the divisor is the count of the
+    * values the sum admits: the mean is the mean of the finite values.
     * Quantiles are `approx_percentile` (t-digest-style sketch,
     * partial-aggregable, bounded memory) by default; `exact = true`
     * keeps them EXACT while staying memory-bounded: the other stats
@@ -438,8 +421,9 @@ object Summaries {
     * columns cost the same pass count as one median of one column.
     *
     * NaN discipline: quantiles exclude NaN in BOTH modes (NaN ≡
-    * missing, the narrowing core's semantic). min/max/mean keep the raw
-    * aggregate semantics (NaN propagates), identically in both engines.
+    * missing, the narrowing core's semantic). min/max keep the raw
+    * aggregate semantics: Spark sorts NaN greatest, so a NaN-bearing
+    * column reports `max` NaN and a finite `min`.
     */
   def numericProfile(df: DataFrame, cols: Seq[String],
                      exact: Boolean = false,
@@ -467,7 +451,8 @@ object Summaries {
         count(when(col(c).isNull, 1)).as(s"__nn__$c"),
         min(d).as(s"__min__$c"),
         max(d).as(s"__max__$c"),
-        sum(col(c).cast("decimal(28,6)")).cast("double").as(s"__sum__$c")) ++ ps
+        sum(col(c).cast("decimal(28,6)")).cast("double").as(s"__sum__$c"),
+        count(col(c).cast("decimal(28,6)")).as(s"__nd__$c")) ++ ps
     }
     val one = df.agg(aggs.head, aggs.tail.toIndexedSeq: _*)
     // the sketch array unpivots by 0-based element access; an all-NULL
@@ -478,10 +463,12 @@ object Summaries {
       .mkString(", ")
     val stackArgs = cols.map(c =>
       s"${lit_(c)}, ${q(s"__n__$c")}, ${q(s"__nn__$c")}, ${q(s"__min__$c")}, " +
-        s"${q(s"__max__$c")}, ${q(s"__sum__$c")}, ${qArgs(c)}").mkString(", ")
+        s"${q(s"__max__$c")}, ${q(s"__sum__$c")}, ${q(s"__nd__$c")}, ${qArgs(c)}")
+      .mkString(", ")
     val unpivoted = one.selectExpr(s"stack(${cols.size}, $stackArgs) AS " +
-        s"(column_name, n_non_null, n_null, min, max, __sum, ${qNames.map(q).mkString(", ")})")
-      .withColumn("mean", col("__sum") / col("n_non_null"))
+        s"(column_name, n_non_null, n_null, min, max, __sum, __nd, " +
+        s"${qNames.map(q).mkString(", ")})")
+      .withColumn("mean", col("__sum") / col("__nd"))
     val withQs =
       if (!exact) unpivoted
       else {
@@ -873,6 +860,15 @@ object Summaries {
     df.agg(aggs.head, aggs.tail.toIndexedSeq: _*)
   }
 
+  /** HALF_UP 5-dp rounding of a quantile cut — the SQL round()
+    * convention, so an oracle's round(quantile, 5) lands on the same
+    * double. ±Inf (an order statistic of a column holding infinities)
+    * and NaN come back unchanged: they have no decimal form.
+    */
+  private[operators] def round5(v: Double): Double =
+    if (v.isInfinite || v.isNaN) v
+    else BigDecimal(v).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
+
   /** 5-dp-rounded (median, MAD) per column over the FINITE core — the
     * shared robust-stats base of [[madOutliers]] and [[robustZscore]]:
     * exactly TWO fused [[exactQuantilesPerColumn]] batches for any column
@@ -885,10 +881,6 @@ object Summaries {
     */
   private def medMadStats(df: DataFrame, cols: Seq[String])
       : Map[String, (Option[Double], Option[Double])] = {
-    // HALF_UP like equidepthBins' cuts — the SQL round() convention, so
-    // an oracle's round(quantile, 5) lands on the same double
-    def round5(v: Double): Double =
-      BigDecimal(v).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
     // finite core only: ±Inf must not become an order statistic (it
     // would drag the MAD to Inf and the fences to everything)
     val finiteOnly = df.select(cols.map { c =>
@@ -1282,38 +1274,14 @@ object Summaries {
     * the use case); `maxGroups` raises loudly rather than explode the
     * batch. One row per (group, quantile); a NULL group is a group;
     * groups with no usable values keep rows with NULL quantiles; cuts
-    * round to 5 dp (engine portability).
+    * round to 5 dp (engine portability), and a cut that lands on ±Inf
+    * stays infinite.
     */
   def groupQuantiles(df: DataFrame, groupCol: String, valueCol: String,
-                     qs: Seq[Double], maxGroups: Int = 100,
-                     approx: Boolean = false,
-                     accuracy: Int = 10000): DataFrame = {
+                     qs: Seq[Double], maxGroups: Int = 100): DataFrame = {
     require(qs.nonEmpty, "groupQuantiles needs at least one quantile")
     qs.foreach(q => require(q >= 0 && q <= 1, s"quantile out of [0,1]: $q"))
     require(qs.distinct.size == qs.size, "duplicate quantiles")
-    def round5(v: Double): Double =
-      BigDecimal(v).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
-    if (approx) {
-      // sketch-first per-group quantiles: ONE grouped approx_percentile
-      // agg — a real shuffle-on-group aggregation, so the group domain is
-      // UNBOUNDED (no maxGroups, no per-group synthesized columns, no
-      // driver collect of the domain): the 100 TB path when groups are
-      // not a small enum. Rank error ≤ n_group/accuracy; exact narrowing
-      // stays the yardstick for bounded domains.
-      val d = col(valueCol).cast("double")
-      val grouped = df.groupBy(col(groupCol).cast("string").as(groupCol))
-        .agg(call_function("approx_percentile", when(!isnan(d), d),
-          typedlit(qs), lit(accuracy)).as("__qarr"))
-      // a group with no usable values has a NULL array — it still owes
-      // one row per quantile (NULL value), like the exact path
-      val qsLit = typedlit(qs)
-      return grouped.select(col(groupCol),
-          posexplode(coalesce(col("__qarr"),
-            typedlit(Seq.fill(qs.size)(null: java.lang.Double)))))
-        .select(col(groupCol),
-          element_at(qsLit, col("pos") + 1).as("quantile"),
-          round(col("col"), 5).as("value"))
-    }
     // limit BEFORE collect: the guard exists to protect driver memory, so
     // it must bound the collect itself — maxGroups+1 rows is enough to
     // know the domain is too large without materializing all of it
@@ -1448,46 +1416,23 @@ object Summaries {
     *
     * Scale notes: exact cuts route ALL columns' cut pairs through one
     * [[exactQuantilesPerColumn]] batch — bounded driver memory at any
-    * cardinality, passes shared across columns; `approx = true` reads
-    * them off one `approx_percentile` sketch instead. The clip itself
-    * is a pure codegen projection with plan-constant cuts — no second
+    * cardinality, passes shared across columns. The clip itself is a
+    * pure codegen projection with plan-constant cuts — no second
     * shuffle, no window.
     */
   def winsorize(df: DataFrame, cols: Seq[String], pLo: Double = 0.01,
-                pHi: Double = 0.99,
-                approx: Boolean = false, accuracy: Int = 10000): DataFrame = {
+                pHi: Double = 0.99): DataFrame = {
     require(cols.nonEmpty, "winsorize needs at least one column")
     require(cols.distinct.size == cols.size, "duplicate columns in cols")
     require(pLo >= 0 && pHi <= 1 && pLo <= pHi, s"need 0 <= pLo <= pHi <= 1")
-    def round5(v: Double): Double =
-      BigDecimal(v).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
     val isFin = (c: Column) => !isnan(c) &&
       c > Double.NegativeInfinity && c < Double.PositiveInfinity
     val finite = df.select(cols.map(c =>
       when(isFin(col(c).cast("double")), col(c).cast("double")).as(c))
       .toIndexedSeq: _*)
     val cuts: Map[String, (Option[Double], Option[Double])] =
-      if (approx) {
-        // sketch-first fences: ONE approx_percentile agg (rank error ≤
-        // n/accuracy — for 1%/99% clipping fences the exact rank of the
-        // fence is immaterial, which is why this is the scale default
-        // candidate; the exact mode remains the oracle yardstick)
-        val row = {
-          val aggs = cols.map(c => call_function("approx_percentile",
-            col(c), typedlit(Seq(pLo, pHi)), lit(accuracy)).as(s"__q_$c"))
-          finite.agg(aggs.head, aggs.tail.toIndexedSeq: _*).head()
-        }
-        cols.zipWithIndex.map { case (c, i) =>
-          c -> (if (row.isNullAt(i)) (None, None)
-                else {
-                  val arr = row.getSeq[Double](i)
-                  (Some(round5(arr.head)), Some(round5(arr(1))))
-                })
-        }.toMap
-      }
-      else
-        exactQuantilesPerColumn(finite, cols.map(c => c -> Seq(pLo, pHi)))
-          .map { case (c, qs) => c -> (qs.head.map(round5), qs(1).map(round5)) }
+      exactQuantilesPerColumn(finite, cols.map(c => c -> Seq(pLo, pHi)))
+        .map { case (c, qs) => c -> (qs.head.map(round5), qs(1).map(round5)) }
     cols.foldLeft(df) { (acc, c) =>
       val vc = col(c).cast("double")
       val out = cuts(c) match {
@@ -1499,6 +1444,35 @@ object Summaries {
       }
       acc.withColumn(s"${c}_w", out)
     }
+  }
+
+  /** Calibration-bin census for a [0,1] classifier/quality score: bin
+    * by equal-width `nBins`, report per bin the observed positive rate
+    * vs the mean predicted score — the reliability-diagram table whose
+    * per-bin `calibration_gap` says whether a score threshold MEANS what
+    * it claims before a curation gate keys on it (a quality filter at
+    * "score ≥ 0.8" that is only 40% precise there is a mix bug waiting).
+    *
+    * Float discipline: binning is `floor(score·nBins)` on the double —
+    * both engines compute the identical IEEE product and floor, so edge
+    * values bin identically; `mean_score` sums the (4-dp) scores as
+    * exact decimals. One hash aggregation; nBins rows out.
+    */
+  def calibrationBins(df: DataFrame, score: Column, label: Column,
+                      nBins: Int = 10): DataFrame = {
+    require(nBins >= 2, s"nBins must be >= 2, got $nBins")
+    df.filter(score.isNotNull)
+      .select(least(floor(score * nBins).cast("long"), lit(nBins - 1L)).as("bin"),
+        score.cast("decimal(18,4)").as("__s"),
+        label.cast("long").as("__y"))
+      .groupBy(col("bin"))
+      .agg(count(lit(1)).as("n"), sum(col("__y")).as("n_pos"),
+        sum(col("__s")).as("__ssum"))
+      .select(col("bin"), col("n"), col("n_pos"),
+        (col("n_pos").cast("double") / col("n")).as("pos_rate"),
+        (col("__ssum").cast("string").cast("double") / col("n")).as("mean_score"),
+        ((col("__ssum").cast("string").cast("double") / col("n"))
+          - (col("n_pos").cast("double") / col("n"))).as("calibration_gap"))
   }
 
   /** EXACT top-k heavy hitters over a key whose cardinality is itself
@@ -1536,35 +1510,6 @@ object Summaries {
     * membership only widens the confirm filter, so partitioning cannot
     * change the answer.
     */
-  /** Calibration-bin census for a [0,1] classifier/quality score: bin
-    * by equal-width `nBins`, report per bin the observed positive rate
-    * vs the mean predicted score — the reliability-diagram table whose
-    * per-bin `calibration_gap` says whether a score threshold MEANS what
-    * it claims before a curation gate keys on it (a quality filter at
-    * "score ≥ 0.8" that is only 40% precise there is a mix bug waiting).
-    *
-    * Float discipline: binning is `floor(score·nBins)` on the double —
-    * both engines compute the identical IEEE product and floor, so edge
-    * values bin identically; `mean_score` sums the (4-dp) scores as
-    * exact decimals. One hash aggregation; nBins rows out.
-    */
-  def calibrationBins(df: DataFrame, score: Column, label: Column,
-                      nBins: Int = 10): DataFrame = {
-    require(nBins >= 2, s"nBins must be >= 2, got $nBins")
-    df.filter(score.isNotNull)
-      .select(least(floor(score * nBins).cast("long"), lit(nBins - 1L)).as("bin"),
-        score.cast("decimal(18,4)").as("__s"),
-        label.cast("long").as("__y"))
-      .groupBy(col("bin"))
-      .agg(count(lit(1)).as("n"), sum(col("__y")).as("n_pos"),
-        sum(col("__s")).as("__ssum"))
-      .select(col("bin"), col("n"), col("n_pos"),
-        (col("n_pos").cast("double") / col("n")).as("pos_rate"),
-        (col("__ssum").cast("string").cast("double") / col("n")).as("mean_score"),
-        ((col("__ssum").cast("string").cast("double") / col("n"))
-          - (col("n_pos").cast("double") / col("n"))).as("calibration_gap"))
-  }
-
   def heavyHitters(df: DataFrame, keyCol: String, k: Int,
                    capacity: Int = 4096,
                    isinThreshold: Int = 8192): DataFrame = {

@@ -394,17 +394,23 @@ class OperatorsSpec extends SparkSpec {
   test("DatasetCard: quantile vector rows; all-NULL categorical column publishes its census") {
     import graft.operators.DatasetCard
     val df = (1 to 200).map(i =>
-      (i.toLong, (i % 50).toDouble,
+      (i.toLong, (i % 50).toDouble, Option.empty[Double],
         if (i % 3 == 0) "en" else "de", null: String))
-      .toDF("id", "v", "lang", "license")
+      .toDF("id", "v", "w", "lang", "license")
     for (exact <- Seq(false, true)) {
-      val card = DatasetCard.build(df, Seq("v"), Seq("lang", "license"),
+      val card = DatasetCard.build(df, Seq("v", "w"), Seq("lang", "license"),
         exactMedians = exact)
-      val numItems = card.filter(col("section") === "numeric")
+      val numItems = card.filter(col("section") === "numeric" &&
+          col("col_name") === "v")
         .select("item").as[String].collect().toSet
       // the default card ships the full quantile vector, not just p50
       assert(Set("p25", "p50", "p75", "p95", "p99").subsetOf(numItems),
         s"exact=$exact: $numItems")
+      // all-NULL numeric column w: no bins, but its census rides
+      val w = card.filter(col("section") === "numeric" && col("col_name") === "w" &&
+          col("item").isin("n_non_null", "n_null"))
+        .select("item", "value_d").as[(String, Double)].collect().toMap
+      assert(w === Map("n_non_null" -> 0.0, "n_null" -> 200.0), s"exact=$exact: $w")
       // all-NULL license column: no top-k rows, but the census facts ride
       val lic = card.filter(col("section") === "categorical" &&
           col("col_name") === "license")
@@ -422,6 +428,50 @@ class OperatorsSpec extends SparkSpec {
       .select("item", "value_d").as[(String, Double)].collect().toMap
     assert(exactQs === qs.map(Summaries.quantileColName)
       .zip(ExactReference.percentiles(df, "v", qs).get).toMap)
+  }
+
+  test("card family on ±Inf/NaN: finite equi-width bounds, finite-value mean, infinite cuts keep their rows") {
+    import graft.operators.DatasetCard
+    val inf = Double.PositiveInfinity
+    // one +Inf in the reference must not widen the equi-width bins to
+    // [lo, Inf) and fold every value into one bin: 90% of the current
+    // sample piling onto 5.0 is major drift
+    val ref = ((1 to 100).map(_.toDouble) :+ inf).toDF("v")
+    val cur = (Seq.fill(90)(5.0) ++ (91 to 100).map(_.toDouble)).toDF("v")
+    val psi = Summaries.psiDrift(ref, cur, Seq("v")).collect()
+    assert(psi.map(_.getString(2)).toSeq === Seq("major"), psi.toSeq)
+    val hist = Summaries.histogram(ref, Seq("v"), 4)
+    val hb = hist.agg(min("lo"), max("hi"), sum("n")).head()
+    assert(hb.getDouble(0) === 1.0 && hb.getDouble(1) === 100.0, hb)
+    // the +Inf row clamps into the last bin: both histograms carry 101
+    assert(hb.getLong(2) === 101L)
+    assert(Summaries.equidepthBins(ref, Seq("v"), 4).agg(sum("n")).head()
+      .getLong(0) === 101L)
+
+    // mean over the finite values the decimal sum admits: 36/8, not
+    // 36/14 (NaN and ±Inf counted in the divisor)
+    val mixed = ((1 to 8).map(_.toDouble) ++ Seq.fill(4)(Double.NaN) ++
+      Seq(inf, Double.NegativeInfinity)).toDF("v")
+    for (exact <- Seq(false, true)) {
+      val card = DatasetCard.build(mixed, Seq("v"), Nil, histBins = 4,
+        depthBins = 4, exactMedians = exact)
+      val mean = card.filter(col("section") === "numeric" && col("item") === "mean")
+        .select("value_d").as[Double].head()
+      assert(math.abs(mean - 4.5) < 1e-9, s"exact=$exact: mean $mean")
+      def mass(section: String): Long =
+        card.filter(col("section") === section).agg(sum("n")).head().getLong(0)
+      assert(mass("histogram") === 10L && mass("equidepth") === 10L, s"exact=$exact")
+    }
+
+    // an order statistic on +Inf is a cut, not a crash
+    val tail = ((1 to 6).map(i => ("a", i.toDouble)) ++ Seq.fill(4)(("a", inf)))
+      .toDF("g", "v")
+    val ed = Summaries.equidepthBins(tail, Seq("v"), 4)
+      .select("bin", "hi", "n").as[(Long, Option[Double], Long)].collect()
+    assert(ed.map(_._3).sum === 10L && ed.exists(_._2.contains(inf)), ed.toSeq)
+    val gq = Summaries.groupQuantiles(tail, "g", "v", Seq(0.5, 0.9))
+      .select("quantile", "value").as[(Double, Double)].collect().toMap
+    assert(gq === Map(0.5 -> 5.5, 0.9 -> inf), gq)
   }
 
   test("rollupSummary equals per-level groupBys; grouping_id tells NULLs apart") {
