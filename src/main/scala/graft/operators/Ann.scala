@@ -124,26 +124,11 @@ object Ann {
     topKPerQuery(expanded, k)
   }
 
-  /** IVF (inverted-file) ANN: corpus vectors are assigned to their nearest
-    * centroid in ONE codegen'd projection (the centroid list is a plan
-    * literal — no assignment shuffle, no per-row join); queries probe the
-    * `nProbe` nearest centroids; candidates meet in a shuffle keyed by
-    * centroid id. vs LSH: recall tracks the data's actual clustering
-    * rather than random hyperplanes.
-    *
-    * Centroids here are a deterministic corpus sample (every `stride`-th
-    * vector) — production would plug k-means centroids into the same
-    * plumbing; only `centroids` changes, the plan shape is identical.
-    */
-  def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-              vecCol: String, k: Int, nCentroids: Int, nProbe: Int): DataFrame =
-    ivfTopKWith(queries, corpus, idCol, vecCol, k,
-      strideCentroids(corpus, idCol, vecCol, nCentroids), nProbe)
-
   /** Deterministic stride-sampled centroid pool (every 8th of the first
     * `nCentroids * 8` vectors by id) — the zero-pass baseline;
-    * [[kmeansCentroids]] is the learned upgrade. The collect is the k×dim
-    * CENTROID MATRIX — a plan-time constant by definition — not data.
+    * [[kmeansCentroidsExact]] is the learned upgrade. The collect is the
+    * k×dim CENTROID MATRIX — a plan-time constant by definition — not
+    * data.
     */
   def strideCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                       nCentroids: Int): Array[Array[Float]] = {
@@ -184,84 +169,31 @@ object Ann {
       strideCentroids(corpus, idCol, vecCol, k), iters)
   }
 
-  /** Lloyd's k-means with ENGINE-PORTABLE exact mean updates: each element
-    * is quantized to integer micro-units (`floor(v·1e6 + 0.5)` as long —
-    * exact IEEE for |v| ≤ ~4e12), the cluster sums are LONG sums
-    * (order-independent — no float-accumulation nondeterminism across
-    * partitions or engines), and the new centroid element is
-    * `(sum.toDouble / count / 1e6).toFloat` — two fixed-order double
-    * divisions + one float rounding, bit-identical in any IEEE engine.
-    * Assignment runs through the same `graft_ivf_nearest` kernel as IVF
-    * (fixed-order double L2 — replayable), so the whole refinement is a
-    * pure function of (parquet bytes, init, iters) that the DuckDB oracle
-    * re-derives. Shuffle per iteration: at most partitions × k × dim
-    * partial (sum, count) pairs; only the k×dim matrix reaches the driver.
-    * Empty clusters keep their previous centroid. Precision cost vs
-    * [[kmeansCentroids]]'s double means: ≤ 5e-7 per element per iteration
-    * — irrelevant at float32 output precision.
+  /** Lloyd's k-means over whole vectors with ENGINE-PORTABLE exact mean
+    * updates: the one-subspace call of [[pqTrainCodebooksExact]] (with
+    * dsub = dim the slice is the whole vector), so IVF centroids and PQ
+    * codebooks train on ONE Lloyd loop and share its micro-unit
+    * arithmetic, empty-cluster rule and NULL / wrong-length handling.
+    * The refinement is a pure function of (parquet bytes, init, iters)
+    * that the DuckDB oracle re-derives bit-for-bit. Shuffle per
+    * iteration: at most partitions × k × dim partial (sum, count) pairs;
+    * only the k×dim matrix reaches the driver.
     */
   def kmeansCentroidsExact(corpus: DataFrame, vecCol: String,
                            init: Array[Array[Float]], iters: Int): Array[Array[Float]] = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
-    require(init.nonEmpty && iters >= 0, "kmeans needs >= 1 initial centroid")
-    var cents = init
-    for (_ <- 0 until iters) {
-      val centsLit = lit(GraftFunctions.encodeCents(cents))
-      val sums = corpus
-        .select(call_function("graft_ivf_nearest", col(vecCol), centsLit).as("cid"),
-          col(vecCol).as("v"))
-        .select(col("cid"), posexplode(col("v")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(sum(floor(col("col").cast("double") * lit(1000000.0) + lit(0.5))
-          .cast("long")).as("s"), count(lit(1)).as("n"))
-        .collect()
-      val next = cents.map(_.clone())
-      sums.foreach { r =>
-        next(r.getInt(0))(r.getInt(1)) =
-          (r.getLong(2).toDouble / r.getLong(3) / 1000000.0).toFloat
-      }
-      cents = next
-    }
-    cents
+    require(init.nonEmpty, "kmeans needs >= 1 initial centroid")
+    pqTrainCodebooksExact(corpus, vecCol, Array(init), iters).head
   }
 
-  /** Lloyd's k-means over the corpus, Spark-native: each iteration is ONE
-    * distributed pass — assignment via the `graft_ivf_nearest` kernel
-    * (centroid matrix as a single plan constant, no per-row join, no
-    * assignment shuffle) and the mean update as posexplode →
-    * groupBy(cid, dim) → avg, whose shuffle carries at most
-    * partitions × k × dim partial sums regardless of corpus size. Only
-    * the k×dim mean matrix reaches the driver per iteration. Clusters
-    * that lose all members keep their previous centroid (standard
-    * empty-cluster handling). Deterministic given `init` — recall at
-    * 100 TB tracks centroid quality, so feed this into [[ivfTopKWith]]
-    * instead of the stride sample when the corpus isn't uniformly shuffled.
-    */
-  def kmeansCentroids(corpus: DataFrame, vecCol: String,
-                      init: Array[Array[Float]], iters: Int = 5): Array[Array[Float]] = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
-    require(init.nonEmpty && iters >= 0, "kmeans needs >= 1 initial centroid")
-    var cents = init
-    for (_ <- 0 until iters) {
-      val centsLit = lit(GraftFunctions.encodeCents(cents))
-      val means = corpus
-        .select(call_function("graft_ivf_nearest", col(vecCol), centsLit).as("cid"),
-          col(vecCol).as("v"))
-        .select(col("cid"), posexplode(col("v")))
-        .groupBy(col("cid"), col("pos")).agg(avg(col("col")).as("m"))
-        .collect()
-      val next = cents.map(_.clone())
-      means.foreach { r =>
-        next(r.getInt(0))(r.getInt(1)) = r.getDouble(2).toFloat
-      }
-      cents = next
-    }
-    cents
-  }
-
-  /** IVF plumbing with caller-supplied centroids (stride-sampled, k-means,
-    * or externally trained): only the matrix changes, the plan shape is
-    * identical to [[ivfTopK]].
+  /** IVF (inverted-file) ANN: corpus vectors are assigned to their nearest
+    * centroid in ONE codegen'd projection (the centroid list is a plan
+    * literal — no assignment shuffle, no per-row join); queries probe the
+    * `nProbe` nearest centroids; candidates meet in a shuffle keyed by
+    * centroid id. vs LSH: recall tracks the data's actual clustering
+    * rather than random hyperplanes. The centroids are the caller's
+    * ([[strideCentroids]], [[kmeansCentroidsExact]], [[autoCentroids]] or
+    * externally trained): only the matrix changes, the plan shape is
+    * identical.
     */
   def ivfTopKWith(queries: DataFrame, corpus: DataFrame, idCol: String,
                   vecCol: String, k: Int, cents: Array[Array[Float]],
@@ -430,13 +362,21 @@ object Ann {
     * Jégou et al. 2011 prescribe: each subspace's codebook is k-means of
     * THAT subspace's slices, not a slice of full-vector centroids — a
     * sliced pool covers each subspace marginal with only |pool| points
-    * and caps recall far below the quantizer's capacity). Same
-    * engine-portable arithmetic contract as [[kmeansCentroidsExact]]:
-    * assignment via the `graft_ivf_nearest` kernel per subspace
-    * (fixed-order double L2, ties to the smaller cid), cluster sums as
-    * exact longs of `floor(v·1e6 + 0.5)` micro-units, new element =
-    * `(sum/n/1e6).toFloat` — bit-replayable by the DuckDB oracle. Empty
-    * clusters keep their previous centroid.
+    * and caps recall far below the quantizer's capacity); with m = 1 it
+    * is plain Lloyd's k-means ([[kmeansCentroidsExact]]).
+    *
+    * Engine-portable arithmetic: assignment via the `graft_ivf_nearest`
+    * kernel per subspace (fixed-order double L2, ties to the smaller
+    * cid); each element is quantized to integer micro-units
+    * (`floor(v·1e6 + 0.5)` as long — exact IEEE for |v| ≤ ~4e12) and the
+    * cluster sums are LONG sums (order-independent — no
+    * float-accumulation nondeterminism across partitions or engines);
+    * the new element is `(sum.toDouble / n / 1e6).toFloat` — two
+    * fixed-order double divisions + one float rounding, bit-identical in
+    * any IEEE engine, so the DuckDB oracle replays it. Empty clusters
+    * keep their previous centroid; NULL vectors are skipped; a vector
+    * whose length is not m × dsub fails the job (`raise_error` inside
+    * the training projection — no extra pass).
     *
     * Scale notes: ONE distributed pass per iteration trains ALL m
     * subspaces together — each row explodes to m (s, cid, slice) structs
@@ -454,17 +394,22 @@ object Ann {
     require(iters >= 0, s"pq training iters must be >= 0, got $iters")
     val m = init.length
     val dsub = init.head.head.length
+    // a wrong-length vector fails the job inside the training projection
+    // — trained by prefix or dropped, it would skew the means silently
+    val guarded = when(size(col(vecCol)) === lit(m * dsub), col(vecCol))
+      .otherwise(raise_error(concat(
+        lit("k-means training: vector dim "), size(col(vecCol)).cast("string"),
+        lit(s" != centroid dim ${m * dsub}"))))
     var books = init
     for (_ <- 0 until iters) {
       val subRows = (0 until m).map { s =>
-        val sl = slice(col(vecCol), s * dsub + 1, dsub)
+        val sl = slice(guarded, s * dsub + 1, dsub)
         struct(lit(s).as("s"),
           call_function("graft_ivf_nearest", sl,
             lit(GraftFunctions.encodeCents(books(s)))).as("cid"),
           sl.as("v"))
       }
-      val sums = corpus
-        .filter(col(vecCol).isNotNull && size(col(vecCol)) === lit(m * dsub))
+      val sums = corpus.filter(col(vecCol).isNotNull)
         .select(explode(array(subRows: _*)).as("r"))
         .select(col("r.s").as("s"), col("r.cid").as("cid"), posexplode(col("r.v")))
         .groupBy(col("s"), col("cid"), col("pos"))

@@ -144,29 +144,35 @@ object Dedup {
     * round every node adopts the smallest label in its closed
     * neighborhood, converging in O(component diameter) rounds — near-dup
     * clusters are near-cliques (diameter 1-2), so 2-3 rounds in practice,
-    * `maxIter` bounds adversarial chains.
+    * and `LabelRounds` bounds adversarial chains.
     *
     * Scale notes: each round is two shuffles over the EDGE list (join +
     * min-aggregate) — no per-component state, no driver data. Iterative
     * DataFrame algorithms accumulate lineage (round k would otherwise
-    * replay rounds 1..k-1 every action), so labels are localCheckpoint'ed
-    * each round; on a cluster prefer `spark.sparkContext.setCheckpointDir`
-    * + `checkpoint()` for fault tolerance. For graphs with long chains at
+    * replay rounds 1..k-1 every action), so labels are cut
+    * (`Iterative.cut`) each round; on a cluster prefer
+    * `spark.sparkContext.setCheckpointDir` + `checkpoint()` for fault
+    * tolerance. For graphs with long chains at
     * extreme scale [[connectedComponentsStar]] (large-star/small-star
     * contraction) converges in O(log² n) rounds regardless of diameter,
     * so it is the automatic fallback: label propagation runs first —
     * cheaper on the near-clique graphs near-dup emits — and a graph it
-    * cannot settle in `maxIter` rounds restarts on star contraction.
+    * cannot settle in `LabelRounds` rounds restarts on star contraction.
     */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
-                          idB: String = "id_b", maxIter: Int = 15): DataFrame =
-    labelPropagation(pairs, idA, idB, maxIter).getOrElse {
+                          idB: String = "id_b"): DataFrame =
+    labelPropagation(pairs, idA, idB, LabelRounds).getOrElse {
       System.err.println(
         s"[graft] connectedComponents: min-label propagation did not " +
-          s"converge in $maxIter rounds (long-chain graph) — switching " +
+          s"converge in $LabelRounds rounds (long-chain graph) — switching " +
           "to star-contraction")
       connectedComponentsStar(pairs, idA, idB)
     }
+
+  /** Round cap of [[connectedComponents]]' label propagation; a graph
+    * it cannot settle in this many rounds falls back to star contraction.
+    */
+  private val LabelRounds = 15
 
   /** The min-label propagation rounds of [[connectedComponents]]: the
     * labels if they reach a fixpoint within `maxIter` rounds, else None.
@@ -224,12 +230,13 @@ object Dedup {
     * buffered array). Edge sets are deduplicated per round — contraction
     * REWRITES edges (unlike label propagation, where duplicate edges just
     * repeat rows under an idempotent min), so without the distinct the
-    * multiplicity would compound per round. localCheckpoint cuts the
+    * multiplicity would compound per round. `Iterative.cut` cuts the
     * iterative lineage exactly like the label-propagation form.
     */
-  def connectedComponentsStar(pairs: DataFrame, idA: String = "id_a",
-                              idB: String = "id_b",
-                              maxIter: Int = 40): DataFrame = {
+  private[graft] def connectedComponentsStar(pairs: DataFrame,
+                                             idA: String = "id_a",
+                                             idB: String = "id_b",
+                                             maxIter: Int = 40): DataFrame = {
     val nodes = pairs.select(col(idA).as("id"))
       .unionByName(pairs.select(col(idB).as("id")))
       .distinct()
@@ -293,7 +300,7 @@ object Dedup {
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponentsStar did not converge in $maxIter rounds — " +
-          "this exceeds the O(log² n) bound; raise maxIter")
+          "this exceeds the O(log² n) bound")
     // converged edges form stars: every non-root points at its component
     // minimum; roots (and singleton inputs like self-pairs) label
     // themselves
@@ -354,8 +361,7 @@ object Dedup {
     * incremental face is the 100 TB continuous-crawl requirement.
     */
   def updateComponents(standing: DataFrame, newPairs: DataFrame,
-                       idA: String = "id_a", idB: String = "id_b",
-                       maxIter: Int = 15): DataFrame = {
+                       idA: String = "id_a", idB: String = "id_b"): DataFrame = {
     require(standing.columns.contains("id") && standing.columns.contains("comp"),
       s"updateComponents needs standing labels with (id, comp) columns " +
         s"(connectedComponents output), got ${standing.columns.mkString(",")}")
@@ -407,7 +413,7 @@ object Dedup {
     // 2. delta CC over contracted edges (self-loops contribute nothing)
     val deltaEdges = contracted.where(col("id_a") =!= col("id_b"))
       .select("id_a", "id_b")
-    val delta = connectedComponents(deltaEdges, "id_a", "id_b", maxIter)
+    val delta = connectedComponents(deltaEdges, "id_a", "id_b")
       .transform(graft.plans.Iterative.cut)
     // 3a. remap standing by component label — broadcast(delta) keeps the
     // history-scale frame shuffle-free
@@ -424,24 +430,10 @@ object Dedup {
     remapped.unionByName(freshLabels)
   }
 
-  /** Near-duplicate removal end-to-end: keep one canonical doc (minimum
-    * id) per connected component of the pair graph; docs in no pair
-    * survive untouched. The loser set is component members whose id isn't
-    * the component minimum — an anti-join on the unique id.
-    */
-  def dropNearDuplicates(docs: DataFrame, idCol: String, pairs: DataFrame,
-                         idA: String = "id_a", idB: String = "id_b",
-                         maxIter: Int = 15): DataFrame = {
-    val losers = connectedComponents(pairs, idA, idB, maxIter)
-      .filter(col("id") =!= col("comp"))
-      .select(col("id").as(idCol))
-    docs.join(losers, Seq(idCol), "left_anti")
-  }
-
   /** The full dedup DECISION: pairs → components → keep the BEST-scoring
     * row of each near-dup group (ties → smallest id), the rule real
     * curation uses — keep the highest-quality copy, not an arbitrary
-    * one ([[dropNearDuplicates]] is the keep-smallest-id simplification).
+    * one (a constant score keeps each component's smallest id).
     * Rows in no pair are their own singleton component and always
     * survive. Adds `comp` (the component label) to the kept rows.
     *
@@ -455,7 +447,7 @@ object Dedup {
     */
   def keepBestPerComponent(rows: DataFrame, idCol: String, pairs: DataFrame,
                            score: Column, idA: String = "id_a",
-                           idB: String = "id_b", maxIter: Int = 15): DataFrame = {
+                           idB: String = "id_b"): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(rows.sparkSession)
     require(!rows.columns.exists(_.equalsIgnoreCase("comp")),
       "keepBestPerComponent adds a 'comp' column — rename the existing one")
@@ -466,7 +458,7 @@ object Dedup {
       require(!rows.columns.exists(_.equalsIgnoreCase(reserved)),
         s"keepBestPerComponent uses '$reserved' internally — rename the existing column")
     }
-    val comps = connectedComponents(pairs, idA, idB, maxIter)
+    val comps = connectedComponents(pairs, idA, idB)
       .withColumnRenamed("id", "__cc_id")
     val labeled = rows.filter(col(idCol).isNotNull)
       .join(comps, rows(idCol) === col("__cc_id"), "left")

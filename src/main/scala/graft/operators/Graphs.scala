@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   *    the NULL group key, and its share rejoins the rank update as a
   *    broadcast SINGLE-ROW frame — no per-round driver fetch at all,
   *    never a node list.
-  *  - Lineage is cut per round with localCheckpoint (iterative DataFrame
+  *  - Lineage is cut per round with `Iterative.cut` (iterative DataFrame
   *    plans otherwise replay all prior rounds per action); on a real
   *    cluster prefer `setCheckpointDir` + `checkpoint()` for fault
   *    tolerance, same as the CC scaladoc.
@@ -65,6 +65,12 @@ object Graphs {
     * Long.Max while `w` ≤ ~1e8 — far beyond any consolidated domain-pair
     * weight; callers with heavier weights should pre-scale them.
     *
+    * Runs exactly `iters` rounds. Per-round driver contract: ONE
+    * blocking action (the contribution agg's lineage cut) and ZERO
+    * scalar fetches — the dangling mass re-enters the rank update as a
+    * broadcast single-row cross-join read from the already-materialized
+    * agg, never via the driver. No node-list ever reaches the driver.
+    *
     * @param edges   (srcCol, dstCol[, weightCol]) directed edges;
     *                duplicates are consolidated by summing weights.
     * @return one row per node: (id, pr_units, out_weight, n_in) —
@@ -74,38 +80,10 @@ object Graphs {
   def pageRank(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
                weightCol: Option[String] = None, iters: Int = 5,
                dampNum: Long = 85L, dampDen: Long = 100L,
-               unit: Long = 1000000000L, tolUnits: Long = 0L): DataFrame =
-    pageRankRun(edges, srcCol, dstCol, weightCol, iters, dampNum, dampDen,
-      unit, tolUnits, trace = false)._1
-
-  /** [[pageRank]] plus the per-round L1 rank deltas (Σ|r'−r| in units)
-    * actually observed — the convergence trace a caller sizes `iters`
-    * with. With `tolUnits > 0` the loop stops EARLY once a round's delta
-    * is ≤ tolUnits (the returned trace shows the executed rounds); with
-    * the default 0 every round runs and the trace is still recorded.
-    * The delta is one node-sized join+agg per round — small next to the
-    * edge-sized contribution round, but it IS a blocking driver action,
-    * so it is pay-for-what-you-ask: `trace = false` (what [[pageRank]]
-    * passes) skips the delta job entirely unless `tolUnits > 0` forces
-    * it for the early-stop check, and the returned trace is then empty.
-    *
-    * Per-round driver contract with trace off: ONE blocking action (the
-    * contribution agg's lineage cut) and ZERO scalar fetches — the
-    * dangling mass re-enters the rank update as a broadcast single-row
-    * cross-join read from the already-materialized agg, never via the
-    * driver. No node-list ever reaches the driver either way.
-    */
-  def pageRankRun(edges: DataFrame, srcCol: String = "src",
-                  dstCol: String = "dst",
-                  weightCol: Option[String] = None, iters: Int = 5,
-                  dampNum: Long = 85L, dampDen: Long = 100L,
-                  unit: Long = 1000000000L,
-                  tolUnits: Long = 0L,
-                  trace: Boolean = true): (DataFrame, Seq[Long]) = {
+               unit: Long = 1000000000L): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampNum >= 0 && dampNum <= dampDen && dampDen > 0,
       s"damping must satisfy 0 <= dampNum <= dampDen, got $dampNum/$dampDen")
-    require(tolUnits >= 0, s"tolUnits must be >= 0, got $tolUnits")
     val w = weightCol.map(col).getOrElse(lit(1L)).cast("long")
     // consolidate duplicates; self-loops stay legal (a domain linking to
     // itself feeds its own rank back, which the formula handles).
@@ -134,17 +112,14 @@ object Graphs {
     val hasDangling = danglingIds.head(1).nonEmpty
     val tele = unit * (dampDen - dampNum) / (dampDen * n)
     var ranks = nodes.select(col("id"), lit(unit / n).as("r"))
-    val deltas = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var round = 0
-    var converged = false
-    while (round < iters && !converged) {
+    for (_ <- 0 until iters) {
       // ONE aggregation job per round (r18 verdict item: the dangling
       // mass used to be its own blocking action before the contribution
       // job — dead driver sync at high iteration counts): dangling rank
       // rows ride INTO the contribution agg under the NULL group key —
       // impossible to collide with a node id, since node ids are
       // filtered non-null up front. The cut materializes the combined
-      // agg once; the scalar fetch and the `next` build both read the
+      // agg once; the dangling share and the rank update both read the
       // materialized frame.
       val contribs0 = eAnn
         .join(ranks.select(col("id").as("src"), col("r")), Seq("src"))
@@ -162,8 +137,8 @@ object Graphs {
       // The cut below is the round's ONE blocking action: it
       // materializes the combined agg, and everything downstream —
       // the rank update, the dangling share, next round's join — reads
-      // the checkpointed leaf. `next` itself is deliberately NOT cut:
-      // its plan is a node-sized join over two checkpointed leaves
+      // the checkpointed leaf. The new ranks are deliberately NOT cut:
+      // their plan is a node-sized join over two checkpointed leaves
       // (nodes, agged), so lineage depth stays bounded without paying
       // a second job per round (the r18-anchor shape, minus even the
       // dangling scalar fetch).
@@ -172,7 +147,7 @@ object Graphs {
         .transform(graft.plans.Iterative.cut)
       val updated = nodes.select(col("id"))
         .join(agged.filter(col("id").isNotNull), Seq("id"), "left")
-      val next =
+      ranks =
         if (!hasDangling)
           updated.select(col("id"),
             (lit(tele) + coalesce(col("csum"), lit(0L))).as("r"))
@@ -188,26 +163,12 @@ object Graphs {
                 expr(s"__dm * ${dampNum}L div (${dampDen}L * ${n}L)") +
                 coalesce(col("csum"), lit(0L))).as("r"))
         }
-      // convergence trace: Σ|r'−r| over the two cut (node-sized) frames.
-      // Opt-in (r19 verdict/advice): this is a blocking join+agg+head()
-      // per round, dead weight for callers that discard the trace — run
-      // it only when asked for, or when the early-stop check needs it.
-      if (trace || tolUnits > 0) {
-        val delta = next.join(ranks.withColumnRenamed("r", "__rp"), Seq("id"))
-          .agg(coalesce(sum(abs(col("r") - col("__rp"))), lit(0L)))
-          .head().getLong(0)
-        deltas += delta
-        converged = tolUnits > 0 && delta <= tolUnits
-      }
-      ranks = next
-      round += 1
     }
     val inDeg = e.groupBy(col("dst").as("id"))
       .agg(count(lit(1)).as("n_in"))
-    val out = ranks.join(nodes, Seq("id"))
+    ranks.join(nodes, Seq("id"))
       .join(inDeg, Seq("id"), "left")
       .select(col("id"), col("r").as("pr_units"), col("outw").as("out_weight"),
         coalesce(col("n_in"), lit(0L)).as("n_in"))
-    (out, deltas.toSeq)
   }
 }

@@ -701,22 +701,25 @@ object NearDup {
     * [[simhashMembership]] build on, so the two always agree. Each
     * DISTINCT normalized text is hashed once, not once per copy: on a
     * dup-heavy corpus the per-token digest work is the dominant cost and
-    * shrinks by the duplication factor; ids rejoin through an 8-byte
-    * text-hash key (lower/trim is idempotent, so simhash over the
-    * normalized text equals simhash over the raw text). A NULL text has
-    * no signature and is dropped — kept, its NULL signature would group
-    * every NULL-text doc into one fake exact-dup group in the collapsed
-    * output (the [[signaturePairs]] rule for NULL signatures).
+    * shrinks by the duplication factor; ids rejoin on (8-byte text
+    * hash, text) — the text confirms membership, so two texts that
+    * collide on the hash keep their own signatures (lower/trim is
+    * idempotent, so simhash over the normalized text equals simhash over
+    * the raw text). A NULL text has no signature and is dropped — kept,
+    * its NULL signature would group every NULL-text doc into one fake
+    * exact-dup group in the collapsed output (the [[signaturePairs]] rule
+    * for NULL signatures).
     */
-  private def simhashMembers(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+  private[graft] def simhashMembers(docs: DataFrame, idCol: String,
+                                    textCol: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val norm = docs.select(col(idCol).as("id"), lower(trim(col(textCol))).as("t"))
       .filter(col("t").isNotNull)
-    val textSigs = norm.select(xxhash64(col("t")).as("th"), col("t"))
-      .dropDuplicates("th")
-      .select(col("th"), simhash(col("t")).as("sh"))
-    norm.select(col("id"), xxhash64(col("t")).as("th"))
-      .join(textSigs, "th")
+    val keyed = norm.select(col("id"), xxhash64(col("t")).as("th"), col("t"))
+    val textSigs = keyed.select(col("th"), col("t"))
+      .dropDuplicates("th", "t")
+      .select(col("th"), col("t"), simhash(col("t")).as("sh"))
+    keyed.join(textSigs, Seq("th", "t"))
       .select("id", "sh")
   }
 

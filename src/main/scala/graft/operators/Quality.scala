@@ -701,7 +701,7 @@ object Quality {
     * inside "ab␟a" and fuse the whole word). Every round is
     * VOCABULARY-bounded: a pair-count aggregation over the dictionary
     * and a codegen replace projection per accepted merge; the driver
-    * holds only the round's top-K pair table, and `localCheckpoint`
+    * holds only the round's top-K pair table, and an `Iterative.cut`
     * every 8 merges cuts the replace-chain lineage.
     *
     * Exactness argument (why a batch prefix is safe). Candidates are
@@ -848,7 +848,7 @@ object Quality {
         }
         sinceCheckpoint += accepted.size
         if (sinceCheckpoint >= 8) {
-          dict = dict.localCheckpoint()
+          dict = dict.transform(graft.plans.Iterative.cut)
           sinceCheckpoint = 0
         }
       }
@@ -1474,7 +1474,7 @@ object Quality {
     * score < q(qLow) ⇒ 'tail'; < q(qHigh) ⇒ 'middle'; else 'head'.
     *
     * Scale notes: the cutoffs are TWO scalar quantiles computed by ONE
-    * batched [[Summaries.exactQuantiles]] narrowing (O(log) fused passes
+    * batched [[Summaries.exactQuantilesPerColumn]] narrowing (O(log) fused passes
     * shared by both ranks, never a value→count buffered aggregate), after
     * which the
     * bucketing itself is a pure plan-constant projection — no global
@@ -1494,10 +1494,11 @@ object Quality {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bucket = try {
       // BOTH cutoffs in one batched narrowing — shared stats/min-max
-      // passes and fused per-round jobs; two independent exactQuantile
-      // calls would double every full-corpus scan (measured as the q89
-      // 24-job cascade at sf0.1)
-      Summaries.exactQuantiles(cached, "mean_logprob", Seq(qLow, qHigh)) match {
+      // passes and fused per-round jobs; two independent single-quantile
+      // narrowings would double every full-corpus scan (measured as the
+      // q89 24-job cascade at sf0.1)
+      Summaries.exactQuantilesPerColumn(cached,
+          Seq("mean_logprob" -> Seq(qLow, qHigh)))("mean_logprob") match {
         case Seq(Some(lo), Some(hi)) =>
           when(col("mean_logprob").isNull, lit(null).cast("string"))
             .when(col("mean_logprob") < lit(lo), lit("tail"))

@@ -42,78 +42,6 @@ object Sampling {
       .drop("__cum")
   }
 
-  /** Skew-proof form of [[tokenBudgetPerStratum]] for MEGA-strata: when
-    * one stratum is a dominant fraction of a 100 TB corpus (one language
-    * at 40%), the single-phase window sorts that stratum on ONE task
-    * chain. This two-phase cut range-partitions each stratum across
-    * `slices` ordered partitions, computes per-slice token totals (a tiny
-    * aggregate — at most slices + strata rows), turns them into per-slice
-    * running OFFSETS on the driver, and finishes with a window keyed by
-    * (slice, stratum) — so the sort work spreads over `slices` tasks per
-    * stratum and no task ever sorts more than its slice.
-    *
-    * Output is EXACTLY [[tokenBudgetPerStratum]]'s (spec-pinned) provided
-    * `order` is a total order within each stratum (the same requirement
-    * the single-phase form has for determinism) and `tokenCount` is
-    * INTEGRAL — counts are cast to long here so the driver-side offset
-    * fold and the executor-side running sum share one arithmetic domain;
-    * fractional counts would truncate and diverge from the single-phase
-    * form, so use that form (or pre-round) for fractional weights.
-    *
-    * Cost: one range exchange + a localCheckpoint materialization (the
-    * slice ids must stay FIXED between the totals pass and the final
-    * window — range sampling is not re-run-stable), one small aggregate
-    * job at plan-construction time (same plan-time-decision class as
-    * `profileGatedDateCasts`), and the (slice, stratum)-keyed window.
-    */
-  def tokenBudgetPerStratumSliced(df: DataFrame, stratumCol: Column,
-                                  order: Seq[Column], tokenCount: Column,
-                                  budget: Long, slices: Int): DataFrame = {
-    require(slices >= 1, s"slices must be >= 1, got $slices")
-    val spark = df.sparkSession
-    val prepared = df.withColumn("__stratum", stratumCol)
-      // token counts are integral by contract; the long form keeps the
-      // driver-side offset fold and the executor-side running sum in ONE
-      // arithmetic domain
-      .withColumn("__tok", tokenCount.cast("long"))
-      .repartitionByRange(slices, (col("__stratum") +: order): _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
-    // per-(slice, stratum) token totals → exclusive running offset per
-    // stratum in slice order; ≤ slices + strata rows reach the driver
-    // (range partitioning clusters each stratum into contiguous slices)
-    val totals = prepared.groupBy(col("__pid"), col("__stratum"))
-      .agg(coalesce(sum(col("__tok")), lit(0L)).as("__t"))
-      .collect()
-    val offsetRows = totals
-      .groupBy(_.get(1))
-      .iterator.flatMap { case (_, rows) =>
-        rows.sortBy(_.getInt(0)).foldLeft((0L, List.empty[org.apache.spark.sql.Row])) {
-          case ((acc, out), r) =>
-            (acc + r.getLong(2),
-              org.apache.spark.sql.Row(r.getInt(0), r.get(1), acc) :: out)
-        }._2
-      }.toSeq
-    val offsetSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("__pid2",
-        org.apache.spark.sql.types.IntegerType),
-      prepared.schema("__stratum").copy(name = "__stratum2"),
-      org.apache.spark.sql.types.StructField("__offset",
-        org.apache.spark.sql.types.LongType)))
-    val offsets = spark.createDataFrame(
-      new java.util.ArrayList(scala.jdk.CollectionConverters
-        .SeqHasAsJava(offsetRows).asJava), offsetSchema)
-    val w = Window.partitionBy(col("__pid"), col("__stratum"))
-      .orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    prepared.join(broadcast(offsets),
-        col("__pid") === col("__pid2") && col("__stratum") <=> col("__stratum2"))
-      .withColumn("__cum", col("__offset") + sum(col("__tok")).over(w))
-      .filter(col("__cum") - col("__tok") < budget)
-      .drop("__pid", "__pid2", "__stratum", "__stratum2", "__offset",
-        "__cum", "__tok")
-  }
-
   /** Concat-and-chunk sequence packing: assign each document its position
     * in the fixed-length training sequences a pretraining run would cut
     * from the stratum's concatenated token stream. With documents ordered
@@ -124,10 +52,9 @@ object Sampling {
     * which is all a loader needs to reassemble chunks).
     *
     * Adds `seq_id` and `seq_offset`. Deterministic — no RNG, stable
-    * across retries and engines. Same window shape (and therefore the
-    * same mega-stratum caveat and sliced escape path) as
+    * across retries and engines. Same window shape as
     * [[tokenBudgetPerStratum]]: one shuffle on the stratum key + one
-    * per-stratum sort.
+    * per-stratum sort, so a dominant stratum sorts on one task chain.
     */
   def packSequences(df: DataFrame, stratumCol: Column, order: Seq[Column],
                     tokenCount: Column, seqLen: Long): DataFrame = {
@@ -146,10 +73,7 @@ object Sampling {
     * reads its own budget from the map (strata absent from the map are
     * DROPPED — an unlisted source contributes nothing to the mix).
     * One window over the stratum key, same scale posture as the
-    * single-budget form. NOTE the sliced mega-stratum escape
-    * ([[tokenBudgetPerStratumSliced]]) currently takes ONE budget — for
-    * a mix whose dominant stratum needs slicing, run the sliced form on
-    * that stratum alone and this cut on the rest.
+    * single-budget form.
     */
   def tokenBudgetMix(df: DataFrame, stratumCol: Column, order: Seq[Column],
                      tokenCount: Column, budgets: Map[String, Long]): DataFrame = {

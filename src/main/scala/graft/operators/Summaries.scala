@@ -491,67 +491,39 @@ object Summaries {
       "mean") ++ qNames).map(col): _*)
   }
 
-  /** EXACT interpolated quantile (percentile_cont semantics — identical
+  /** EXACT interpolated quantiles (percentile_cont semantics — identical
     * to Spark's `percentile` and DuckDB's `quantile_cont`) computed by
     * iterative histogram narrowing instead of buffering every value:
-    * each round is one distributed pass that buckets the candidate
+    * each round is one distributed pass that buckets every candidate
     * interval into 128 equal widths and fuses the boundary recounts,
-    * the interval narrows to the bucket holding the target rank, and
+    * each interval narrows to the bucket holding its target rank, and
     * once few enough candidates remain they are collected and selected
     * exactly. O(log) passes, bounded driver data — the 100 TB path for
     * exact medians, where the `percentile` aggregate (which holds a
     * value→count map per partial) stops scaling.
     *
-    * Both ranks of a non-integral target share ONE narrowing (adjacent
-    * order statistics land in the same collected interval; the second
-    * is re-narrowed only in the boundary-straddling case). ±Infinity
-    * values are counted once and selected positionally — narrowing runs
-    * over the finite range only, so the interval arithmetic can't
-    * overflow (width is computed as hi/128 − lo/128 for the same
-    * reason). Massive tie clusters resolve exactly via distinct-value
-    * selection, and a narrowing stall on an adversarially dense interval
-    * degrades to an exact distributed sort-selection (slower, never a
-    * failure — data shape alone can't abort a long pipeline). NaNs are
-    * excluded (SQL aggregate semantics); None for an empty/all-null
-    * column.
-    */
-  def exactQuantile(df: DataFrame, c: String, q: Double,
-                    collectThreshold: Int = 1 << 20): Option[Double] =
-    exactQuantiles(df, c, Seq(q), collectThreshold).head
-
-  /** Batched form of [[exactQuantile]]: EVERY requested quantile shares
-    * one stats pass, one min/max pass, and ONE narrowing sequence. Ranks
-    * whose candidate intervals coincide (interpolation pairs, nearby
-    * quantiles) travel in a shared group; per round, all still-active
-    * intervals are bucket-counted in a SINGLE job and recounted/tightened
-    * in a SINGLE fused aggregate, so asking for two cutoffs (the
-    * perplexity-bucket tail/head pattern) costs the same number of
-    * full-corpus scans as asking for one. Per-element semantics are
-    * exactly [[exactQuantile]]'s: percentile_cont interpolation, ±Inf
-    * selected positionally, overflow-safe interval arithmetic, tie
-    * clusters via distinct-value selection, and a narrowing stall
-    * degrading to exact distributed sort-selection (slower, never a
-    * failure).
-    */
-  def exactQuantiles(df: DataFrame, c: String, qs: Seq[Double],
-                     collectThreshold: Int = 1 << 20): Seq[Option[Double]] =
-    exactQuantilesPerColumn(df, Seq(c -> qs), collectThreshold)(c)
-
-  /** The fully-batched core: ALL requested quantiles of ALL requested
-    * columns share one stats pass and ONE narrowing sequence. Ranks whose
-    * candidate intervals coincide (interpolation pairs, nearby quantiles)
-    * travel in a shared group; per round, every still-active interval —
+    * ALL requested quantiles of ALL requested columns share one stats
+    * pass and ONE narrowing sequence. Ranks whose candidate intervals
+    * coincide (interpolation pairs, nearby quantiles) travel in a shared
+    * group that splits only when its ranks choose different buckets.
+    * Per round, every still-active interval —
     * across every column — is bucket-counted in a SINGLE job over one
     * (column, value) entries stream and recounted/tightened in a SINGLE
     * fused aggregate. A 10-column exact dataset-card profile (or a
-    * multi-column equi-depth cut set) therefore costs the same number of
-    * passes over the data as one column, not ten. Per-element semantics
-    * are exactly [[exactQuantile]]'s: percentile_cont interpolation,
-    * ±Inf selected positionally per column, overflow-safe interval
-    * arithmetic, tie clusters via distinct-value selection, and a
-    * narrowing stall degrading to exact distributed sort-selection
-    * (slower, never a failure). Absent/empty/all-NULL columns yield
-    * all-None.
+    * multi-column equi-depth cut set, or the perplexity-bucket
+    * tail/head cutoff pair) therefore costs the same number of passes
+    * over the data as one quantile of one column.
+    *
+    * Per-element semantics: percentile_cont interpolation; ±Infinity
+    * values are counted once per column and selected positionally —
+    * narrowing runs over the finite range only, so the interval
+    * arithmetic can't overflow (width is computed as hi/128 − lo/128
+    * for the same reason); massive tie clusters resolve exactly via
+    * distinct-value selection; and a narrowing stall on an adversarially
+    * dense interval degrades to an exact distributed sort-selection
+    * (slower, never a failure — data shape alone can't abort a long
+    * pipeline). NaNs are excluded (SQL aggregate semantics);
+    * absent/empty/all-NULL columns yield all-None.
     *
     * Cost: one stats pass + two jobs per narrowing round (none while every
     * column holds at most `collectThreshold` finite values) + ONE collect

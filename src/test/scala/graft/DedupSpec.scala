@@ -154,7 +154,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connectedComponents: a long chain still converges (label shortcuts compound)") {
-    // path 0-1-2-...-12: diameter 12, maxIter 15 must suffice and the
+    // path 0-1-2-...-12: diameter 12, the 15-round cap must suffice and the
     // whole component must collapse to label 0
     val pairs = (0L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val out = Dedup.connectedComponents(pairs).as[(Long, Long)].collect()
@@ -185,11 +185,12 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connectedComponents auto: long-chain graph falls back to star-contraction and converges") {
-    // a 300-node path: label propagation would need ~300 rounds; the auto
-    // fallback must still produce the exact labeling
-    val pairs = (0L until 299L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val out = Dedup.connectedComponents(pairs, maxIter = 5).as[(Long, Long)].collect()
-    assert(out.length === 300 && out.forall(_._2 === 0L))
+    // a 30-node path: label propagation needs 29 rounds, past its 15-round
+    // cap, so the auto fallback runs and must produce the exact labeling
+    val pairs = (0L until 29L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    assert(Dedup.labelPropagation(pairs, "id_a", "id_b", maxIter = 15).isEmpty)
+    val out = Dedup.connectedComponents(pairs).as[(Long, Long)].collect()
+    assert(out.length === 30 && out.forall(_._2 === 0L))
   }
 
   test("connectedComponentsStar: chain converges in O(log² n) rounds (in-bound maxIter)") {
@@ -226,17 +227,6 @@ class DedupSpec extends SparkSpec {
         assert(star === label, s"trial $trial: star/label disagree")
       }
     }
-  }
-
-  test("dropNearDuplicates keeps one canonical doc per component, unpaired docs survive") {
-    val docs = Seq(
-      (1L, "a"), (2L, "a'"), (3L, "a''"), // one near-dup cluster
-      (7L, "lonely")                      // in no pair
-    ).toDF("doc_id", "text")
-    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-    val out = Dedup.dropNearDuplicates(docs, "doc_id", pairs)
-      .select("doc_id").as[Long].collect().toSet
-    assert(out === Set(1L, 7L))
   }
 
   test("keepBestPerComponent keeps the highest score per group, ties to smallest id") {

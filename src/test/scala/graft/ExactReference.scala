@@ -4,12 +4,12 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Spec-side references for the exact order-statistic operators, written
-  * the plain way the operators avoid: Spark's buffered `percentile`
-  * aggregate over the NaN-filtered column, and `Window.orderBy`
-  * cumulative sums (one single-task sort). The operators answer through
-  * `Summaries.exactQuantilesPerColumn` and distributed prefix-sums;
-  * specs pin both to these.
+/** Spec-side references for the exact operators, written the plain way
+  * the operators avoid: Spark's buffered `percentile` aggregate over the
+  * NaN-filtered column, `Window.orderBy` cumulative sums (one
+  * single-task sort), and a driver-side Lloyd's loop. The operators
+  * answer through `Summaries.exactQuantilesPerColumn`, distributed
+  * prefix-sums and `Ann.pqTrainCodebooksExact`; specs pin them to these.
   */
 object ExactReference {
   def round5(v: Double): Double =
@@ -80,4 +80,34 @@ object ExactReference {
       .withColumn("active", sum("delta").over(Window.orderBy("t")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)).cast("long"))
   }
+
+  /** `Ann.kmeansCentroidsExact` on the driver: each vector goes to the
+    * nearest centroid by left-to-right double L2² (strict `<`, so ties
+    * keep the lower id), clusters sum `floor(v·1e6 + 0.5)` micro-units as
+    * longs, the new element is `(sum / n / 1e6).toFloat`, and an empty
+    * cluster keeps its centroid. */
+  def kmeans(vecs: Seq[Array[Float]], init: Array[Array[Float]],
+             iters: Int): Array[Array[Float]] =
+    (0 until iters).foldLeft(init) { (cents, _) =>
+      val dim = cents.head.length
+      val sums = Array.fill(cents.length, dim)(0L)
+      val counts = new Array[Long](cents.length)
+      vecs.foreach { v =>
+        var best = Double.MaxValue
+        var cid = 0
+        cents.indices.foreach { c =>
+          val d = v.indices.foldLeft(0.0) { (acc, i) =>
+            val dv = v(i).toDouble - cents(c)(i).toDouble
+            acc + dv * dv
+          }
+          if (d < best) { best = d; cid = c }
+        }
+        counts(cid) += 1
+        v.indices.foreach(i => sums(cid)(i) += math.floor(v(i).toDouble * 1e6 + 0.5).toLong)
+      }
+      cents.indices.map { c =>
+        if (counts(c) == 0) cents(c)
+        else sums(c).map(t => (t.toDouble / counts(c) / 1e6).toFloat)
+      }.toArray
+    }
 }

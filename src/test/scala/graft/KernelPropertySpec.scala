@@ -76,7 +76,7 @@ class KernelPropertySpec extends SparkSpec {
       val threshold = Seq(2, 8, 64, 1 << 20)(rnd.nextInt(4))
       val df = values.map(Tuple1(_)).toDF("x")
       val expected = df.agg(expr(s"percentile(x, $q)")).head().getDouble(0)
-      val got = Summaries.exactQuantile(df, "x", q, threshold)
+      val got = Summaries.exactQuantilesPerColumn(df, Seq("x" -> Seq(q)), threshold)("x").head
       assert(got === Some(expected),
         s"trial $trial kind=${trial % 5} n=${values.size} q=$q thr=$threshold")
     }

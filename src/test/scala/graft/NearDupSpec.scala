@@ -333,6 +333,15 @@ class NearDupSpec extends SparkSpec {
     // per-instance intra mass is all there after expansion: C(3,2)+C(2,2)*2
     assert(perInstance.count(_._3 == 0) === 3 + 1 + 1)
     assert(expanded.count(p => p._3 > 0 && Set(p._1, p._2).subsetOf(Set(1L, 5L, 9L, 2L, 7L))) === 6)
+    // each member carries the signature of its OWN text: the distinct-text
+    // step is keyed on (text hash, text), so a hash collision between two
+    // texts cannot hand one of them the other's signature
+    val sigs = NearDup.simhashMembers(docs, "doc_id", "text")
+      .join(docs.select(col("doc_id").as("id"),
+        NearDup.simhash(lower(trim(col("text")))).as("own")), "id")
+      .select("id", "sh", "own").as[(Long, Long, Long)].collect()
+    assert(sigs.map(_._1).sorted.toSeq === Seq(1L, 2L, 3L, 4L, 5L, 7L, 8L, 9L))
+    assert(sigs.forall(r => r._2 == r._3), sigs.mkString(","))
   }
 
   test("split-leakage over rep pairs equals the per-instance audit (dup-heavy)") {

@@ -80,38 +80,6 @@ class PageRankSpec extends SparkSpec {
     assert(total <= 1000000000L && total >= 1000000000L - 5 * 3 * 2)
   }
 
-  test("convergence trace: deltas shrink, tolUnits stops early, ranks unchanged") {
-    import spark.implicits._
-    val edges = Seq(
-      ("a", "b", 3L), ("a", "c", 1L), ("b", "c", 2L), ("c", "a", 1L),
-      ("b", "sink", 1L), ("c", "sink", 2L))
-    val df = edges.toDF("src", "dst", "w")
-    val (full, trace) = Graphs.pageRankRun(df, weightCol = Some("w"), iters = 8)
-    assert(trace.size === 8)
-    // the fixed point contracts: the tail delta is far below the head
-    assert(trace.last < trace.head / 10,
-      s"expected contraction, got $trace")
-    // tol = the round-4 delta → the loop must stop at round 4 with the
-    // SAME ranks a hand-stopped 4-round run produces
-    val tol = trace(3)
-    val (early, earlyTrace) = Graphs.pageRankRun(df, weightCol = Some("w"),
-      iters = 8, tolUnits = tol)
-    assert(earlyTrace.size === 4)
-    val four = Graphs.pageRank(df, weightCol = Some("w"), iters = 4)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(early.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      === four)
-    // and the default tol=0 path still returns every node
-    assert(full.count() === 4)
-    // trace=false (the pageRank path) skips the per-round delta job:
-    // empty trace, identical ranks
-    val (quiet, quietTrace) = Graphs.pageRankRun(df, weightCol = Some("w"),
-      iters = 8, trace = false)
-    assert(quietTrace.isEmpty)
-    assert(quiet.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      === full.collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-  }
-
   test("out_weight and n_in report the consolidated graph") {
     import spark.implicits._
     val df = Seq(("a", "b", 1L), ("a", "b", 2L), ("c", "b", 1L), ("b", "a", 1L))

@@ -173,8 +173,8 @@ class PlanSpec extends SparkSpec {
 
   test("q89 perplexity buckets: plan-constant cuts over a zero-shuffle score") {
     val p = plan("q89_perplexity_buckets")
-    // the quantile cuts are computed at plan BUILD (exactQuantiles) and
-    // baked in as literals — bucketing must never rank/sort the corpus,
+    // the quantile cuts are computed at plan BUILD (exactQuantilesPerColumn)
+    // and baked in as literals — bucketing must never rank/sort the corpus,
     // and scoring itself is now a graft_vocab_lnp kernel projection
     // (zero joins, zero exchanges — the old form shuffled the token
     // stream for the per-doc mean)

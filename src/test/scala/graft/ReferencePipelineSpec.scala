@@ -221,7 +221,7 @@ class ReferencePipelineSpec extends SparkSpec {
       Set("numeric", "categorical", "histogram", "equidepth"))
     // numeric: mean of los_days (3, NULL, 1) = 2 — exact on BOTH median
     // paths (the default card median is the approx sketch, so the mean is
-    // the stable fact to pin here; exactQuantiles equality is spec'd in
+    // the stable fact to pin here; exactQuantilesPerColumn equality is spec'd in
     // the operator suites)
     val mean = card.filter(col("section") === "numeric" && col("item") === "mean")
       .select("col_name", "value_d").head()

@@ -71,13 +71,20 @@ class ScaleOpsSpec extends SparkSpec {
       (if (j == c) 1f else 0f) + (if (j == 8 + c) 0.001f * (i / 4 + 1) else 0f)).toSeq)
   }.toDF("vec_id", "embedding")
 
+  private def rootMessages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(c => Option(c.getMessage).getOrElse("")).mkString(" | ")
+
   test("exactQuantile matches the percentile aggregate across random data, ties, edges") {
     import graft.operators.Summaries
     val rnd = new scala.util.Random(23)
+    def quantileOf(df: org.apache.spark.sql.DataFrame, q: Double,
+                   threshold: Int = 1 << 20): Option[Double] =
+      Summaries.exactQuantilesPerColumn(df, Seq("x" -> Seq(q)), threshold)("x").head
     def check(values: Seq[Double], q: Double, threshold: Int): Unit = {
       val df = values.map(Tuple1(_)).toDF("x")
       val expected = df.agg(expr(s"percentile(x, $q)")).head().getDouble(0)
-      val got = Summaries.exactQuantile(df, "x", q, collectThreshold = threshold)
+      val got = quantileOf(df, q, threshold)
       assert(got === Some(expected), s"q=$q threshold=$threshold n=${values.size}")
     }
     // random continuous data, forced through several narrowing rounds
@@ -91,8 +98,7 @@ class ScaleOpsSpec extends SparkSpec {
     check(Seq(7.0), 0.5, 16)
     check(Seq(1.0, 2.0), 0.5, 16)
     // empty / all-null
-    assert(Summaries.exactQuantile(
-      Seq.empty[Tuple1[java.lang.Double]].toDF("x"), "x", 0.5) === None)
+    assert(quantileOf(Seq.empty[Tuple1[java.lang.Double]].toDF("x"), 0.5) === None)
     // ±Infinity selects positionally, like the percentile aggregate
     check(Seq(Double.NegativeInfinity, 1.0, 2.0, 3.0, Double.PositiveInfinity), 0.5, 16)
     check(Seq(Double.NegativeInfinity, Double.NegativeInfinity, 5.0), 0.0, 16)
@@ -103,7 +109,7 @@ class ScaleOpsSpec extends SparkSpec {
     // unpinnable — the percentile aggregate's own -0.0/0.0 representative
     // depends on partial-merge order (observed -0.0 single-partition)
     val sz = Seq(-0.0, 0.0).map(Tuple1(_)).toDF("x")
-    val got = Summaries.exactQuantile(sz, "x", 0.5, collectThreshold = 16)
+    val got = quantileOf(sz, 0.5, threshold = 16)
     assert(got.get == 0.0, s"got $got")
   }
 
@@ -267,8 +273,8 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("IVF topK finds the same top-1 as brute force for clustered data") {
     val queries = clustered.filter(col("vec_id") < 4)
-    val ivf = Ann.ivfTopK(queries, clustered, "vec_id", "embedding",
-      k = 1, nCentroids = 8, nProbe = 3)
+    val ivf = Ann.ivfTopKWith(queries, clustered, "vec_id", "embedding", k = 1,
+        Ann.strideCentroids(clustered, "vec_id", "embedding", 8), nProbe = 3)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toMap
     val bf = Ann.bruteForceTopK(queries, clustered, "vec_id", "embedding", k = 1)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toMap
@@ -350,7 +356,7 @@ class ScaleOpsSpec extends SparkSpec {
   test("IVF-PQ at nProbe=1 keeps neighbors in the query's own cluster") {
     val cbs = Ann.pqCodebooks(
       Ann.strideCentroids(clustered, "vec_id", "embedding", 16), m = 4)
-    val cents = Ann.kmeansCentroids(clustered, "embedding",
+    val cents = Ann.kmeansCentroidsExact(clustered, "embedding",
       Ann.strideCentroids(clustered, "vec_id", "embedding", 4), iters = 3)
     val queries = clustered.filter(col("vec_id") < 4)
     val top = Ann.ivfPqTopK(queries, clustered, "vec_id", "embedding",
@@ -364,9 +370,6 @@ class ScaleOpsSpec extends SparkSpec {
   test("PQ rejects dimension-mismatched vectors loudly") {
     val cbs = Ann.pqCodebooks(
       Ann.strideCentroids(clustered, "vec_id", "embedding", 16), m = 4)
-    def rootMessages(t: Throwable): String =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-        .map(c => Option(c.getMessage).getOrElse("")).mkString(" | ")
     // encode: a short vector would SILENTLY produce truncated-prefix codes
     // (slice + the distance kernel's length guard) — must raise instead
     val shortVecs = clustered.select(col("vec_id"),
@@ -515,14 +518,14 @@ class ScaleOpsSpec extends SparkSpec {
     assert(lsh(0)._2 >= lsh(1)._2 && lsh(1)._2 >= lsh(2)._2, lsh.toString)
     assert(lsh(0)._2 >= 0.15, s"LSH@6 floor: ${lsh(0)._2}") // measured 0.24
     // IVF: more probes → more candidate cells → monotone recall
+    val stride16 = Ann.strideCentroids(e, "vec_id", "embedding", 16)
     val ivf = Seq(1, 2, 4).map(p =>
-      p -> mean(Ann.ivfTopK(queries, e, "vec_id", "embedding", k, 16, p)))
+      p -> mean(Ann.ivfTopKWith(queries, e, "vec_id", "embedding", k, stride16, p)))
     info(s"IVF nCent=16 (nProbe → recall): $ivf")
     assert(ivf(0)._2 <= ivf(1)._2 && ivf(1)._2 <= ivf(2)._2, ivf.toString)
     assert(ivf(2)._2 >= 0.35, s"IVF@4 floor: ${ivf(2)._2}") // measured 0.50
     // PQ: more subspaces → finer quantization → higher recall
-    val cents = Ann.kmeansCentroids(e, "embedding",
-      Ann.strideCentroids(e, "vec_id", "embedding", 16), iters = 5)
+    val cents = Ann.kmeansCentroidsExact(e, "embedding", stride16, iters = 5)
     val pq = Seq(8, 16).map { m =>
       val books = Ann.pqCodebooks(cents, m)
       m -> mean(Ann.pqTopK(queries,
@@ -568,7 +571,7 @@ class ScaleOpsSpec extends SparkSpec {
       got.intersect(truth).size.toDouble / truth.size
     }
     val stride = Ann.strideCentroids(e, "vec_id", "embedding", 16)
-    val km = Ann.kmeansCentroids(e, "embedding", stride, iters = 5)
+    val km = Ann.kmeansCentroidsExact(e, "embedding", stride, iters = 5)
     val (rs, rk) = (recall(stride), recall(km))
     info(s"recall stride=$rs kmeans=$rk")
     assert(rk >= rs, s"kmeans recall $rk fell below stride baseline $rs")
@@ -586,23 +589,51 @@ class ScaleOpsSpec extends SparkSpec {
     assert(Ann.autoCentroidCount(10000, maxK = 50) === 50)
   }
 
-  test("kmeansCentroidsExact tracks the double-mean kmeans within quantization error") {
-    // same init, same data, same iteration count: the exact-integer mean
-    // path must land within the 5e-7-per-element-per-iteration quantization
-    // bound of the double-mean path (and iters=0 must be the identity)
+  test("kmeansCentroidsExact equals a driver-side micro-unit Lloyd's bit-for-bit") {
+    // same init, same data, same iteration count: the distributed loop
+    // must reproduce ExactReference.kmeans exactly (and iters=0 must be
+    // the identity)
     val dir = "/root/testdata/sf0.001"
     val e = graft.sources.Tables.embeddings(spark, dir)
     val init = Ann.strideCentroids(e, "vec_id", "embedding", 16)
     assert(Ann.kmeansCentroidsExact(e, "embedding", init, iters = 0)
       .zip(init).forall { case (a, b) => a.sameElements(b) })
-    val km = Ann.kmeansCentroids(e, "embedding", init, iters = 2)
+    val vecs = e.select("embedding").as[Seq[Float]].collect().map(_.toArray).toSeq
     val ex = Ann.kmeansCentroidsExact(e, "embedding", init, iters = 2)
-    val maxDiff = km.zip(ex).flatMap { case (a, b) =>
-      a.zip(b).map { case (x, y) => math.abs(x - y) } }.max
-    info(s"max |double-mean - exact-mean| element diff: $maxDiff")
-    // loose bound: quantization can flip an assignment on a knife-edge row
-    // in iteration 2, but on this corpus the centroids must stay close
-    assert(maxDiff < 1e-3, s"exact kmeans diverged from double kmeans: $maxDiff")
+    val ref = ExactReference.kmeans(vecs, init, iters = 2)
+    assert(ex.length === ref.length)
+    ex.zip(ref).zipWithIndex.foreach { case ((a, b), c) =>
+      assert(a.map(java.lang.Float.floatToIntBits).toSeq ===
+        b.map(java.lang.Float.floatToIntBits).toSeq, s"centroid $c")
+    }
+    // and the refinement moved something (the comparison is not vacuous)
+    assert(ex.zip(init).exists { case (a, b) => !a.sameElements(b) })
+  }
+
+  test("a wrong-length vector fails k-means and PQ training; NULL vectors are skipped") {
+    val good = Seq(Seq(1f, 0f, 0f, 0f), Seq(0.9f, 0.1f, 0f, 0f),
+      Seq(0f, 1f, 0f, 0f), Seq(0f, 0.8f, 0.2f, 0f))
+    val init = Array(Array(1f, 0f, 0f, 0f), Array(0f, 1f, 0f, 0f))
+    def frame(vs: Seq[Option[Seq[Float]]]) =
+      vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
+    // one short and one long vector: each must fail both trainers (the
+    // assignment kernel alone would score a short vector by its prefix)
+    for (bad <- Seq(Seq(1f, 0f, 0f), Seq(0f, 1f, 0f, 0f, 0f))) {
+      val vecs = frame(good.map(Some(_)) :+ Some(bad))
+      val km = intercept[Exception] {
+        Ann.kmeansCentroidsExact(vecs, "v", init, iters = 1)
+      }
+      assert(rootMessages(km).contains(s"vector dim ${bad.length} != centroid dim 4"),
+        rootMessages(km))
+      val pq = intercept[Exception] {
+        Ann.pqTrainCodebooksExact(vecs, "v", Ann.pqCodebooks(init, 2), iters = 1)
+      }
+      assert(rootMessages(pq).contains(s"vector dim ${bad.length} != centroid dim 4"),
+        rootMessages(pq))
+    }
+    val withNull = frame(good.map(Some(_)) :+ None)
+    assert(Ann.kmeansCentroidsExact(withNull, "v", init, iters = 2).map(_.toSeq).toSeq ===
+      ExactReference.kmeans(good.map(_.toArray), init, iters = 2).map(_.toSeq).toSeq)
   }
 
   test("kmeansCentroidsExact: empty clusters keep their previous centroid") {
@@ -637,21 +668,6 @@ class ScaleOpsSpec extends SparkSpec {
     info(s"autoCentroids IVF (nProbe → recall): $rs")
     assert(rs(0)._2 <= rs(1)._2 && rs(1)._2 <= rs(2)._2, rs.toString)
     assert(rs(1)._2 >= 0.5, s"auto-k IVF@4 floor: ${rs(1)._2}") // measured 0.62
-  }
-
-  test("kmeans: empty clusters keep their previous centroid (no NaN poisoning)") {
-    // two tight groups, FOUR initial centroids — at least two go empty
-    val vecs = (0 until 8).map { i =>
-      val base = if (i < 4) 1.0f else -1.0f
-      (i.toLong, Array.fill(4)(base + i * 1e-3f).toSeq)
-    }.toDF("id", "v")
-    val init = Array(
-      Array.fill(4)(1.0f), Array.fill(4)(-1.0f),
-      Array.fill(4)(100.0f), Array.fill(4)(-100.0f)) // far away → empty
-    val out = Ann.kmeansCentroids(vecs, "v", init, iters = 3)
-    assert(out.length === 4)
-    assert(out.forall(_.forall(x => !x.isNaN)))
-    assert(out(2).sameElements(init(2)) && out(3).sameElements(init(3)))
   }
 
   test("explodeChoices treats the separator literally, not as a regex") {
@@ -695,44 +711,20 @@ class ScaleOpsSpec extends SparkSpec {
     assert(again.select("emb8").head.getSeq[Float](0).length === 8)
   }
 
-  test("sliced token-budget cut equals the single-phase window on a skewed corpus") {
-    import graft.operators.Sampling
-    // mega-stratum: 'en' is ~80% of the corpus — the exact shape that
-    // serializes the single-phase form onto one task chain at scale
-    val rnd = new scala.util.Random(7)
-    val docs = (1 to 4000).map { i =>
-      val lang = if (i % 5 != 0) "en" else Seq("de", "es", "zh")(i % 3)
-      (i.toLong, lang, (rnd.nextInt(50) + 1).toLong)
-    }.toDF("doc_id", "lang", "n_tok")
-    val single = Sampling.tokenBudgetPerStratum(
-      docs, col("lang"), Seq(col("doc_id")), col("n_tok"), budget = 5000L)
-    val sliced = Sampling.tokenBudgetPerStratumSliced(
-      docs, col("lang"), Seq(col("doc_id")), col("n_tok"), budget = 5000L,
-      slices = 16)
-    assert(sliced.columns.sorted === single.columns.sorted)
-    assert(sliced.select("doc_id").as[Long].collect().sorted
-      === single.select("doc_id").as[Long].collect().sorted)
-    // the mega-stratum really does spread: >1 range slice holds 'en' rows
-    val enSlices = docs.withColumn("__stratum", col("lang"))
-      .repartitionByRange(16, col("__stratum"), col("doc_id"))
-      .withColumn("__pid", spark_partition_id())
-      .filter(col("lang") === "en").select("__pid").distinct().count()
-    assert(enSlices > 1, s"expected the mega-stratum to span slices, got $enSlices")
-  }
-
-  test("sliced token-budget cut handles a null stratum and keeps budget semantics") {
+  test("token-budget cut handles a null stratum and keeps budget semantics") {
     import graft.operators.Sampling
     val docs = Seq(
       (1L, null.asInstanceOf[String], 600L), (2L, null.asInstanceOf[String], 600L),
       (3L, "en", 600L), (4L, "en", 300L), (5L, "en", 300L)
     ).toDF("doc_id", "lang", "n_tok")
-    val single = Sampling.tokenBudgetPerStratum(
-      docs, col("lang"), Seq(col("doc_id")), col("n_tok"), budget = 1000L)
-    val sliced = Sampling.tokenBudgetPerStratumSliced(
-      docs, col("lang"), Seq(col("doc_id")), col("n_tok"), budget = 1000L,
-      slices = 3)
-    assert(sliced.select("doc_id").as[Long].collect().sorted
-      === single.select("doc_id").as[Long].collect().sorted)
+    def kept(budget: Long): Seq[Long] = Sampling.tokenBudgetPerStratum(
+        docs, col("lang"), Seq(col("doc_id")), col("n_tok"), budget)
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    // NULL is one stratum of its own; a doc starting under the budget is
+    // kept even when it crosses the line
+    assert(kept(1000L) === Seq(1L, 2L, 3L, 4L, 5L))
+    assert(kept(700L) === Seq(1L, 2L, 3L, 4L))
+    assert(kept(600L) === Seq(1L, 3L))
   }
 
   test("withObjectAggThreshold scopes the fallback per job and restores the default") {
