@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.operators._
-import graft.functions.{Similarity, TextAnalysis}
+import graft.functions.TextAnalysis
 
 /** The operator catalog behind [[SparkEntry]]: one named query per
   * SURVEY.md §2 inventory row, each paired (where SQL-expressible) with a
@@ -1757,8 +1757,8 @@ object Queries {
     // thresholds are the caller's cut. COLLAPSE-FIRST default: pairs are
     // between exact-text representatives with group multiplicities
     // n_l/n_r riding along (dup-heavy increments would otherwise emit
-    // d·e identical rows per duplicated pair); expandCrossNgramPairs
-    // recovers the per-instance stream
+    // d·e identical rows per duplicated pair); a join against each
+    // side's exactTextMembership recovers the per-instance stream
     "q66_cross_neardup" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       NearDup.crossNgramPairs(
@@ -1979,7 +1979,8 @@ object Queries {
     // COLLAPSE-FIRST default: spans are mined over DISTINCT texts (reps =
     // min doc_id, multiplicities n_a/n_b; self-span rows id_a == id_b for
     // duplicated texts) — the d·(d−1)/2 per-instance explosion on
-    // replica-heavy corpora becomes an explicit expandSharedSpans step
+    // replica-heavy corpora becomes an explicit join against
+    // exactTextMembership
     "q78_shared_spans" -> ((s, d) =>
       NearDup.sharedSpans(Tables.documents(s, d), "doc_id", "text", n = 8, minSpan = 12)),
 

@@ -15,20 +15,6 @@ import org.apache.spark.sql.types._
   * inside whole-stage codegen with an O(1)-size tree (vs the O(planes×dim)
   * trees the Column-combinator versions expand to).
   */
-case class FloatVecDot(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftFunctions.checkArrayInputs(prettyName, children.map(_.dataType), Seq(ArrayType(FloatType), ArrayType(FloatType)))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_vec_dot"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.dotF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = graft.functions.VectorOps.dotF($a, $b);")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 case class FloatVecCosine(left: Expression, right: Expression)
     extends BinaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
@@ -636,49 +622,6 @@ case class UnigramCountExpr(child: Expression, entries: Seq[(String, Long)])
     copy(child = newChild)
 }
 
-/** Char-n-gram language ID over a raw string (profiles are plan-time
-  * literals, same encoding as [[LangIdExpr]]'s markers).
-  */
-case class LangIdNgramExpr(child: Expression, profiles: Seq[(String, Seq[String])], n: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName expects string, got ${child.dataType}")
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_lang_id_ngram"
-  @transient private lazy val kernel = new TextKernels.LangIdNgramKernel(profiles, n)
-  override protected def nullSafeEval(v: Any): Any =
-    kernel.eval(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = ctx.addReferenceObj("langIdNgramKernel", kernel, classOf[TextKernels.LangIdNgramKernel].getName)
-    nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $k.eval($v);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** TRUE iff any word n-gram of the token array hashes into the fixed
-  * sorted set — the decontamination gate's plan constant, shipped as ONE
-  * reference object and probed by binary search (see
-  * [[TextKernels.ngramAnyIn]]).
-  */
-case class NgramAnyInExpr(child: Expression, n: Int, sorted: Array[Long])
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    GraftFunctions.checkArrayInputs(prettyName, children.map(_.dataType), Seq(ArrayType(StringType)))
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "graft_ngram_any_in"
-  override protected def nullSafeEval(v: Any): Any =
-    TextKernels.ngramAnyIn(v.asInstanceOf[ArrayData], n, sorted)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val s = ctx.addReferenceObj("ngramSet", sorted, "long[]")
-    nullSafeCodeGen(ctx, ev,
-      v => s"${ev.value} = graft.functions.TextKernels.ngramAnyIn($v, $n, $s);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Count of tokens present in a fixed word set (plan-time literal). */
 case class TokenInSetCountExpr(child: Expression, words: Seq[String])
     extends UnaryExpression {
@@ -815,18 +758,10 @@ object GraftFunctions {
     s.split('|').map(decodeCents)
   }
 
-  /** Hash-set literal format for graft_ngram_any_in (comma-joined
-    * decimals — ~20 bytes/hash in the plan; fine for eval-suite-sized
-    * sets, the ~10⁶ ceiling contaminatedFlag documents).
-    */
-  def encodeLongs(a: Array[Long]): String = a.mkString(",")
-  private def decodeLongs(s: String): Array[Long] =
-    if (s.isEmpty) Array.empty[Long] else s.split(',').map(_.toLong)
-
   /** Markers literal format for graft_lang_id: `lang:w1,w2|lang2:w3`. */
-  // the separators are escaped percent-style so a marker/gram containing
-  // ':' ',' or '|' (routine in CHARACTER n-gram profiles) round-trips
-  // instead of being silently split into wrong grams
+  // the separators are escaped percent-style so a marker containing
+  // ':' ',' or '|' round-trips instead of being silently split into
+  // wrong markers
   private def escMarker(s: String): String = s
     .replace("%", "%25").replace(":", "%3A").replace(",", "%2C").replace("|", "%7C")
   private def unescMarker(s: String): String = s
@@ -934,7 +869,6 @@ object GraftFunctions {
 
   /** (name, builder) for every graft SQL function. */
   val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_vec_dot" -> (es => FloatVecDot(es(0), es(1))),
     "graft_vec_cosine" -> (es => FloatVecCosine(es(0), es(1))),
     "graft_vec_l2sq" -> (es => FloatVecL2Sq(es(0), es(1))),
     "graft_rhp_bucket" -> (es =>
@@ -949,9 +883,6 @@ object GraftFunctions {
       PqAdcExpr(es(0), es(1), decodeBooks(stringLit(es(2), "codebooks")))),
     "graft_lang_id" -> (es =>
       LangIdExpr(es(0), decodeMarkers(stringLit(es(1), "markers")))),
-    "graft_lang_id_ngram" -> (es =>
-      LangIdNgramExpr(es(0), decodeMarkers(stringLit(es(1), "profiles")),
-        intLit(es(2), "n"))),
     "graft_ngram_hashes" -> (es => {
       val n = intLit(es(1), "n")
       // plan-time guard: n <= 0 would allocate a negative-size scratch
@@ -966,13 +897,6 @@ object GraftFunctions {
     }),
     "graft_count_in_set" -> (es =>
       TokenInSetCountExpr(es(0), stringLit(es(1), "words").split(',').toSeq)),
-    "graft_ngram_any_in" -> (es => {
-      val n = intLit(es(1), "n")
-      require(n >= 1, s"graft_ngram_any_in needs n >= 1, got $n")
-      val sorted = decodeLongs(stringLit(es(2), "hashes"))
-      java.util.Arrays.sort(sorted) // binary search contract
-      NgramAnyInExpr(es(0), n, sorted)
-    }),
     "graft_bloom_contains" -> (es =>
       BloomContainsExpr(es(0), binaryLit(es(1), "bloom bytes"))),
     "graft_char_entropy" -> (es => CharEntropyExpr(es(0))),

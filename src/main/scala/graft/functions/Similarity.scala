@@ -5,62 +5,25 @@ import org.apache.spark.sql.functions._
 
 /** Vector similarity columns over `array<float>` embedding columns.
   *
-  * Built on the codegen'd higher-order functions (`zip_with`/`aggregate`)
-  * so the math stays inside whole-stage codegen — no UDF boxing per row.
+  * Each is one native Catalyst expression: an O(1) tree node and one
+  * tight JVM loop per row, inside whole-stage codegen with no UDF boxing.
+  * Requires `GraftFunctions.ensureRegistered` on the session (operators
+  * do this). Specs pin each to a `zip_with`/`aggregate` combinator form.
   */
 object Similarity {
 
-  /** Dot product of two equal-length float arrays (double result). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, v) => acc + v)
-
-  /** L2 norm. */
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine similarity; 0.0 when either vector is all-zero. */
-  def cosine(a: Column, b: Column): Column = {
-    val d = norm(a) * norm(b)
-    when(d === 0.0, 0.0).otherwise(dot(a, b) / d)
-  }
-
-  /** Squared euclidean distance. */
-  def l2sq(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0d), (acc, v) => acc + v)
-
-  // ── native-Expression fast paths ──────────────────────────────────────
-  // Same semantics as the combinator versions above (specs assert it), but
-  // one O(1) tree node + one tight JVM loop per row. Requires
-  // GraftFunctions.ensureRegistered on the session (operators do this).
-
-  def dotFast(a: Column, b: Column): Column = call_function("graft_vec_dot", a, b)
-
+  /** Cosine similarity (double); 0.0 when either vector is all-zero. */
   def cosineFast(a: Column, b: Column): Column = call_function("graft_vec_cosine", a, b)
 
+  /** Squared euclidean distance (double). */
   def l2sqFast(a: Column, b: Column): Column = call_function("graft_vec_l2sq", a, b)
 
+  /** Random-hyperplane LSH bucket id: sign-bit signature of the vector
+    * against `nPlanes` deterministic ±1 planes derived from `seed`,
+    * packed into a long. Vectors in the same bucket are cosine-close
+    * candidates — the scale path for ANN self-joins: candidates shuffle
+    * per bucket instead of the full n² pair space.
+    */
   def rhpBucketFast(vec: Column, nPlanes: Int, seed: Int = 42): Column =
     call_function("graft_rhp_bucket", vec, lit(nPlanes), lit(seed))
-
-  /** Random-hyperplane LSH bucket id: sign-bit signature of the vector
-    * against `planes` (each plane a deterministic ±1 pattern derived from
-    * a seed), packed into a long. Vectors in the same bucket are cosine-
-    * close candidates — the scale path for ANN self-joins: candidates
-    * shuffle per bucket instead of the full n² pair space.
-    *
-    * Planes are pseudo-random ±1 vectors: sign = hash(seed, dim) parity,
-    * computed inline so the whole signature stays codegen-friendly.
-    */
-  def rhpBucket(vec: Column, nPlanes: Int, dim: Int, seed: Int = 42): Column = {
-    val bits = (0 until nPlanes).map { p =>
-      // deterministic ±1 plane: parity of a cheap integer mix per (p, i)
-      val contributions = (0 until dim).map { i =>
-        val s = ((p * 1103515245 + i * 12345 + seed) >>> 16) & 1
-        val sign = if (s == 1) 1.0 else -1.0
-        element_at(vec, i + 1) * lit(sign)
-      }
-      val proj = contributions.reduce(_ + _)
-      when(proj >= 0.0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
 }

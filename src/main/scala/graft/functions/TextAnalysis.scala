@@ -16,27 +16,20 @@ object TextAnalysis {
     when(length(trim(text)) === 0, 0)
       .otherwise(size(split(trim(text), "\\s+")))
 
-  /** BPE-ish token estimate: runs of word chars count ceil(len/4) tokens,
-    * each punctuation char counts 1 (a cheap, deterministic stand-in for a
-    * subword tokenizer's token count).
-    */
-  def tokenCountBpe(text: Column): Column = {
-    val wordChars  = length(regexp_replace(text, "[^A-Za-z0-9]", ""))
-    val punctChars = length(regexp_replace(text, "[A-Za-z0-9\\s]", ""))
-    (ceil(wordChars.cast("double") / 4.0) + punctChars).cast("long")
-  }
-
-  /** One-pass kernel twin of ([[tokenCountWs]], [[tokenCountBpe]]):
-    * `graft_token_profile` returns [n_tokens_ws, word_chars,
-    * punct_chars] from a single code-point walk — the Column forms
-    * above cost THREE regex scans per row (spec-pinned bit-equal,
-    * TextKernelsSpec). Caller must have run
+  /** One-pass token/char profile: `graft_token_profile` returns
+    * [n_tokens_ws, word_chars, punct_chars] from a single code-point
+    * walk, where the regex Column forms cost THREE scans per row
+    * ([[tokenCountWs]] and the spec-side BPE-ish reference; pinned
+    * bit-equal in KernelPropertySpec). Caller must have run
     * `GraftFunctions.ensureRegistered`. NULL text stays NULL.
     */
   def tokenProfile(text: Column): Column =
     call_function("graft_token_profile", text)
 
-  /** [[tokenCountBpe]] derived from a [[tokenProfile]] array. */
+  /** BPE-ish token estimate from a [[tokenProfile]] array: runs of word
+    * chars count ceil(len/4) tokens, each punctuation char counts 1 (a
+    * cheap, deterministic stand-in for a subword tokenizer's count).
+    */
   def bpeishFromProfile(profile: Column): Column =
     (ceil(profile.getItem(1).cast("double") / 4.0).cast("long") +
       profile.getItem(2)).cast("long")
@@ -46,16 +39,10 @@ object TextAnalysis {
     round(length(regexp_replace(text, "[A-Za-z0-9\\s]", "")).cast("double") /
       greatest(length(text), lit(1)), 4)
 
-  /** Ratio of tokens that are stopwords (4 dp). */
-  def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
-    val toks  = split(trim(text), "\\s+")
-    val stops = filter(toks, t => t.isin(stopwords.map(s => s: Any): _*))
-    round(size(stops).cast("double") / greatest(size(toks), lit(1)), 4)
-  }
-
-  /** [[stopwordRatio]] via the native set-probe expression — stays inside
-    * whole-stage codegen (the HOF form is CodegenFallback). Same result.
-    * Caller must have run `GraftFunctions.ensureRegistered`.
+  /** Ratio of tokens that are stopwords (4 dp), via the native set-probe
+    * expression — stays inside whole-stage codegen (a `filter`/`isin` HOF
+    * form is CodegenFallback). Caller must have run
+    * `GraftFunctions.ensureRegistered`.
     */
   def stopwordRatioFast(text: Column, stopwords: Seq[String]): Column = {
     val toks = split(trim(text), "\\s+")
@@ -63,7 +50,11 @@ object TextAnalysis {
       lit(stopwords.mkString(","))).cast("double") / greatest(size(toks), lit(1)), 4)
   }
 
-  /** [[qualityScore]] on the codegen'd stopword counter. */
+  /** Composite quality score in [0,1]: rewards mid-length docs, penalizes
+    * punctuation soup and stopword-free keyword stuffing. Deterministic,
+    * expressible in ANSI SQL for oracle checks; the stopword term is the
+    * codegen'd counter of [[stopwordRatioFast]].
+    */
   def qualityScoreFast(text: Column, stopwords: Seq[String]): Column = {
     val lenScore  = least(length(text).cast("double") / 500.0, lit(1.0))
     val punctPen  = punctRatio(text) * 2.0
@@ -71,52 +62,18 @@ object TextAnalysis {
     round(greatest(least((lenScore * 0.5 + stopScore * 0.5) - punctPen, lit(1.0)), lit(0.0)), 4)
   }
 
-  /** Composite quality score in [0,1]: rewards mid-length docs, penalizes
-    * punctuation soup and stopword-free keyword stuffing. Deterministic,
-    * expressible in ANSI SQL for oracle checks.
-    */
-  def qualityScore(text: Column, stopwords: Seq[String]): Column = {
-    val lenScore  = least(length(text).cast("double") / 500.0, lit(1.0))
-    val punctPen  = punctRatio(text) * 2.0
-    val stopScore = least(stopwordRatio(text, stopwords) * 4.0, lit(1.0))
-    round(greatest(least((lenScore * 0.5 + stopScore * 0.5) - punctPen, lit(1.0)), lit(0.0)), 4)
-  }
-
   /** Marker-word language ID: score each language by marker hits, argmax
-    * with deterministic tie-break on language code. `markers` maps lang →
-    * marker words.
-    */
-  def langId(text: Column, markers: Map[String, Seq[String]]): Column = {
-    val toks = split(lower(trim(text)), "\\s+")
-    // One (score, lang) struct per language; max picks highest score,
-    // ties broken by lang code descending — fully deterministic.
-    val scored = markers.toSeq.sortBy(_._1).map { case (lang, words) =>
-      val hits = size(filter(toks, t => t.isin(words.map(w => w: Any): _*)))
-      struct(hits.as("score"), lit(lang).as("lang"))
-    }
-    val best = greatest(scored.toIndexedSeq: _*)
-    when(best.getField("score") > 0, best.getField("lang")).otherwise(lit("und"))
-  }
-
-  /** [[langId]] via the native one-pass expression. The combinator version
-    * re-tokenizes once per language (HOF lambdas are CodegenFallback, so
-    * the inlined `split` is not subexpression-eliminated); this is a
-    * single tokenize + a single pass over tokens. Same result —
-    * spec-checked. Caller must have run `GraftFunctions.ensureRegistered`.
+    * with deterministic tie-break on language code (ties go to the
+    * greatest code; "und" when nothing scores). `markers` maps lang →
+    * marker words. One tokenize + one pass over the tokens in the native
+    * expression, where a combinator form re-tokenizes once per language
+    * (HOF lambdas are CodegenFallback, so the inlined `split` is not
+    * subexpression-eliminated); specs pin the two equal. Caller must have
+    * run `GraftFunctions.ensureRegistered`.
     */
   def langIdFast(text: Column, markers: Map[String, Seq[String]]): Column =
     call_function("graft_lang_id", split(lower(trim(text)), "\\s+"),
       lit(GraftFunctions.encodeMarkers(markers)))
-
-  /** Character-n-gram language ID (Cavnar–Trenkle-style set-membership
-    * heuristic) — complements the word-marker [[langId]]: works on
-    * unsegmented text and is robust to unseen vocabulary. `profiles` maps
-    * lang → representative char n-grams. Caller must have run
-    * `GraftFunctions.ensureRegistered`.
-    */
-  def langIdNgram(text: Column, profiles: Map[String, Seq[String]], n: Int = 3): Column =
-    call_function("graft_lang_id_ngram", text,
-      lit(GraftFunctions.encodeMarkers(profiles)), lit(n))
 
   /** Content fingerprint: md5 of the canonicalized text (lowercase,
     * whitespace collapsed) — the exact-dup key for documents

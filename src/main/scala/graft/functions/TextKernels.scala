@@ -16,27 +16,27 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object TextKernels {
 
-  /** Shared machinery for the language-ID kernels: language codes (sorted
-    * ascending), item → language-bitmask map, per-item vote accumulation,
-    * and the argmax with ties to the lexicographically greatest code
-    * (matches `greatest(struct(score, lang))` semantics); "und" when
-    * nothing scores. Built once per plan, shipped inside the expression.
+  /** Marker-word language ID: one pass over the token array. Language
+    * codes sort ascending, each marker maps to a language bitmask, every
+    * token votes for the languages whose markers it is, and the argmax
+    * breaks ties to the lexicographically greatest code (matches
+    * `greatest(struct(score, lang))` semantics); "und" when nothing
+    * scores. Built once per plan, shipped inside the expression.
     */
-  abstract class LangScorer[K](profiles: Seq[(String, Seq[String])],
-                               key: String => K) extends Serializable {
+  final class LangIdKernel(markers: Seq[(String, Seq[String])]) extends Serializable {
     // votes pack into an Int bitmask: 1 << 32 silently wraps to 1 and
     // credits votes to the wrong language — refuse rather than corrupt
-    require(profiles.size <= 32,
-      s"LangScorer supports at most 32 language profiles, got ${profiles.size}")
-    protected val langs: Array[UTF8String] =
-      profiles.map(_._1).sorted.map(UTF8String.fromString).toArray
-    protected val masks: java.util.HashMap[K, Integer] = {
-      val m = new java.util.HashMap[K, Integer]()
-      val idx = profiles.map(_._1).sorted.zipWithIndex.toMap
-      profiles.foreach { case (lang, items) =>
+    require(markers.size <= 32,
+      s"LangIdKernel supports at most 32 languages, got ${markers.size}")
+    private val langs: Array[UTF8String] =
+      markers.map(_._1).sorted.map(UTF8String.fromString).toArray
+    private val masks: java.util.HashMap[UTF8String, Integer] = {
+      val m = new java.util.HashMap[UTF8String, Integer]()
+      val idx = markers.map(_._1).sorted.zipWithIndex.toMap
+      markers.foreach { case (lang, words) =>
         val bit = 1 << idx(lang)
-        items.foreach { it =>
-          val k = key(it)
+        words.foreach { w =>
+          val k = UTF8String.fromString(w)
           val prev = m.get(k)
           m.put(k, if (prev == null) bit else prev | bit)
         }
@@ -45,64 +45,31 @@ object TextKernels {
     }
     private val und = UTF8String.fromString("und")
 
-    protected final def vote(counts: Array[Int], k: K): Unit = {
-      val mask = masks.get(k)
-      if (mask != null) {
-        var m = mask.intValue()
-        while (m != 0) {
-          counts(java.lang.Integer.numberOfTrailingZeros(m)) += 1
-          m &= m - 1
-        }
-      }
-    }
-
-    protected final def argmax(counts: Array[Int]): UTF8String = {
-      var best = 0
-      var bi = -1
-      var i = 0
-      // ascending scan with >= keeps the GREATEST lang code among ties
-      while (i < langs.length) {
-        if (counts(i) >= best && counts(i) > 0) { best = counts(i); bi = i }
-        i += 1
-      }
-      if (bi < 0) und else langs(bi)
-    }
-  }
-
-  /** Marker-word language ID: one pass over the token array. */
-  final class LangIdKernel(markers: Seq[(String, Seq[String])])
-      extends LangScorer[UTF8String](markers, UTF8String.fromString) {
     def eval(toks: ArrayData): UTF8String = {
       val counts = new Array[Int](langs.length)
       val n = toks.numElements()
       var i = 0
       while (i < n) {
         val t = toks.getUTF8String(i)
-        if (t != null) vote(counts, t)
+        val mask = if (t == null) null else masks.get(t)
+        if (mask != null) {
+          var m = mask.intValue()
+          while (m != 0) {
+            counts(java.lang.Integer.numberOfTrailingZeros(m)) += 1
+            m &= m - 1
+          }
+        }
         i += 1
       }
-      argmax(counts)
-    }
-  }
-
-  /** Character-n-gram language ID (Cavnar-Trenkle-style set membership):
-    * one pass over the text's char n-grams.
-    */
-  final class LangIdNgramKernel(profiles: Seq[(String, Seq[String])], n: Int)
-      extends LangScorer[String](profiles, identity) {
-    def eval(text: UTF8String): UTF8String = {
-      // Locale.ROOT: default-locale lowercasing makes classification
-      // depend on the executor JVM's locale (Turkish dotless-i etc.),
-      // breaking the cross-machine determinism these kernels exist for
-      val s = text.toString.toLowerCase(java.util.Locale.ROOT)
-      val counts = new Array[Int](langs.length)
-      var i = 0
-      val last = s.length - n
-      while (i <= last) {
-        vote(counts, s.substring(i, i + n))
+      var best = 0
+      var bi = -1
+      i = 0
+      // ascending scan with >= keeps the GREATEST lang code among ties
+      while (i < langs.length) {
+        if (counts(i) >= best && counts(i) > 0) { best = counts(i); bi = i }
         i += 1
       }
-      argmax(counts)
+      if (bi < 0) und else langs(bi)
     }
   }
 
@@ -188,34 +155,6 @@ object TextKernels {
       }
       c
     }
-  }
-
-  /** TRUE iff any word n-gram of `toks` hashes into `sorted` (an
-    * ASCENDING xxhash64 array): binary search per gram, early exit on
-    * the first hit — O(grams × log |set|), zero allocation beyond the
-    * gram bytes. The membership twin of [[ngramHashes]]; the set rides
-    * the plan as ONE reference object (an `arrays_overlap` against a
-    * big literal array would rescan the whole set per row).
-    */
-  def ngramAnyIn(toks: ArrayData, n: Int, sorted: Array[Long]): Boolean = {
-    val count = toks.numElements() - (n - 1)
-    if (count < 1 || sorted.length == 0) return false
-    val sp = UTF8String.fromString(" ")
-    var i = 0
-    while (i < count) {
-      val parts = new Array[UTF8String](2 * n - 1)
-      var j = 0
-      while (j < n) {
-        val t = toks.getUTF8String(i + j)
-        parts(2 * j) = if (t == null) UTF8String.EMPTY_UTF8 else t
-        if (j < n - 1) parts(2 * j + 1) = sp
-        j += 1
-      }
-      val h = XxHash64Function.hash(UTF8String.concat(parts: _*), StringType, 42L)
-      if (java.util.Arrays.binarySearch(sorted, h) >= 0) return true
-      i += 1
-    }
-    false
   }
 
   /** Distinct xxhash64 values of the word n-grams of a token array: the

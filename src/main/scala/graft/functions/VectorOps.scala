@@ -27,17 +27,6 @@ object VectorOps {
   // 46-query benchmark run than in isolation. Primitive-array loops are
   // immune to profile pollution (and vectorize better).
 
-  /** Dot product over float arrays, accumulated in double (ltr order). */
-  def dotF(a: ArrayData, b: ArrayData): Double = {
-    val xs = a.toFloatArray()
-    val ys = b.toFloatArray()
-    val n = math.min(xs.length, ys.length)
-    var i = 0
-    var s = 0.0
-    while (i < n) { s += xs(i).toDouble * ys(i).toDouble; i += 1 }
-    s
-  }
-
   /** One-pass cosine similarity; 0.0 when either vector has zero norm. */
   def cosineF(a: ArrayData, b: ArrayData): Double = {
     val xs = a.toFloatArray()
@@ -73,8 +62,8 @@ object VectorOps {
   }
 
   /** Random-hyperplane LSH bucket: bit p = sign of the projection onto a
-    * deterministic ±1 plane derived from (p, i, seed) — same mix as
-    * [[Similarity.rhpBucket]].
+    * deterministic ±1 plane derived from (p, i, seed) — the mix the
+    * specs' combinator reference replays.
     */
   def rhpBucket(v: ArrayData, nPlanes: Int, seed: Int): Long = {
     val xs = v.toFloatArray()

@@ -17,8 +17,8 @@ import graft.functions.{GraftFunctions, Similarity}
   * Scale notes: similarity is computed BEFORE any pair-level shuffle, so
   * dedup/top-k stages move (ids, score) triples — never the vectors. All
   * vector math runs through graft's native codegen expressions
-  * ([[graft.functions.VectorOps]]); the combinator forms kept in
-  * [[Similarity]] are the spec-checked reference semantics.
+  * ([[graft.functions.VectorOps]]); specs pin them to `zip_with`/
+  * `aggregate` combinator forms as the reference semantics.
   */
 object Ann {
 
@@ -268,8 +268,11 @@ object Ann {
     val assigned = sigs.join(minIds, Seq("vh"))
       .select(col("vh"), col("id"), col("v"), col("self_cos"),
         call_function("graft_ivf_nearest", col("v"), centsLit).as("cid"))
-      .hint("shuffle_hash") // self-join: shuffle both sides → ReusedExchange
-    val drops = assigned.as("x").join(assigned.as("y"),
+    // self-join: shuffle both sides → ReusedExchange. Only the self-join
+    // sides carry the hint: `assigned` is also the left side of the
+    // left_anti below, which cannot build left, so a hint there is dropped
+    val hinted = assigned.hint("shuffle_hash")
+    val drops = hinted.as("x").join(hinted.as("y"),
         col("x.cid") === col("y.cid") && col("x.id") < col("y.id"))
       // round before the threshold like the rest of the ANN family: the
       // compare is then stable across engines' float printing
@@ -309,7 +312,7 @@ object Ann {
     val centArr = typedLit(cents.map(_.toSeq).toSeq)
     val assigned = df.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("cid", call_function("graft_ivf_nearest", col("v"), centsLit))
-      .withColumn("dist", call_function("graft_vec_l2sq", col("v"),
+      .withColumn("dist", Similarity.l2sqFast(col("v"),
         element_at(centArr, col("cid") + 1)))
     assigned.groupBy(col("cid"))
       .agg(call_function("graft_top_k_by",
@@ -317,30 +320,6 @@ object Ann {
       .select(col("cid"), posexplode(col("top")))
       .select(col("col.id").as(idCol), col("cid"),
         round(col("col.dist"), 4).as("dist"), (col("pos") + 1).cast("long").as("rank"))
-  }
-
-  /** PCA-reduce an embedding column to `dims` components (Spark MLlib's
-    * distributed PCA: one covariance aggregation over the corpus + a
-    * driver-side eigendecomposition of the d×d matrix — d is the
-    * embedding width, not the corpus size). The scale lever for the ANN
-    * stack: 64-d → 16-d cuts every cosine and every shuffled vector
-    * payload 4× while near-dup/top-k recall tracks the retained
-    * variance. Returns (the frame with `outCol: Array[Float]`, the
-    * fitted model for transforming FUTURE batches with the same basis —
-    * reusing it is what keeps reduced vectors comparable across runs).
-    */
-  def pcaReduce(df: DataFrame, vecCol: String, dims: Int,
-                outCol: String): (DataFrame, org.apache.spark.ml.feature.PCAModel) = {
-    import org.apache.spark.ml.feature.PCA
-    import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-    val withVec = df.withColumn("__pca_in",
-      array_to_vector(col(vecCol).cast("array<double>")))
-    val model = new PCA().setInputCol("__pca_in").setOutputCol("__pca_out")
-      .setK(dims).fit(withVec)
-    val out = model.transform(withVec)
-      .withColumn(outCol, vector_to_array(col("__pca_out"), "float32"))
-      .drop("__pca_in", "__pca_out")
-    (out, model)
   }
 
   /** Split a centroid matrix into `m` per-subspace codebooks for product
@@ -672,9 +651,8 @@ object Ann {
     * ~1/√k, so a 64→16 reduction cuts every downstream distance
     * computation 4× while keeping neighborhoods mostly intact — the
     * cheap pre-step before brute-force re-rank or IVF over a shrunken
-    * working set (the [[pcaReduce]] alternative when the data has no
-    * low-rank structure for PCA to find — random projections need
-    * none).
+    * working set. Unlike PCA it needs no fit and no low-rank structure
+    * in the data.
     */
   def rpProject(df: DataFrame, vecCol: String, outCol: String, k: Int,
                 seed: Int = 7): DataFrame = {

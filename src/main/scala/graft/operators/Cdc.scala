@@ -72,10 +72,9 @@ object Cdc {
     * (yesterday's published rollup + today's increment rollup) into the
     * up-to-date rollup WITHOUT rescanning history — the aggregation
     * twin of [[snapshotDiff]]'s republish-to-increments move, and the
-    * reason additive stats (count/sum/min/max — and HLL sketches via
-    * [[Summaries.mergeDistinctSketches]]) are the ones worth publishing:
-    * at 100 TB the history scan is the cost, and a merge over two
-    * already-tiny aggregate tables replaces it entirely. Non-additive
+    * reason additive stats (count/sum/min/max) are the ones worth
+    * publishing: at 100 TB the history scan is the cost, and a merge over
+    * two already-tiny aggregate tables replaces it entirely. Non-additive
     * stats (avg, ratios) must be DERIVED after the merge from the
     * additive parts — deriving-then-merging is the classic wrong answer
     * and the reason this operator only accepts additive columns.
@@ -101,74 +100,15 @@ object Cdc {
       sumCols.map(c => sum(col(c)).as(c)) ++
       minCols.map(c => min(col(c)).as(c)) ++
       maxCols.map(c => max(col(c)).as(c))
-    parts.reduce(_ unionByName _)
-      .groupBy(keys.map(col).toIndexedSeq: _*)
-      .agg(aggs.head, aggs.tail.toIndexedSeq: _*)
-  }
-
-  /** The two-part additive merge as a KEY JOIN — the form that keeps a
-    * bucketed HISTORY side out of the shuffle even when the increment is
-    * not bucketed. When BOTH parts are same-bucketed publishes,
-    * [[mergeAdditive]]'s union + groupBy is already exchange-free (Spark's
-    * Union reports the common bucketing — pinned in StreamBucketSpec);
-    * the asymmetric daily case is where it re-shuffles EVERYTHING:
-    * union(bucketed 100 TB rollup, fresh increment) has no common
-    * partitioning, so the whole history pays the exchange again. The
-    * full-outer join instead satisfies its distribution from the
-    * history's bucketing and shuffles ONLY the increment
-    * (PlanSpec-pinned: zero bucketed scans below any Exchange), and the
-    * stat merge becomes a codegen projection: count/sum add with NULL as
-    * the identity, min/max take the null-safe least/greatest. Semantics
-    * are spec-pinned EQUAL to `mergeAdditive(Seq(oldPart, incPart), ...)`
-    * — including single-sided keys (stats pass through) and NULL keys
-    * (null-safe matched, one output row).
-    *
-    * This is the daily-increment fast path (exactly two parts:
-    * yesterday's publish + today's increment); for k-way catch-up merges
-    * fold it left — each fold keeps the accumulating side unshuffled
-    * when it is republished bucketed.
-    *
-    * PRECONDITION: each part carries AT MOST ONE row per key — the shape
-    * an aggregated publish produces. [[mergeAdditive]]'s groupBy would
-    * collapse within-part duplicates; the join form fans them out
-    * instead (a 2×2 match per duplicated key), so feeding unaggregated
-    * parts here silently double-counts. Pre-aggregate each part (or use
-    * `mergeAdditive`) if uniqueness isn't guaranteed. Stat columns must
-    * also be disjoint from key columns (enforced) — a shared name would
-    * collide the __o_/__n_ aliases.
-    */
-  def mergeAdditiveJoined(oldPart: DataFrame, incPart: DataFrame,
-                          keys: Seq[String],
-                          countCols: Seq[String] = Seq.empty,
-                          sumCols: Seq[String] = Seq.empty,
-                          minCols: Seq[String] = Seq.empty,
-                          maxCols: Seq[String] = Seq.empty,
-                          assumeKeysNotNull: Boolean = false): DataFrame = {
-    require(keys.nonEmpty, "mergeAdditiveJoined needs at least one key column")
-    val stats = countCols ++ sumCols ++ minCols ++ maxCols
-    require(stats.nonEmpty, "mergeAdditiveJoined needs at least one stat column")
-    require(stats.distinct.size == stats.size, "duplicate stat columns")
-    require(stats.toSet.intersect(keys.toSet).isEmpty,
-      s"stat columns must be disjoint from key columns, both contain: " +
-        stats.toSet.intersect(keys.toSet).toSeq.sorted.mkString(", "))
-    val o = oldPart.select((keys ++ stats).map(c => col(c).as(s"__o_$c")): _*)
-    val n = incPart.select((keys ++ stats).map(c => col(c).as(s"__n_$c")): _*)
-    // same ===-vs-<=> trade as [[snapshotDiff]]: the flag is what lets a
-    // bucketed publish skip the exchange; a NULL key under it would merge
-    // as two separate rows instead of one
-    val cond = keys.map(k =>
-      if (assumeKeysNotNull) o(s"__o_$k") === n(s"__n_$k")
-      else o(s"__o_$k") <=> n(s"__n_$k")).reduce(_ && _)
-    def merged(c: String, f: (Column, Column) => Column): Column = {
-      val (a, b) = (col(s"__o_$c"), col(s"__n_$c"))
-      // absent/NULL side is the merge identity — matches sum/min/max over
-      // the union'd rows (all-NULL in → NULL out)
-      when(a.isNull, b).when(b.isNull, a).otherwise(f(a, b)).as(c)
-    }
-    o.join(n, cond, "full_outer").select(
-      keys.map(k => coalesce(col(s"__o_$k"), col(s"__n_$k")).as(k)) ++
-        (countCols ++ sumCols).map(c => merged(c, _ + _)) ++
-        minCols.map(c => merged(c, least(_, _))) ++
-        maxCols.map(c => merged(c, greatest(_, _))): _*)
+    def merge(df: DataFrame): DataFrame =
+      df.groupBy(keys.map(col).toIndexedSeq: _*).agg(aggs.head, aggs.tail.toIndexedSeq: _*)
+    // each part folds to one row per key BEFORE the union, so the union's
+    // children are row-based aggregates, never columnar scans: Spark
+    // 4.1's Union reports its children's common hash partitioning, but
+    // its columnar path concatenates their partitions instead of zipping
+    // them, so a group-by straight over two same-bucketed parquet scans
+    // planned no exchange and emitted one row per key per part. The
+    // final merge now shuffles the (aggregate-sized) parts
+    merge(parts.map(merge).reduce(_ unionByName _))
   }
 }

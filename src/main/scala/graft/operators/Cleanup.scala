@@ -1,24 +1,21 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{coalesce, col}
 
-/** Post-derivation cleanup: column drops and name normalization.
+/** Publish-time column hygiene: confidential and artifact columns are
+  * dropped and names normalized to snake_case before a table is written.
   *
-  * Reference semantics: the final pipeline step drops redundant columns
-  * and normalizes names before publishing (reference:
-  * nodes_grouped/step_6_nodes/data_clean_up.py).
+  * Reference semantics: the final pipeline step cleans columns before
+  * publishing (reference: nodes_grouped/step_6_nodes/data_clean_up.py,
+  * queries/data_fix.py); `ReferencePipeline` runs every operator here.
   *
-  * Pure metadata operations — both are plan-level projections with zero
-  * runtime cost at any scale.
+  * Pure metadata operations — plan-level projections with zero runtime
+  * cost at any scale.
   */
 object Cleanup {
 
-  /** Drop columns if present (missing names are ignored, like the
-    * reference's defensive ALTER TABLE DROP IF EXISTS).
-    */
-  def dropRedundant(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.drop(cols: _*)
+  val DefaultConfidentialMarkers: Seq[String] =
+    Seq("dobtob", "firstname", "lastname")
 
   /** Drop columns whose NAMES mark confidential content, by
     * case-insensitive substring match (reference: queries/data_fix.py:
@@ -27,9 +24,6 @@ object Cleanup {
     * metadata projection; the publish path applies it to every table so
     * a confidential column can never reach disk.
     */
-  val DefaultConfidentialMarkers: Seq[String] =
-    Seq("dobtob", "firstname", "lastname")
-
   def dropConfidential(df: DataFrame,
                        markers: Seq[String] = DefaultConfidentialMarkers): DataFrame = {
     val lowered = markers.map(_.toLowerCase(java.util.Locale.ROOT))
@@ -54,50 +48,6 @@ object Cleanup {
   def dropSingleLetterColumns(df: DataFrame): DataFrame =
     df.drop(df.columns.filter(c =>
       c.length == 1 || c.forall(_.isDigit)).toIndexedSeq: _*)
-
-  /** Merge a legacy column into its successor: where both exist, the
-    * successor keeps its value and falls back to the legacy one; where
-    * only the legacy column exists, it is renamed. The legacy column is
-    * dropped either way; a frame with neither passes through unchanged.
-    * (Reference: data_tyding/tidy_dynamic_tables.py::
-    * fix_facility_phc_columns — Facility.value folded into PHC.value —
-    * the column-naming drift every long-lived form deployment
-    * accumulates.) Pure projection, zero runtime cost.
-    */
-  def coalesceInto(df: DataFrame, legacy: String, successor: String): DataFrame = {
-    val has = df.columns.toSet
-    (has.contains(legacy), has.contains(successor)) match {
-      case (true, true) =>
-        df.withColumn(successor, coalesce(col(successor), col(legacy))).drop(legacy)
-      case (true, false) => df.withColumnRenamed(legacy, successor)
-      case _             => df
-    }
-  }
-
-  /** Guarantee columns exist: any missing name is added as a typed NULL
-    * column (reference: utils/set_key_to_none.py — downstream summaries
-    * select fixed column sets, so a deployment that never filled a form
-    * field must still present it). Pure projection.
-    */
-  def ensureColumns(df: DataFrame, cols: Seq[String],
-                    dataType: String = "string"): DataFrame = {
-    val present = df.columns.toSet
-    val missing = cols.filterNot(present.contains)
-    if (missing.isEmpty) df
-    // ONE withColumns projection — a per-column withColumn fold re-runs
-    // analysis over the whole plan per column (quadratic for the
-    // hundreds-of-fields metadata this serves)
-    else df.withColumns(missing.map(c =>
-      c -> org.apache.spark.sql.functions.lit(null).cast(dataType)).toMap)
-  }
-
-  /** Rename a column only when it exists (reference: utils/key_change.py —
-    * form-key drift means a batch may carry either spelling). When both
-    * old and new exist, values fold via [[coalesceInto]] semantics.
-    */
-  def renameIfPresent(df: DataFrame, oldName: String, newName: String): DataFrame =
-    if (!df.columns.contains(oldName)) df
-    else coalesceInto(df, oldName, newName)
 
   /** snake_case one name: camelCase humps and runs of non-alphanumerics
     * become single underscores, lowercased (`Visit.Date` → `visit_date`,

@@ -319,8 +319,7 @@ object Dedup {
   /** INCREMENTAL connected-components maintenance — attach an increment's
     * edges to STANDING component labels without re-running CC over the
     * history pair graph (the continuous-ingest chain's last batch-only
-    * stage until this operator: q85 gates exact dups per increment,
-    * `NearDup.nearDupProbe` FLAGS near-dup candidates per increment, and
+    * stage until this operator: q85 gates exact dups per increment, and
     * resolving components used to replay [[connectedComponents]] over
     * history ∪ increment pairs every cycle).
     *
@@ -478,6 +477,36 @@ object Dedup {
       allowMissingColumns = false)
   }
 
+  /** Serialized bloom filter over `history`'s text hashes — the build
+    * half of [[bloomGate]], exposed so a STREAMING ingest can probe it:
+    * build once per epoch from the batch history, then apply
+    * [[bloomProbe]] as a stateless projection on the stream. One
+    * distributed tree-aggregation pass; only the filter reaches the
+    * driver.
+    */
+  def historyBloom(history: DataFrame, textCol: String,
+                   expectedItems: Long, fpp: Double = 0.03): Array[Byte] = {
+    require(expectedItems > 0, s"expectedItems must be > 0, got $expectedItems")
+    require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
+    val bloom = history.select(xxhash64(col(textCol)).as("__h"))
+      .filter(col("__h").isNotNull)
+      .stat.bloomFilter("__h", expectedItems, fpp)
+    val bos = new java.io.ByteArrayOutputStream()
+    bloom.writeTo(bos)
+    bos.toByteArray
+  }
+
+  /** TRUE when `textCol` is possibly in the filter's history (false
+    * positives at the filter's fpp rate; false ⇒ DEFINITELY new). A pure
+    * codegen projection — stateless, streaming-safe; the exact confirm
+    * join of [[bloomGate]] needs the increment's aggregated maybe-set,
+    * which a stream cannot produce, so a streaming gate uses this flag
+    * alone and routes the maybe-dups to a batch confirm. Caller must
+    * have run `GraftFunctions.ensureRegistered` on the session.
+    */
+  def bloomProbe(textCol: Column, bloomBytes: Array[Byte]): Column =
+    call_function("graft_bloom_contains", xxhash64(textCol), lit(bloomBytes))
+
   /** Incremental exact-dedup gate: flag each `increment` row `flagCol` =
     * true when its `textCol` does NOT already appear in `history` — the
     * per-ingest membership check of a continuously-growing corpus. The
@@ -509,94 +538,6 @@ object Dedup {
     * Note: steps (1)-(2) run EAGERLY at call time (the filter build is
     * an action), unlike graft's otherwise-lazy operators.
     */
-  /** Serialized bloom filter over `history`'s text hashes — the build
-    * half of [[bloomGate]], exposed so a STREAMING ingest can probe it:
-    * build once per epoch from the batch history, then apply
-    * [[bloomProbe]] as a stateless projection on the stream. One
-    * distributed tree-aggregation pass; only the filter reaches the
-    * driver.
-    */
-  def historyBloom(history: DataFrame, textCol: String,
-                   expectedItems: Long, fpp: Double = 0.03): Array[Byte] = {
-    require(expectedItems > 0, s"expectedItems must be > 0, got $expectedItems")
-    require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
-    val bloom = history.select(xxhash64(col(textCol)).as("__h"))
-      .filter(col("__h").isNotNull)
-      .stat.bloomFilter("__h", expectedItems, fpp)
-    val bos = new java.io.ByteArrayOutputStream()
-    bloom.writeTo(bos)
-    bos.toByteArray
-  }
-
-  /** Fold an increment's text hashes into an EXISTING serialized filter —
-    * the persistent-filter maintenance step of a continuous ingest: the
-    * increment (typically just the ADMITTED docs) aggregates into a
-    * filter built with the SAME parameters as the standing one, and the
-    * two OR together (bloom union of same-shaped filters is exactly the
-    * filter of the union — no precision lost vs a full rebuild). Cost is
-    * increment-sized; history is never rescanned — the r16 ingest
-    * artifact's one history-linear gate term, removed. `expectedItems`/
-    * `fpp` MUST be the standing filter's original build parameters
-    * (Spark's sketch derives bit width and hash count from them;
-    * mismatched shapes refuse loudly rather than merge wrongly). The
-    * fpp guarantee dilutes as total insertions approach the original
-    * `expectedItems` budget — size the FIRST build for the corpus you
-    * expect, not the corpus you have; an over-budget filter degrades
-    * cost (more confirm traffic), never exactness.
-    *
-    * Increments of ≤ `driverFoldMax` hashes fold driver-side (collect +
-    * putLong into the standing filter — insert-identical to the
-    * distributed build, no corpus-sized bitmap allocated per fold);
-    * larger increments use the distributed same-shape build + OR. At the
-    * default 1M cutoff the collect is ≤ 8 MB of longs.
-    */
-  def foldIntoBloom(bloomBytes: Array[Byte], increment: DataFrame,
-                    textCol: String, expectedItems: Long,
-                    fpp: Double = 0.03,
-                    driverFoldMax: Int = 1000000): Array[Byte] = {
-    require(expectedItems > 0, s"expectedItems must be > 0, got $expectedItems")
-    require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
-    require(driverFoldMax >= 0, s"driverFoldMax must be >= 0, got $driverFoldMax")
-    val standing = org.apache.spark.util.sketch.BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(bloomBytes))
-    val hashes = increment.select(xxhash64(col(textCol)).as("__h"))
-      .filter(col("__h").isNotNull)
-    // Small increments (the common continuous-ingest case) fold DRIVER-
-    // side: collect the xxhash64 values and putLong them into the
-    // deserialized standing filter — identical insertions to the
-    // distributed build (Spark's bloom aggregate putLongs integral
-    // columns), WITHOUT allocating a corpus-sized bitmap per fold just
-    // to mergeInPlace it. Over the cutoff, fall back to the distributed
-    // same-shape build + OR (bloom union of same-shaped filters is
-    // exactly the filter of the union — no precision lost).
-    val probeCap = hashes.limit(driverFoldMax + 1)
-      .as(org.apache.spark.sql.Encoders.scalaLong).collect()
-    if (probeCap.length <= driverFoldMax) {
-      var i = 0
-      while (i < probeCap.length) { standing.putLong(probeCap(i)); i += 1 }
-    } else {
-      val inc = hashes.stat.bloomFilter("__h", expectedItems, fpp)
-      require(standing.isCompatible(inc),
-        "increment filter shape differs from the standing filter — " +
-          "pass the ORIGINAL expectedItems/fpp the standing filter was built with")
-      standing.mergeInPlace(inc)
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    standing.writeTo(bos)
-    bos.toByteArray
-  }
-
-  /** TRUE when `textCol` is possibly in the filter's history (false
-    * positives at the filter's fpp rate; false ⇒ DEFINITELY new). A pure
-    * codegen projection — stateless, streaming-safe; the exact confirm
-    * join of [[bloomGate]] needs the increment's aggregated maybe-set,
-    * which a stream cannot produce, so a streaming gate uses this flag
-    * alone and routes the maybe-dups to a batch confirm. Caller must
-    * have run `GraftFunctions.ensureRegistered` on the session.
-    */
-  def bloomProbe(textCol: Column, bloomBytes: Array[Byte]): Column =
-    call_function("graft_bloom_contains", xxhash64(textCol), lit(bloomBytes))
-
   def bloomGate(increment: DataFrame, history: DataFrame, textCol: String,
                 expectedItems: Long, fpp: Double = 0.03,
                 flagCol: String = "is_new",
@@ -620,19 +561,18 @@ object Dedup {
   /** [[bloomGate]] against a PREBUILT standing filter — the persistent-
     * filter deployment: the r16 ingest artifact measured the per-round
     * bloom REBUILD as the gate's only history-linear term, and a
-    * continuous ingest does not need it — build the filter once, gate
-    * each increment against it, then [[foldIntoBloom]] the admitted docs
-    * for the next round. Exactness is unchanged: the filter only
-    * prescreens (its false positives go to the exact confirm join, which
-    * still scans history's md5 projection under a broadcast semi join —
+    * continuous ingest does not need it — build the filter once with
+    * [[historyBloom]] and gate each increment against it. Exactness is
+    * unchanged: the filter only prescreens (its false positives go to the
+    * exact confirm join, which still scans history's md5 projection
+    * under a broadcast semi join —
     * the one unavoidable history read of an exact gate); an UNDERSIZED
     * filter degrades cost, never correctness, exactly as the q85
     * undersized-filter spec proves. CONTRACT: the filter must COVER
     * every history text (blooms have no false negatives for inserted
-    * items, so build-from-history or fold-every-admission both satisfy
-    * it; extra entries are harmless) — a filter MISSING history entries
-    * would flag their dups "new", which is the one way this variant can
-    * lie. The fold loop maintains the covering set by construction.
+    * items, so a build from the history satisfies it; extra entries are
+    * harmless) — a filter MISSING history entries would flag their dups
+    * "new", which is the one way this variant can lie.
     */
   def bloomGateWith(increment: DataFrame, history: DataFrame,
                     bloomBytes: Array[Byte], textCol: String,
@@ -779,50 +719,6 @@ object Dedup {
     * bottleneck and the volume cut is the win. Default exact; winnow on
     * clusters where stage-1 shuffle bytes dominate.
     */
-  /** The winnow decision rule as code (the OPERATOR_GUIDE §2 heuristic,
-    * constants from dup_span_scale_r17.json): winnow = w trades an extra
-    * selection-CPU fraction (`cpuPenaltyFraction`, measured 1.9–2.5×
-    * total ⇒ ~1.2× EXTRA, flat in w) for cutting the stage-1 occurrence
-    * shuffle to ~2/(w+1) of its 16 B/token volume. Both sides scale
-    * linearly with corpus tokens, so the corpus size cancels and the
-    * routing needs only the per-core cluster profile:
-    *
-    *   turn w on  ⇔  16·(1 − 2/(w+1)) / shuffleBps  >  penalty / selTps
-    *
-    * which recovers the guide's "scan:network ratio above ~3:1" rule of
-    * thumb at the defaults. The semantics dial caps w first: winnow = w
-    * only guarantees detection of duplicated runs ≥ k+w−1 tokens, so the
-    * largest admissible w is `minDetectableRunTokens − k + 1`. Returns
-    * the LARGEST candidate w that is both admissible and economic, else
-    * 1 (the exact default — memory-bound/local profiles land here, which
-    * is why `stripDupSpans` never auto-flips the dial itself).
-    *
-    * @param shuffleBytesPerSecPerCore   sustained shuffle write+read
-    *        bandwidth per executor core (the contended NETWORK number on
-    *        a real cluster, not the local-disk one)
-    * @param selectionTokensPerSecPerCore measured stage-1 occurrence
-    *        throughput per core at winnow = 1
-    */
-  def chooseWinnow(k: Int, minDetectableRunTokens: Int,
-                   shuffleBytesPerSecPerCore: Double,
-                   selectionTokensPerSecPerCore: Double,
-                   cpuPenaltyFraction: Double = 1.2,
-                   candidates: Seq[Int] = Seq(8, 4, 2)): Int = {
-    require(k >= 2, s"k must be >= 2, got $k")
-    require(minDetectableRunTokens >= k,
-      s"minDetectableRunTokens must be >= k, got $minDetectableRunTokens < $k")
-    require(shuffleBytesPerSecPerCore > 0 && selectionTokensPerSecPerCore > 0,
-      "cluster profile rates must be positive")
-    val wMax = minDetectableRunTokens - k + 1
-    val cpuSecAddedPerToken = cpuPenaltyFraction / selectionTokensPerSecPerCore
-    candidates.sorted(Ordering[Int].reverse).filter(_ >= 2).filter(_ <= wMax)
-      .find { w =>
-        val netSecSavedPerToken =
-          16.0 * (1.0 - 2.0 / (w + 1)) / shuffleBytesPerSecPerCore
-        netSecSavedPerToken > cpuSecAddedPerToken
-      }.getOrElse(1)
-  }
-
   def stripDupSpans(docs: DataFrame, idCol: String, textCol: String,
                     k: Int = 8, winnow: Int = 1,
                     collapseExact: Boolean = false,
@@ -966,34 +862,6 @@ object Dedup {
     val hits = candStr.join(
       index.select(col("gram").as("__gram")), Seq("__gram"), "left_semi")
     cutCovered(base, hits, idCol, k)
-  }
-
-  /** STREAMING face of the known-boilerplate gate: the fraction of a
-    * row's k-grams that land in a bloom of the standing index's grams
-    * (build it once with `historyBloom(dupGramIndex(history, …), "gram",
-    * …)` and ship the bytes as a plan constant). A pure zero-state
-    * projection — streaming-safe like [[bloomProbe]]; false positives
-    * at the filter's fpp rate INFLATE the ratio slightly but never cut
-    * text: this is a routing signal (flag/quarantine boilerplate-heavy
-    * rows in-flight), the batch [[stripKnownSpans]] does the cutting
-    * with an exact string confirm. Rows shorter than k tokens score
-    * 0.0 (no grams — consistent with the span family's passthrough).
-    * Caller must have run `GraftFunctions.ensureRegistered`.
-    */
-  def knownGramRatio(text: Column, bloomBytes: Array[Byte],
-                     k: Int = 8): Column = {
-    require(k >= 1, s"knownGramRatio needs k >= 1, got $k")
-    val toks = split(trim(text), " ")
-    val n = size(toks)
-    val grams = when(n >= k,
-      transform(sequence(lit(0), n - k),
-        i => concat_ws(" ", slice(toks, i + lit(1), lit(k)))))
-      .otherwise(array().cast("array<string>"))
-    val hits = aggregate(grams, lit(0L), (acc, g) =>
-      acc + when(call_function("graft_bloom_contains",
-        xxhash64(g), lit(bloomBytes)), 1L).otherwise(0L))
-    when(n >= k, round(hits.cast("double") / (n - k + 1), 5))
-      .otherwise(lit(0.0))
   }
 
   /** k-gram text at 0-based token offset `i` of the `__toks` column. */

@@ -137,37 +137,6 @@ object DeriveColumns {
     }
   }
 
-  /** Per-script dictionary recode: each script id carries its own
-    * value→label mapping, applied only to that script's rows (reference:
-    * utils/field_info.py::transform_matching_labels — scriptid-based
-    * metadata recode). Unmapped scripts and values pass through. Still a
-    * pure literal-map expression — no join, no shuffle.
-    */
-  def recodeByScript(scriptId: Column, value: Column,
-                     mappings: Map[String, Map[String, String]]): Column =
-    mappings.toSeq.sortBy(_._1).foldLeft(value) { case (acc, (sid, m)) =>
-      when(scriptId === sid, recode(value, m)).otherwise(acc)
-    }
-
-  /** Restore a missing display label from the script metadata's
-    * value→label mapping: labels that are NULL or a stringified-None
-    * sentinel take the mapped label for their coded value; known labels
-    * and unmapped values pass through (reference:
-    * utils/data_label_fix_new.py::bulk_fix_data_labels — the
-    * label = '["None"]' repair — and the fix_data_labels dictionaries,
-    * whose 1.5k lines are this mechanism times deployment config).
-    */
-  def fillLabelFromMetadata(value: Column, label: Column,
-                            mapping: Map[String, String]): Column = {
-    // sentinels include the stringified-LIST form the reference repairs
-    // (label = '["None"]' in bulk_fix_data_labels)
-    val missing = label.isNull ||
-      trim(label).isin("", "None", "null", "nan", """["None"]""", "[]")
-    if (mapping.isEmpty) label
-    else when(missing, coalesce(element_at(typedLit(mapping), value), label))
-      .otherwise(label)
-  }
-
   /** Conditional record repair: where `cond`, replace `colName` with
     * `fixed`, else keep (reference manual-fix nodes).
     */
@@ -277,24 +246,19 @@ object DeriveColumns {
     "yyyy-MM-dd'T'HH:mm:ss", "yyyy-MM-dd HH:mm:ss",
     "yyyy-MM-dd'T'HH:mm", "yyyy-MM-dd HH:mm", "yyyy-MM-dd")
 
-  /** Profile-gated date cast: convert a text column to timestamp ONLY
-    * when at least `minValidPercent` of its non-null values parse under
-    * `formats` (reference: queries/data_fix.py:592
+  /** Profile-gated date casts: convert each text column `c` of `specs`
+    * (column, formats, minValidPercent) to timestamp ONLY when at least
+    * `minValidPercent` of its non-null values parse under `formats`
+    * (reference: queries/data_fix.py:592
     * date_data_type_fix(min_valid_percent=90)) — a half-garbage column
     * stays text for repair instead of being nulled wholesale.
     *
-    * The profile is ONE aggregation pass; its single-row result is a
-    * driver-side decision because a cast changes the SCHEMA, which is a
-    * plan-time choice (the same reason the reference samples before
-    * ALTER TABLE). Returns the frame with the column cast, or untouched.
-    */
-  def profileGatedDateCast(df: DataFrame, colName: String, formats: Seq[String],
-                           minValidPercent: Double = 90.0): DataFrame =
-    profileGatedDateCasts(df, Seq((colName, formats, minValidPercent)))
-
-  /** Multi-column form: ONE aggregation pass profiles every candidate
-    * (two counts per column), then the per-column gate decisions apply —
-    * N gated columns cost one extra scan, not N.
+    * ONE aggregation pass profiles every candidate (two counts per
+    * column), so N gated columns cost one extra scan, not N. Its
+    * single-row result is a driver-side decision because a cast changes
+    * the SCHEMA, which is a plan-time choice (the same reason the
+    * reference samples before ALTER TABLE). Returns the frame with the
+    * passing columns cast and the rest untouched.
     */
   def profileGatedDateCasts(df: DataFrame,
       specs: Seq[(String, Seq[String], Double)]): DataFrame = {

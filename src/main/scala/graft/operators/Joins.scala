@@ -340,6 +340,19 @@ object Joins {
       (rightTs +: payloadCols).map(c => col("__fill")(c).as(prefix + c))): _*)
   }
 
+  /** Narrow a decimal(38,0) metric to long, raising instead of the silent
+    * NULL a non-ANSI overflow cast would produce. NULL passes through
+    * (no-match aggregates stay NULL).
+    */
+  private def checkedLong(dec: Column, name: String): Column = {
+    import org.apache.spark.sql.functions._
+    when(dec.isNull, lit(null).cast("long"))
+      .when(dec > lit(Long.MaxValue).cast("decimal(38,0)"),
+        raise_error(concat(lit(s"keyProfile: $name overflows long ("), dec.cast("string"), lit(")")))
+          .cast("long"))
+      .otherwise(dec.cast("long"))
+  }
+
   /** Pre-flight profile of an equi-join BEFORE paying for it — the
     * diagnostics a 100 TB join plan decision needs: per-side row/key
     * censuses, key overlap, the EXACT inner-join output size
@@ -364,137 +377,6 @@ object Joins {
     * would report a wrong-sign inner_rows on exactly the explosive joins
     * this operator exists to flag.
     */
-  /** Narrow a decimal(38,0) metric to long, raising instead of the silent
-    * NULL a non-ANSI overflow cast would produce. NULL passes through
-    * (no-match aggregates stay NULL).
-    */
-  private def checkedLong(dec: Column, name: String): Column = {
-    import org.apache.spark.sql.functions._
-    when(dec.isNull, lit(null).cast("long"))
-      .when(dec > lit(Long.MaxValue).cast("decimal(38,0)"),
-        raise_error(concat(lit(s"keyProfile: $name overflows long ("), dec.cast("string"), lit(")")))
-          .cast("long"))
-      .otherwise(dec.cast("long"))
-  }
-
-  /** What [[auto]] decided and why — exposed so specs (and operators
-    * dashboards) can pin the routing, and so a decision profiled ONCE can
-    * route many joins of the same shape without re-profiling.
-    */
-  final case class AutoJoinDecision(route: String, buckets: Int,
-                                    rowsRight: Long, maxLeftMult: Long,
-                                    meanLeftMult: Double)
-
-  /** Profile-routed join-strategy decision for [[auto]]: a sampled
-    * variant of the [[keyProfile]] preflight distilled to the three
-    * routing facts — is the right side broadcastable, is the left key
-    * skewed, is the right side small enough to replicate for salting.
-    *
-    * Cost (the point of making this a SEPARATE step): at most two jobs —
-    * a columnless count of the right side (parquet footer counts for
-    * file sources), and, only when the right side is NOT broadcastable,
-    * one key-multiplicity aggregation over the (optionally sampled)
-    * left side. Profile once per recurring join shape and pass the
-    * decision to [[auto]] on every subsequent run; at 100 TB set
-    * `sampleFraction` so the profile job reads a slice (a hot key's
-    * sampled multiplicity scales back up by 1/fraction — routing needs
-    * the magnitude, not the exact count).
-    *
-    * Routing rules, in order:
-    *  1. rowsRight <= broadcastRowLimit → "broadcast" (the left side
-    *     never shuffles; AQE could discover this at runtime, but only
-    *     AFTER paying the big side's shuffle write).
-    *  2. left max-multiplicity >= skewFactor × mean multiplicity AND
-    *     maxMult >= minHotRows AND rowsRight <= saltedRightRowLimit →
-    *     "salted" with buckets = clamp(ceil(maxMult / rowsPerBucket),
-    *     2, maxBuckets) — the deterministic heavy hammer for a
-    *     pathological key; replicating a right side bigger than the
-    *     salted limit would cost more than the skew does.
-    *  3. otherwise "plain": shuffle join, AQE's skew-split handles the
-    *     moderate cases (Sessions.tune enables it).
-    */
-  def autoDecide(left: DataFrame, right: DataFrame, key: String,
-                 sampleFraction: Double = 1.0,
-                 broadcastRowLimit: Long = 1000000L,
-                 saltedRightRowLimit: Long = 20000000L,
-                 skewFactor: Double = 8.0,
-                 minHotRows: Long = 2000000L,
-                 rowsPerBucket: Long = 1000000L,
-                 maxBuckets: Int = 64): AutoJoinDecision = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, sum}
-    require(sampleFraction > 0 && sampleFraction <= 1.0,
-      s"sampleFraction must be in (0, 1], got $sampleFraction")
-    require(broadcastRowLimit >= 0 && skewFactor >= 1.0 &&
-      rowsPerBucket > 0 && maxBuckets >= 2,
-      "broadcastRowLimit >= 0, skewFactor >= 1, rowsPerBucket > 0, maxBuckets >= 2")
-    val rowsRight = right.count()
-    if (rowsRight <= broadcastRowLimit)
-      AutoJoinDecision("broadcast", 1, rowsRight, 0L, 0.0)
-    else {
-      val sampled =
-        if (sampleFraction >= 1.0) left
-        else left.sample(withReplacement = false, sampleFraction, seed = 42L)
-      val prof = sampled.filter(col(key).isNotNull)
-        .groupBy(col(key)).agg(count(lit(1)).as("__m"))
-        .agg(coalesce(max("__m"), lit(0L)).as("mx"),
-          coalesce(sum("__m"), lit(0L)).as("n"),
-          count(lit(1)).as("d"))
-        .head()
-      val scale = 1.0 / sampleFraction
-      val maxMult = math.round(prof.getLong(0) * scale)
-      val rows = prof.getLong(1) * scale
-      val distinct = math.max(prof.getLong(2), 1L)
-      val mean = rows / distinct
-      val skewed = maxMult >= mean * skewFactor && maxMult >= minHotRows &&
-        rowsRight <= saltedRightRowLimit
-      if (skewed) {
-        val buckets = math.min(maxBuckets.toLong,
-          math.max(2L, (maxMult + rowsPerBucket - 1) / rowsPerBucket)).toInt
-        AutoJoinDecision("salted", buckets, rowsRight, maxMult, mean)
-      } else AutoJoinDecision("plain", 1, rowsRight, maxMult, mean)
-    }
-  }
-
-  /** Profile-routed equi-join: picks broadcast / plain-shuffle / salted
-    * from an [[autoDecide]] profile (computed here unless a cached
-    * `decision` is passed — recurring pipelines should profile once and
-    * reuse). Result ROWS are identical across routes (salting only
-    * changes physical distribution); `how` follows Spark's using-join
-    * semantics on `key`.
-    *
-    * The salted route needs a salt source that spreads the hot key's
-    * rows; by default every left column feeds one xxhash64 — any
-    * distinguishing column does. Salting supports inner/left forms only
-    * ([[salted]]'s outer-row caveat); other `how`s degrade to the plain
-    * route, where AQE's skew split is the fallback.
-    */
-  def auto(left: DataFrame, right: DataFrame, key: String,
-           how: String = "inner",
-           saltSrc: Option[Column] = None,
-           decision: Option[AutoJoinDecision] = None,
-           sampleFraction: Double = 1.0,
-           broadcastRowLimit: Long = 1000000L,
-           saltedRightRowLimit: Long = 20000000L,
-           skewFactor: Double = 8.0,
-           minHotRows: Long = 2000000L,
-           rowsPerBucket: Long = 1000000L,
-           maxBuckets: Int = 64): DataFrame = {
-    import org.apache.spark.sql.functions.{col, xxhash64}
-    val d = decision.getOrElse(autoDecide(left, right, key, sampleFraction,
-      broadcastRowLimit, saltedRightRowLimit, skewFactor, minHotRows,
-      rowsPerBucket, maxBuckets))
-    val saltable = Set("inner", "left", "leftouter", "leftsemi", "leftanti")
-      .contains(how.toLowerCase.replace("_", ""))
-    d.route match {
-      case "broadcast" => left.join(broadcast(right), Seq(key), how)
-      case "salted" if saltable =>
-        val src = saltSrc.getOrElse(
-          xxhash64(left.columns.map(col).toIndexedSeq: _*))
-        salted(left, right, key, src, d.buckets, how)
-      case _ => left.join(right, Seq(key), how)
-    }
-  }
-
   def keyProfile(lhs: DataFrame, rhs: DataFrame,
                  leftKey: String, rightKey: String): DataFrame = {
     import org.apache.spark.sql.functions._

@@ -18,6 +18,12 @@ import org.apache.spark.sql.types._
   * entries under the fallback keys (uid/UID, NeoTreeID, NeoTreeIDBC), and
   * uppercased. Sessions route downstream by script id.
   *
+  * `ReferencePipeline` composes the stage: [[parseSessions]] over the raw
+  * lines, [[routeByScript]] plus [[extractKeyValues]] /
+  * [[withKeyValues]] over a fixed key list per table,
+  * [[discoverMclKeyList]] and [[explodeMclKey]] for multi-select keys,
+  * and [[explodeRepeatables]] for repeated entry groups.
+  *
   * At 100 TB the whole extraction is a single projection over the raw
   * scan: every path below is a Catalyst expression, so Spark prunes
   * unused columns and pushes the routing filter into the source.
@@ -74,16 +80,6 @@ object JsonImport {
       entryValue(entries, "NeoTreeID"),
       entryValue(entries, "NeoTreeIDBC")))
   }
-
-  /** Read a directory of raw session exports (one JSON document per line,
-    * the reference's export drop format) straight into the parsed ingest
-    * frame — `spark.read.text` keeps each line opaque so malformed
-    * documents reach [[parseSessions]]'s corrupt-row routing instead of
-    * being dropped by a schema-inferring reader. Supports glob paths and
-    * is the batch twin of `spark.readStream.text` for continuous ingest.
-    */
-  def readRawSessions(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    parseSessions(spark.read.text(path).withColumnRenamed("value", "json"), "json")
 
   /** Parse a DataFrame bearing one raw session JSON string per row into
     * the flat ingest columns (uid, script id, versions, facility, started/
@@ -149,32 +145,6 @@ object JsonImport {
     parsed.withColumns(cols.toMap)
   }
 
-  /** Distinct entry keys present in a batch, across BOTH entries shapes —
-    * the runtime key inventory the reference derives before widening
-    * tables (reference: data_tyding/tidy_dynamic_tables.py:1 importing
-    * get_table_column_names/create_new_columns; extract_key_values.py).
-    * One exploded projection + a distinct over the (small) key domain.
-    */
-  def discoverKeys(parsed: DataFrame): DataFrame = {
-    val entries = col("entries_json")
-    val listKeys = filter(
-      transform(from_json(entries, entryListSchema), e => e.getField("key")),
-      k => k.isNotNull)
-    val dictKeys = json_object_keys(entries) // null on the list shape
-    val empty = array().cast("array<string>")
-    // a row is ONE shape — dispatch on the first character (CaseWhen
-    // branches evaluate lazily per row) so each row pays exactly one
-    // parse, the same move as discoverMclKeys; dispatching also avoids
-    // the old both-sides parse where the list schema yields a PARTIAL
-    // (all-null-keys) result on dict rows
-    val shaped = when(isListShape(entries), listKeys)
-      .otherwise(dictKeys)
-    parsed
-      .select(explode_outer(coalesce(shaped, empty)).as("key"))
-      .filter(col("key").isNotNull)
-      .distinct()
-  }
-
   /** ALL (value, label) pairs for `key` across both entries shapes — the
     * multi-select twin of [[entryValue]]: an MCL answer's full list, not
     * just the first element. NULL when the key is absent; the dict shape
@@ -209,8 +179,8 @@ object JsonImport {
       .select(col("uid"), col("scriptid"),
         col("kv.value").as("value"), col("kv.label").as("label"))
 
-  /** MCL (multi-choice-list) key auto-detection — the twin of
-    * [[discoverKeys]]: which keys hold multi-select answers. Reference
+  /** MCL (multi-choice-list) key auto-detection: which keys hold
+    * multi-select answers. Reference
     * semantics (reference: data_tyding/json_restructure.py:9-60): a key is
     * MCL when its values list carries more than one element anywhere in
     * the batch, or — for keys that do carry a value — when its name ends
@@ -219,17 +189,15 @@ object JsonImport {
     * The legacy list shape counts `len(values)`; the new dict shape counts
     * the label/value arrays under `values` (restructure_new_format).
     *
-    * One Generate + one hash aggregate over the (small) key domain — the
-    * same plan shape as [[discoverKeys]], so a 100 TB batch pays a single
-    * scan and shuffles only (key, count) pairs.
+    * One Generate + one hash aggregate over the (small) key domain, so a
+    * 100 TB batch pays a single scan and shuffles only (key, count) pairs.
     */
   def discoverMclKeys(parsed: DataFrame,
                       suffixRules: Seq[String] = Seq("Oth"),
                       exactRules: Seq[String] = Seq("AdmReason")): DataFrame = {
     val entries = col("entries_json")
     // list shape: (key, len(values)) per entry; dict-shape rows parse to
-    // partial structs with null keys and are filtered (same reasoning as
-    // discoverKeys: coalesce would mask the other shape)
+    // partial structs with null keys and are filtered
     val listKv = filter(
       transform(from_json(entries, entryListSchema),
         e => struct(e.getField("key").as("key"),
@@ -266,58 +234,16 @@ object JsonImport {
   }
 
   /** Plan-time MCL key list (sorted), for feeding table routing /
-    * explosion — a driver-side collect of the KEY LIST, like
-    * [[extractAllKeys]]'s inventory.
+    * explosion — a driver-side collect of the KEY LIST (hundreds of
+    * form-field names, not data).
     */
   def discoverMclKeyList(parsed: DataFrame): Seq[String] =
     discoverMclKeys(parsed).filter(col("is_mcl"))
       .select("key").collect().map(_.getString(0)).sorted.toSeq
 
-  /** Discovery-driven extraction: the key inventory (a driver-side collect
-    * of the KEY LIST — hundreds of form-field names, not data) feeds
-    * [[extractKeyValues]], so a form field added by a deployment becomes a
-    * column on the next run with no code change. Keys are sorted for a
-    * stable column order.
-    */
-  def extractAllKeys(parsed: DataFrame): DataFrame = {
-    val keys = discoverKeys(parsed).collect().map(_.getString(0)).sorted.toSeq
-    extractKeyValues(parsed, keys)
-  }
-
-  /** Sampled key discovery: inventory a row FRACTION instead of the full
-    * batch — the cheap monitoring probe when a full [[discoverKeys]] scan
-    * (which reads every entries blob) is too expensive to run casually.
-    * Sampling can miss RARE keys by construction; for a lossless
-    * inventory at scale use the incremental path ([[unionInventory]] over
-    * per-increment discovery) instead.
-    */
-  def discoverKeysSampled(parsed: DataFrame, fraction: Double,
-                          seed: Long = 42L): DataFrame =
-    discoverKeys(parsed.sample(withReplacement = false, fraction, seed))
-
-  /** Incremental key inventory: the stored inventory (one `key` column —
-    * the output of a previous discovery, read back from its sink) unioned
-    * with keys discovered on TODAY'S INCREMENT only. Discovery cost
-    * becomes O(increment), not O(history): a 100 TB lake never rescans
-    * old blobs to learn that a deployment added a form field. The union
-    * is a distinct over the (hundreds-of-strings) key domain — free.
-    */
-  def unionInventory(stored: DataFrame, discovered: DataFrame): DataFrame =
-    stored.select("key").unionByName(discovered.select("key")).distinct()
-
-  /** [[extractAllKeys]] driven by a maintained inventory instead of a
-    * fresh discovery scan: widening today's rows costs zero extra passes
-    * over the data. Keys are sorted for a stable column order, so the
-    * same inventory always yields the same schema.
-    */
-  def extractWithInventory(parsed: DataFrame, inventory: DataFrame): DataFrame = {
-    val keys = inventory.select("key").collect().map(_.getString(0)).sorted.toSeq
-    extractKeyValues(parsed, keys)
-  }
-
   /** Key histogram over an arbitrary JSON-object column: (key, n rows
-    * carrying it). The monitoring twin of [[discoverKeys]] for any
-    * schema-on-read source.
+    * carrying it) — the key-inventory monitor for any schema-on-read
+    * source.
     */
   def keyHistogram(df: DataFrame, jsonCol: Column): DataFrame =
     df.select(explode_outer(json_object_keys(jsonCol)).as("key"))

@@ -183,119 +183,4 @@ object LangId {
         when(nG > 0, (best - second).cast("double") / lit(1e5) / nG))
       .drop("__ls")
   }
-
-  /** Language → script tag of the built-in model. Tags are the census
-    * classes of [[scriptCensus]]; "Jpan" is the kana-presence route (ja
-    * text mixes Han and Kana — any kana at all routes to the Jpan group,
-    * since zh never contains kana).
-    */
-  val defaultScripts: Map[String, String] = Map(
-    "ar" -> "Arab", "de" -> "Latn", "el" -> "Grek", "en" -> "Latn",
-    "es" -> "Latn", "fr" -> "Latn", "hi" -> "Deva", "it" -> "Latn",
-    "ja" -> "Jpan", "ko" -> "Hang", "nl" -> "Latn", "pt" -> "Latn",
-    "ru" -> "Cyrl", "sv" -> "Latn", "zh" -> "Hani")
-
-  /** Census classes: (tag, Java-regex script class), priority order for
-    * count ties. "Jpan" is not a census class — it is resolved by the
-    * kana rule before the count argmax.
-    */
-  private val censusClasses: Seq[(String, String)] = Seq(
-    "Latn" -> "\\p{IsLatin}", "Cyrl" -> "\\p{IsCyrillic}",
-    "Grek" -> "\\p{IsGreek}", "Arab" -> "\\p{IsArabic}",
-    "Deva" -> "\\p{IsDevanagari}", "Hani" -> "\\p{IsHan}",
-    "Kana" -> "\\p{IsHiragana}\\p{IsKatakana}", "Hang" -> "\\p{IsHangul}")
-
-  /** Dominant-script column over raw text: per-class code-point counts
-    * (one regexp strip per class — cheap Column arithmetic, no kernel),
-    * kana-presence → "Jpan", otherwise argmax by (count, priority),
-    * "Zyyy" when no class matches at all. BMP script classes via Java
-    * regex — the same classes any sidecar would use.
-    */
-  def scriptCensus(text: Column): Column = {
-    val counts = censusClasses.map { case (_, cls) =>
-      length(regexp_replace(coalesce(text, lit("")), s"[^$cls]", "")) }
-    val entries = censusClasses.zip(counts).zipWithIndex.map {
-      case (((nm, _), c), i) =>
-        struct(c.as("c"), lit(-i).as("p"), lit(nm).as("s"))
-    }
-    val top = array_max(array(entries: _*))
-    val kana = counts(censusClasses.indexWhere(_._1 == "Kana"))
-    when(counts.reduce(_ + _) === 0, lit("Zyyy"))
-      .when(kana > 0, lit("Jpan"))
-      .otherwise(top.getField("s"))
-  }
-
-  /** Script-prefiltered prediction — the scale face of [[predict]] for a
-    * multi-script model: a cheap code-point census routes each row to its
-    * script's language GROUP, and only that group's NB kernel runs (a
-    * Cyrillic row never scores the 8 Latin languages; a CJK row never
-    * runs the Latin kernel at all). Confusable-set scoring — the part NB
-    * exists for — happens strictly WITHIN a script. Appends `script`,
-    * `lang_pred`, `n_grams`, `score`, and `margin`; margin is NULL for
-    * single-language scripts (no within-script competitor — the census
-    * itself is the confidence there) and rows whose script matches no
-    * model language fall back to full-model scoring, so the operator is
-    * total. Still a pure projection: zero shuffles, one (group-sized)
-    * kernel walk per row.
-    *
-    * Margin guidance (the q153 probe): within-script margins behave like
-    * [[predict]]'s — gate mix/census decisions at margin ≥ 0.004 for
-    * high precision on romance-adjacent pairs; cross-script routing
-    * needs no margin (disjoint alphabets).
-    */
-  def predictScripted(df: DataFrame, textCol: String,
-                      model: Model = default,
-                      langScripts: Map[String, String] = defaultScripts)
-      : DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
-    require(model.langs.forall(langScripts.contains),
-      s"langScripts must tag every model language; missing " +
-        s"${model.langs.filterNot(langScripts.contains).mkString(",")}")
-    val groups: Seq[(String, Model)] = model.langs.groupBy(langScripts)
-      .toSeq.sortBy(_._1)
-      .map { case (script, langs0) =>
-        val langs = langs0.sorted
-        script -> Model(langs, langs.map(l =>
-          model.scaled(model.langs.indexOf(l))), model.n)
-      }
-    val text = col(textCol)
-    val withScript = df.withColumn("__script", scriptCensus(text))
-    // ONE branchy kernel column: each row evaluates only ITS script's
-    // group kernel; unmatched scripts take the full model (fallback)
-    val lsSel = groups.foldRight(scores(text, model): Column) {
-      case ((s, m), acc) =>
-        when(col("__script") === s, scores(text, m)).otherwise(acc)
-    }
-    val withLs = withScript.withColumn("__ls", lsSel)
-    val nG = col("__ls").getItem(0)
-    def perGroup(f: (String, Model) => Column, fallback: Column): Column =
-      groups.foldRight(fallback) { case ((s, m), acc) =>
-        when(col("__script") === s, f(s, m)).otherwise(acc)
-      }
-    def bestOf(m: Model) = array_max(slice(col("__ls"), 2, m.langs.length))
-    def predOf(m: Model) =
-      element_at(array(m.langs.map(lit): _*),
-        array_position(slice(col("__ls"), 2, m.langs.length), bestOf(m))
-          .cast("int"))
-    def marginOf(m: Model) =
-      if (m.langs.length < 2) lit(null).cast("double")
-      else when(nG > 0,
-        (bestOf(m) - element_at(
-          sort_array(slice(col("__ls"), 2, m.langs.length), asc = false), 2))
-          .cast("double") / lit(1e5) / nG)
-    withLs
-      .withColumn("script", col("__script"))
-      .withColumn("lang_pred",
-        when(col("__ls").isNull, lit(null).cast("string")) // the predict rule
-          .when(nG === 0, lit("und"))
-          .otherwise(perGroup((_, m) => predOf(m), predOf(model))))
-      .withColumn("n_grams", nG)
-      .withColumn("score",
-        when(nG > 0,
-          perGroup((_, m) => bestOf(m), bestOf(model)).cast("double")
-            / lit(1e5) / nG))
-      .withColumn("margin",
-        perGroup((_, m) => marginOf(m), marginOf(model)))
-      .drop("__ls", "__script")
-  }
 }

@@ -39,23 +39,6 @@ object Multimodal {
     )), nullable = true)
   ))
 
-  /** Synthesize a media table from any source table: deterministic fake
-    * blobs (sha-derived) so plumbing tests have real bytes to move.
-    */
-  def synthesize(src: DataFrame, idCol: String): DataFrame =
-    src.select(
-      col(idCol).cast("long").as("media_id"),
-      element_at(array(lit("image"), lit("audio"), lit("video")),
-        (pmod(col(idCol).cast("long"), lit(3)) + 1).cast("int")).as("kind"),
-      unbase64(base64(sha2(col(idCol).cast("string"), 256).cast("binary"))).as("bytes"),
-      struct(
-        (pmod(col(idCol).cast("long"), lit(4)) * 160 + 320).cast("int").as("width"),
-        (pmod(col(idCol).cast("long"), lit(4)) * 90 + 180).cast("int").as("height"),
-        lit(16000).as("sample_rate"),
-        (pmod(col(idCol).cast("long"), lit(8)) + 1).cast("int").as("n_frames"),
-        lit("application/octet-stream").as("mime")
-      ).as("meta"))
-
   /** Fan the 8-byte id stream out to the session's full parallelism
     * before per-row CODEC work: media encode costs ~1 ms/clip (r20
     * probe: 5 GIF frames ≈ 1.0 ms), and a small source — one parquet
@@ -739,21 +722,12 @@ object Multimodal {
     }(enc)
   }
 
-  /** Blob-free metadata projection (what a catalog scan should read —
-    * column pruning keeps the bytes on disk).
-    */
-  def metadataOnly(media: DataFrame): DataFrame =
-    media.select(col("media_id"), col("kind"),
-      length(col("bytes")).as("n_bytes"),
-      col("meta.width"), col("meta.height"), col("meta.sample_rate"),
-      col("meta.n_frames"), col("meta.mime"))
-
   /** DECODED metadata: parse each image row's container through `codec`
     * and emit the measured width/height and mean channel values —
-    * ground truth from the bytes themselves, where [[metadataOnly]]
-    * merely projects the declared struct. Non-image kinds and
-    * undecodable payloads surface with NULL measurements (routed, not
-    * dropped — a corrupt blob in 100 TB of media must be countable).
+    * ground truth from the bytes themselves, where the `meta` struct
+    * only declares them. Non-image kinds and undecodable payloads
+    * surface with NULL measurements (routed, not dropped — a corrupt
+    * blob in 100 TB of media must be countable).
     * One mapPartitions batch; the blob never leaves the partition.
     */
   def decodeMeta(media: DataFrame, codec: MediaCodec): DataFrame = {
@@ -781,49 +755,6 @@ object Multimodal {
       }
     }(enc)
   }
-
-  /** Resize: fit image/video media into a target box, keeping the
-    * metadata struct honest (aspect-preserving scaled width/height; audio
-    * rows pass through untouched). The pixel resample itself is stubbed
-    * as a deterministic content hash — a real codec would swap in a
-    * mapPartitions batch exactly like [[frameFeatures]]; everything else
-    * (schema, conditional routing by kind, metadata math) is real.
-    */
-  def resize(media: DataFrame, maxW: Int, maxH: Int): DataFrame = {
-    val scale = least(
-      lit(maxW.toDouble) / col("meta.width"),
-      lit(maxH.toDouble) / col("meta.height"), lit(1.0))
-    // resizable = image/video WITH usable dimensions: a NULL meta (or a
-    // zero width/height, whose division nulls out `scale`) must pass the
-    // row through untouched — resizing would otherwise propagate NULL
-    // into `bytes` and silently destroy the payload
-    val resizable = col("kind").isin("image", "video") &&
-      col("meta.width") > 0 && col("meta.height") > 0
-    // target dims are computed ONCE against the ORIGINAL meta (as temp
-    // columns) before meta is replaced — referencing meta.width in a later
-    // withColumn would silently re-evaluate against the resized struct
-    media
-      .withColumn("__w", (col("meta.width") * scale).cast("int"))
-      .withColumn("__h", (col("meta.height") * scale).cast("int"))
-      .withColumn("bytes",
-        when(resizable,
-          udfFreeResizeBytes(col("bytes"), col("__w"), col("__h"))).otherwise(col("bytes")))
-      .withColumn("meta",
-        when(resizable, struct(
-          col("__w").as("width"), col("__h").as("height"),
-          col("meta.sample_rate"), col("meta.n_frames"), col("meta.mime")))
-          .otherwise(col("meta")))
-      .drop("__w", "__h")
-  }
-
-  /** Deterministic stand-in for the pixel resample: real systems hand the
-    * byte batch to a codec here; the stub derives bytes from (payload,
-    * target box) so plumbing tests see size/metadata effects.
-    */
-  private def udfFreeResizeBytes(bytes: org.apache.spark.sql.Column,
-                                 w: org.apache.spark.sql.Column,
-                                 h: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    unbase64(base64(sha2(concat(base64(bytes), w.cast("string"), h.cast("string")), 256).cast("binary")))
 
   /** Frame-sample features: one row per sampled frame per media item,
     * batched per partition through `codec` (default [[StubCodec]] — video

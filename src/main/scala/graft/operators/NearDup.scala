@@ -2,10 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.TextAnalysis
 
 /** Near-duplicate detection for document corpora: n-gram Jaccard,
-  * MinHash + LSH banding, SimHash.
+  * MinHash signatures, SimHash.
   *
   * Scale notes: the cardinal sin at 100 TB is materializing the n² pair
   * space. Every operator here joins only on shared shingles / signature
@@ -309,10 +308,10 @@ object NearDup {
     * its smallest id (rid), output rows carry the group multiplicities
     * `n_a`/`n_b`, and a duplicated text's SELF-spans (what every
     * intra-group instance pair would have emitted) appear as rows with
-    * `id_a == id_b == rid` for groups with multiplicity ≥ 2. Expand back
-    * to the exact per-instance stream — proven equivalent in
-    * NearDupSpec — with [[expandSharedSpans]] + [[exactTextMembership]];
-    * or pass `collapseExact = false` for the direct per-instance mining
+    * `id_a == id_b == rid` for groups with multiplicity ≥ 2. A join
+    * against [[exactTextMembership]] expands it back to the exact
+    * per-instance stream (NearDupSpec proves the two equal); or pass
+    * `collapseExact = false` for the direct per-instance mining
     * (dup-light corpora; output then has no n_a/n_b columns).
     */
   def sharedSpans(docs: DataFrame, idCol: String, textCol: String,
@@ -382,37 +381,6 @@ object NearDup {
       Seq(col("n_a"), col("n_b")))
   }
 
-  /** Expand a collapsed [[sharedSpans]] result back to the exact
-    * per-instance pair stream (the `collapseExact = false` output):
-    * inter-group rows fan out to every (instance_a, instance_b) combo —
-    * re-orienting starts when the instance order disagrees with the
-    * representative order — and self-span rows (`id_a == id_b`) fan out
-    * to every unordered intra-group instance pair. `members` is
-    * [[exactTextMembership]] of the SAME frame (non-normalized). This is
-    * the documented expansion step for callers that truly want
-    * per-instance pairs; it is itself join-shaped (never quadratic in
-    * anything but the true duplicate multiplicities the caller asked to
-    * re-materialize).
-    */
-  def expandSharedSpans(collapsed: DataFrame, members: DataFrame): DataFrame = {
-    val ma = members.select(col("rid").as("id_a"), col("id").as("__ia"))
-    val mb = members.select(col("rid").as("id_b"), col("id").as("__ib"))
-    val inter = collapsed.filter(col("id_a") =!= col("id_b"))
-      .join(ma, Seq("id_a")).join(mb, Seq("id_b"))
-      .select(
-        least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"),
-        when(col("__ia") < col("__ib"), col("a_start")).otherwise(col("b_start")).as("a_start"),
-        when(col("__ia") < col("__ib"), col("b_start")).otherwise(col("a_start")).as("b_start"),
-        col("span_tokens"))
-    val intra = collapsed.filter(col("id_a") === col("id_b"))
-      .join(ma, Seq("id_a")).join(mb, Seq("id_b"))
-      .filter(col("__ia") < col("__ib"))
-      .select(col("__ia").as("id_a"), col("__ib").as("id_b"),
-        col("a_start"), col("b_start"), col("span_tokens"))
-    inter.unionByName(intra)
-  }
-
   /** Cross-corpus n-gram similarity: every (left, right) pair sharing at
     * least one word n-gram, with its Jaccard AND the left-side
     * containment coefficient |A∩B| / |A| (1.0 = the left doc's whole
@@ -437,9 +405,9 @@ object NearDup {
     * normalization the shingles apply, so equal shingle sets ⇔ equal
     * identity), pairs the representatives (rid = smallest id per side's
     * text group), and emits the group multiplicities `n_l`/`n_r`
-    * alongside jaccard/containment. Expand back to per-instance pairs —
-    * proven equivalent in NearDupSpec — with [[expandCrossNgramPairs]] +
-    * [[exactTextMembership]] (normalize = true); or pass
+    * alongside jaccard/containment. A join against each side's
+    * [[exactTextMembership]] (normalize = true) expands it back to
+    * per-instance pairs (NearDupSpec proves the two equal); or pass
     * `collapseExact = false` for the direct per-instance join (output
     * then has no n_l/n_r columns).
     */
@@ -527,21 +495,6 @@ object NearDup {
       .select("id_l", "id_r", "jaccard", "containment_l", "n_l", "n_r")
   }
 
-  /** Expand a collapsed [[crossNgramPairs]] result back to the exact
-    * per-instance pair stream (the `collapseExact = false` output):
-    * every representative pair fans out to all (left instance, right
-    * instance) combos with the same jaccard/containment. The membership
-    * frames are [[exactTextMembership]] of each ORIGINAL side with
-    * `normalize = true` (the identity crossNgramPairs collapses on).
-    */
-  def expandCrossNgramPairs(collapsed: DataFrame, leftMembers: DataFrame,
-                            rightMembers: DataFrame): DataFrame =
-    collapsed
-      .join(leftMembers.select(col("rid").as("id_l"), col("id").as("__il")), Seq("id_l"))
-      .join(rightMembers.select(col("rid").as("id_r"), col("id").as("__ir")), Seq("id_r"))
-      .select(col("__il").as("id_l"), col("__ir").as("id_r"),
-        col("jaccard"), col("containment_l"))
-
   /** MinHash signature: one minimum per seed over md5(seed || shingle).
     * String-min over hex md5 is engine-portable (same result in any ANSI
     * SQL engine), which is what the oracle check needs; swap in xxhash64
@@ -558,92 +511,6 @@ object NearDup {
       array((0 until numHashes).map { seed =>
         array_min(transform(sh, s => md5(concat(lit(seed.toString + ":"), s))))
       }.toIndexedSeq: _*)).getItem(0)
-  }
-
-  /** The (bands, rowsPerBand) chosen by [[planLsh]] plus its predicted
-    * error rates — returned so callers can LOG the contract they bought,
-    * not just the knobs.
-    */
-  case class LshPlan(numHashes: Int, rowsPerBand: Int, bands: Int,
-                     falseNegAtThreshold: Double, candidateRateAtFp: Double)
-
-  /** Choose MinHash-LSH banding from the REQUIREMENT, not folklore: the
-    * probability two docs with Jaccard s share ≥ 1 of b bands of r rows
-    * is the S-curve 1 − (1 − s^r)^b. Given the dedup threshold and a
-    * false-negative budget AT that threshold, this picks, within a
-    * signature-size cap, the plan with the FEWEST candidate pairs from
-    * sub-threshold docs (`fpShoulder`, default threshold − 0.2 — the
-    * mass that actually costs shuffle) among all (r, b) meeting the
-    * recall constraint. Steeper r ⇒ fewer junk candidates but more
-    * hashes for the same recall; this searches the whole grid instead
-    * of hand-tuning.
-    *
-    * Driver-side pure arithmetic — call it once when sizing a pipeline
-    * and feed the result to [[minhashLshPairs]]/[[minhashBandKeys]].
-    */
-  def planLsh(threshold: Double, maxFalseNeg: Double = 0.05,
-              maxHashes: Int = 256, fpShoulder: Double = 0.2): LshPlan = {
-    require(threshold > 0 && threshold < 1, s"threshold in (0,1), got $threshold")
-    require(maxFalseNeg > 0 && maxFalseNeg < 1,
-      s"maxFalseNeg in (0,1), got $maxFalseNeg")
-    require(maxHashes >= 2, s"maxHashes must be >= 2, got $maxHashes")
-    def hitProb(s: Double, r: Int, b: Int): Double =
-      1.0 - math.pow(1.0 - math.pow(s, r), b)
-    val sLow = math.max(threshold - fpShoulder, 0.01)
-    val candidates = for {
-      r <- 1 to maxHashes
-      // smallest b meeting the recall constraint at this r — computed in
-      // doubles and range-checked BEFORE the Int cast (for large r the
-      // bound explodes past Int.MaxValue and a naive toInt wraps)
-      bMinD = math.max(math.ceil(math.log(maxFalseNeg) /
-        math.log1p(-math.pow(threshold, r))), 1.0)
-      if bMinD.isFinite && bMinD * r <= maxHashes
-      bMin = bMinD.toInt
-    } yield LshPlan(r * bMin, r, bMin,
-      1.0 - hitProb(threshold, r, bMin), hitProb(sLow, r, bMin))
-    require(candidates.nonEmpty,
-      s"no (rows, bands) plan meets falseNeg <= $maxFalseNeg at threshold " +
-        s"$threshold within $maxHashes hashes — raise maxHashes or the budget")
-    candidates.minBy(p => (p.candidateRateAtFp, p.numHashes))
-  }
-
-  /** LSH banding over minhash signatures: docs sharing any band (a slice
-    * of `rowsPerBand` consecutive signature entries) become candidates;
-    * candidates are verified with estimated Jaccard = fraction of matching
-    * signature positions. Returns (id_a < id_b, est_jaccard ≥ threshold).
-    * Size the banding with [[planLsh]].
-    */
-  def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
-                      n: Int, numHashes: Int, rowsPerBand: Int,
-                      threshold: Double): DataFrame = {
-    // rowsPerBand > numHashes would give numBands = 0, whose descending
-    // sequence(0, -1) drives candidate generation off a nonsense band
-    // (slice from the array END) — near-zero recall instead of an error
-    require(rowsPerBand >= 1 && rowsPerBand <= numHashes,
-      s"minhashLshPairs needs 1 <= rowsPerBand <= numHashes, got $rowsPerBand/$numHashes")
-    val numBands = numHashes / rowsPerBand
-    // docs with < n tokens have empty shingle sets → all-null signatures
-    // that would all collide in one md5-of-nothing band; they cannot be
-    // near-dups of anything under shingle semantics, so drop them early
-    val sigs = docs
-      .filter(size(split(lower(trim(col(textCol))), "\\s+")) >= n)
-      .select(col(idCol).as("id"),
-        minhashSignature(col(textCol), n, numHashes).as("sig"))
-    val banded = sigs.select(col("id"), col("sig"),
-      posexplode(transform(sequence(lit(0), lit(numBands - 1)),
-        b => md5(concat_ws("|", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-      .dropDuplicates("id_a", "id_b")
-    cand.withColumn("est_jaccard",
-        round(size(filter(zip_with(col("sig_a"), col("sig_b"),
-          (x, y) => x === y), b => b)).cast("double") / numHashes, 4))
-      .filter(col("est_jaccard") >= threshold)
-      .select("id_a", "id_b", "est_jaccard")
   }
 
   /** Hamming distance between two signed-64 simhashes. */
@@ -686,9 +553,9 @@ object NearDup {
     * id sharing the signature) carrying both multiplicities
     * (id_a, id_b, hamming, m_a, m_b), plus one self row
     * `id_a == id_b == rid, hamming = 0, m_a = m_b = m` per group with
-    * ≥ 2 members standing for all its intra-group pairs. Expand back to
-    * the exact per-instance stream — proven equivalent in NearDupSpec —
-    * with [[expandSimhashPairs]] + [[simhashMembership]]; or pass
+    * ≥ 2 members standing for all its intra-group pairs. A join against
+    * the signature groups of [[simhashMembers]] expands it back to the
+    * exact per-instance stream (NearDupSpec proves the two equal); or pass
     * `collapseExact = false` for the direct per-instance output
     * (id_a, id_b, hamming), the yardstick form.
     */
@@ -697,8 +564,8 @@ object NearDup {
     signatureMemberPairs(simhashMembers(docs, idCol, textCol), maxDist, collapseExact)
 
   /** (id, sh): the [[simhash]] signature of every doc with a non-NULL
-    * text — the member table both [[simhashPairs]] and
-    * [[simhashMembership]] build on, so the two always agree. Each
+    * text — the member table of [[simhashPairs]] and of its expansion
+    * back to per-instance pairs, so the two always agree. Each
     * DISTINCT normalized text is hashed once, not once per copy: on a
     * dup-heavy corpus the per-token digest work is the dominant cost and
     * shrinks by the duplication factor; ids rejoin on (8-byte text
@@ -809,41 +676,6 @@ object NearDup {
           greatest(col("ma.id"), col("mb.id")).as("id_b"), col("hamming"))
       intra.unionByName(inter)
     }
-  }
-
-  /** (id, rid) membership of every doc in its simhash SIGNATURE group —
-    * rid = the smallest id sharing the signature. The expansion key for
-    * collapsed [[simhashPairs]] output (groups are keyed by signature,
-    * not text: distinct texts that collide to one simhash merge here
-    * exactly as their per-instance pairs would have met at hamming 0).
-    * NULL-text docs have no signature and no membership row.
-    */
-  def simhashMembership(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val m = simhashMembers(docs, idCol, textCol)
-    m.join(m.groupBy("sh").agg(min("id").as("rid")), Seq("sh"))
-      .select(col("id"), col("rid"))
-  }
-
-  /** Expand a collapsed [[simhashPairs]] result back to the exact
-    * per-instance (id_a, id_b, hamming) stream: inter-group rows fan out
-    * to every (instance_a, instance_b) combo (hamming is symmetric — no
-    * reorientation needed), self rows (`id_a == id_b`) to every unordered
-    * intra-group pair at hamming 0. `members` is [[simhashMembership]] of
-    * the SAME frame. Join-shaped: quadratic only in the true duplicate
-    * multiplicities the caller asked to re-materialize.
-    */
-  def expandSimhashPairs(collapsed: DataFrame, members: DataFrame): DataFrame = {
-    val ma = members.select(col("rid").as("id_a"), col("id").as("__ia"))
-    val mb = members.select(col("rid").as("id_b"), col("id").as("__ib"))
-    val inter = collapsed.filter(col("id_a") =!= col("id_b"))
-      .join(ma, Seq("id_a")).join(mb, Seq("id_b"))
-      .select(least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"), col("hamming"))
-    val intra = collapsed.filter(col("id_a") === col("id_b"))
-      .join(ma, Seq("id_a")).join(mb, Seq("id_b"))
-      .filter(col("__ia") < col("__ib"))
-      .select(col("__ia").as("id_a"), col("__ib").as("id_b"), col("hamming"))
-    inter.unionByName(intra)
   }
 
   /** Edit-distance similarity self-join: all pairs with
@@ -977,7 +809,7 @@ object NearDup {
     * output row: (n_hashes, n_matching, est_jaccard, n_shingles_a,
     * n_shingles_b, n_common, exact_jaccard). "How much does crawl B
     * overlap crawl A" without any pairwise document work — the corpus
-    * twin of [[minhashLshPairs]]'s per-doc signatures.
+    * twin of [[minhashSignature]]'s per-doc signatures.
     *
     * The per-seed min over a corpus's shingle MULTISET equals the min
     * over its SET, so the estimate path needs NO distinct shuffle: each
@@ -1035,68 +867,5 @@ object NearDup {
         when(col("n_shingles_a") + col("n_shingles_b") - col("n_common") > 0,
           round(col("n_common").cast("double") /
             (col("n_shingles_a") + col("n_shingles_b") - col("n_common")), 5)))
-  }
-
-  /** The doc's LSH band keys as 64-bit hashes — one per band, band index
-    * baked into the key so band 0's buckets can never collide with band
-    * 3's. Exactly [[minhashLshPairs]]'s banding (md5 minhash signature,
-    * `rowsPerBand`-wide slices), reduced to a probe-able long. Docs with
-    * fewer than `n` tokens have NO shingles and therefore no band keys
-    * (NULL) — they cannot be near-dups under shingle semantics. A pure
-    * Column expression: stateless, codegen, streaming-safe.
-    */
-  def minhashBandKeys(text: Column, n: Int, numHashes: Int,
-                      rowsPerBand: Int): Column = {
-    require(rowsPerBand >= 1 && rowsPerBand <= numHashes,
-      s"minhashBandKeys needs 1 <= rowsPerBand <= numHashes, got $rowsPerBand/$numHashes")
-    val numBands = numHashes / rowsPerBand
-    // bind the signature once (the minhashSignature let-binding rule):
-    // referencing it per band would recompute the whole signature
-    // numBands times per row
-    val keys = transform(array(minhashSignature(text, n, numHashes)), sig =>
-      transform(sequence(lit(0), lit(numBands - 1)), b =>
-        xxhash64(concat_ws("|", b.cast("string"),
-          concat_ws("|", slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)))))))
-      .getItem(0)
-    when(size(split(lower(trim(text)), "\\s+")) >= n, keys)
-  }
-
-  /** Build half of the STREAMING near-dup gate: a serialized bloom filter
-    * over every history doc's band keys ([[minhashBandKeys]]) — built
-    * once per epoch from the batch history in ONE distributed pass
-    * (explode + tree-aggregated `stat.bloomFilter`; only the filter
-    * reaches the driver), then probed statelessly on the ingest stream by
-    * [[nearDupProbe]]. Size `expectedItems` at history_docs × numBands.
-    */
-  def historyBandBloom(history: DataFrame, textCol: String, n: Int,
-                       numHashes: Int, rowsPerBand: Int,
-                       expectedItems: Long, fpp: Double = 0.01): Array[Byte] = {
-    require(expectedItems > 0, s"expectedItems must be > 0, got $expectedItems")
-    require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
-    val keys = history
-      .select(explode(minhashBandKeys(col(textCol), n, numHashes,
-        rowsPerBand)).as("__bk"))
-    val bloom = keys.stat.bloomFilter("__bk", expectedItems, fpp)
-    val bos = new java.io.ByteArrayOutputStream()
-    bloom.writeTo(bos)
-    bos.toByteArray
-  }
-
-  /** Probe half of the streaming near-dup gate: TRUE when ANY of the
-    * doc's band keys is possibly in the history filter — i.e. the doc
-    * would be an LSH CANDIDATE against some history doc (the same
-    * candidate semantics [[minhashLshPairs]] verifies with estimated
-    * Jaccard; a stream cannot run the verify join, so the flag routes
-    * maybe-near-dups to a batch confirm, the [[graft.operators.Dedup]]
-    * bloomGate discipline). FALSE ⇒ definitely no shared band. Docs too
-    * short to shingle probe FALSE. Stateless codegen projection — safe
-    * in any streaming projection chain; gate only against HISTORY, not
-    * intra-stream (state-free by design).
-    */
-  def nearDupProbe(text: Column, bloomBytes: Array[Byte], n: Int,
-                   numHashes: Int, rowsPerBand: Int): Column = {
-    val keys = minhashBandKeys(text, n, numHashes, rowsPerBand)
-    coalesce(exists(keys, k =>
-      call_function("graft_bloom_contains", k, lit(bloomBytes))), lit(false))
   }
 }

@@ -10,26 +10,17 @@ import org.apache.spark.sql.functions._
   * (reference: data_tyding/extract_key_values.py:1,
   * tidy_admissions_discharges_and_create_mcl_tables.py).
   *
-  * Scale notes: always pivot with an EXPLICIT value list — Spark otherwise
-  * runs an extra job to collect distinct keys to the driver. With the list
-  * given, the pivot is a single shuffle (hash aggregate with one slot per
-  * key), identical in cost to a conditional aggregation.
+  * Scale notes: the key list is EXPLICIT — a `pivot` without one runs an
+  * extra job to collect distinct keys to the driver. With the list given,
+  * the pivot is a single shuffle (hash aggregate with one slot per key).
   */
 object Pivot {
 
-  /** Pivot `kvKey` values into wide columns aggregated by `agg` per group. */
-  def toWide(df: DataFrame, groupKeys: Seq[String], kvKey: String,
-             keyValues: Seq[String], agg: Column): DataFrame =
-    df.groupBy(groupKeys.map(col).toIndexedSeq: _*)
-      .pivot(kvKey, keyValues)
-      .agg(agg)
-
-  /** Conditional-aggregation form — the plan a hand-written
-    * `SUM(CASE WHEN k='a' THEN v ELSE 0 END)` gives; useful when column
-    * naming must be controlled precisely. NOT result-identical to
-    * [[toWide]]: the `ELSE 0` makes groups where a key never occurs read
-    * 0, where the pivot form reads NULL — pick the form whose
-    * absent-vs-zero semantics the consumer needs.
+  /** Pivot `kvKey` values into wide columns by conditional aggregation —
+    * the plan a hand-written `SUM(CASE WHEN k='a' THEN v ELSE 0 END)`
+    * gives, with the column naming controlled precisely. The `ELSE 0`
+    * makes groups where a key never occurs read 0, where Spark's
+    * `pivot` would read NULL.
     */
   def toWideConditional(df: DataFrame, groupKeys: Seq[String], kvKey: String,
                         keyValues: Seq[String], valueExpr: Column): DataFrame = {

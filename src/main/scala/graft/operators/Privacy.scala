@@ -16,11 +16,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: the census is ONE hash aggregation over the QI key (two
   * aggregates share it: a count and a distinct-count that rides the
-  * standard Expand partial-agg shape) — no windows, no self-joins. The
-  * at-risk row extraction is a semi-join against the census's failing
-  * groups, shuffling on the same QI key the census grouped on, so AQE
-  * reuses the layout decision; the failing-group side is usually tiny
-  * (that is the point of the audit) and broadcasts.
+  * standard Expand partial-agg shape) — no windows, no self-joins.
   */
 object Privacy {
 
@@ -41,19 +37,5 @@ object Privacy {
         countDistinct(col(sensitiveCol)).as("sensitive_diversity"))
       .withColumn("k_anonymous", col("group_size") >= k)
       .withColumn("l_diverse", col("sensitive_diversity") >= l)
-  }
-
-  /** The rows that sit in a failing QI group — the records a release
-    * would suppress or generalize. Left-semi against the failing census
-    * groups (null-safe on the QI key: NULL is a QI value too — two rows
-    * both missing a birthdate still share a group).
-    */
-  def atRiskRows(df: DataFrame, qiCols: Seq[String], sensitiveCol: String,
-                 k: Long = 5L, l: Long = 2L): DataFrame = {
-    val failing = kAnonymityCensus(df, qiCols, sensitiveCol, k, l)
-      .filter(!col("k_anonymous") || !col("l_diverse"))
-      .select(qiCols.map(c => col(c).as(s"__$c")).toIndexedSeq: _*)
-    val cond = qiCols.map(c => df(c) <=> failing(s"__$c")).reduce(_ && _)
-    df.join(failing, cond, "left_semi")
   }
 }

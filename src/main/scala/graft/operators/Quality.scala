@@ -34,21 +34,6 @@ object Quality {
   private[operators] def ngramHashesOf(text: Column, n: Int): Column =
     call_function("graft_ngram_hashes", tokens(text), lit(n))
 
-  /** Word n-gram instances (NOT deduplicated — repetition analysis needs
-    * every occurrence; [[NearDup.shingles]] is the set-semantics twin).
-    * Docs with fewer than n tokens yield an empty array.
-    */
-  def ngramInstances(tokens: Column, n: Int): Column =
-    // let-binding rule: bind the (possibly expensive) tokens expression
-    // once — the per-n-gram slice would otherwise re-evaluate it per
-    // element when a caller passes a computed array
-    transform(array(tokens), toks => {
-      val count = size(toks) - (n - 1)
-      when(count < 1, array().cast("array<string>"))
-        .otherwise(transform(sequence(lit(1), count),
-          i => concat_ws(" ", slice(toks, i, lit(n)))))
-    }).getItem(0)
-
   /** Per-document contamination hits against a benchmark corpus: the
     * number of distinct word n-grams of each corpus doc that also appear
     * anywhere in the benchmark. Docs with no overlap are dropped (the
@@ -126,48 +111,6 @@ object Quality {
         when(col("n_shingles") > 0,
           round(col("n_hits").cast("double") / col("n_shingles"), 5)))
       .withColumnRenamed("id", idCol)
-  }
-
-  /** Collect the benchmark's distinct n-gram hashes to the driver — a
-    * plan-time CONSTANT (same stance as the IVF centroid matrix): eval
-    * suites are thousands of documents, so the set is small enough to
-    * ride the plan and make [[contaminatedFlag]] a pure stateless
-    * projection.
-    *
-    * DRIVER-MEMORY BOUND: the full distinct-hash array materializes on
-    * the driver (8 B/hash — ~8 MB per 10⁶ n-grams) and then ships inside
-    * every task's plan, so it is capped by driver heap AND task-size
-    * limits, with no distributed fallback. Beyond ~10⁶ n-grams use
-    * [[contaminationHits]]'s broadcast-join form instead — that path
-    * never driver-collects.
-    */
-  def benchmarkHashes(benchmark: DataFrame, textCol: String, n: Int): Array[Long] = {
-    graft.functions.GraftFunctions.ensureRegistered(benchmark.sparkSession)
-    benchmark
-      .select(explode_outer(ngramHashesOf(col(textCol), n)).as("h"))
-      .filter(col("h").isNotNull).distinct()
-      .orderBy(col("h")) // ascending: the membership kernel binary-searches
-      .collect().map(_.getLong(0))
-  }
-
-  /** TRUE iff the text shares at least one word n-gram with the benchmark
-    * hash set; FALSE (never NULL) for null text, so
-    * `filter(!contaminatedFlag(...))` keeps failed-extraction rows for
-    * the downstream profile gates instead of silently dropping them. A
-    * codegen'd projection — the set rides the plan as one reference
-    * object probed by binary search with early exit (an `arrays_overlap`
-    * literal would rescan the whole set per row), no join, no state — so
-    * it drops straight into an append-mode streaming ingest chain where
-    * the count-based [[contaminationHits]] would force update-mode
-    * aggregation state. Requires graft function registration
-    * (`GraftFunctions.ensureRegistered`; [[benchmarkHashes]] does it).
-    */
-  def contaminatedFlag(text: Column, benchHashes: Array[Long], n: Int): Column = {
-    require(n >= 1, s"n-gram order must be >= 1, got $n")
-    coalesce(
-      call_function("graft_ngram_any_in", tokens(text), lit(n),
-        lit(graft.functions.GraftFunctions.encodeLongs(benchHashes))),
-      lit(false))
   }
 
   /** Unigram language-model quality score: mean natural-log probability
@@ -319,19 +262,6 @@ object Quality {
         array().cast("array<string>"))
       .otherwise(tokens(col(textCol)))
     docs.select(id.as("id"), explode_outer(toksArr).as("tok"))
-  }
-
-  private def vocabDf(spark: org.apache.spark.sql.SparkSession,
-                      v: UnigramVocab, cName: String): DataFrame = {
-    val rows = v.top.map(r => org.apache.spark.sql.Row(r._1, r._2))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("tok",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField(cName,
-        org.apache.spark.sql.types.LongType)))
-    spark.createDataFrame(
-      new java.util.ArrayList(scala.jdk.CollectionConverters
-        .SeqHasAsJava(rows).asJava), schema)
   }
 
   /** The token → 5-dp ln-p table of `v` in exact 1e-5 micro-units, plus
@@ -1409,57 +1339,6 @@ object Quality {
         col("__s.mean_logprob").as("mean_logprob"))
   }
 
-  /** The pre-r15 join-pipeline form of [[bigramLogProb]] — context-stream
-    * explode, three broadcast joins, groupBy(id) re-shuffle. Kept as the
-    * independently-derived reference the kernel is spec-pinned against
-    * (KernelPropertySpec), exactly as the sequential BPE trainer anchors
-    * the batched/local ones. Not a production path: the groupBy(id)
-    * shuffles the whole token stream just to take a per-doc mean.
-    */
-  private[graft] def bigramLogProbViaJoin(docs: DataFrame, idCol: String,
-      textCol: String, v: BigramVocab, alpha: Double = 1.0): DataFrame = {
-    require(alpha > 0, s"alpha must be > 0, got $alpha")
-    val spark = docs.sparkSession
-    val base = contextStream(docs, col(idCol), textCol)
-    val biDf = {
-      val rows = v.top.map(r => org.apache.spark.sql.Row(r._1, r._2, r._3))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("prev",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("tok",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("c12",
-          org.apache.spark.sql.types.LongType)))
-      spark.createDataFrame(new java.util.ArrayList(
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
-    }
-    val fiDf = {
-      val rows = v.first.map(r => org.apache.spark.sql.Row(r._1, r._2))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("prev",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("c1",
-          org.apache.spark.sql.types.LongType)))
-      spark.createDataFrame(new java.util.ArrayList(
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
-    }
-    val p1 = coalesce(col("c2").cast("double"), lit(alpha)) /
-      lit(v.uni.total.toDouble)
-    val lnp = when(col("prev").isNull, round(log(p1), 5))
-      .otherwise(round(log(
-        (coalesce(col("c12").cast("double"), lit(0.0)) + lit(alpha) * p1) /
-          (coalesce(col("c1").cast("double"), lit(0.0)) + lit(alpha))), 5))
-    base
-      .join(broadcast(vocabDf(spark, v.uni, "c2")), Seq("tok"), "left")
-      .join(broadcast(fiDf), Seq("prev"), "left")
-      .join(broadcast(biDf), Seq("prev", "tok"), "left")
-      .groupBy("id").agg(
-        count(col("tok")).as("n_tokens"),
-        (sum(when(col("tok").isNotNull, lnp).cast("decimal(18,5)"))
-          .cast("double") / count(col("tok"))).as("mean_logprob"))
-      .withColumnRenamed("id", idCol)
-  }
-
   /** CCNet-style perplexity bucketing (Wenzek et al. 2020, "CCNet:
     * Extracting High Quality Monolingual Datasets from Web Crawl Data" —
     * public paper): score every document under a (capped-unigram) language
@@ -1790,7 +1669,7 @@ object Quality {
     // computes the four per-doc counts in ONE pass per row; the old
     // two-explode→groupBy(id) form shuffled the token stream twice and
     // the gram-hash stream once purely to take per-doc ratios (kept as
-    // [[repetitionProfileViaAgg]], the spec-pinned reference).
+    // the spec-side reference KernelPropertySpec pins it against).
     val k = call_function("graft_rep_profile", tokensGuarded(textCol), lit(n))
     // let-binding rule: one kernel evaluation feeds all four outputs
     val packed = transform(array(k), kk => struct(
@@ -1806,41 +1685,6 @@ object Quality {
       .select(col(idCol), col("__r.n_tokens").as("n_tokens"),
         col("__r.top_token_frac").as("top_token_frac"),
         col("__r.dup_ngram_frac").as("dup_ngram_frac"))
-  }
-
-  /** The pre-r15 aggregate form of [[repetitionProfile]] — two
-    * explode→groupBy(id) chains joined. Kept as the independently-derived
-    * reference the kernel is spec-pinned against (KernelPropertySpec);
-    * not a production path.
-    */
-  private[graft] def repetitionProfileViaAgg(docs: DataFrame, idCol: String,
-      textCol: String, n: Int = 3): DataFrame = {
-    require(n >= 2, s"n-gram order must be >= 2 for repetition analysis, got $n")
-    val toks = when(col(textCol).isNull || length(trim(col(textCol))) === 0,
-        array().cast("array<string>"))
-      .otherwise(split(lower(trim(col(textCol))), "\\s+"))
-    val base = docs.select(col(idCol).as("id"), toks.as("t"))
-    val realC = when(col("tok").isNotNull, col("c"))
-    val tokStats = base
-      .select(col("id"), explode_outer(col("t")).as("tok"))
-      .groupBy("id", "tok").agg(count(lit(1)).as("c"))
-      .groupBy("id").agg(
-        coalesce(max(realC).cast("double") / sum(realC).cast("double"), lit(0.0))
-          .as("top_token_frac"),
-        coalesce(sum(realC), lit(0L)).cast("long").as("n_tokens"))
-    // grams shuffle as 8-byte hashes, not n-word strings (same collision
-    // stance as the decontamination join); explode OUTER keeps the
-    // inferred size>0 filter from duplicating the array expression
-    val gramStats = base
-      .select(col("id"), explode_outer(ngramInstances(col("t"), n)).as("g"))
-      .filter(col("g").isNotNull)
-      .groupBy(col("id"), xxhash64(col("g")).as("g")).agg(count(lit(1)).as("c"))
-      .groupBy("id").agg(
-        ((sum("c") - count(lit(1))).cast("double") / sum("c").cast("double"))
-          .as("dup_ngram_frac"))
-    tokStats.join(gramStats, Seq("id"), "left")
-      .select(col("id").as(idCol), col("n_tokens"), col("top_token_frac"),
-        coalesce(col("dup_ngram_frac"), lit(0.0)).as("dup_ngram_frac"))
   }
 
   /** Per-group vocabulary census — the corpus-composition overview a

@@ -1281,46 +1281,6 @@ object Summaries {
     }.toDF(groupCol, "quantile", "value")
   }
 
-  /** Mergeable distinct-count sketches (Apache DataSketches HLL via
-    * Spark's `hll_sketch_agg` family) — the pre-aggregation pattern that
-    * makes "distinct users per day / rolling 30-day distinct / distinct
-    * per publish increment" O(sketch) instead of O(rescan) at 100 TB:
-    * publish one small binary sketch per (group) once, then answer any
-    * union-of-groups distinct question by merging sketches — register-
-    * wise max, LOSSLESS relative to sketching the union directly, so
-    * incremental daily publishes compose into exactly the estimate a
-    * full rescan would sketch.
-    *
-    * No oracle entry on purpose: the estimate is approximate (±~1.6%/√2^lgK)
-    * and engine-specific, so DuckDB cannot replay it — the contract is
-    * spec-pinned instead (merge-lossless vs one-shot, estimate within
-    * tolerance of exact, per SketchSpec).
-    *
-    * Scale notes: ONE map-side-combined agg per call; sketch size is
-    * bounded by lgK (2^lgK registers), independent of cardinality — the
-    * shuffle carries ≤ groups × sketch-size bytes.
-    */
-  def distinctSketch(df: DataFrame, groupCols: Seq[String], valueCol: String,
-                     lgK: Int = 12): DataFrame = {
-    require(lgK >= 4 && lgK <= 21, s"lgK must be in [4, 21], got $lgK")
-    val sk = hll_sketch_agg(col(valueCol), lit(lgK)).as("sketch")
-    if (groupCols.isEmpty) df.agg(sk)
-    else df.groupBy(groupCols.map(col).toIndexedSeq: _*).agg(sk)
-  }
-
-  /** Merge previously-published sketches (all built at the same lgK) down
-    * to `groupCols` (empty = one global row) and estimate: the rolling /
-    * roll-up distinct count without touching the raw data again.
-    */
-  def mergeDistinctSketches(sketches: DataFrame, groupCols: Seq[String],
-                            sketchCol: String = "sketch"): DataFrame = {
-    val merged = hll_union_agg(col(sketchCol), lit(false)).as("sketch")
-    val g =
-      if (groupCols.isEmpty) sketches.agg(merged)
-      else sketches.groupBy(groupCols.map(col).toIndexedSeq: _*).agg(merged)
-    g.withColumn("n_distinct_est", hll_sketch_estimate(col("sketch")))
-  }
-
   /** Per-group label-distribution balance — the split/mix audit every
     * curation pipeline owes its eval sets: is val's source mix
     * representative of train's? did stratification actually balance the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Convenience views: the reference's BI-facing projections — wide
@@ -67,20 +67,4 @@ object Views {
   /** Project + rename in one pass: (sourceExpr, outputName) pairs. */
   def projection(df: DataFrame, cols: Seq[(Column, String)]): DataFrame =
     df.select(cols.map { case (c, n) => c.as(n) }: _*)
-
-  /** Put a DataFrame on the session's SQL surface under `name`. */
-  def register(spark: SparkSession, name: String, df: DataFrame): Unit =
-    df.createOrReplaceTempView(name)
-
-  /** Register the whole graft table layout as temp views so every catalog
-    * table is SQL-addressable (`spark.sql("SELECT ... FROM lineitem")`).
-    */
-  def registerTables(spark: SparkSession, dir: String): Unit = {
-    import graft.sources.Tables
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents", "embeddings").foreach { t =>
-      register(spark, t, Tables.table(spark, dir, t))
-    }
-    register(spark, "events", Tables.events(spark, dir)) // nanos-ts handling
-  }
 }

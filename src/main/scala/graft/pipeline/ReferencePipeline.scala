@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators._
 
@@ -14,9 +14,9 @@ import graft.operators._
   * Every stage is a DataFrame transform, so the flow inherits Spark's
   * partitioning/pushdown and runs identically over 10 rows or 100 TB of
   * exports. Construction runs jobs in three places: the MCL key discovery
-  * (a plan-time KEY LIST, like `extractAllKeys`; pass `knownMclKeys` to
-  * skip it); when a dataset card is configured, `DatasetCard.build`'s
-  * equi-width bounds and exact-quantile collects over the joined table;
+  * (a plan-time KEY LIST; pass `knownMclKeys` to skip it); when a dataset
+  * card is configured, `DatasetCard.build`'s equi-width bounds and
+  * exact-quantile collects over the joined table;
   * and, under `persistShared`, the three cut jobs that materialize the
   * parsed, deduped and joined frames. Without any of them, construction
   * is fully lazy.
@@ -184,8 +184,8 @@ object ReferencePipeline {
     //     (reference: json_restructure.py marks multi-valued / *Oth /
     //     AdmReason keys; explode_mcl_columns.py materializes one exploded
     //     table per MCL column). The key list is a plan-time collect of
-    //     key NAMES — same class of driver decision as extractAllKeys —
-    //     and the ONE place this module runs a job at construction time;
+    //     key NAMES, and the ONE place this module runs a job at
+    //     construction time;
     //     callers who maintain an inventory (or re-run daily at 100 TB)
     //     pass knownMclKeys to skip the discovery scan entirely.
     val mclKeys = knownMclKeys.getOrElse(JsonImport.discoverMclKeyList(deduped))

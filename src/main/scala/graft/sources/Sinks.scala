@@ -1,100 +1,27 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
-/** Write-side of the engine: parquet/csv/json sinks with the partitioning
-  * discipline a 100 TB lakehouse needs.
+/** Write side of the engine: the parquet landing of a published table and
+  * the in-place rewrite protocol behind it.
   *
   * Reference analogue: the Kedro pipeline lands every derived/summary
   * table back into Postgres (reference: src/data_pipeline/pipelines/
   * data_engineering/queries — INSERT/CREATE TABLE AS). Here the landing
-  * zone is columnar files: parquet partitioned by a date-ish key so
-  * downstream reads prune partitions instead of scanning history.
+  * zone is columnar files: `ReferencePipeline` publishes each table with
+  * [[parquet]] into a temp path and swaps it in ([[AtomicSwap]]), and
+  * `StreamUpsert` rewrites its target through [[rewriteSwapped]]. Reads
+  * go through `spark.read` directly or through [[Tables]].
   */
 object Sinks {
-
-  /** Partitioned parquet write. `partitionCols` become directory keys —
-    * pick low-cardinality, filter-bearing columns (month, facility); a
-    * high-cardinality partition key (uid) would create millions of tiny
-    * files. `maxRecordsPerFile` caps file size drift at scale.
-    */
-  def parquetPartitioned(df: DataFrame, path: String, partitionCols: Seq[String],
-                         mode: SaveMode = SaveMode.Overwrite,
-                         maxRecordsPerFile: Long = 5000000L): Unit =
-    df.write.mode(mode)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
 
   /** Plain parquet write (small dims, query results). */
   def parquet(df: DataFrame, path: String, mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).parquet(path)
 
-  /** CSV export with header (BI hand-off shape). */
-  def csv(df: DataFrame, path: String, mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).option("header", "true").csv(path)
-
-  /** JSON-lines export. */
-  def json(df: DataFrame, path: String, mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).json(path)
-
-  /** ORC write — the other columnar lake format Spark executes natively
-    * (vectorized reader, predicate pushdown, column pruning, same
-    * partitioned-write discipline as parquet).
-    */
-  def orc(df: DataFrame, path: String, mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).orc(path)
-
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
-  /** Bucketed catalog table: co-locates rows by hash(bucketCols) at WRITE
-    * time, so every later equi-join or aggregation on those columns skips
-    * its shuffle entirely (scans are already hash-partitioned). The 100 TB
-    * pattern for fact tables joined repeatedly on the same key — pay the
-    * shuffle once at ingest, never again. Requires `saveAsTable` (the
-    * bucketing metadata lives in the catalog).
-    */
-  def parquetBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
-                      nBuckets: Int, sortCols: Seq[String] = Nil): Unit = {
-    require(bucketCols.nonEmpty && nBuckets >= 1,
-      s"parquetBucketed needs >= 1 bucket column and nBuckets >= 1, got $bucketCols/$nBuckets")
-    val w = df.write.mode(SaveMode.Overwrite).format("parquet")
-      .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-      .saveAsTable(table)
-  }
-
-  /** Small-file compaction: rewrite a parquet dataset into files of
-    * roughly `rowsPerFile` rows. Streaming/incremental landing produces
-    * file counts proportional to trigger counts; scans then pay per-file
-    * open/footer costs. Compaction is the standing maintenance job of any
-    * 100 TB lakehouse — here: read → repartition to the target file count
-    * → atomic directory swap.
-    */
-  def compact(spark: SparkSession, path: String, rowsPerFile: Long): Unit = {
-    val df = spark.read.parquet(path)
-    // the sizing count reads parquet FOOTER row counts, not data: with
-    // aggregate pushdown the scan emits per-row-group statistics only —
-    // without it compaction pays a full extra pass just to pick a file
-    // count (scoped per job; graft.Sessions.withConf semantics inlined
-    // here to keep sources/ free of a graft-core dependency)
-    val key = "spark.sql.parquet.aggregatePushdown"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    val n = try df.count()
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-    val files = math.max(1, math.ceil(n.toDouble / rowsPerFile).toInt)
-    rewriteSwapped(df.repartition(files), path, suffix = "__compact")
-  }
-
   /** Rewrite `path` in place via write-to-temp + atomic swap — THE one
-    * implementation of the rewrite protocol (compaction, streaming
-    * upsert), so swap-recovery semantics can't drift between call sites.
+    * implementation of the rewrite protocol (streaming upsert), so
+    * swap-recovery semantics can't drift between call sites.
     */
   def rewriteSwapped(df: DataFrame, path: String, suffix: String = "__tmp"): Unit = {
     val tmp = path + suffix
@@ -106,38 +33,4 @@ object Sinks {
     * recovery can look for a stranded replacement.
     */
   def rewriteTmpPath(path: String): String = path + "__tmp"
-
-  /** Schema-evolving append: later batches may carry MORE columns than
-    * earlier ones (dynamic form fields discovered at ingest —
-    * [[graft.operators.JsonImport.discoverKeys]]); parquet stores each
-    * file's own schema and [[readEvolved]] merges them, so a new form
-    * field becomes a column without rewriting history (old rows read as
-    * NULL). The lake analogue of the reference's runtime ALTER TABLE ADD
-    * COLUMN (reference: conf/common/sql_functions create_new_columns,
-    * used by data_tyding/tidy_dynamic_tables.py).
-    */
-  def appendEvolving(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Append).parquet(path)
-
-  /** Union-schema read over an evolved dataset. mergeSchema costs a
-    * footer read per file — acceptable for batch analytics; pin a catalog
-    * schema instead when footer counts get large.
-    */
-  def readEvolved(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
-
-  // ── read side ──────────────────────────────────────────────────────────
-
-  /** CSV reader with an explicit schema — never `inferSchema` at scale
-    * (inference is a full extra pass over the data).
-    */
-  def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.option("header", "true").schema(schema).csv(path)
-
-  /** JSON-lines reader with an explicit schema (same no-inference rule). */
-  def readJson(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).json(path)
-
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 }

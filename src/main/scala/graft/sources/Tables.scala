@@ -66,7 +66,6 @@ object Tables {
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame  = table(s, d, "customer")
-  def supplier(s: SparkSession, d: String): DataFrame  = table(s, d, "supplier")
   def part(s: SparkSession, d: String): DataFrame      = table(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = table(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = table(s, d, "lineitem")

@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Event-time sessionization over a stream of user events.
@@ -104,20 +103,5 @@ object Sessionize {
       .withWatermark("ts", s"$gapSeconds seconds")
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(fold)
-  }
-
-  /** Adapt a raw events DataFrame (event_id, ts, user_id, …) to the typed
-    * stream input.
-    */
-  def fromRaw(df: DataFrame): Dataset[Evt] = {
-    import df.sparkSession.implicits._
-    // drop null keys/timestamps BEFORE the typed boundary: a malformed
-    // row (cast → null) would otherwise NPE inside the stateful fold and
-    // crash-loop the query on the same checkpointed offsets forever
-    df.select(col("user_id").cast("long"), col("ts").cast("timestamp"),
-        col("event_id").cast("long"))
-      .filter(col("user_id").isNotNull && col("ts").isNotNull &&
-        col("event_id").isNotNull)
-      .as[Evt]
   }
 }

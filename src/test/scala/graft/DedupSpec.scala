@@ -346,7 +346,7 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("persistent filter: fold == rebuild, gateWith exact across increments, shape mismatch refused") {
+  test("persistent filter: gateWith exact across increments, extra filter entries harmless") {
     import spark.implicits._
     val exp = 1000L
     val hist1 = (0 until 100).map(i => (i.toLong, s"h$i")).toDF("doc_id", "text")
@@ -357,34 +357,24 @@ class DedupSpec extends SparkSpec {
     val g1 = Dedup.bloomGateWith(inc1, hist1, standing0, "text")
       .select("doc_id", "is_new").as[(Long, Boolean)].collect()
     assert(g1.count(!_._2) === 30 && g1.count(_._2) === 70)
-    // admit the new docs, FOLD them in instead of rebuilding
+    // admit the new docs; increment 2 carries dups of BOTH generations +
+    // fresh docs
     val admitted1 = inc1.filter(col("doc_id") >= 2000L)
-    val folded = Dedup.foldIntoBloom(standing0, admitted1, "text", exp)
     val hist2 = hist1.unionByName(admitted1)
-    // the folded filter must behave like a fresh rebuild of hist2:
-    // increment 2 carries dups of BOTH generations + fresh docs
     val inc2 = (Seq((3000L, "h5"), (3001L, "n5"), (3002L, "n69")) ++
       (0 until 40).map(i => (4000L + i, s"x$i"))).toDF("doc_id", "text")
-    val viaFold = Dedup.bloomGateWith(inc2, hist2, folded, "text")
+    // a filter that COVERS the history plus extra entries (here: every
+    // fresh doc of increment 2, each a guaranteed false positive) must
+    // still gate exactly — the confirm join resolves every maybe
+    val covering = Dedup.historyBloom(hist2.unionByName(inc2), "text", exp)
+    val viaCovering = Dedup.bloomGateWith(inc2, hist2, covering, "text")
       .select("doc_id", "is_new").as[(Long, Boolean)].collect().toMap
     val viaRebuild = Dedup.bloomGate(inc2, hist2, "text", expectedItems = exp)
       .select("doc_id", "is_new").as[(Long, Boolean)].collect().toMap
-    assert(viaFold === viaRebuild)
-    assert(viaFold(3000L) === false && viaFold(3001L) === false &&
-      viaFold(3002L) === false && viaFold(4000L) === true)
-    // the small-increment DRIVER fold (collect + putLong) must be
-    // BIT-IDENTICAL to the distributed same-shape build + OR — same
-    // insertions, same standing-filter bit layout
-    val foldedDistributed = Dedup.foldIntoBloom(standing0, admitted1, "text",
-      exp, driverFoldMax = 0) // 0 forces the distributed fallback
-    assert(java.util.Arrays.equals(folded, foldedDistributed))
-    // mismatched build parameters must refuse on the distributed path
-    // (the driver path putLongs into the standing filter's OWN shape, so
-    // there is no wrong-shape bitmap to refuse)
-    intercept[IllegalArgumentException] {
-      Dedup.foldIntoBloom(standing0, admitted1, "text", expectedItems = 7,
-        driverFoldMax = 0)
-    }
+    assert(viaCovering === viaRebuild)
+    assert(viaCovering(3000L) === false && viaCovering(3001L) === false &&
+      viaCovering(3002L) === false && viaCovering(4000L) === true)
+    assert(viaCovering.count(_._2) === 40)
   }
 
   test("attritionReport: exact vs near-dup losses attribute to the dropped instance's source") {

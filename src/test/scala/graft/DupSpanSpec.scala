@@ -279,47 +279,6 @@ class DupSpanSpec extends SparkSpec {
       .sameElements(landed.collect().map(_.toString).sorted))
   }
 
-  test("knownGramRatio: streaming face of the span gate, stream ≡ batch, zero exchanges") {
-    import spark.implicits._
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    val footer = "all rights reserved contact support team"
-    val history = docs((1L to 10L).map(i => i -> s"h$i a$i b$i $footer"): _*)
-    val index = Dedup.dupGramIndex(history, "doc_id", "text", k = 3)
-    val nIdx = index.count()
-    val bloom = Dedup.historyBloom(index, "gram", math.max(nIdx, 1L), 0.001)
-    def chain(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("doc_id"),
-        Dedup.knownGramRatio(col("text"), bloom, k = 3).as("ratio"))
-    // batch behavior: footer-carrying row scores its footer grams;
-    // clean row scores ~0; short row scores exactly 0
-    val inc1 = Seq(
-      (101L, s"x1 x2 $footer y1"),       // 9 tokens, 7 grams, 4 pure-footer
-      (102L, "n1 n2 n3 n4 n5 n6")).toDF("doc_id", "text")
-    val inc2 = Seq((103L, "a b")).toDF("doc_id", "text")
-    val batch = chain(inc1.unionByName(inc2))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(batch(101L) > 0.5 && batch(101L) <= 1.0, batch.toString)
-    assert(batch(102L) == 0.0)
-    assert(batch(103L) == 0.0)
-    // zero exchanges: a pure projection
-    assert(!chain(inc1).queryExecution.executedPlan.toString
-      .contains("Exchange"))
-    // stream ≡ batch on a real file stream
-    val dir = java.nio.file.Files.createTempDirectory("graft_kgr").toString
-    inc1.write.parquet(s"$dir/in1")
-    val schema = spark.read.parquet(s"$dir/in1").schema
-    val q = chain(spark.readStream.schema(schema).parquet(s"$dir/in*"))
-      .writeStream.format("memory").queryName("kgr").outputMode("append")
-      .start()
-    q.processAllAvailable()
-    inc2.write.parquet(s"$dir/in2")
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("kgr")
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(streamed === batch)
-  }
-
   test("r21 kernels == combinator formulations (rolling gram hash, span cut; fuzz)") {
     import spark.implicits._
     graft.functions.GraftFunctions.ensureRegistered(spark)

@@ -1,15 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.TextAnalysis
+import graft.operators.Quality
 
-/** Spec-side references for the exact operators, written the plain way
-  * the operators avoid: Spark's buffered `percentile` aggregate over the
+/** Spec-side references for the operators, written the plain way the
+  * operators avoid: Spark's buffered `percentile` aggregate over the
   * NaN-filtered column, `Window.orderBy` cumulative sums (one
-  * single-task sort), and a driver-side Lloyd's loop. The operators
-  * answer through `Summaries.exactQuantilesPerColumn`, distributed
-  * prefix-sums and `Ann.pqTrainCodebooksExact`; specs pin them to these.
+  * single-task sort), a driver-side Lloyd's loop, `zip_with`/`aggregate`
+  * and `filter`/`isin` Column combinators where the operators call one
+  * native expression, and explode→groupBy(id) pipelines where they run
+  * one kernel per row. The operators answer through
+  * `Summaries.exactQuantilesPerColumn`, distributed prefix-sums,
+  * `Ann.pqTrainCodebooksExact` and graft's native kernels; specs pin
+  * them to these.
   */
 object ExactReference {
   def round5(v: Double): Double =
@@ -110,4 +116,152 @@ object ExactReference {
         else sums(c).map(t => (t.toDouble / counts(c) / 1e6).toFloat)
       }.toArray
     }
+
+  // ── vector combinators (`Similarity`'s native kernels) ────────────────
+
+  /** Dot product of two equal-length float arrays (double result). */
+  def dot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, v) => acc + v)
+
+  /** L2 norm. */
+  def norm(a: Column): Column = sqrt(dot(a, a))
+
+  /** Cosine similarity; 0.0 when either vector is all-zero. */
+  def cosine(a: Column, b: Column): Column = {
+    val d = norm(a) * norm(b)
+    when(d === 0.0, 0.0).otherwise(dot(a, b) / d)
+  }
+
+  /** Squared euclidean distance. */
+  def l2sq(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0d), (acc, v) => acc + v)
+
+  /** Random-hyperplane LSH bucket id over the first `dim` elements: plane
+    * p's sign at element i is the parity of a cheap integer mix of
+    * (p, i, seed); bit p is set when the projection is >= 0.
+    */
+  def rhpBucket(vec: Column, nPlanes: Int, dim: Int, seed: Int = 42): Column = {
+    val bits = (0 until nPlanes).map { p =>
+      val contributions = (0 until dim).map { i =>
+        val s = ((p * 1103515245 + i * 12345 + seed) >>> 16) & 1
+        val sign = if (s == 1) 1.0 else -1.0
+        element_at(vec, i + 1) * lit(sign)
+      }
+      val proj = contributions.reduce(_ + _)
+      when(proj >= 0.0, shiftleft(lit(1L), p)).otherwise(lit(0L))
+    }
+    bits.reduce(_ + _)
+  }
+
+  // ── text combinators (`TextAnalysis`' native kernels) ─────────────────
+
+  /** BPE-ish token estimate by two regex scans: runs of word chars count
+    * ceil(len/4) tokens, each punctuation char counts 1. */
+  def tokenCountBpe(text: Column): Column = {
+    val wordChars  = length(regexp_replace(text, "[^A-Za-z0-9]", ""))
+    val punctChars = length(regexp_replace(text, "[A-Za-z0-9\\s]", ""))
+    (ceil(wordChars.cast("double") / 4.0) + punctChars).cast("long")
+  }
+
+  /** Ratio of tokens that are stopwords (4 dp), by a `filter`/`isin` HOF. */
+  def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
+    val toks  = split(trim(text), "\\s+")
+    val stops = filter(toks, t => t.isin(stopwords.map(s => s: Any): _*))
+    round(size(stops).cast("double") / greatest(size(toks), lit(1)), 4)
+  }
+
+  /** `TextAnalysis.qualityScoreFast` over the HOF [[stopwordRatio]]. */
+  def qualityScore(text: Column, stopwords: Seq[String]): Column = {
+    val lenScore  = least(length(text).cast("double") / 500.0, lit(1.0))
+    val punctPen  = TextAnalysis.punctRatio(text) * 2.0
+    val stopScore = least(stopwordRatio(text, stopwords) * 4.0, lit(1.0))
+    round(greatest(least((lenScore * 0.5 + stopScore * 0.5) - punctPen, lit(1.0)), lit(0.0)), 4)
+  }
+
+  /** Marker-word language ID: one (score, lang) struct per language,
+    * `greatest` picks the highest score with ties to the greatest code;
+    * "und" when nothing scores. */
+  def langId(text: Column, markers: Map[String, Seq[String]]): Column = {
+    val toks = split(lower(trim(text)), "\\s+")
+    val scored = markers.toSeq.sortBy(_._1).map { case (lang, words) =>
+      val hits = size(filter(toks, t => t.isin(words.map(w => w: Any): _*)))
+      struct(hits.as("score"), lit(lang).as("lang"))
+    }
+    val best = greatest(scored.toIndexedSeq: _*)
+    when(best.getField("score") > 0, best.getField("lang")).otherwise(lit("und"))
+  }
+
+  // ── LM / repetition pipelines (`Quality`'s one-pass kernels) ──────────
+
+  /** Null/blank text → no tokens; else lower/trim/whitespace split. */
+  private def guardedTokens(textCol: String): Column =
+    when(col(textCol).isNull || length(trim(col(textCol))) === 0,
+        array().cast("array<string>"))
+      .otherwise(split(lower(trim(col(textCol))), "\\s+"))
+
+  /** Word n-gram instances (NOT deduplicated); docs with fewer than n
+    * tokens yield an empty array. */
+  private def ngramInstances(tokens: Column, n: Int): Column =
+    transform(array(tokens), toks => {
+      val count = size(toks) - (n - 1)
+      when(count < 1, array().cast("array<string>"))
+        .otherwise(transform(sequence(lit(1), count),
+          i => concat_ws(" ", slice(toks, i, lit(n)))))
+    }).getItem(0)
+
+  /** `Quality.bigramLogProb` as a join pipeline: the (id, prev, tok)
+    * context stream exploded, three joins against the vocab tables, and a
+    * groupBy(id) for the per-doc mean. */
+  def bigramLogProb(docs: DataFrame, idCol: String, textCol: String,
+                    v: Quality.BigramVocab, alpha: Double = 1.0): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val t = guardedTokens(textCol)
+    val prevs = concat(array(lit(null).cast("string")),
+      slice(t, lit(1), greatest(size(t) - 1, lit(0))))
+    val base = docs.select(col(idCol).as("id"),
+        explode_outer(zip_with(prevs, t,
+          (a, b) => struct(a.as("prev"), b.as("tok")))).as("p"))
+      .select(col("id"), col("p.prev").as("prev"), col("p.tok").as("tok"))
+    val p1 = coalesce(col("c2").cast("double"), lit(alpha)) /
+      lit(v.uni.total.toDouble)
+    val lnp = when(col("prev").isNull, round(log(p1), 5))
+      .otherwise(round(log(
+        (coalesce(col("c12").cast("double"), lit(0.0)) + lit(alpha) * p1) /
+          (coalesce(col("c1").cast("double"), lit(0.0)) + lit(alpha))), 5))
+    base
+      .join(v.uni.top.toDF("tok", "c2"), Seq("tok"), "left")
+      .join(v.first.toDF("prev", "c1"), Seq("prev"), "left")
+      .join(v.top.toDF("prev", "tok", "c12"), Seq("prev", "tok"), "left")
+      .groupBy("id").agg(
+        count(col("tok")).as("n_tokens"),
+        (sum(when(col("tok").isNotNull, lnp).cast("decimal(18,5)"))
+          .cast("double") / count(col("tok"))).as("mean_logprob"))
+      .withColumnRenamed("id", idCol)
+  }
+
+  /** `Quality.repetitionProfile` as two explode→groupBy(id) chains
+    * joined: token stats and n-gram stats. */
+  def repetitionProfile(docs: DataFrame, idCol: String, textCol: String,
+                        n: Int = 3): DataFrame = {
+    val base = docs.select(col(idCol).as("id"), guardedTokens(textCol).as("t"))
+    val realC = when(col("tok").isNotNull, col("c"))
+    val tokStats = base
+      .select(col("id"), explode_outer(col("t")).as("tok"))
+      .groupBy("id", "tok").agg(count(lit(1)).as("c"))
+      .groupBy("id").agg(
+        coalesce(max(realC).cast("double") / sum(realC).cast("double"), lit(0.0))
+          .as("top_token_frac"),
+        coalesce(sum(realC), lit(0L)).cast("long").as("n_tokens"))
+    val gramStats = base
+      .select(col("id"), explode_outer(ngramInstances(col("t"), n)).as("g"))
+      .filter(col("g").isNotNull)
+      .groupBy(col("id"), xxhash64(col("g")).as("g")).agg(count(lit(1)).as("c"))
+      .groupBy("id").agg(
+        ((sum("c") - count(lit(1))).cast("double") / sum("c").cast("double"))
+          .as("dup_ngram_frac"))
+    tokStats.join(gramStats, Seq("id"), "left")
+      .select(col("id").as(idCol), col("n_tokens"), col("top_token_frac"),
+        coalesce(col("dup_ngram_frac"), lit(0.0)).as("dup_ngram_frac"))
+  }
 }

@@ -65,84 +65,20 @@ class JsonImportSpec extends SparkSpec {
     assert(nonNull == Set(("adm", "36.6", "Temperature"), ("dis", "37.1", null)))
   }
 
-  test("discoverKeys inventories keys across BOTH entries shapes") {
-    val parsed = JsonImport.parseSessions(raw, "json")
-    val keys = JsonImport.discoverKeys(parsed).collect().map(_.getString(0)).toSet
-    assert(keys == Set("NeoTreeID", "Temp", "UID"))
-  }
-
-  test("readRawSessions: a text-dir export parses with corrupt rows routed, not dropped") {
+  test("parseSessions over a text-dir export: corrupt rows routed, not dropped") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_raw").toString
     Seq(
       """{"scriptid":"adm","uid":"rr-1","entries":[{"key":"Temp","values":[{"value":"36","label":"T"}]}]}""",
       """definitely not json"""
     ).toDF("value").coalesce(1).write.text(s"$dir/day1")
-    val parsed = JsonImport.readRawSessions(spark, s"$dir/day*")
+    // spark.read.text keeps each line opaque, so a malformed document
+    // reaches parseSessions' corrupt-row routing
+    val parsed = JsonImport.parseSessions(
+      spark.read.text(s"$dir/day*").withColumnRenamed("value", "json"), "json")
     assert(parsed.count() === 2)
     assert(parsed.filter(col("is_corrupt")).count() === 1)
     assert(parsed.filter(col("uid") === "RR-1").count() === 1)
-  }
-
-  test("incremental inventory: stored keys + increment discovery == full rescan") {
-    import spark.implicits._
-    val increment = Seq(
-      """{"scriptid":"adm","uid":"inc-1","entries":[{"key":"NewField","values":[{"value":"x1","label":"New"}]},{"key":"Temp","values":[{"value":"36","label":"T"}]}]}"""
-    ).toDF("json")
-    // day 1: full discovery, stored; day 2: discover the INCREMENT only
-    val stored = JsonImport.discoverKeys(JsonImport.parseSessions(raw, "json"))
-    val incremental = JsonImport.unionInventory(stored,
-      JsonImport.discoverKeys(JsonImport.parseSessions(increment, "json")))
-    val fullRescan = JsonImport.discoverKeys(
-      JsonImport.parseSessions(raw.unionByName(increment), "json"))
-    assert(incremental.as[String].collect().toSet ===
-      fullRescan.as[String].collect().toSet)
-    // and the maintained inventory widens WITHOUT a discovery scan,
-    // with the same stable column order as extractAllKeys
-    val wide = JsonImport.extractWithInventory(
-      JsonImport.parseSessions(raw.unionByName(increment), "json"), incremental)
-    val wideFull = JsonImport.extractAllKeys(
-      JsonImport.parseSessions(raw.unionByName(increment), "json"))
-    assert(wide.columns.toSeq === wideFull.columns.toSeq)
-    assert(wide.filter(col("NewField_value") === "x1").count() == 1)
-  }
-
-  test("sampled discovery: fraction 1.0 equals the full inventory (subset contract)") {
-    val parsed = JsonImport.parseSessions(raw, "json")
-    val full = JsonImport.discoverKeys(parsed).collect().map(_.getString(0)).toSet
-    val all = JsonImport.discoverKeysSampled(parsed, 1.0).collect().map(_.getString(0)).toSet
-    assert(all === full)
-    val some = JsonImport.discoverKeysSampled(parsed, 0.5).collect().map(_.getString(0)).toSet
-    assert(some.subsetOf(full)) // sampling may MISS keys, never invent them
-  }
-
-  test("extractAllKeys: a never-seen form field becomes a column, no code change") {
-    import spark.implicits._
-    // second batch adds a key ("NewField") that batch one never carried
-    val batch2 = Seq(
-      """{"scriptid":"adm","uid":"gh-78","entries":[{"key":"NewField","values":[{"value":"x1","label":"New"}]}]}"""
-    ).toDF("json")
-    val wide = JsonImport.extractAllKeys(
-      JsonImport.parseSessions(raw.unionByName(batch2), "json"))
-    assert(wide.columns.contains("NewField_value"))
-    // new rows carry the value; pre-existing rows read NULL
-    assert(wide.filter(col("NewField_value") === "x1").count() == 1)
-    assert(wide.filter(col("uid") === "AB-12")
-      .head.getAs[String]("NewField_value") == null)
-  }
-
-  test("schema-evolving sink: new column appears on merged read, old rows null") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_evolve").toString + "/t"
-    graft.sources.Sinks.appendEvolving(
-      Seq(("u1", "36.6")).toDF("uid", "temp_value"), dir)
-    graft.sources.Sinks.appendEvolving(
-      Seq(("u2", "37.0", "yes")).toDF("uid", "temp_value", "newfield_value"), dir)
-    val merged = graft.sources.Sinks.readEvolved(spark, dir)
-    assert(merged.columns.toSet == Set("uid", "temp_value", "newfield_value"))
-    val byUid = merged.collect().map(r =>
-      r.getAs[String]("uid") -> r.getAs[String]("newfield_value")).toMap
-    assert(byUid == Map("u1" -> null, "u2" -> "yes"))
   }
 
   test("explodeRepeatables: 3-measurement session yields 3 rows, both field shapes") {

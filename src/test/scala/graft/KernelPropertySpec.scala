@@ -15,29 +15,6 @@ import graft.operators.{KeyRepair, NearDup}
 class KernelPropertySpec extends SparkSpec {
   import spark.implicits._
 
-  test("ngramAnyIn membership equals hash-set intersection across random corpora") {
-    import graft.operators.Quality
-    val rnd = new scala.util.Random(19)
-    val words = Vector("a", "bb", "ccc", "δδ", "ee", "φ", "g", "hi")
-    def doc() = (1 to rnd.nextInt(12)).map(_ => words(rnd.nextInt(words.size))).mkString(" ")
-    for (trial <- 1 to 10) {
-      val n = rnd.nextInt(3) + 1
-      val bench = (1 to 5).map(_ => doc()).toDF("text")
-      val corpus = (1 to 40).map(i => (i.toLong, doc())).toDF("doc_id", "text")
-      val hashes = Quality.benchmarkHashes(bench, "text", n)
-      // reference model: doc flagged ⟺ its distinct n-gram hash set
-      // intersects the benchmark set (the graft_ngram_hashes kernel)
-      val expected = corpus
-        .select(col("doc_id"), call_function("graft_ngram_hashes",
-          split(lower(trim(col("text"))), "\\s+"), lit(n)).as("sh"))
-        .as[(Long, Seq[Long])].collect()
-        .filter(_._2.exists(hashes.toSet)).map(_._1).toSet
-      val got = corpus.filter(Quality.contaminatedFlag(col("text"), hashes, n))
-        .select("doc_id").as[Long].collect().toSet
-      assert(got === expected, s"trial $trial n=$n")
-    }
-  }
-
   test("dedupParagraphs equals a driver-side keep-first model on random corpora") {
     import graft.operators.Dedup
     val rnd = new scala.util.Random(47)
@@ -595,7 +572,7 @@ class KernelPropertySpec extends SparkSpec {
     val p = TextAnalysis.tokenProfile(col("t"))
     val rows = docs.select(
         TextAnalysis.tokenCountWs(col("t")).cast("long").as("ws_ref"),
-        TextAnalysis.tokenCountBpe(col("t")).as("bpe_ref"),
+        ExactReference.tokenCountBpe(col("t")).as("bpe_ref"),
         p.getItem(0).as("ws_k"),
         TextAnalysis.bpeishFromProfile(p).as("bpe_k"),
         col("t"))
@@ -625,7 +602,7 @@ class KernelPropertySpec extends SparkSpec {
         maxBigrams = 1 + rnd.nextInt(12), maxVocab = 1 + rnd.nextInt(6))
       val got = Quality.bigramLogProb(corpus, "doc_id", "text", v)
         .orderBy("doc_id").collect().toSeq
-      val ref = Quality.bigramLogProbViaJoin(corpus, "doc_id", "text", v)
+      val ref = ExactReference.bigramLogProb(corpus, "doc_id", "text", v)
         .orderBy("doc_id").collect().toSeq
       assert(got === ref, s"trial $trial")
     }
@@ -645,7 +622,7 @@ class KernelPropertySpec extends SparkSpec {
         .toDF("doc_id", "text")
       val got = Quality.repetitionProfile(corpus, "doc_id", "text", n)
         .orderBy("doc_id").collect().toSeq
-      val ref = Quality.repetitionProfileViaAgg(corpus, "doc_id", "text", n)
+      val ref = ExactReference.repetitionProfile(corpus, "doc_id", "text", n)
         .orderBy("doc_id").collect().toSeq
       assert(got === ref, s"trial $trial n=$n")
     }

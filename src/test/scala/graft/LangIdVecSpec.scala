@@ -106,65 +106,6 @@ class LangIdVecSpec extends SparkSpec {
     assert("langIdVecKernel(\\w*)\\.eval".r.findAllIn(code).size <= 2, code.take(2000))
   }
 
-  test("script prefilter: census routes scripts, kana rule splits ja from zh") {
-    GraftFunctions.ensureRegistered(spark)
-    val docs = Seq(
-      (1L, "the weather is lovely today my friends"),
-      (2L, "дети идут в школу утром с друзьями"),
-      (3L, "الأطفال يذهبون إلى المدرسة هذا الصباح"),
-      (4L, "बच्चे आज सुबह स्कूल जाते हैं"),
-      (5L, "孩子们 今天 早上 去 学校"),              // Han only → zh
-      (6L, "子どもたちはけさ学校へ行きます"),         // kana present → ja
-      (7L, "아이들은 오늘 아침 학교에 갑니다"),
-      (8L, "τα παιδιά πηγαίνουν στο σχολείο το πρωί"),
-      (9L, "12345 !!!"),                            // no script → und-ish fallback
-      (10L, null.asInstanceOf[String])).toDF("doc_id", "text")
-    val out = LangId.predictScripted(docs, "text")
-      .select("doc_id", "script", "lang_pred", "margin")
-      .collect().map(r => r.getLong(0) -> r).toMap
-    assert(out(1L).getString(1) == "Latn" && out(1L).getString(2) == "en")
-    assert(out(2L).getString(1) == "Cyrl" && out(2L).getString(2) == "ru")
-    assert(out(3L).getString(1) == "Arab" && out(3L).getString(2) == "ar")
-    assert(out(4L).getString(1) == "Deva" && out(4L).getString(2) == "hi")
-    assert(out(5L).getString(1) == "Hani" && out(5L).getString(2) == "zh")
-    assert(out(6L).getString(1) == "Jpan" && out(6L).getString(2) == "ja")
-    assert(out(7L).getString(1) == "Hang" && out(7L).getString(2) == "ko")
-    assert(out(8L).getString(1) == "Grek" && out(8L).getString(2) == "el")
-    // single-language scripts carry NO within-script margin (census IS
-    // the confidence); the multi-language Latin group still competes
-    assert(out(2L).isNullAt(3) && out(5L).isNullAt(3) && out(7L).isNullAt(3))
-    assert(!out(1L).isNullAt(3) && out(1L).getDouble(3) > 0)
-    assert(out(9L).getString(1) == "Zyyy")
-    assert(out(10L).isNullAt(2)) // NULL text -> NULL pred (not "und")
-  }
-
-  test("script prefilter: accuracy >= the flat model's on the 15-lang synthesis") {
-    GraftFunctions.ensureRegistered(spark)
-    val (langTrue, text) = Queries.synthMultilingual(col("doc_id"))
-    val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select(col("doc_id"), langTrue.as("lang_true"), text.as("text"))
-    def acc(df: org.apache.spark.sql.DataFrame): Double = {
-      val r = df.agg(count(lit(1)),
-        sum(when(col("lang_pred") === col("lang_true"), 1L).otherwise(0L)))
-        .collect()(0)
-      r.getLong(1).toDouble / r.getLong(0)
-    }
-    val flat = acc(LangId.predict(docs, "text"))
-    val scripted = acc(LangId.predictScripted(docs, "text"))
-    info(f"flat ${flat * 100}%.1f%% scripted ${scripted * 100}%.1f%%")
-    assert(scripted >= flat - 1e-9,
-      f"scripted $scripted%.4f must not lose to flat $flat%.4f")
-    assert(scripted >= 0.95)
-  }
-
-  test("script prefilter plan: still a zero-exchange projection") {
-    GraftFunctions.ensureRegistered(spark)
-    val docs = Seq((1L, "hello there")).toDF("doc_id", "text")
-    val p = LangId.predictScripted(docs, "text")
-      .queryExecution.executedPlan.toString
-    assert(!p.contains("Exchange") && !p.contains("Join"), p.take(1200))
-  }
-
   test("custom model: a two-language trainer separates its own corpus") {
     GraftFunctions.ensureRegistered(spark)
     val corpus = Seq(

@@ -73,7 +73,7 @@ class NearDupSpec extends SparkSpec {
     assert(selfRows.filter(col("id_a") === 3L && col("n_a") === 2L).count() > 0)
     // expansion reproduces the per-instance stream EXACTLY
     val members = NearDup.exactTextMembership(docs, "doc_id", "text")
-    val expanded = NearDup.expandSharedSpans(collapsed, members)
+    val expanded = NearDupExpansion.sharedSpans(collapsed, members)
       .as[(Long, Long, Long, Long, Long)].collect()
     assert(expanded.length === expanded.toSet.size, "expansion emitted duplicate rows")
     assert(expanded.toSet === legacy)
@@ -158,7 +158,7 @@ class NearDupSpec extends SparkSpec {
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(mults === Set((1L, 10L, 3L, 2L), (1L, 11L, 3L, 1L)))
     // expansion reproduces the per-instance MULTISET exactly (3×2 fanout)
-    val expanded = NearDup.expandCrossNgramPairs(collapsed,
+    val expanded = NearDupExpansion.crossNgramPairs(collapsed,
         NearDup.exactTextMembership(inc, "doc_id", "text", normalize = true),
         NearDup.exactTextMembership(hist, "doc_id", "text", normalize = true))
       .as[(Long, Long, Double, Double)].collect()
@@ -237,20 +237,6 @@ class NearDupSpec extends SparkSpec {
     assert(nEdges === 6L, s"expected 5 star + 1 rep edge, got $nEdges")
   }
 
-  test("minhash LSH banding finds the near-identical pair, skips far pairs") {
-    val base = "the quick brown fox jumps over the lazy dog and runs far away today"
-    val docs = Seq(
-      (1L, base),
-      (2L, base + " extra"),
-      (3L, "completely unrelated words describing other things entirely here now")
-    ).toDF("doc_id", "text")
-    val out = NearDup.minhashLshPairs(docs, "doc_id", "text", n = 3,
-      numHashes = 16, rowsPerBand = 4, threshold = 0.5)
-      .as[(Long, Long, Double)].collect()
-    assert(out.map(p => (p._1, p._2)).toSet === Set((1L, 2L)))
-    assert(out.head._3 >= 0.5)
-  }
-
   test("simhashPairs finds near-identical docs within hamming budget") {
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
@@ -317,8 +303,8 @@ class NearDupSpec extends SparkSpec {
     val perInstance = NearDup.simhashPairs(docs, "doc_id", "text", maxDist = 14,
         collapseExact = false)
       .as[(Long, Long, Int)].collect().toSet
-    val members = NearDup.simhashMembership(docs, "doc_id", "text")
-    val expanded = NearDup.expandSimhashPairs(collapsed, members)
+    val members = NearDupExpansion.simhashMembership(docs, "doc_id", "text")
+    val expanded = NearDupExpansion.simhashPairs(collapsed, members)
       .as[(Long, Long, Int)].collect().toSet
     assert(expanded === perInstance)
     // shape: the collapsed stream is LINEAR — 3 self rows (the three

@@ -562,16 +562,6 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
-  test("multimodal synthesize produces binary payloads with typed metadata") {
-    val base = Seq(1L, 2L, 3L).toDF("c_custkey")
-    val media = Multimodal.synthesize(base, "c_custkey")
-    val meta = Multimodal.metadataOnly(media).collect()
-    assert(meta.length === 3)
-    val kinds = meta.map(_.getAs[String]("kind")).toSet
-    assert(kinds.subsetOf(Set("image", "audio", "video")))
-    assert(media.schema("bytes").dataType.typeName === "binary")
-  }
-
   test("neolab summary keeps NULL-episode rows with a zero census (correlated-COUNT semantics)") {
     val nl = Seq(
       ("F1", "u1", null.asInstanceOf[java.lang.Integer], "2026-01-10",
@@ -614,7 +604,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("decodeMeta routes corrupt and non-image payloads to NULL measurements") {
-    val junk = Multimodal.synthesize(Seq(1L, 2L, 3L).toDF("c_custkey"), "c_custkey")
+    val junk = MediaFixtures.synthesize(Seq(1L, 2L, 3L).toDF("c_custkey"), "c_custkey")
     val out = Multimodal.decodeMeta(junk, ImageIoCodec).collect()
     // sha-derived fake bytes decode as nothing, audio/video never decode —
     // every row SURVIVES with null width (countable, not dropped)
@@ -680,7 +670,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("decodeAudioMeta routes corrupt and non-audio payloads to NULL measurements") {
-    val junk = Multimodal.synthesize(Seq(1L, 2L, 3L).toDF("c_custkey"), "c_custkey")
+    val junk = MediaFixtures.synthesize(Seq(1L, 2L, 3L).toDF("c_custkey"), "c_custkey")
     val out = Multimodal.decodeAudioMeta(junk, AudioWavCodec).collect()
     assert(out.length === 3 && out.forall(_.isNullAt(2)))
     // an image codec asked for audio stays None via the trait default

@@ -39,18 +39,6 @@ class QualitySpec extends SparkSpec {
     assert(p.split("Exchange hashpartitioning").length - 1 == 2, p.take(2000))
   }
 
-  test("contaminatedFlag marks exactly the docs contaminationHits reports") {
-    val bench = Seq("a b c d e", "q r s t").toDF("text")
-    val corpus = Seq((1L, "a b c x"), (2L, "x y z"), (3L, "r s t u"),
-      (4L, "nothing shared here"), (5L, "d e only")).toDF("doc_id", "text")
-    val viaHits = Quality.contaminationHits(corpus, bench, "doc_id", "text", n = 2)
-      .select("doc_id").as[Long].collect().toSet
-    val hashes = Quality.benchmarkHashes(bench, "text", n = 2)
-    val viaFlag = corpus.filter(Quality.contaminatedFlag(col("text"), hashes, n = 2))
-      .select("doc_id").as[Long].collect().toSet
-    assert(viaFlag === viaHits && viaFlag === Set(1L, 3L, 5L))
-  }
-
   test("gopherFilter: each rule fires on its own signal; clean doc keeps") {
     import spark.implicits._
     val stops = Seq("the", "a", "of")
@@ -284,20 +272,13 @@ class QualitySpec extends SparkSpec {
     assert(out(2) === ((3L, 0L, null))) // empty doc: row kept, null score
   }
 
-  test("unigramLogProb survives an all-blank corpus; flag is FALSE for null text") {
+  test("unigramLogProb survives an all-blank corpus") {
     val blank = Seq((1L, null.asInstanceOf[String]), (2L, "  "))
       .toDF("doc_id", "text")
     val out = Quality.unigramLogProb(blank, "doc_id", "text", maxVocab = 4)
       .orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.isNullAt(2)))
     assert(out === Array((1L, 0L, true), (2L, 0L, true)))
-    // null-text rows must NOT be dropped by the decontamination gate
-    val hashes = Quality.benchmarkHashes(Seq("a b c").toDF("text"), "text", 2)
-    val kept = Seq((1L, null.asInstanceOf[String]), (2L, "a b x"))
-      .toDF("doc_id", "text")
-      .filter(!Quality.contaminatedFlag(col("text"), hashes, 2))
-      .select("doc_id").as[Long].collect().toSet
-    assert(kept === Set(1L)) // doc 2 is contaminated; doc 1 (null) passes
   }
 
   test("repetitionProfile computes exact fractions; null/blank docs get zero rows") {

@@ -82,33 +82,6 @@ class RecodeDiscoverySpec extends SparkSpec {
       None, None, None))
   }
 
-  test("ensureColumns adds typed NULLs only for missing names; renameIfPresent folds drift") {
-    val df = Seq((1L, "x")).toDF("id", "a")
-    val out = Cleanup.ensureColumns(df, Seq("a", "b", "c"))
-    assert(out.columns.toSeq === Seq("id", "a", "b", "c"))
-    assert(out.select("b").head.isNullAt(0))
-    // renameIfPresent: absent old name → no-op; present → fold into new
-    assert(Cleanup.renameIfPresent(df, "zz", "a").columns.toSeq === Seq("id", "a"))
-    val renamed = Cleanup.renameIfPresent(df, "a", "a2")
-    assert(renamed.columns.toSeq === Seq("id", "a2"))
-    assert(renamed.select("a2").as[String].head() === "x")
-  }
-
-  test("fillLabelFromMetadata restores None-ish labels from the value map only") {
-    val m = Map("SVD" -> "Normal delivery", "CS" -> "Caesarean")
-    val out = Seq(
-      ("SVD", null.asInstanceOf[String]), // null label → mapped
-      ("CS", "None"),                     // stringified None → mapped
-      ("CS", """["None"]"""),             // the reference's LIST-form sentinel
-      ("SVD", "Hand-entered"),            // present label → untouched
-      ("OTH", "None")                     // unmapped value → sentinel kept
-    ).toDF("v", "l")
-      .select(DeriveColumns.fillLabelFromMetadata(col("v"), col("l"), m))
-      .as[String].collect()
-    assert(out === Array("Normal delivery", "Caesarean", "Caesarean",
-      "Hand-entered", "None"))
-  }
-
   test("coerceByFieldInfo date default accepts what the validation regex accepts") {
     // an ISO datetime passes the generated DatetimeRegex rule — the
     // coercion half of the same metadata must not silently NULL it

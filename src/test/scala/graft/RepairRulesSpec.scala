@@ -81,9 +81,9 @@ class RepairRulesSpec extends SparkSpec {
         if (i % 2 == 0) "junk" else "2026-01-15")   // 50% valid
     }
     val df = rows.toDF("id", "mostly_good", "half_bad")
-    val out = DeriveColumns.profileGatedDateCast(
-      DeriveColumns.profileGatedDateCast(df, "mostly_good", Seq("yyyy-MM-dd"), 90.0),
-      "half_bad", Seq("yyyy-MM-dd"), 90.0)
+    val out = DeriveColumns.profileGatedDateCasts(df, Seq(
+      ("mostly_good", Seq("yyyy-MM-dd"), 90.0),
+      ("half_bad", Seq("yyyy-MM-dd"), 90.0)))
     assert(out.schema("mostly_good").dataType.typeName == "timestamp")
     assert(out.schema("half_bad").dataType.typeName == "string")
     // invalid values in the cast column became NULL; valid ones parsed
@@ -92,19 +92,8 @@ class RepairRulesSpec extends SparkSpec {
 
   test("profileGatedDateCast: all-null column passes vacuously (nothing to disprove)") {
     val df = Seq((1L, null.asInstanceOf[String])).toDF("id", "dt")
-    val out = DeriveColumns.profileGatedDateCast(df, "dt", Seq("yyyy-MM-dd"), 90.0)
+    val out = DeriveColumns.profileGatedDateCasts(df, Seq(("dt", Seq("yyyy-MM-dd"), 90.0)))
     assert(out.schema("dt").dataType.typeName == "timestamp")
-  }
-
-  test("recodeByScript applies each script's own mapping, passthrough otherwise") {
-    val df = Seq(("adm", "DC"), ("dis", "DC"), ("oth", "DC"), ("adm", "X"))
-      .toDF("scriptid", "v")
-    val out = df.select(col("scriptid"), DeriveColumns.recodeByScript(
-        col("scriptid"), col("v"),
-        Map("adm" -> Map("DC" -> "Discharged"), "dis" -> Map("DC" -> "Deceased")))
-      .as("label")).as[(String, String)].collect().toSet
-    assert(out == Set(("adm", "Discharged"), ("dis", "Deceased"),
-      ("oth", "DC"), ("adm", "X")))
   }
 
   test("validation exceptions: one row per violated rule, with reason codes") {
@@ -253,19 +242,6 @@ class RepairRulesSpec extends SparkSpec {
     assert(rows(0).getDouble(1) === 36.5 && rows(0).getBoolean(2))
     assert(rows(1).isNullAt(1) && !rows(1).getBoolean(2) && rows(1).isNullAt(3))
     assert(rows(2).isNullAt(1) && !rows(2).getBoolean(2)) // null bool → false (fillna)
-  }
-
-  test("coalesceInto folds a legacy column into its successor") {
-    import graft.operators.Cleanup
-    val both = Seq(("f1", null.asInstanceOf[String]),
-      (null.asInstanceOf[String], "p2"), ("f3", "p3")).toDF("facility", "phc")
-    val folded = Cleanup.coalesceInto(both, "facility", "phc")
-    assert(folded.columns.toSeq == Seq("phc"))
-    assert(folded.as[String].collect().toSet == Set("f1", "p2", "p3"))
-    val renamed = Cleanup.coalesceInto(Seq("f").toDF("facility"), "facility", "phc")
-    assert(renamed.columns.toSeq == Seq("phc"))
-    val untouched = Cleanup.coalesceInto(Seq("p").toDF("phc"), "facility", "phc")
-    assert(untouched.columns.toSeq == Seq("phc"))
   }
 
   test("firstViolation: rule order is reason precedence (the q18 shape)") {

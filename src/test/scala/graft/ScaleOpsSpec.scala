@@ -676,41 +676,6 @@ class ScaleOpsSpec extends SparkSpec {
     assert(out === Seq("a", "b", "c")) // unquoted "|" would split per char
   }
 
-  test("pcaReduce: top-k over an 8-d reduction preserves neighbors of low-rank data") {
-    // embeddings with genuine low-dim structure: 64-d vectors living in a
-    // 4-d subspace plus small noise (real text/image embeddings are
-    // low-rank-ish; graft's isotropic random testdata embeddings are NOT,
-    // and PCA rightly cannot compress those — measured 0.38 variance at
-    // 16/64, the documented not-applicable case)
-    val rnd = new scala.util.Random(5)
-    val basis = Array.fill(4, 64)(rnd.nextGaussian().toFloat)
-    val vecs = (0L until 200L).map { i =>
-      val w = Array.fill(4)(rnd.nextGaussian().toFloat * 3f)
-      val v = Array.tabulate(64)(d =>
-        (0 until 4).map(b => w(b) * basis(b)(d)).sum + rnd.nextGaussian().toFloat * 0.01f)
-      (i, v.toSeq)
-    }.toDF("vec_id", "embedding")
-    val truth = Ann.bruteForceTopK(
-        vecs.filter(pmod(col("vec_id"), lit(20)) === 0), vecs, "vec_id", "embedding", 5)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val (reduced, model) = Ann.pcaReduce(vecs, "embedding", dims = 8, outCol = "emb8")
-    assert(reduced.select("emb8").head.getSeq[Float](0).length === 8)
-    assert(model.explainedVariance.toArray.sum > 0.99) // 4-d structure captured
-    val got = Ann.bruteForceTopK(
-        reduced.filter(pmod(col("vec_id"), lit(20)) === 0), reduced,
-        "vec_id", "emb8", 5)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val recall = got.intersect(truth).size.toDouble / truth.size
-    info(f"recall@5 after 64->8 PCA on rank-4 data: $recall%.2f")
-    assert(recall >= 0.9, s"PCA reduction destroyed neighborhood structure: $recall")
-    // the fitted basis transforms a future batch into the same space
-    import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-    val again = model.transform(vecs.limit(5).withColumn("__pca_in",
-        array_to_vector(col("embedding").cast("array<double>"))))
-      .withColumn("emb8", vector_to_array(col("__pca_out"), "float32"))
-    assert(again.select("emb8").head.getSeq[Float](0).length === 8)
-  }
-
   test("token-budget cut handles a null stratum and keeps budget semantics") {
     import graft.operators.Sampling
     val docs = Seq(
@@ -963,8 +928,8 @@ class ScaleOpsSpec extends SparkSpec {
            (a, x) => a + x.cast("double") * x.cast("double"))).as("r"))
       .agg(avg("r")).head().getDouble(0)
     assert(math.abs(ratio - 1.0) < 0.15, s"norm ratio $ratio")
-    // neighborhood preservation needs neighborhoods to exist: like the
-    // pcaReduce spec, measure on rank-4 structured data (real embeddings
+    // neighborhood preservation needs neighborhoods to exist: measure
+    // on rank-4 structured data (real embeddings
     // are low-rank-ish; graft's ISOTROPIC random testdata has cosine
     // gaps far below the 1/sqrt(16) JL noise floor, where 64->16
     // rightly cannot help — measured 0.08, the documented

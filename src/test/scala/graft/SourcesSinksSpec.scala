@@ -3,12 +3,12 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import graft.sources.Sinks
 
-/** Sources/sinks: round-trips for parquet/csv/json and the scale
-  * properties — partitioned layout on disk, partition pruning in the scan,
-  * filter pushdown reaching the parquet reader.
+/** Sources/sinks: the parquet round-trip, the events reader's timestamp
+  * normalization, the Z-order clustered layout, and filter pushdown
+  * reaching the parquet reader.
   */
 class SourcesSinksSpec extends SparkSpec {
 
@@ -24,53 +24,11 @@ class SourcesSinksSpec extends SparkSpec {
   test("parquet round-trip preserves schema and rows") {
     val dir = tmp("pq")
     Sinks.parquet(sample, dir)
-    val back = Sinks.readParquet(spark, dir)
+    val back = spark.read.parquet(dir)
     // parquet reads come back nullable — compare names and types
     assert(back.schema.map(f => (f.name, f.dataType)) ==
       sample.schema.map(f => (f.name, f.dataType)))
     assert(back.count() == 100)
-  }
-
-  test("orc round-trip preserves schema, prunes columns, pushes filters") {
-    val dir = tmp("orc")
-    Sinks.orc(sample, dir)
-    val back = Sinks.readOrc(spark, dir)
-    assert(back.schema.map(f => (f.name, f.dataType)) ==
-      sample.schema.map(f => (f.name, f.dataType)))
-    assert(back.count() == 100)
-    val scan = back.filter(col("id") > 90).select("name")
-      .queryExecution.executedPlan.collectLeaves().map(_.toString).mkString
-    assert(scan.contains("PushedFilters") && scan.contains("GreaterThan(id,90)"),
-      scan.take(2000))
-    assert(scan.contains("ReadSchema") && !scan.contains("score"), scan.take(2000))
-  }
-
-  test("csv and json round-trip with explicit schema") {
-    val csvDir = tmp("csv")
-    val jsonDir = tmp("json")
-    Sinks.csv(sample, csvDir)
-    Sinks.json(sample, jsonDir)
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("name", StringType),
-      StructField("bucket", IntegerType), StructField("score", DoubleType)))
-    val csvBack = Sinks.readCsv(spark, csvDir, schema)
-    val jsonBack = Sinks.readJson(spark, jsonDir, schema)
-    assert(csvBack.count() == 100 && jsonBack.count() == 100)
-    assert(csvBack.agg(sum("id")).head.getLong(0) == 5050L)
-    assert(jsonBack.agg(sum("id")).head.getLong(0) == 5050L)
-  }
-
-  test("partitioned write creates directory keys and scans prune them") {
-    val dir = tmp("pqpart")
-    Sinks.parquetPartitioned(sample, dir, Seq("bucket"))
-    val listed = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("bucket=")).sorted
-    assert(listed.toSeq == Seq("bucket=0", "bucket=1", "bucket=2", "bucket=3"))
-
-    val pruned = Sinks.readParquet(spark, dir).filter(col("bucket") === 2)
-    assert(pruned.count() == 25)
-    val plan = pruned.queryExecution.executedPlan.toString
-    // partition filter present, and only the one matching partition read
-    assert(plan.contains("PartitionFilters") && plan.contains("bucket"), plan.take(2000))
   }
 
   test("events reader normalizes a TIMESTAMP_NTZ-written ts to TIMESTAMP") {
@@ -127,7 +85,7 @@ class SourcesSinksSpec extends SparkSpec {
     }.toDF("id", "fac", "ym", "payload").repartition(7)
     val dir = tmp("zorder")
     Layout.writeZorderClustered(df, dir, col("fac"), col("ym"), numFiles = 8)
-    val back = Sinks.readParquet(spark, dir)
+    val back = spark.read.parquet(dir)
     assert(back.count() == 8000 && back.columns.contains("zkey"))
     // per-file min/max (what parquet footer stats expose): each file must
     // cover a SMALL rectangle of the (fac, ym) grid — that is the entire
@@ -162,7 +120,7 @@ class SourcesSinksSpec extends SparkSpec {
   test("predicate pushdown reaches the parquet scan") {
     val dir = tmp("pqpush")
     Sinks.parquet(sample, dir)
-    val q = Sinks.readParquet(spark, dir).filter(col("id") > 90).select("id", "name")
+    val q = spark.read.parquet(dir).filter(col("id") > 90).select("id", "name")
     val scan = q.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString("\n")
     assert(scan.contains("PushedFilters") && scan.contains("GreaterThan(id,90)"), scan.take(2000))
     // column pruning: the scan schema carries only the projected columns

@@ -5,7 +5,6 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.operators.{Cleanup, Multimodal}
-import graft.sources.Sinks
 import graft.streaming.StreamDedup
 
 /** Streaming dedup, bucketed co-located joins, multimodal frame features,
@@ -119,40 +118,33 @@ class StreamBucketSpec extends SparkSpec {
   test("chained curation gate across two increments: batch parity, zero exchanges") {
     import graft.operators.{Dedup, Quality, Sampling}
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    // the FULL curation chain as one stateless pipeline: history bloom
-    // gate → decontamination flag → split assignment → gopher quality
-    // verdict. History and benchmark ride the plan as constants (bloom
-    // bytes, sorted hash set); their rows never move.
+    // the curation chain as one stateless pipeline: history bloom gate →
+    // split assignment → gopher quality verdict. The history rides the
+    // plan as a constant (bloom bytes); its rows never move.
     val stop = Seq("the", "a", "of", "and")
     val hist = Seq(
       (900L, "the quick brown fox jumps over the lazy dog"),
       (901L, "a b c")).toDF("doc_id", "text")
     val bloom = Dedup.historyBloom(hist, "text", expectedItems = 100, fpp = 0.01)
-    val bench = Seq("the secret eval answer is forty two exactly").toDF("text")
-    val hashes = Quality.benchmarkHashes(bench, "text", n = 4)
     def gate(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
       val flagged = df
         .withColumn("maybe_dup", Dedup.bloomProbe(col("text"), bloom))
-        .withColumn("contaminated", Quality.contaminatedFlag(col("text"), hashes, 4))
       val split = Sampling.assignSplit(flagged, col("doc_id"),
         Seq(("train", 0.8), ("eval", 0.2)))
       // gopherFilter projects (idCol, signals) — the composite struct id
       // carries the upstream flags through it, keeping the chain 1:1
       val packed = split.select(struct(col("doc_id"), col("maybe_dup"),
-        col("contaminated"), col("split")).as("k"), col("text"))
+        col("split")).as("k"), col("text"))
       Quality.gopherFilter(packed, "k", "text", stop,
           minWords = 5, maxWords = 100, minMeanLen = 2.0, maxMeanLen = 8.0,
           maxSymbolRatio = 0.5, minStopRatio = 0.05)
         .select(col("k.doc_id").as("doc_id"), col("k.maybe_dup").as("maybe_dup"),
-          col("k.contaminated").as("contaminated"), col("k.split").as("split"),
-          col("keep").as("quality_keep"))
-        .withColumn("admit", !col("maybe_dup") && !col("contaminated") &&
-          col("quality_keep") === 1)
+          col("k.split").as("split"), col("keep").as("quality_keep"))
+        .withColumn("admit", !col("maybe_dup") && col("quality_keep") === 1)
     }
     val inc1 = Seq(
       (10L, "the quick brown fox jumps over the lazy dog"), // history dup
       (11L, "a fresh document with plenty of words and the right shape"),
-      (12L, "leaked: the secret eval answer is forty two exactly wow"),
       (13L, "xx")) // gopher-fails: too few words
       .toDF("doc_id", "text")
     val inc2 = Seq(
@@ -176,18 +168,17 @@ class StreamBucketSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
     def shape(df: org.apache.spark.sql.DataFrame) = df
-      .select("doc_id", "maybe_dup", "contaminated", "split", "quality_keep", "admit")
-      .as[(Long, Boolean, Boolean, String, Int, Boolean)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4, r._5, r._6))).toMap
+      .select("doc_id", "maybe_dup", "split", "quality_keep", "admit")
+      .as[(Long, Boolean, String, Int, Boolean)].collect()
+      .map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap
     val got = shape(spark.table("curation_gate"))
     // batch parity: the SAME gate over the unioned increments row for row
     assert(got === shape(gate(inc1.unionByName(inc2))))
     // and the routing is the one the chain promises
-    assert(got.filter(_._2._5).keySet === Set(11L, 20L)) // admitted
+    assert(got.filter(_._2._4).keySet === Set(11L, 20L)) // admitted
     assert(got(10L)._1 && got(21L)._1)                   // history dups flagged
-    assert(got(12L)._2)                                  // leaked doc flagged
-    assert(got(13L)._4 === 0)                            // quality-failed
-    assert(got.values.forall(v => v._3 == "train" || v._3 == "eval"))
+    assert(got(13L)._3 === 0)                            // quality-failed
+    assert(got.values.forall(v => v._2 == "train" || v._2 == "eval"))
   }
 
   test("ingest projections v2 (C4 lines -> BPE encode -> char entropy): stream ≡ batch, zero exchanges") {
@@ -318,44 +309,11 @@ class StreamBucketSpec extends SparkSpec {
     assert(out(4L) === ((None, false)))      // fresh key: nothing to carry
   }
 
-  test("streaming decontamination gates leaked docs with a stateless flag") {
-    import graft.operators.Quality
-    // benchmark hash set is a plan constant → the gate is a pure
-    // projection, append-mode safe, no stream-static join state
-    val bench = Seq("the secret eval answer is forty two exactly").toDF("text")
-    val hashes = Quality.benchmarkHashes(bench, "text", n = 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft_decon").toString
-    Seq(
-      (1L, ts(0), "clean document about spark joins and shuffles here"),
-      (2L, ts(1), "leaked: the secret eval answer is forty two exactly wow"),
-      (3L, ts(2), "another clean one with enough words to pass easily"))
-      .toDF("doc_id", "ts", "raw").write.parquet(s"$dir/in1")
-    val schema = spark.read.parquet(s"$dir/in1").schema
-    val gated = spark.readStream.schema(schema).parquet(s"$dir/in*")
-      .filter(!Quality.contaminatedFlag(col("raw"), hashes, n = 4))
-    val q = gated.writeStream.format("memory")
-      .queryName("decon_out").outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("decon_out").select("doc_id").as[Long].collect().toSet
-    assert(out === Set(1L, 3L))
-  }
-
   test("bucketed tables join without any shuffle exchange") {
     val facts = (1 to 1000).map(i => (i.toLong % 50, i.toLong)).toDF("k", "v")
     val dims = (0 to 49).map(i => (i.toLong, s"label_$i")).toDF("k", "name")
-    // the in-memory catalog forgets tables between JVMs but their
-    // warehouse directories persist — clear both before recreating
-    for (t <- Seq("graft_bucketed_facts", "graft_bucketed_dims")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(spark.conf.get("spark.sql.warehouse.dir")
-        .stripPrefix("file:"), t)
-      if (loc.exists()) {
-        loc.listFiles().foreach(_.delete()); loc.delete()
-      }
-    }
-    Sinks.parquetBucketed(facts, "graft_bucketed_facts", Seq("k"), 8)
-    Sinks.parquetBucketed(dims, "graft_bucketed_dims", Seq("k"), 8)
+    saveBucketed(facts, "graft_bucketed_facts", "k", 8)
+    saveBucketed(dims, "graft_bucketed_dims", "k", 8)
     // broadcast would hide the point — force a non-broadcast join
     withSqlConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("graft_bucketed_facts")
@@ -366,7 +324,7 @@ class StreamBucketSpec extends SparkSpec {
     }
   }
 
-  test("Cdc over bucketed publishes: snapshotDiff and mergeAdditiveJoined plan ZERO Exchange") {
+  test("Cdc over bucketed publishes: snapshotDiff plans ZERO Exchange, mergeAdditive merges exactly") {
     import graft.operators.Cdc
     // two consecutive bucketed publishes of a keyed rollup (the q115/q126
     // incremental story's physical half): the diff and the additive merge
@@ -374,14 +332,8 @@ class StreamBucketSpec extends SparkSpec {
     val v1 = (1L to 500L).map(k => (k, k % 7, k * 2)).toDF("k", "n", "sum_v")
     val v2 = (3L to 502L).map(k => (k, k % 7 + (if (k == 10) 1 else 0), k * 2))
       .toDF("k", "n", "sum_v")
-    for (t <- Seq("graft_pub_v1", "graft_pub_v2")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(spark.conf.get("spark.sql.warehouse.dir")
-        .stripPrefix("file:"), t)
-      if (loc.exists()) { loc.listFiles().foreach(_.delete()); loc.delete() }
-    }
-    Sinks.parquetBucketed(v1, "graft_pub_v1", Seq("k"), 8)
-    Sinks.parquetBucketed(v2, "graft_pub_v2", Seq("k"), 8)
+    saveBucketed(v1, "graft_pub_v1", "k", 8)
+    saveBucketed(v2, "graft_pub_v2", "k", 8)
     withSqlConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val (o, n) = (spark.table("graft_pub_v1"), spark.table("graft_pub_v2"))
       val diff = Cdc.snapshotDiff(o, n, Seq("k"), assumeKeysNotNull = true)
@@ -390,152 +342,17 @@ class StreamBucketSpec extends SparkSpec {
       assert(diff.filter(col("change") === "added").count() === 2)
       assert(diff.filter(col("change") === "removed").count() === 2)
       assert(diff.filter(col("change") === "changed").count() === 1)
-      val merged = Cdc.mergeAdditiveJoined(o, n, Seq("k"),
-        countCols = Seq("n"), sumCols = Seq("sum_v"),
-        assumeKeysNotNull = true)
-      val pm = merged.queryExecution.executedPlan.toString
-      assert(!pm.contains("Exchange"), pm.take(2000))
-      // same-bucketed union+groupBy is ALSO exchange-free (Spark's Union
-      // reports the common bucketing) — pin that too, it's load-bearing
-      // for mergeAdditive's own scale story
-      val pu = Cdc.mergeAdditive(Seq(o, n), Seq("k"),
-          countCols = Seq("n"), sumCols = Seq("sum_v"))
-        .queryExecution.executedPlan.toString
-      assert(!pu.contains("Exchange"), pu.take(2000))
+      // the additive merge over the two bucketed publishes equals the
+      // merge of the unbucketed frames: one row per key. A group-by
+      // straight over the union of the two columnar bucketed scans
+      // planned no exchange and kept one row per key per part (1000)
+      def merge(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+        Cdc.mergeAdditive(Seq(a, b), Seq("k"), countCols = Seq("n"), sumCols = Seq("sum_v"))
+      val merged = merge(o, n)
       assert(merged.count() === 502)
+      assert(merged.collect().map(_.toString).sorted ===
+        merge(v1, v2).collect().map(_.toString).sorted)
     }
-  }
-
-  test("bucketed history + fresh increment: joined merge shuffles ONLY the increment") {
-    import graft.operators.Cdc
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    // the daily-publish asymmetry: yesterday's rollup is a bucketed table
-    // (100 TB-scale side), today's increment is a fresh frame. The joined
-    // merge must leave the bucketed scan OUTSIDE any exchange — only the
-    // small increment moves — while union+groupBy re-shuffles the history
-    // too (Union of a bucketed and an unbucketed child has no common
-    // partitioning)
-    val inc = (400L to 600L).map(k => (k, 1L, k)).toDF("k", "n", "sum_v")
-    spark.sql("DROP TABLE IF EXISTS graft_pub_hist")
-    locally {
-      val loc = new java.io.File(spark.conf.get("spark.sql.warehouse.dir")
-        .stripPrefix("file:"), "graft_pub_hist")
-      if (loc.exists()) { loc.listFiles().foreach(_.delete()); loc.delete() }
-    }
-    Sinks.parquetBucketed(
-      (1L to 500L).map(k => (k, k % 7, k * 2)).toDF("k", "n", "sum_v"),
-      "graft_pub_hist", Seq("k"), 8)
-    def historyScansUnderExchange(df: org.apache.spark.sql.DataFrame): Int = {
-      // AdaptiveSparkPlanExec holds its plan as a field, not a child —
-      // collect() on the wrapper sees NOTHING, so unwrap it first
-      val plan = df.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.executedPlan
-        case p => p
-      }
-      plan.collect { case e: ShuffleExchangeExec =>
-        e.collectLeaves().count {
-          case f: FileSourceScanExec => f.relation.bucketSpec.isDefined
-          case _ => false
-        }
-      }.sum
-    }
-    withSqlConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val hist = spark.table("graft_pub_hist")
-      val joined = Cdc.mergeAdditiveJoined(hist, inc, Seq("k"),
-        countCols = Seq("n"), sumCols = Seq("sum_v"), assumeKeysNotNull = true)
-      assert(historyScansUnderExchange(joined) === 0,
-        "bucketed history must not re-shuffle in the joined merge")
-      val viaUnion = Cdc.mergeAdditive(Seq(hist, inc), Seq("k"),
-        countCols = Seq("n"), sumCols = Seq("sum_v"))
-      assert(historyScansUnderExchange(viaUnion) > 0,
-        "union+groupBy should be paying the history shuffle here — if it " +
-          "stopped, mergeAdditiveJoined's reason-to-exist needs re-auditing\n" +
-          viaUnion.queryExecution.executedPlan.toString.take(3000))
-      // and the merged numbers are right either way
-      assert(joined.filter(col("k") === 450L).select("n").head().getLong(0) ===
-        hist.filter(col("k") === 450L).select("n").head().getLong(0) + 1L)
-    }
-  }
-
-  test("mergeAdditiveJoined ≡ mergeAdditive (single-sided keys, NULL stats, NULL keys)") {
-    import graft.operators.Cdc
-    val a = Seq((Some(1L), Some(2L), Some(10.0), Some(1L), Some(9L)),
-      (Some(2L), Some(3L), None, Some(5L), Some(5L)),
-      (None, Some(1L), Some(7.0), Some(2L), Some(2L)))
-      .toDF("k", "n", "sum_v", "min_v", "max_v")
-    val b = Seq((Some(1L), Some(4L), Some(1.5), Some(0L), Some(11L)),
-      (Some(3L), Some(1L), Some(2.0), Some(3L), Some(3L)),
-      (None, Some(2L), None, Some(1L), Some(4L)))
-      .toDF("k", "n", "sum_v", "min_v", "max_v")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (0 until r.length).map(i =>
-        if (r.isNullAt(i)) null else r.get(i))).toSet
-    val viaUnion = Cdc.mergeAdditive(Seq(a, b), Seq("k"),
-      countCols = Seq("n"), sumCols = Seq("sum_v"),
-      minCols = Seq("min_v"), maxCols = Seq("max_v"))
-    val viaJoin = Cdc.mergeAdditiveJoined(a, b, Seq("k"),
-      countCols = Seq("n"), sumCols = Seq("sum_v"),
-      minCols = Seq("min_v"), maxCols = Seq("max_v"))
-    assert(canon(viaJoin) === canon(viaUnion))
-    // a column in BOTH keys and stats would collide the __o_/__n_
-    // aliases — refused at the API, not a silent wrong merge
-    intercept[IllegalArgumentException](
-      Cdc.mergeAdditiveJoined(a, b, Seq("k"), countCols = Seq("k", "n")))
-  }
-
-  test("streaming near-dup gate: stream flags ≡ batch LSH candidacy over two increments") {
-    import graft.operators.NearDup
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    val (n, numHashes, rowsPerBand) = (3, 12, 3)
-    val hist = Seq(
-      (900L, "the quick brown fox jumps over the lazy dog tonight"),
-      (901L, "large language models train on deduplicated corpora mostly"))
-      .toDF("doc_id", "text")
-    val bloom = NearDup.historyBandBloom(hist, "text", n, numHashes,
-      rowsPerBand, expectedItems = 1000, fpp = 0.001)
-    // two increments landing as parquet files — a REAL file stream
-    val dir = java.nio.file.Files.createTempDirectory("graft_neardup_stream").toString
-    val inc1 = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog today"), // near-dup of 900
-      (2L, "completely unrelated words about cooking pasta slowly tonight"))
-    val inc2 = Seq(
-      (3L, "large language models train on deduplicated corpora mostly"), // exact dup of 901
-      (4L, "short doc"), // < n tokens: cannot shingle, must flag false
-      (5L, "another fresh document mentioning gardens and rivers daily"))
-    inc1.toDF("doc_id", "text").write.parquet(s"$dir/in1")
-    val schema = spark.read.parquet(s"$dir/in1").schema
-    val stream = spark.readStream.schema(schema).parquet(s"$dir/in*")
-      .withColumn("maybe_neardup",
-        NearDup.nearDupProbe(col("text"), bloom, n, numHashes, rowsPerBand))
-    val q = stream.writeStream.format("memory")
-      .queryName("neardup_stream").outputMode("append").start()
-    q.processAllAvailable()
-    inc2.toDF("doc_id", "text").write.parquet(s"$dir/in2")
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("neardup_stream")
-      .select("doc_id", "maybe_neardup")
-      .as[(Long, Boolean)].collect().toMap
-    // batch twin: band-key join of the SAME increments against history —
-    // flag = shares >= 1 LSH band (candidate semantics, pre-verify)
-    val allInc = (inc1 ++ inc2).toDF("doc_id", "text")
-    def bands(df: org.apache.spark.sql.DataFrame) = df.select(col("doc_id"),
-      explode(NearDup.minhashBandKeys(col("text"), n, numHashes,
-        rowsPerBand)).as("bk"))
-    val batchFlagged = bands(allInc)
-      .join(bands(hist).select(col("bk")).distinct(), Seq("bk"), "left_semi")
-      .select("doc_id").distinct()
-      .as[Long].collect().toSet
-    val batch = allInc.select("doc_id").as[Long].collect()
-      .map(id => id -> batchFlagged.contains(id)).toMap
-    assert(streamed === batch,
-      s"stream $streamed vs batch $batch") // bloom fpp 0.001 over ~8 keys
-    // the semantics themselves: near-dup and exact dup flagged, fresh and
-    // too-short not
-    assert(batch === Map(1L -> true, 2L -> false, 3L -> true,
-      4L -> false, 5L -> false))
   }
 
   test("streaming upsert lands keep-latest state across micro-batches") {
@@ -559,19 +376,6 @@ class StreamBucketSpec extends SparkSpec {
     val out = spark.read.parquet(path).select("uid", "payload")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(out == Map(1L -> "v2", 2L -> "v1", 3L -> "v1"))
-  }
-
-  test("compaction rewrites many small files into the target count") {
-    import java.nio.file.Files
-    val path = Files.createTempDirectory("compact").toString + "/t"
-    (1 to 2000).map(i => (i.toLong, s"p$i")).toDF("id", "p")
-      .repartition(50).write.parquet(path)
-    def parquetFiles = new java.io.File(path).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(parquetFiles == 50)
-    graft.sources.Sinks.compact(spark, path, rowsPerFile = 1000)
-    assert(parquetFiles == 2)
-    assert(spark.read.parquet(path).count() == 2000)
-    assert(spark.read.parquet(path).agg(sum("id")).head.getLong(0) == 2001000L)
   }
 
   test("windowed flag counts emit finalized windows that match the batch twin") {
@@ -656,7 +460,7 @@ class StreamBucketSpec extends SparkSpec {
   }
 
   test("multimodal frameFeatures emits one row per sampled frame, batched per partition") {
-    val media = Multimodal.synthesize((1 to 20).map(i => Tuple1(i.toLong)).toDF("id"), "id")
+    val media = MediaFixtures.synthesize((1 to 20).map(i => Tuple1(i.toLong)).toDF("id"), "id")
     val feats = Multimodal.frameFeatures(media, everyNth = 2)
     val rows = feats.collect()
     // n_frames = id % 8 + 1; sampled every 2nd → ceil(n/2) rows per item
@@ -668,39 +472,25 @@ class StreamBucketSpec extends SparkSpec {
     assert(rows.map(_.toString).sorted.sameElements(again.map(_.toString).sorted))
   }
 
-  test("multimodal resize scales image/video metadata, passes audio through") {
-    val media = Multimodal.synthesize((1 to 30).map(i => Tuple1(i.toLong)).toDF("id"), "id")
-    val out = Multimodal.resize(media, maxW = 320, maxH = 240)
-    val metas = out.select("kind", "meta.width", "meta.height").collect()
-    metas.foreach { r =>
-      val (kind, w, h) = (r.getString(0), r.getInt(1), r.getInt(2))
-      if (kind == "audio") () // untouched
-      else assert(w <= 320 && h <= 240, s"$kind $w x $h")
-    }
-    // aspect ratio preserved for a known row: 640x360 → 320x180
-    val r = out.filter(col("media_id") === 2 && col("kind") =!= "audio")
-      .select("meta.width", "meta.height").collect()
-    r.foreach(row => assert(row.getInt(0) * 9 == row.getInt(1) * 16))
-    // bytes changed for visual media, unchanged for audio
-    val changed = out.as("n").join(media.as("o"), Seq("media_id"))
-      .select(col("n.kind"), (col("n.bytes") === col("o.bytes")).as("same"))
-      .collect().map(r2 => r2.getString(0) -> r2.getBoolean(1))
-    assert(changed.filter(_._1 == "audio").forall(_._2))
-    assert(changed.filter(_._1 != "audio").forall(!_._2))
-    // the stub derives from the ORIGINAL payload and the FINAL (scaled)
-    // dims — pins against recomputing dims off the replaced meta struct
-    val expectedBytes = media.filter(col("media_id") === 2)
-      .select(sha2(concat(base64(col("bytes")), lit("320"), lit("180")), 256))
-      .head.getString(0)
-    val actualBytes = out.filter(col("media_id") === 2)
-      .select(col("bytes").cast("string")).head.getString(0)
-    assert(actualBytes == expectedBytes)
+  test("cleanup normalizes column names to snake_case") {
+    val df = Seq((1, 2, 3)).toDF("Visit.Date", "NeoTreeID", "keep_me")
+    val out = Cleanup.snakeCaseColumns(df)
+    assert(out.columns.toSeq == Seq("visit_date", "neo_tree_id", "keep_me"))
   }
 
-  test("cleanup normalizes names and drops redundant columns defensively") {
-    val df = Seq((1, 2, 3)).toDF("Visit.Date", "NeoTreeID", "keep_me")
-    val out = Cleanup.dropRedundant(Cleanup.snakeCaseColumns(df), Seq("keep_me", "not_there"))
-    assert(out.columns.toSeq == Seq("visit_date", "neo_tree_id"))
+  /** Bucketed catalog table: `bucketBy` co-locates rows by hash(key) at
+    * write time, so later joins/aggregations on the key skip their
+    * shuffle. The in-memory catalog forgets tables between JVMs but their
+    * warehouse directories persist — clear both before recreating.
+    */
+  private def saveBucketed(df: org.apache.spark.sql.DataFrame, table: String,
+                           key: String, nBuckets: Int): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val loc = new java.io.File(spark.conf.get("spark.sql.warehouse.dir")
+      .stripPrefix("file:"), table)
+    if (loc.exists()) { loc.listFiles().foreach(_.delete()); loc.delete() }
+    df.write.mode("overwrite").format("parquet").bucketBy(nBuckets, key)
+      .saveAsTable(table)
   }
 
   private def withSqlConf[A](kvs: (String, String)*)(f: => A): A = {

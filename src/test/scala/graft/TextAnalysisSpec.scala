@@ -15,18 +15,21 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("tokenCountBpe: 4 word chars per token plus punctuation") {
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     val out = Seq(("abcd", 1L), ("abcde", 2L), ("ab, cd!", 3L), ("", 0L)).toDF("text", "want")
-      .select(TextAnalysis.tokenCountBpe(col("text")).as("got"), col("want"))
+      .select(TextAnalysis.bpeishFromProfile(TextAnalysis.tokenProfile(col("text"))).as("got"),
+        col("want"))
       .as[(Long, Long)].collect()
     out.foreach { case (got, want) => assert(got === want) }
   }
 
   test("ratios stay in [0,1] and quality is bounded") {
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     val docs = Seq("", "the the the", "!!!!", "normal text of the day", "x" * 1000).toDF("text")
     val out = docs.select(
       TextAnalysis.punctRatio(col("text")).as("p"),
-      TextAnalysis.stopwordRatio(col("text"), stop).as("s"),
-      TextAnalysis.qualityScore(col("text"), stop).as("q")
+      TextAnalysis.stopwordRatioFast(col("text"), stop).as("s"),
+      TextAnalysis.qualityScoreFast(col("text"), stop).as("q")
     ).as[(Double, Double, Double)].collect()
     out.foreach { case (p, s, q) =>
       assert(p >= 0 && p <= 1); assert(s >= 0 && s <= 1); assert(q >= 0 && q <= 1)
@@ -34,9 +37,10 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("langId picks the marker-heavy language, 'und' when no markers") {
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     val markers = Map("en" -> Seq("the"), "es" -> Seq("el"))
     val out = Seq("the cat the dog", "el gato", "zzz yyy").toDF("text")
-      .select(TextAnalysis.langId(col("text"), markers)).as[String].collect()
+      .select(TextAnalysis.langIdFast(col("text"), markers)).as[String].collect()
     assert(out === Array("en", "es", "und"))
   }
 

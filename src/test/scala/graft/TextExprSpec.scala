@@ -28,7 +28,7 @@ class TextExprSpec extends SparkSpec {
   test("langIdFast matches combinator langId, including ties and und") {
     GraftFunctions.ensureRegistered(spark)
     val bad = docs.select(
-      TextAnalysis.langId(col("text"), markers).as("ref"),
+      ExactReference.langId(col("text"), markers).as("ref"),
       TextAnalysis.langIdFast(col("text"), markers).as("fast")
     ).filter(col("ref") =!= col("fast")).count()
     assert(bad === 0)
@@ -50,31 +50,12 @@ class TextExprSpec extends SparkSpec {
     GraftFunctions.ensureRegistered(spark)
     val sw = Seq("the", "a", "of")
     val bad = docs.select(
-      TextAnalysis.stopwordRatio(col("text"), sw).as("r1"),
+      ExactReference.stopwordRatio(col("text"), sw).as("r1"),
       TextAnalysis.stopwordRatioFast(col("text"), sw).as("f1"),
-      TextAnalysis.qualityScore(col("text"), sw).as("r2"),
+      ExactReference.qualityScore(col("text"), sw).as("r2"),
       TextAnalysis.qualityScoreFast(col("text"), sw).as("f2")
     ).filter(col("r1") =!= col("f1") || col("r2") =!= col("f2")).count()
     assert(bad === 0)
-  }
-
-  test("char-ngram langId scores profile trigrams, ties to greatest code, und on miss") {
-    GraftFunctions.ensureRegistered(spark)
-    val profiles = Map(
-      "en" -> Seq("the", "ing", "ion"),
-      "de" -> Seq("sch", "ein", "der"),
-      "fr" -> Seq("eau", "oux", "ent"))
-    val df = Seq(
-      (1L, "the singing lion"),       // en: the, ing(x2), ion
-      (2L, "schein der schwein"),     // de
-      (3L, "l'eau si doux"),          // fr
-      (4L, "zzzz qqqq"),              // none → und
-      (5L, "")                        // empty → und
-    ).toDF("id", "t")
-    val out = df.select(col("id"),
-      TextAnalysis.langIdNgram(col("t"), profiles).as("l"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out == Map(1L -> "en", 2L -> "de", 3L -> "fr", 4L -> "und", 5L -> "und"))
   }
 
   test("ngram hashes equal xxhash64 of the string shingles as a set") {
@@ -87,16 +68,16 @@ class TextExprSpec extends SparkSpec {
     assert(cmp.filter(not(col("ref") === col("fast"))).count() === 0)
   }
 
-  test("char n-gram profiles containing separators round-trip the marker encoding") {
+  test("marker words containing separators round-trip the marker encoding") {
     GraftFunctions.ensureRegistered(spark)
-    // grams with ',' ':' '|' '%' — raw separators would split them into
-    // wrong grams (or crash decode) and silently misclassify
-    val profiles = Map(
-      "pt" -> Seq("e, ", ", a"),
+    // markers with ',' ':' '|' '%' — raw separators would split them into
+    // wrong markers (or crash decode) and silently misclassify
+    val markers = Map(
+      "pt" -> Seq("e,", ",a"),
       "tb" -> Seq("a|b", "x:y", "50%"))
     val out = Seq("foo e, bar", "val a|b end", "val x:y end", "50% off", "zzzz")
       .toDF("t")
-      .select(TextAnalysis.langIdNgram(col("t"), profiles))
+      .select(TextAnalysis.langIdFast(col("t"), markers))
       .as[String].collect()
     assert(out(0) === "pt")
     assert(out(1) === "tb" && out(2) === "tb" && out(3) === "tb")

@@ -16,16 +16,14 @@ class VectorExprSpec extends SparkSpec {
     }.toDF("id", "v")
   }
 
-  test("cosineFast / dotFast / l2sqFast match combinator versions") {
+  test("cosineFast / l2sqFast match combinator versions") {
     GraftFunctions.ensureRegistered(spark)
     val pairs = vecs.as("a").crossJoin(vecs.as("b"))
       .filter(col("a.id") < col("b.id"))
       .select(
-        Similarity.cosine(col("a.v"), col("b.v")).as("cos_ref"),
+        ExactReference.cosine(col("a.v"), col("b.v")).as("cos_ref"),
         Similarity.cosineFast(col("a.v"), col("b.v")).as("cos_fast"),
-        Similarity.dot(col("a.v"), col("b.v")).as("dot_ref"),
-        Similarity.dotFast(col("a.v"), col("b.v")).as("dot_fast"),
-        Similarity.l2sq(col("a.v"), col("b.v")).as("l2_ref"),
+        ExactReference.l2sq(col("a.v"), col("b.v")).as("l2_ref"),
         Similarity.l2sqFast(col("a.v"), col("b.v")).as("l2_fast"))
     // the combinator form multiplies in FLOAT (zip_with preserves element
     // type) while the kernel promotes to double first — the kernel is the
@@ -33,7 +31,6 @@ class VectorExprSpec extends SparkSpec {
     // rounding (~dim · 2^-24), not exactly
     val bad = pairs.filter(
       abs(col("cos_ref") - col("cos_fast")) > 1e-4 ||
-      abs(col("dot_ref") - col("dot_fast")) > 1e-4 ||
       abs(col("l2_ref") - col("l2_fast")) > 1e-4).count()
     assert(bad === 0)
   }
@@ -42,7 +39,7 @@ class VectorExprSpec extends SparkSpec {
     GraftFunctions.ensureRegistered(spark)
     for (nPlanes <- Seq(4, 10, 16); seed <- Seq(42, 7919)) {
       val bad = vecs.select(
-        Similarity.rhpBucket(col("v"), nPlanes, 64, seed).as("ref"),
+        ExactReference.rhpBucket(col("v"), nPlanes, 64, seed).as("ref"),
         Similarity.rhpBucketFast(col("v"), nPlanes, seed).as("fast")
       ).filter(col("ref") =!= col("fast")).count()
       assert(bad === 0, s"nPlanes=$nPlanes seed=$seed")

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.Views
 
-/** Convenience views: sentinel scrubbing and the SQL surface. */
+/** Convenience views: sentinel scrubbing, the era migration view, and
+  * pushdown through a temp view. */
 class ViewsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -54,18 +55,9 @@ class ViewsSpec extends SparkSpec {
     assert(out.schema("dis").dataType.typeName == "date")
   }
 
-  test("registerTables puts every catalog table on the SQL surface") {
-    Views.registerTables(spark, "/root/testdata/sf0.001")
-    val n = spark.sql(
-      """SELECT count(*) FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey""")
-      .head.getLong(0)
-    assert(n > 0)
-    // events view carries the nanos-ts fix: ts must be a real timestamp
-    assert(spark.sql("SELECT ts FROM events").schema("ts").dataType.typeName == "timestamp")
-  }
-
   test("views stay transparent to pushdown: filter through a view reaches the scan") {
-    Views.registerTables(spark, "/root/testdata/sf0.001")
+    graft.sources.Tables.table(spark, "/root/testdata/sf0.001", "orders")
+      .createOrReplaceTempView("orders")
     val q = spark.sql("SELECT o_orderkey FROM orders WHERE o_orderkey = 42")
     val leaves = q.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString
     assert(leaves.contains("PushedFilters") && leaves.contains("EqualTo(o_orderkey,42)"),
